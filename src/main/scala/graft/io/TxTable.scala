@@ -4,9 +4,10 @@ import java.util.UUID
 
 import graft.ops.Merge
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import scala.jdk.CollectionConverters._
 
 /** The column(s) a [[TxTable]] is partitioned by. Real fact tables
   * partition by more than one column — (date_id, source_id), (date,
@@ -157,6 +158,15 @@ object TxTable {
 
   private def keyExpr(spec: PartitionSpec): Column =
     keyExprVals(spec.cols.map(col))
+
+  /** A driver-resident frame over `rows`: a deterministic projection or
+    * filter on it is folded by Catalyst (ConvertToLocalRelation), so
+    * collecting it evaluates the expressions on the driver and launches
+    * no Spark job — where `spark.range(1)` or a parallelized RDD runs
+    * one per call. */
+  private def localFrame(
+      spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(rows.asJava, schema)
 
   private def checkpointInterval(spark: SparkSession): Int =
     spark.conf.get("spark.graft.tx.checkpointInterval", "10").toInt
@@ -598,8 +608,9 @@ object TxTable {
     * opens k leaf directories and never lists or plans over the rest
     * of the table (the manifest replaces hive directory pruning).
     * Values are turned into manifest keys by the SAME Spark expression
-    * the write side uses (one 1-row local job — no driver-side
-    * toString, so engine and manifest cannot disagree on identity).
+    * the write side uses, folded on the driver over a one-row local
+    * relation ([[localFrame]] — no job, and no driver-side toString,
+    * so engine and manifest cannot disagree on identity).
     * None on a never-committed table; an empty frame with the
     * snapshot's schema when no requested partition exists. */
   def snapshotPartitions(
@@ -630,9 +641,9 @@ object TxTable {
     }
     val (_, entries, schema) = latestEntries(spark, dir)
     if (entries.isEmpty) return None
-    val keys = spark.range(1)
-      .select(explode(array(values.map(keyExprVals): _*)).as("k"))
-      .collect().map(_.getString(0)).toSet
+    val keys = localFrame(spark, Seq(Row.empty), StructType(Nil))
+      .select(values.zipWithIndex.map { case (v, i) => keyExprVals(v).as(s"k$i") }: _*)
+      .collect().head.toSeq.map(_.asInstanceOf[String]).toSet
     val hit = entries.filter { case (k, _) => keys(k) }
     if (hit.nonEmpty) Some(read(spark, dir, hit, schema))
     else Some(emptyWithSnapshotSchema(spark, dir, entries, schema))
@@ -708,8 +719,9 @@ object TxTable {
   /** The manifest-level predicate pruning [[snapshotWhere]] reads
     * through, shared with the `where`-scoped maintenance verbs: the
     * entries whose recorded partition VALUE satisfies `pred`, evaluated
-    * ENGINE-side over a manifest-sized frame (one string column per
-    * partition column, named after it). Entries predating the value
+    * ENGINE-side over a manifest-sized [[localFrame]] (one string
+    * column per partition column, named after it), so a deterministic
+    * predicate runs no job. Entries predating the value
     * field (or written under a different column count) are INCLUDED —
     * conservative, correctness over pruning. */
   private def entriesWhere(
@@ -722,14 +734,13 @@ object TxTable {
       if (known.isEmpty) Set.empty
       else {
         val rows = known.toSeq.map { case (k, e) =>
-          org.apache.spark.sql.Row.fromSeq(k +: vhexSplit(e.vhex.get))
+          Row.fromSeq(k +: vhexSplit(e.vhex.get))
         }
         val schema = org.apache.spark.sql.types.StructType(
           ("__k" +: spec.cols).map(c =>
             org.apache.spark.sql.types.StructField(
               c, org.apache.spark.sql.types.StringType, nullable = true)))
-        spark.createDataFrame(
-            spark.sparkContext.parallelize(rows, 1), schema)
+        localFrame(spark, rows, schema)
           .filter(pred)
           .select("__k").collect().map(_.getString(0)).toSet
       }
@@ -1923,22 +1934,25 @@ object TxTable {
     * so the secondary layout sort survives into the files (the
     * MergeWriter.laidOut discipline).
     *
-    * @param widenTo the commit's touched-partition count (0/1 =
-    *   caller placed the rows itself — never widen). A SMALL commit
-    *   spanning many partitions otherwise lands in ~one task (AQE
-    *   coalesces its tiny merge shuffle to one partition) which then
-    *   creates every leaf's file SERIALLY — measured ~2 s for a
-    *   124-leaf bootstrap on idle 32 cores. When the merged output's
-    *   estimated size fits ONE advisory shuffle partition (i.e. the
-    *   extra exchange moves less than AQE's own coalescing unit), the
-    *   write is re-placed as an EXPLICIT repartition(min(cores,
-    *   touched), PKey): file creation parallelizes across the cores
-    *   and each leaf gets exactly one file (each key hashes wholly
-    *   into one task). Large commits — anything whose estimate
-    *   exceeds the advisory unit, or with no usable estimate — keep
-    *   the exchange-free path untouched; sessions that pin
-    *   coalescing off (fragmentation-sensitive tooling) opt out the
-    *   same way they already opt out of AQE's reshaping. */
+    * @param widenTo the commit's touched-partition count; 0 = the
+    *   caller placed the rows itself (maintenance folds) — never
+    *   re-place. For ≥ 1, a SMALL commit is re-placed as an EXPLICIT
+    *   repartition(min(cores, touched), PKey) when the merged
+    *   output's estimated size fits ONE advisory shuffle partition
+    *   (i.e. the extra exchange moves less than AQE's own coalescing
+    *   unit): each key hashes wholly into one task, so every leaf is
+    *   staged as exactly one file. Without it a one-leaf commit
+    *   stages as many files as its merge has input splits (a window
+    *   replacement re-stages the date leaf as 5–6 files an hour,
+    *   which compaction then rewrites under a commit of its own), and
+    *   a commit spanning many partitions lands in ~one task (AQE
+    *   coalesces its tiny merge shuffle) that creates every leaf's
+    *   file SERIALLY — measured ~2 s for a 124-leaf bootstrap on idle
+    *   32 cores. Large commits — anything whose estimate exceeds the
+    *   advisory unit, or with no usable estimate — keep the
+    *   exchange-free path untouched; sessions that pin coalescing off
+    *   (fragmentation-sensitive tooling) opt out the same way they
+    *   already opt out of AQE's reshaping. */
   private def writeLaidOut(
       df: DataFrame, layout: Layout, path: String, widenTo: Int = 0): Unit = {
     val spark = df.sparkSession
@@ -1949,7 +1963,7 @@ object TxTable {
     def coalescingOn: Boolean =
       spark.conf.get("spark.sql.adaptive.enabled", "true").toBoolean &&
         spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled", "true").toBoolean
-    def smallWideCommit: Boolean = widenTo > 1 && coalescingOn && {
+    def smallCommit: Boolean = widenTo >= 1 && coalescingOn && {
       val est = scala.util.Try(df.queryExecution.optimizedPlan.stats.sizeInBytes)
         .getOrElse(BigInt(Long.MaxValue))
       est <= advisoryBytes
@@ -1959,7 +1973,7 @@ object TxTable {
     // (tasks × leaves); one extra exchange, the wide-commit trade
     val placed =
       if (layout.optimizeWrite) df.repartition(col(PKey))
-      else if (smallWideCommit)
+      else if (smallCommit)
         df.repartition(
           math.min(spark.sparkContext.defaultParallelism, widenTo), col(PKey))
       else df

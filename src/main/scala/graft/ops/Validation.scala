@@ -16,49 +16,68 @@ object Validation {
 
   final case class GateViolation(msg: String) extends RuntimeException(msg)
 
-  /** Completeness gate: the densified window must hold
-    * sources × sides × minutes coverage (fact_gold_price.py:433-440).
-    * Enforced as per-group coverage — EVERY (source_id, side_id) group
-    * must cover all `expectedMinutes` grid minutes — which is the
-    * reference's `total == sources × sides × 60` identity made robust to
-    * minutes holding more than one actual tick: a group the interpolator
-    * skipped (<2 actuals) or a group missing grid minutes fails even
-    * when every minute is covered by some other group. Returns the
-    * profile row it checked. */
-  def completenessGate(densified: DataFrame, expectedMinutes: Long): DataFrame = {
-    val profile = densified.agg(
-      countDistinct(col("source_id")).as("n_sources"),
-      // count NULL side as its own side like the reference's pandas
-      // dropna=False grouping: countDistinct skips NULLs, so add the
-      // null-side indicator explicitly
-      (countDistinct(col("side_id")) +
-        max(when(col("side_id").isNull, 1).otherwise(0))).as("n_sides"),
-      countDistinct(col("rounded_time_id")).as("n_minutes"),
-      count(lit(1)).as("n_rows"))
-    val r = profile.collect()(0)
-    val nMinutes = r.getAs[Long]("n_minutes")
-    if (nMinutes < expectedMinutes)
-      throw GateViolation(
-        s"completeness: $nMinutes of $expectedMinutes grid minutes present")
-    // per-group coverage: one distributed agg, one small collect
-    val short = densified
+  /** What [[windowGate]] measured over a densified window. */
+  final case class WindowProfile(
+      nSources: Long, nSides: Long, nMinutes: Long, nRows: Long)
+
+  /** The densified-window gates (fact_gold_price.py:433-460) in ONE
+    * action: a per-(source_id, side_id) pass collects each group's grid
+    * minutes, row count and NULL/NaN-price count, then a global pass
+    * over those groups yields the window's grid minutes and row count,
+    * the number of groups short of `expectedMinutes` and the bad-price
+    * total. The verdicts are then asserted on the driver, in order:
+    *
+    *  - completeness (:433-440), as per-group coverage: the window must
+    *    hold `expectedMinutes` grid minutes, and EVERY (source_id,
+    *    side_id) group must cover all of them — the reference's
+    *    `total == sources × sides × 60` identity made robust to
+    *    minutes holding more than one actual tick: a group the
+    *    interpolator skipped (<2 actuals) or a group missing grid
+    *    minutes fails even when every minute is covered by some other
+    *    group;
+    *  - null price (:443-460): no NULL or NaN price may survive
+    *    densification.
+    *
+    * `expectedMinutes` defaults to the window's own grid (the distinct
+    * non-NULL `rounded_time_id`s), the hourly pipeline's use. A NULL
+    * side counts as its own side, like the reference's pandas
+    * dropna=False grouping. Returns the profile it checked. */
+  def windowGate(
+      densified: DataFrame, expectedMinutes: Option[Long] = None): WindowProfile = {
+    val groups = densified
       .groupBy(col("source_id"), col("side_id"))
-      .agg(countDistinct(col("rounded_time_id")).as("g_minutes"))
-      .filter(col("g_minutes") < expectedMinutes)
-      .count()
+      .agg(
+        collect_set(col("rounded_time_id")).as("minutes"),
+        count(lit(1)).as("rows"),
+        count(when(col("price").isNull || isnan(col("price")), 1)).as("bad"))
+    val totals = groups.agg(
+      size(collect_set(col("source_id"))).as("n_sources"),
+      // wrapped in a struct so a NULL side is collected as a side
+      size(collect_set(struct(col("side_id")))).as("n_sides"),
+      size(array_distinct(flatten(collect_list(col("minutes"))))).as("n_minutes"),
+      collect_list(size(col("minutes"))).as("group_minutes"),
+      coalesce(sum(col("rows")), lit(0L)).as("n_rows"),
+      coalesce(sum(col("bad")), lit(0L)).as("n_bad"))
+    val expected = expectedMinutes.fold(col("n_minutes"))(lit(_))
+    val r = totals.select(
+      col("n_sources").cast("long"),
+      col("n_sides").cast("long"),
+      col("n_minutes").cast("long"),
+      col("n_rows"),
+      size(filter(col("group_minutes"), _ < expected)).cast("long"),
+      col("n_bad")).collect()(0)
+    val profile = WindowProfile(r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
+    val (short, bad) = (r.getLong(4), r.getLong(5))
+    val want = expectedMinutes.getOrElse(profile.nMinutes)
+    if (profile.nMinutes < want)
+      throw GateViolation(
+        s"completeness: ${profile.nMinutes} of $want grid minutes present")
     if (short > 0)
       throw GateViolation(
         s"completeness: $short source×side groups cover fewer than " +
-          s"$expectedMinutes grid minutes")
-    profile
-  }
-
-  /** Null-price gate (fact_gold_price.py:443-460): no NULL or NaN price
-    * may survive densification. */
-  def nullPriceGate(densified: DataFrame): Unit = {
-    val bad = densified
-      .filter(col("price").isNull || isnan(col("price"))).count()
+          s"$want grid minutes")
     if (bad > 0) throw GateViolation(s"null/NaN prices: $bad rows")
+    profile
   }
 
   /** dim_date integrity gates (dim_date_etl_dag.py:113-128): non-empty

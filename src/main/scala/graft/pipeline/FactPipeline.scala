@@ -54,15 +54,21 @@ object FactPipeline {
     *                     graft.io.Layout); default writes as before
     * @param compactTargetBytes when set, run small-file compaction on
     *                     the interpolated table after the write — the
-    *                     hourly cadence accumulates a few files per
-    *                     run, so steady state without it is thousands
-    *                     of small files per hot partition. In
-    *                     transactional mode the fold re-applies
-    *                     `layout`, so sorted row groups and blooms
-    *                     survive compaction; the legacy path rewrites
-    *                     leaves via concatenation (per-file sort order
-    *                     coarsens to per-run runs — recluster with
-    *                     SortedWriter in a maintenance window there)
+    *                     legacy path's hourly cadence accumulates a few
+    *                     files per run, so steady state without it is
+    *                     thousands of small files per hot partition. In
+    *                     transactional mode an hour's commit is small,
+    *                     so it already stages its date leaf as ONE file
+    *                     (TxTable.writeLaidOut) and the fold normally
+    *                     finds nothing to do and publishes no version;
+    *                     it only acts on a leaf a large or
+    *                     coalescing-off commit fragmented, and then
+    *                     re-applies `layout`, so sorted row groups and
+    *                     blooms survive compaction. The legacy path
+    *                     rewrites leaves via concatenation (per-file
+    *                     sort order coarsens to per-run runs —
+    *                     recluster with SortedWriter in a maintenance
+    *                     window there)
     * @param vacuumRetainVersions transactional mode only: after the
     *                     hour lands, run TxTable.vacuum on both tables
     *                     keeping this many versions readable — the
@@ -143,7 +149,8 @@ object FactPipeline {
           layout = layout.restrictedTo(densified.columns.toSeq))
         // same byte-threshold semantics as the legacy Compaction.compact
         // path: the target decides which leaves are fragmented enough
-        // to fold (TxTable.compactSmallFiles), not a fixed file count.
+        // to fold (TxTable.compactSmallFiles), not a fixed file count —
+        // normally none, the hour's leaf having staged as one file.
         // The fold restates the table's layout — a compaction that
         // dropped it would silently un-sort the row groups the write
         // just laid down
@@ -164,10 +171,9 @@ object FactPipeline {
                     else spark.read.parquet(interpDir))
         .filter(col("date_id") === dateId &&
           floor(col("rounded_time_id") / 10000) === hour)
-      val gridMinutes = window.select(col("rounded_time_id")).distinct().count()
-      Validation.completenessGate(window, expectedMinutes = gridMinutes)
-      Validation.nullPriceGate(window)
-      val run = HourRun(dateId, hour, extracted, window.count(), gridMinutes)
+      // one action: the window's own grid is the completeness target
+      val profile = Validation.windowGate(window)
+      val run = HourRun(dateId, hour, extracted, profile.nRows, profile.nMinutes)
 
       // retention maintenance AFTER the gates: a failed hour never
       // triggers reclamation of the state it might need to re-read

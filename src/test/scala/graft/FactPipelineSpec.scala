@@ -106,6 +106,37 @@ class FactPipelineSpec extends SparkTestBase {
       s"$wh/fact_gold_price_interpolated", 1L).get.count() === 12L)
   }
 
+  test("transactional mode: each hour stages one file per leaf, so compaction publishes nothing") {
+    import graft.io.TxTable
+    val wh = Files.createTempDirectory("graft_pipeline_one_file").toString
+    // goodEvents' hour 10 plus two groups' ticks in Tehran hour 11
+    val events = goodEvents.unionByName(evts(
+      (6L, "7", "click", 120.0, "2024-01-15 07:30:10"),
+      (7L, "7", "click", 126.0, "2024-01-15 07:34:20"),
+      (8L, "8", "purchase", 60.0, "2024-01-15 07:31:40"),
+      (9L, "8", "purchase", 66.0, "2024-01-15 07:34:50")))
+    val fact = s"$wh/fact_gold_price"
+    val interp = s"$wh/fact_gold_price_interpolated"
+    def filesPerLeaf(dir: String): Seq[Int] =
+      TxTable.latest(spark, dir)._2.values.toSeq.map(leaf =>
+        new java.io.File(dir, leaf).list().count(_.endsWith(".parquet")))
+    def hourRun(h: Int) = FactPipeline.runHour(spark, events, wh, D, hour = h,
+      runVersion = 1L, transactional = true,
+      compactTargetBytes = Some(128L << 20)).get
+
+    hourRun(10)
+    assert(TxTable.latest(spark, interp)._1 === 1L, "compaction published a version")
+    assert(filesPerLeaf(interp) === Seq(1))
+    assert(filesPerLeaf(fact) === Seq(1))
+    // the next hour re-stages the same date leaf: still one file, and
+    // still no compaction commit behind the window replacement
+    val r11 = hourRun(11)
+    assert(TxTable.latest(spark, interp)._1 === 2L, "compaction published a version")
+    assert(filesPerLeaf(interp) === Seq(1))
+    assert(filesPerLeaf(fact) === Seq(1))
+    assert(TxTable.snapshot(spark, interp).get.count() === 12L + r11.densifiedRows)
+  }
+
   test("transactional mode: an hour with zero events succeeds as a no-op") {
     // The legacy writer tolerated an empty hour; the TxTable path must
     // too (empty batches are no-op commits) — and it must not even

@@ -157,6 +157,25 @@ class TxMergeRestoreSpec extends SparkTestBase {
     assert(TxTable.snapshot(s, dir).get.count() == 400)
   }
 
+  test("a small one-leaf commit stages ONE file, upsert and window replacement alike") {
+    val s = spark; import s.implicits._
+    val dir = Files.createTempDirectory("graft_tx_one_leaf").toString + "/fact"
+    def files(): Seq[Int] = TxTable.latest(s, dir)._2.values.toSeq.map(leaf =>
+      new java.io.File(dir, leaf).listFiles().count(_.getName.endsWith(".parquet")))
+    // a 6-way repartitioned batch into ONE partition, coalescing on
+    // (the session default): the one touched leaf gets one file
+    TxTable.upsert(s, dir, (1L to 400L).map(i => (i, "p", i.toDouble))
+      .toDF("id", "p", "v").repartition(6), "id", "v", "p")
+    assert(files() === Seq(1))
+    // the hourly shape: a window replacement unions the leaf's kept rows
+    // with a multi-partition batch — no exchange of its own, so without
+    // placement the leaf re-stages as one file per input split
+    TxTable.replaceWindow(s, dir, (401L to 800L).map(i => (i, "p", i.toDouble))
+      .toDF("id", "p", "v").repartition(6), "p", col("v") > 400.0)
+    assert(files() === Seq(1))
+    assert(TxTable.snapshot(s, dir).get.count() === 800L)
+  }
+
   test("TxTable.merge refuses to reassign key or partition columns") {
     val s = spark; import s.implicits._
     val dir = Files.createTempDirectory("graft_tx_merge_req").toString + "/fact"

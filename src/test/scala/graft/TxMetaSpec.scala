@@ -163,6 +163,42 @@ class TxMetaSpec extends SparkTestBase {
       col("day") === "2024-01-01").get.count() == 1)
   }
 
+  test("pruned reads resolve partition keys on the driver: no Spark job, same rows") {
+    val s = spark; import s.implicits._
+    val one = Files.createTempDirectory("graft_meta_keys").toString + "/fact"
+    TxTable.upsert(s, one,
+      Seq((1L, "2024-01-01", "click", 10.0), (2L, null: String, "view", 20.0),
+        (3L, "2024-01-02", "view", 30.0)).toDF("id", "day", "event_type", "v"),
+      "id", "v", "day")
+    val multi = Files.createTempDirectory("graft_meta_keys_mc").toString + "/fact"
+    TxTable.upsert(s, multi, rows, "id", "v", Seq("day", "event_type"))
+    val full = TxTable.snapshot(s, one).get
+    def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).sorted.toSeq
+
+    var reads = Seq.empty[org.apache.spark.sql.DataFrame]
+    val jobs = SparkEvents.jobs(s) {
+      reads = Seq(
+        TxTable.snapshotPartitions(s, one, Seq(lit("2024-01-02"))),
+        TxTable.snapshotPartitions(s, one, Seq(lit(null).cast("string"))),
+        TxTable.snapshotPartitions(s, one, Seq(lit("1999-12-31"))),
+        TxTable.snapshotPartitionTuples(s, multi,
+          Seq(Seq(lit("2024-01-01"), lit("click")))),
+        TxTable.snapshotWhere(s, one, "day", col("day") >= "2024-01-02")).map(_.get)
+    }
+    assert(jobs === 0, "partition-key resolution launched Spark jobs")
+    val Seq(single, nul, noHit, tuple, where) = reads
+    assert(rowsOf(single) === rowsOf(full.filter(col("day") === "2024-01-02")))
+    assert(single.count() === 1L)
+    assert(rowsOf(nul) === rowsOf(full.filter(col("day").isNull)))
+    assert(nul.count() === 1L)
+    assert(noHit.count() === 0L && noHit.schema === full.schema)
+    assert(rowsOf(tuple) === rowsOf(TxTable.snapshot(s, multi).get
+      .filter(col("day") === "2024-01-01" && col("event_type") === "click")))
+    assert(tuple.count() === 1L)
+    assert(rowsOf(where) === rowsOf(full.filter(col("day") >= "2024-01-02")))
+  }
+
   test("multi-column specs record and round-trip; vacuum preserves the slot") {
     val s = spark; import s.implicits._
     val dir = Files.createTempDirectory("graft_meta_mc").toString + "/fact"
