@@ -91,19 +91,28 @@ object PartitionSpec {
   *
   * ==Commit protocol (optimistic CAS, no locks)==
   *
-  *  1. read the latest manifest version v (0 = empty table);
-  *  2. merge the batch against the SNAPSHOT's touched-partition files
-  *     (immutable — a concurrent commit cannot tear this read);
-  *  3. stage the merged partitions as new data dirs under unique names
+  * Every verb that stages data publishes through ONE private
+  * `commit(op, spec, …)(stage)`, which owns the retry loop (the Delta
+  * Lake shape: every write is one optimistic transaction). Per attempt:
+  *
+  *  1. read the latest manifest version v (0 = empty table), its
+  *     resolved entries and its recorded schema, and re-verify the
+  *     table's partition spec against `_meta`;
+  *  2. the verb's `stage` says what to write from THAT snapshot — a
+  *     merged, filtered or rewritten frame of the touched partitions
+  *     (immutable files: a concurrent commit cannot tear this read),
+  *     or nothing;
+  *  3. the frame is staged in ONE job under a fresh `data/<uuid>` dir
   *     (all the expensive work happens outside any critical region);
-  *  4. publish manifest v+1 through [[CommitStore]] — an
+  *     rewritten partitions that staged no rows are tombstoned;
+  *  4. manifest v+1 publishes through [[CommitStore]] — an
   *     ATOMIC-EXCLUSIVE primitive per storage class (local symlink,
   *     HDFS rename-without-overwrite; see CommitStore's scaladoc).
   *     Success = the commit point. Failure = someone else committed
-  *     v+1 since step 1: delete the staged dirs and RETRY THE MERGE
-  *     from the new snapshot, so the loser's rows land on top of the
-  *     winner's instead of over them. First-committer-wins, losers
-  *     re-merge — lost updates are impossible by construction.
+  *     v+1 since step 1: delete the staged dir and RETRY FROM STEP 1,
+  *     so the loser's rows land on top of the winner's instead of over
+  *     them. First-committer-wins, losers re-stage — lost updates are
+  *     impossible by construction.
   *
   * Readers resolve the latest manifest and read immutable files: every
   * read is a consistent snapshot, torn reads are gone too. Files
@@ -573,15 +582,19 @@ object TxTable {
     }
   }
 
-  /** (tip version, resolved entries, tip body's recorded schema) — the
-    * schema rides out of the SAME tip body `latest` already read, so a
-    * schema-aware snapshot costs no extra I/O. */
-  private def latestEntries(
-      spark: SparkSession, dir: String): (Long, Map[String, Entry], Option[StructType]) = {
+  /** A committed snapshot: the tip version, its resolved manifest, and
+    * the table schema in force there. */
+  private case class Tip(
+      v: Long, entries: Map[String, Entry], schema: Option[StructType])
+
+  /** The latest [[Tip]] — the schema rides out of the SAME tip body
+    * `latest` already read, so a schema-aware snapshot costs no extra
+    * I/O. */
+  private def latestEntries(spark: SparkSession, dir: String): Tip = {
     val log = s"$dir/$LogDir"
     val store = CommitStore.forPath(fsOf(spark, dir), log)
     val (v, lines) = store.latest(log)
-    (v, resolveAt(store, log, v).getOrElse(throw new IllegalStateException(
+    Tip(v, resolveAt(store, log, v).getOrElse(throw new IllegalStateException(
       s"manifest chain for version $v is broken (concurrent unsafe vacuum?)")),
       schemaAtSeeded(store, log, v, lines))
   }
@@ -589,7 +602,7 @@ object TxTable {
   /** Latest committed (version, full partition → data dir map).
     * (0, empty) on a fresh table. */
   def latest(spark: SparkSession, dir: String): (Long, Map[String, String]) = {
-    val (v, entries, _) = latestEntries(spark, dir)
+    val Tip(v, entries, _) = latestEntries(spark, dir)
     (v, entries.map { case (k, e) => k -> e.leaf })
   }
 
@@ -598,7 +611,7 @@ object TxTable {
   /** The table's current committed state as one consistent snapshot
     * (empty option on a never-committed table). */
   def snapshot(spark: SparkSession, dir: String): Option[DataFrame] = {
-    val (_, entries, schema) = latestEntries(spark, dir)
+    val Tip(_, entries, schema) = latestEntries(spark, dir)
     if (entries.isEmpty) None
     else Some(read(spark, dir, entries, schema))
   }
@@ -639,7 +652,7 @@ object TxTable {
             "a mismatched spec would double-key the table")
       }
     }
-    val (_, entries, schema) = latestEntries(spark, dir)
+    val Tip(_, entries, schema) = latestEntries(spark, dir)
     if (entries.isEmpty) return None
     val keys = localFrame(spark, Seq(Row.empty), StructType(Nil))
       .select(values.zipWithIndex.map { case (v, i) => keyExprVals(v).as(s"k$i") }: _*)
@@ -659,7 +672,7 @@ object TxTable {
     * and they upgrade as commits touch them. */
   def partitionValues(spark: SparkSession, dir: String): Seq[Seq[String]] = {
     val arity = readMeta(fsOf(spark, dir), dir).map(_.size)
-    val (_, entries, _) = latestEntries(spark, dir)
+    val Tip(_, entries, _) = latestEntries(spark, dir)
     entries.values.toSeq
       .flatMap(_.vhex)
       .map(vhexSplit)
@@ -709,7 +722,7 @@ object TxTable {
         s"TxTable $dir is partitioned by ${recorded.mkString("(", ", ", ")")} " +
           s"but this read passed ${partitionCol.cols.mkString("(", ", ", ")")} — " +
           "a mismatched spec would prune on the wrong identity"))
-    val (_, entries, schema) = latestEntries(spark, dir)
+    val Tip(_, entries, schema) = latestEntries(spark, dir)
     if (entries.isEmpty) return None
     val hit = entriesWhere(spark, entries, partitionCol, pred)
     if (hit.nonEmpty) Some(read(spark, dir, hit, schema))
@@ -843,12 +856,6 @@ object TxTable {
     val aDirs = changedDirs(aE)
     val bDirs = changedDirs(bE)
     require(aE.nonEmpty || bE.nonEmpty, "diff between two empty versions")
-    def readDirs(dirs: Seq[String], schema: Option[StructType]): DataFrame =
-      schema match {
-        case Some(s) => spark.read.schema(s).parquet(dirs.map(leafPath(dir, _)): _*)
-        case None => spark.read.option("mergeSchema", "true")
-          .parquet(dirs.map(leafPath(dir, _)): _*)
-      }
     // schema anchor for a side with no changed (or no) leaves: one leaf
     // of that version, or the other side's — a column living only in
     // unchanged leaves cannot contribute a change row anyway, and
@@ -856,9 +863,10 @@ object TxTable {
     def side(
         dirs: Seq[String], own: Map[String, String],
         schema: Option[StructType]): DataFrame =
-      if (dirs.nonEmpty) readDirs(dirs, schema)
-      else if (own.nonEmpty) readDirs(Seq(own.values.min), schema).limit(0)
-      else readDirs(Seq((bE ++ aE).values.min), schema.orElse(bS).orElse(aS)).limit(0)
+      if (dirs.nonEmpty) leafRead(spark, dir, dirs, schema)
+      else if (own.nonEmpty) leafRead(spark, dir, Seq(own.values.min), schema).limit(0)
+      else leafRead(spark, dir, Seq((bE ++ aE).values.min), schema.orElse(bS).orElse(aS))
+        .limit(0)
     val (a, b) = alignSchemas(side(aDirs, aE, aS), side(bDirs, bE, bS))
     val payload = b.columns.filterNot(_ == key).toSeq
     // the readout injects change_type; a payload column of that name
@@ -913,7 +921,7 @@ object TxTable {
       key: String, version: String, partitionCol: PartitionSpec,
       layout: Layout = Layout.none, maxRetries: Int = 10,
       beforeCommit: () => Unit = () => ()): Unit =
-    commitLoop(spark, targetDir, incoming, partitionCol, layout,
+    mergeCommit(spark, targetDir, incoming, partitionCol, layout,
       maxRetries, beforeCommit, "upsert", Some(key), Some(version))(
       (existing, batch) => Merge.upsertLatestWins(existing, batch, key, version))
 
@@ -931,7 +939,7 @@ object TxTable {
       partitionCol: PartitionSpec, windowPred: org.apache.spark.sql.Column,
       layout: Layout = Layout.none, maxRetries: Int = 10,
       beforeCommit: () => Unit = () => ()): Unit =
-    commitLoop(spark, targetDir, incoming, partitionCol, layout,
+    mergeCommit(spark, targetDir, incoming, partitionCol, layout,
       maxRetries, beforeCommit, "replaceWindow")(
       (existing, batch) => existing.filter(!windowPred).unionByName(batch))
 
@@ -961,32 +969,16 @@ object TxTable {
     val touched = touchedOf(batch, partitionCol)
     val gate = new TxConstraints.Gate(spark, targetDir, "replaceAll")
     gate.ensure(batch)
-    val fs = fsOf(spark, targetDir)
-    val log = s"$targetDir/$LogDir"
-    val store = CommitStore.forPath(fs, log)
-    ensureSpec(fs, targetDir, partitionCol)
-    val (v, _) = store.latest(log)
-    gate.ensure(batch)
-    val commitId = UUID.randomUUID().toString
-    val stageRel = s"$DataDir/$commitId"
-    val staged: Map[String, Entry] =
-      if (touched.isEmpty) Map.empty // truncate: an empty checkpoint
-      else {
-        writeLaidOut(batch, layout, s"$targetDir/$stageRel", touched.size)
-        fs.listStatus(new Path(s"$targetDir/$stageRel")).toSeq
-          .map(_.getPath.getName)
-          .filter(_.startsWith(PKey + "="))
-          .map { leaf =>
-            val k = leaf.stripPrefix(PKey + "=")
-            k -> Entry(s"$stageRel/$leaf", touched.get(k))
-          }.toMap
-      }
-    beforeCommit()
-    // full replacement: the staged frame's schema IS the table schema
-    if (!store.tryCommit(log, v + 1,
-        render("checkpoint", staged, Some(stagedSchemaOf(batch))))) {
-      fs.delete(new Path(s"$targetDir/$stageRel"), true): Unit
-      throw new IllegalStateException(
+    // ONE attempt: a full replacement is point-in-time, so a lost race
+    // refuses instead of re-staging. An empty batch stages nothing: the
+    // truncate's empty checkpoint.
+    try commit(spark, targetDir, "replaceAll", Some(partitionCol), maxRetries = 1,
+        beforeCommit, full = true) { _ =>
+      gate.ensure(batch)
+      Some(Stage(batch, touched.keys, touched, layout, touched.size))
+    }: Unit
+    catch {
+      case _: LostRace => throw new IllegalStateException(
         s"TxTable.replaceAll lost to a concurrent commit on $targetDir — " +
           "a full replacement is point-in-time: recompute it against the " +
           "new tip and rerun")
@@ -1030,8 +1022,6 @@ object TxTable {
       s"TxTable $dir has a respec to ${meta.partCols.mkString("(", ", ", ")")} " +
         s"in progress — complete it (rerun with that spec) before evolving to " +
         s"${newSpec.cols.mkString("(", ", ", ")")}")
-    val log = s"$dir/$LogDir"
-    val store = CommitStore.forPath(fs, log)
     // validate the new columns against the current schema before any
     // state changes (an empty table has no rows to re-key — just move
     // the record)
@@ -1040,7 +1030,7 @@ object TxTable {
         // no rows to re-key, but HISTORY may hold old-keyed versions —
         // specSince fences restore from crossing back into them
         writeMeta(fs, dir, newSpec.cols, meta.key, meta.version,
-          specPending = false, specSince = Some(store.latest(log)._1))
+          specPending = false, specSince = Some(latestVersion(spark, dir)))
         return
       case Some(snap0) =>
         val missing = newSpec.cols.filterNot(c =>
@@ -1051,46 +1041,19 @@ object TxTable {
     // step 1: the transitional record — writers refuse, pruning off
     writeMeta(fs, dir, newSpec.cols, meta.key, meta.version,
       specPending = true, specSince = meta.specSince)
-    // step 2: full re-keyed rewrite, one checkpoint commit
-    var committedAt = 0L
-    var attempt = 0
-    var committed = false
-    while (!committed) {
-      attempt += 1
-      if (attempt > maxRetries)
-        throw new IllegalStateException(
-          s"repartitionTable lost the commit race $maxRetries times on $dir " +
-            "(the respec stays pending — rerun to complete)")
-      val (v, tipLines) = store.latest(log)
-      val prevSchema = schemaAtSeeded(store, log, v, tipLines)
-      val entries = resolveAt(store, log, v).getOrElse(
-        throw new IllegalStateException(s"manifest chain for version $v is broken"))
-      val batch = read(spark, dir, entries, prevSchema)
+    // step 2: full re-keyed rewrite, one checkpoint commit (no spec
+    // check: this verb owns the pending record)
+    val committedAt = commit(spark, dir, "repartitionTable", None, maxRetries,
+        beforeCommit, full = true) { tip =>
+      val batch = read(spark, dir, tip.entries, tip.schema)
         .withColumn(PKey, keyExpr(newSpec))
       val touched = touchedOf(batch, newSpec)
-      val commitId = UUID.randomUUID().toString
-      val stageRel = s"$DataDir/$commitId"
-      writeLaidOut(batch, layout, s"$dir/$stageRel", touched.size)
-      val staged = fs.listStatus(new Path(s"$dir/$stageRel")).toSeq
-        .map(_.getPath.getName)
-        .filter(_.startsWith(PKey + "="))
-        .map { leaf =>
-          val k = leaf.stripPrefix(PKey + "=")
-          k -> Entry(s"$stageRel/$leaf", touched.get(k))
-        }.toMap
-      if (attempt == 1) beforeCommit()
-      // rows-preserving rewrite: schema carries over (or starts, from
-      // the rewritten frame, on a legacy chain being fully rewritten)
-      if (store.tryCommit(log, v + 1, render("checkpoint", staged,
-          Some(prevSchema.getOrElse(stagedSchemaOf(batch)))))) {
-        committed = true
-        committedAt = v + 1
-      } else fs.delete(new Path(s"$dir/$stageRel"), true): Unit
+      Some(Stage(batch, touched.keys, touched, layout, touched.size))
     }
     // the final record: restore is fenced at the rewrite version — a
     // target below it is keyed under the old spec
     writeMeta(fs, dir, newSpec.cols, meta.key, meta.version,
-      specPending = false, specSince = Some(committedAt))
+      specPending = false, specSince = committedAt)
   }
 
   /** Transactional CDC APPLY — a change log (key, op ∈ I/U/D, seq,
@@ -1121,66 +1084,26 @@ object TxTable {
     val upserting = batch.filter(col(opCol).isNull || col(opCol) =!= "D")
     val gate = new TxConstraints.Gate(spark, targetDir, "applyCdc")
     gate.ensure(upserting)
-    val fs = fsOf(spark, targetDir)
-    val log = s"$targetDir/$LogDir"
-    val store = CommitStore.forPath(fs, log)
-    ensureSpec(fs, targetDir, partitionCol, Some(key))
-    var attempt = 0
-    while (attempt < maxRetries) {
-      attempt += 1
-      val (v, tipLines) = store.latest(log)
-      val prevSchema = schemaAtSeeded(store, log, v, tipLines)
+    commit(spark, targetDir, "applyCdc", Some(partitionCol), maxRetries,
+        beforeCommit, Some(key)) { tip =>
       gate.ensure(upserting) // probe after the data-tip read
-      // stale-spec retries refuse (the commitLoop discipline)
-      if (attempt > 1) ensureSpec(fs, targetDir, partitionCol, Some(key))
-      val entries = resolveAt(store, log, v).getOrElse(
-        throw new IllegalStateException(s"manifest chain for version $v is broken"))
-      val existingDirs = touchedKeys.flatMap(entries.get).map(_.leaf).distinct
       // unlike upsert, an absent partition does NOT mean "write the
       // batch": D-rows must never land as data, so the merge always
       // runs — against an empty target of the batch's payload shape
       // when the partition is new
-      val existing0 =
-        if (existingDirs.nonEmpty)
-          leafRead(spark, targetDir, existingDirs, prevSchema)
-            .withColumn(PKey, keyExpr(partitionCol))
-            .filter(col(PKey).isInCollection(touchedKeys))
-        else batch.drop(opCol, seqCol).limit(0)
+      val existing0 = touchedRows(spark, targetDir, partitionCol, tip, touchedKeys)
+        .getOrElse(batch.drop(opCol, seqCol).limit(0))
       // evolution alignment, but op/seq must never leak into the
       // TARGET's payload shape (applyCdc derives payload from target
       // columns): widen existing by the batch's PAYLOAD only, widen
       // the batch by whatever old columns it lacks
       val (e2, _) = alignSchemas(existing0, batch.drop(opCol, seqCol))
       val (b2, _) = alignSchemas(batch, existing0)
-      val merged = Merge.applyCdc(e2, b2, key, opCol, seqCol)
-      requireAddOnly(prevSchema, merged)
-      val commitId = UUID.randomUUID().toString
-      val stageRel = s"$DataDir/$commitId"
-      writeLaidOut(merged, layout, s"$targetDir/$stageRel", touchedKeys.size)
-      val stagedLeaves = fs.listStatus(new Path(s"$targetDir/$stageRel")).toSeq
-        .map(_.getPath.getName)
-        .filter(_.startsWith(PKey + "="))
-        .map { leaf =>
-          val k = leaf.stripPrefix(PKey + "=")
-          k -> Entry(s"$stageRel/$leaf", touched.get(k))
-        }
-      // an all-deletes partition stages nothing: tombstone it if it
-      // exists, skip it if it never did
-      val staged = stagedLeaves.toMap ++
-        touchedKeys.filterNot(stagedLeaves.map(_._1).toSet)
-          .filter(entries.contains)
-          .map(_ -> Entry(Tombstone, None))
-      if (staged.isEmpty) { // nothing landed and nothing to remove
-        fs.delete(new Path(s"$targetDir/$stageRel"), true): Unit
-        return
-      }
-      if (attempt == 1) beforeCommit()
-      if (tryPublish(spark, store, log, v, entries, staged,
-          prevSchema, Some(stagedSchemaOf(merged)))) return
-      fs.delete(new Path(s"$targetDir/$stageRel"), true): Unit
+      // an all-deletes partition stages nothing: tombstoned if it
+      // exists, skipped if it never did
+      Some(Stage(Merge.applyCdc(e2, b2, key, opCol, seqCol),
+        touchedKeys, touched, layout, touchedKeys.size))
     }
-    throw new IllegalStateException(
-      s"TxTable.applyCdc lost the commit race $maxRetries times on $targetDir")
   }
 
   /** Keyed DELETE — the third DML verb, completing the
@@ -1205,51 +1128,16 @@ object TxTable {
     val touchedKeys = batch.select(PKey).distinct()
       .collect().map(_.getString(0)).toIndexedSeq
     if (touchedKeys.isEmpty) return
-    val fs = fsOf(spark, targetDir)
-    val log = s"$targetDir/$LogDir"
-    val store = CommitStore.forPath(fs, log)
-    ensureSpec(fs, targetDir, partitionCol, Some(key))
-    var attempt = 0
-    while (attempt < maxRetries) {
-      attempt += 1
-      val (v, tipLines) = store.latest(log)
-      val prevSchema = schemaAtSeeded(store, log, v, tipLines)
-      val entries = resolveAt(store, log, v).getOrElse(
-        throw new IllegalStateException(s"manifest chain for version $v is broken"))
+    commit(spark, targetDir, "delete", Some(partitionCol), maxRetries,
+        beforeCommit, Some(key)) { tip =>
       // only partitions that EXIST participate; deleting from absent
-      // partitions is vacuously done
-      val hit = touchedKeys.filter(entries.contains)
-      if (hit.isEmpty) return
-      val existing = leafRead(spark, targetDir,
-          hit.flatMap(entries.get).map(_.leaf), prevSchema)
-        .withColumn(PKey, keyExpr(partitionCol))
-        .filter(col(PKey).isInCollection(hit))
-      val remaining = existing.join(
-        batch.select(col(key)).distinct(), Seq(key), "left_anti")
-      val commitId = UUID.randomUUID().toString
-      val stageRel = s"$DataDir/$commitId"
-      writeLaidOut(remaining, layout, s"$targetDir/$stageRel", hit.size)
-      val stagedLeaves = fs.listStatus(new Path(s"$targetDir/$stageRel")).toSeq
-        .map(_.getPath.getName)
-        .filter(_.startsWith(PKey + "="))
-        .map { leaf =>
-          val k = leaf.stripPrefix(PKey + "=")
-          // the surviving partition's value rides over from its entry
-          k -> Entry(s"$stageRel/$leaf", entries(k).vhex)
-        }
-      // a touched partition with no surviving rows writes no leaf —
-      // its manifest entry must DROP, not linger pointing at old data
-      val staged = stagedLeaves.toMap ++
-        hit.filterNot(stagedLeaves.map(_._1).toSet)
-          .map(_ -> Entry(Tombstone, None))
-      if (attempt == 1) beforeCommit()
-      // deletes never change the table schema: carry the previous one
-      if (tryPublish(spark, store, log, v, entries, staged,
-          prevSchema, None)) return
-      fs.delete(new Path(s"$targetDir/$stageRel"), true): Unit
+      // partitions is vacuously done. A touched partition with no
+      // surviving rows stages no leaf and tombstones out.
+      val hit = touchedKeys.filter(tip.entries.contains)
+      touchedRows(spark, targetDir, partitionCol, tip, hit).map(existing =>
+        Stage(existing.join(batch.select(col(key)).distinct(), Seq(key), "left_anti"),
+          hit, layout = layout, widenTo = hit.size))
     }
-    throw new IllegalStateException(
-      s"TxTable.delete lost the commit race $maxRetries times on $targetDir")
   }
 
   /** Predicate DELETE — the public formats' `DELETE FROM … WHERE`,
@@ -1319,71 +1207,35 @@ object TxTable {
     }
   }
 
-  /** The shared two-phase predicate-rewrite loop behind
+  /** The shared two-phase predicate-rewrite stage behind
     * [[deleteWhere]]/[[updateWhere]]: find the partitions holding
     * matching rows (scan manifest-pruned by `scope`), rewrite exactly
-    * those through the caller's transform, tombstone emptied ones,
-    * publish a delta. Re-runs whole on a lost CAS race. */
+    * those through the caller's transform; emptied ones tombstone.
+    * Re-runs whole on a lost CAS race. */
   private def rewriteWhere(
       spark: SparkSession, targetDir: String, partitionCol: PartitionSpec,
       pred: Column, scope: Option[Column], layout: Layout,
       maxRetries: Int, beforeCommit: () => Unit, op: String)(
-      transform: (DataFrame, Column) => DataFrame): Unit = {
-    val fs = fsOf(spark, targetDir)
-    val log = s"$targetDir/$LogDir"
-    val store = CommitStore.forPath(fs, log)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      attempt += 1
-      val (v, tipLines) = store.latest(log)
-      if (v == 0) return // empty table: vacuously done
-      val prevSchema = schemaAtSeeded(store, log, v, tipLines)
-      ensureSpec(fs, targetDir, partitionCol)
-      val entries = resolveAt(store, log, v).getOrElse(
-        throw new IllegalStateException(s"manifest chain for version $v is broken"))
-      if (entries.isEmpty) return
-      val candidates = scope.fold(entries)(
-        entriesWhere(spark, entries, partitionCol, _))
-      if (candidates.isEmpty) return
-      // find pass: which candidate partitions actually hold a match —
-      // the rewrite set must be matches-only, or a table-wide predicate
-      // would rewrite every candidate leaf it MIGHT have matched
-      val scanned = read(spark, targetDir, candidates, prevSchema)
-        .withColumn(PKey, keyExpr(partitionCol))
-      val hit = scanned.filter(pred).select(PKey).distinct()
-        .collect().map(_.getString(0)).toIndexedSeq
-      if (hit.isEmpty) return // nothing matches: no version published
-      val hitSet = hit.toSet
-      val existing = read(spark, targetDir,
-          entries.filter { case (k, _) => hitSet(k) }, prevSchema)
-        .withColumn(PKey, keyExpr(partitionCol))
-        .filter(col(PKey).isInCollection(hit))
-      val rewritten = transform(existing, pred)
-      val commitId = UUID.randomUUID().toString
-      val stageRel = s"$DataDir/$commitId"
-      writeLaidOut(rewritten, layout, s"$targetDir/$stageRel", hit.size)
-      val stagedLeaves = fs.listStatus(new Path(s"$targetDir/$stageRel")).toSeq
-        .map(_.getPath.getName)
-        .filter(_.startsWith(PKey + "="))
-        .map { leaf =>
-          val k = leaf.stripPrefix(PKey + "=")
-          // the partition's value rides over from its entry
-          k -> Entry(s"$stageRel/$leaf", entries.get(k).flatMap(_.vhex))
-        }
-      // a hit partition that staged nothing was emptied — tombstone it
-      val staged = stagedLeaves.toMap ++
-        hit.filterNot(stagedLeaves.map(_._1).toSet)
-          .map(_ -> Entry(Tombstone, None))
-      if (attempt == 1) beforeCommit()
-      // updateWhere can't add columns and deleteWhere drops rows only:
-      // the table schema is unchanged — carry the previous one
-      if (tryPublish(spark, store, log, v, entries, staged,
-          prevSchema, None)) return
-      fs.delete(new Path(s"$targetDir/$stageRel"), true): Unit
+      transform: (DataFrame, Column) => DataFrame): Unit =
+    commit(spark, targetDir, op, Some(partitionCol), maxRetries,
+        beforeCommit) { tip =>
+      // an empty table is vacuously done
+      val candidates = scope.fold(tip.entries)(
+        entriesWhere(spark, tip.entries, partitionCol, _))
+      if (candidates.isEmpty) None
+      else {
+        // find pass: which candidate partitions actually hold a match —
+        // the rewrite set must be matches-only, or a table-wide predicate
+        // would rewrite every candidate leaf it MIGHT have matched
+        val hit = read(spark, targetDir, candidates, tip.schema)
+          .withColumn(PKey, keyExpr(partitionCol))
+          .filter(pred).select(PKey).distinct()
+          .collect().map(_.getString(0)).toIndexedSeq
+        // nothing matches: no version published
+        touchedRows(spark, targetDir, partitionCol, tip, hit).map(existing =>
+          Stage(transform(existing, pred), hit, layout = layout, widenTo = hit.size))
+      }
     }
-    throw new IllegalStateException(
-      s"TxTable.$op lost the commit race $maxRetries times on $targetDir")
-  }
 
   /** Transactional `MERGE INTO` — [[graft.ops.Merge.mergeInto]]'s
     * conditional update/delete/insert clauses committed as ONE version,
@@ -1434,29 +1286,13 @@ object TxTable {
     val touched = touchedOf(batch, partitionCol)
     val touchedKeys = touched.keys.toIndexedSeq
     if (touchedKeys.isEmpty) return
-    val fs = fsOf(spark, targetDir)
-    val log = s"$targetDir/$LogDir"
-    val store = CommitStore.forPath(fs, log)
-    ensureSpec(fs, targetDir, partitionCol, Some(key))
-    var attempt = 0
-    while (attempt < maxRetries) {
-      attempt += 1
-      val (v, tipLines) = store.latest(log)
-      val prevSchema = schemaAtSeeded(store, log, v, tipLines)
-      // stale-spec retries refuse (the commitLoop discipline)
-      if (attempt > 1) ensureSpec(fs, targetDir, partitionCol, Some(key))
-      val entries = resolveAt(store, log, v).getOrElse(
-        throw new IllegalStateException(s"manifest chain for version $v is broken"))
-      val existingDirs = touchedKeys.flatMap(entries.get).map(_.leaf).distinct
+    commit(spark, targetDir, "merge", Some(partitionCol), maxRetries,
+        beforeCommit, Some(key)) { tip =>
       // like applyCdc, the merge ALWAYS runs — an absent partition is
       // an empty target (only the INSERT clause can land rows there),
       // never a write-the-batch shortcut (clauses must filter it)
-      val existing0 =
-        if (existingDirs.nonEmpty)
-          leafRead(spark, targetDir, existingDirs, prevSchema)
-            .withColumn(PKey, keyExpr(partitionCol))
-            .filter(col(PKey).isInCollection(touchedKeys))
-        else batch.limit(0)
+      val existing0 = touchedRows(spark, targetDir, partitionCol, tip, touchedKeys)
+        .getOrElse(batch.limit(0))
       val (e2, b2) = alignSchemas(existing0, batch)
       val merged0 = Merge.mergeInto(
         e2, b2, key, updateSet, updateCond, deleteCond, insertCond)
@@ -1478,35 +1314,11 @@ object TxTable {
       // are computed here, not in the source) — per attempt, since a
       // lost race re-merges against the winner's snapshot
       TxConstraints.enforce(spark, targetDir, merged, "merge")
-      requireAddOnly(prevSchema, merged)
-      val commitId = UUID.randomUUID().toString
-      val stageRel = s"$DataDir/$commitId"
-      writeLaidOut(merged, layout, s"$targetDir/$stageRel", touchedKeys.size)
-      val stagedLeaves = fs.listStatus(new Path(s"$targetDir/$stageRel")).toSeq
-        .map(_.getPath.getName)
-        .filter(_.startsWith(PKey + "="))
-        .map { leaf =>
-          val k = leaf.stripPrefix(PKey + "=")
-          k -> Entry(s"$stageRel/$leaf", touched.get(k))
-        }
       // a touched partition that exists but staged nothing was emptied
-      // by the DELETE clause — tombstone it; one that never existed and
-      // staged nothing had its inserts filtered — skip it
-      val staged = stagedLeaves.toMap ++
-        touchedKeys.filterNot(stagedLeaves.map(_._1).toSet)
-          .filter(entries.contains)
-          .map(_ -> Entry(Tombstone, None))
-      if (staged.isEmpty) {
-        fs.delete(new Path(s"$targetDir/$stageRel"), true): Unit
-        return
-      }
-      if (attempt == 1) beforeCommit()
-      if (tryPublish(spark, store, log, v, entries, staged,
-          prevSchema, Some(stagedSchemaOf(merged)))) return
-      fs.delete(new Path(s"$targetDir/$stageRel"), true): Unit
+      // by the DELETE clause (tombstoned); one that never existed and
+      // staged nothing had its inserts filtered (skipped)
+      Some(Stage(merged, touchedKeys, touched, layout, touchedKeys.size))
     }
-    throw new IllegalStateException(
-      s"TxTable.merge lost the commit race $maxRetries times on $targetDir")
   }
 
   /** Staged-bytes of commit `v`: the total size of the data files its
@@ -1599,50 +1411,33 @@ object TxTable {
     require(dup.isEmpty,
       s"addColumns lists ${dup.distinct.mkString(", ")} more than once")
     val fs = fsOf(spark, dir)
-    val log = s"$dir/$LogDir"
-    val store = CommitStore.forPath(fs, log)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      attempt += 1
-      val (v, tipLines) = store.latest(log)
-      require(v >= 1,
+    commit(spark, dir, "addColumns", Some(partitionCol), maxRetries,
+        beforeCommit) { tip =>
+      require(tip.v >= 1,
         s"addColumns on $dir: an empty table has no storage schema to " +
           "widen — bootstrap it with a write carrying the columns")
-      val prevSchema = schemaAtSeeded(store, log, v, tipLines)
-      ensureSpec(fs, dir, partitionCol)
-      val entries = resolveAt(store, log, v).getOrElse(
-        throw new IllegalStateException(s"manifest chain for version $v is broken"))
-      require(entries.nonEmpty,
+      require(tip.entries.nonEmpty,
         s"addColumns on $dir: the table holds no live partitions — " +
           "write data carrying the columns instead")
       // re-check per attempt: a racing widening commit may have landed.
       // Schema-only probe: the manifest-carried schema answers without
       // touching a footer; legacy chains resolve it the old way.
-      val existing = prevSchema
-        .getOrElse(read(spark, dir, entries, None).schema)
+      val existing = tip.schema
+        .getOrElse(read(spark, dir, tip.entries, None).schema)
         .fieldNames.map(_.toLowerCase).toSet
       val clash = cols.map(_.name).filter(c => existing(c.toLowerCase))
       require(clash.isEmpty,
         s"addColumns on $dir: column(s) already exist: ${clash.mkString(", ")}")
       // smallest live leaf = cheapest rows-preserving carrier
-      val (k, entry) = entries.minBy { case (_, e) =>
+      val (k, entry) = tip.entries.minBy { case (_, e) =>
         try fs.getContentSummary(new Path(leafPath(dir, e.leaf))).getLength
         catch { case _: java.io.IOException => Long.MaxValue }
       }
       val widened = cols.foldLeft(
         spark.read.parquet(leafPath(dir, entry.leaf)))(
         (d, f) => d.withColumn(f.name, lit(null).cast(f.dataType)))
-      val commitId = UUID.randomUUID().toString
-      val stageRel = s"$DataDir/$commitId/${PKey}=$k"
-      widened.write.parquet(s"$dir/$stageRel")
-      if (attempt == 1) beforeCommit()
-      if (tryPublish(spark, store, log, v, entries,
-          Map(k -> Entry(stageRel, entry.vhex)),
-          prevSchema, Some(stagedSchemaOf(widened)))) return
-      fs.delete(new Path(s"$dir/$DataDir/$commitId"), true): Unit
+      Some(Stage(widened.withColumn(PKey, lit(k)), Seq(k)))
     }
-    throw new IllegalStateException(
-      s"TxTable.addColumns lost the commit race $maxRetries times on $dir")
   }
 
   /** Roll the table back: publish a NEW commit whose state is exactly
@@ -1776,50 +1571,23 @@ object TxTable {
   def materialize(
       spark: SparkSession, dir: String, partitionCol: PartitionSpec,
       layout: Layout = Layout.none, maxRetries: Int = 10,
-      beforeCommit: () => Unit = () => ()): Unit = {
-    val fs = fsOf(spark, dir)
-    val log = s"$dir/$LogDir"
-    val store = CommitStore.forPath(fs, log)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      attempt += 1
-      val (v, tipLines) = store.latest(log)
-      if (v == 0) return
-      val prevSchema = schemaAtSeeded(store, log, v, tipLines)
-      ensureSpec(fs, dir, partitionCol)
-      val entries = resolveAt(store, log, v).getOrElse(
-        throw new IllegalStateException(s"manifest chain for version $v is broken"))
-      val foreign = entries.filter { case (_, e) =>
+      beforeCommit: () => Unit = () => ()): Unit =
+    commit(spark, dir, "materialize", Some(partitionCol), maxRetries,
+        beforeCommit) { tip =>
+      val foreign = tip.entries.filter { case (_, e) =>
         leafPath(dir, e.leaf) == e.leaf // absolute → not under this dir
       }
-      if (foreign.isEmpty) return
-      val rows = read(spark, dir, foreign, prevSchema)
-        .withColumn(PKey, keyExpr(partitionCol))
-      val commitId = UUID.randomUUID().toString
-      val stageRel = s"$DataDir/$commitId"
-      writeLaidOut(rows, layout, s"$dir/$stageRel", foreign.size)
-      val staged = fs.listStatus(new Path(s"$dir/$stageRel")).toSeq
-        .map(_.getPath.getName)
-        .filter(_.startsWith(PKey + "="))
-        .map { leaf =>
-          val k = leaf.stripPrefix(PKey + "=")
-          // rows-preserving rewrite: the partition value rides over
-          k -> Entry(s"$stageRel/$leaf", entries.get(k).flatMap(_.vhex))
-        }
-      if (attempt == 1) beforeCommit()
-      // rows-preserving rewrite: schema unchanged
-      if (tryPublish(spark, store, log, v, entries, staged.toMap,
-          prevSchema, None)) return
-      fs.delete(new Path(s"$dir/$stageRel"), true): Unit
+      // rows-preserving rewrite: each partition value rides over
+      if (foreign.isEmpty) None
+      else Some(Stage(
+        read(spark, dir, foreign, tip.schema).withColumn(PKey, keyExpr(partitionCol)),
+        foreign.keys, layout = layout, widenTo = foreign.size))
     }
-    throw new IllegalStateException(
-      s"TxTable.materialize lost the commit race $maxRetries times on $dir")
-  }
 
-  /** The shared optimistic-commit loop: snapshot → merge (strategy
-    * supplied by the caller) → single-job staging → CAS → loser
-    * cleanup + retry. */
-  private def commitLoop(
+  /** The keyed-merge stage behind [[upsert]] and [[replaceWindow]]:
+    * merge the batch against the snapshot's touched partitions (strategy
+    * supplied by the caller) and stage one leaf per touched key. */
+  private def mergeCommit(
       spark: SparkSession, targetDir: String, incoming: DataFrame,
       partitionCol: PartitionSpec, layout: Layout, maxRetries: Int,
       beforeCommit: () => Unit, op: String,
@@ -1842,88 +1610,128 @@ object TxTable {
     // of the ADD-vs-writer barrier protocol (TxConstraints scaladoc).
     val gate = new TxConstraints.Gate(spark, targetDir, op)
     gate.ensure(batch) // fail-fast before any staging cost
-    val fs = fsOf(spark, targetDir)
-    val log = s"$targetDir/$LogDir"
-    val store = CommitStore.forPath(fs, log)
-    ensureSpec(fs, targetDir, partitionCol, key, version)
-
-    var attempt = 0
-    var committed = false
-    while (!committed) {
-      attempt += 1
-      if (attempt > maxRetries)
-        throw new IllegalStateException(
-          s"TxTable.$op lost the commit race $maxRetries times on $targetDir")
-      val (v, tipLines) = store.latest(log)
-      val prevSchema = schemaAtSeeded(store, log, v, tipLines)
+    commit(spark, targetDir, op, Some(partitionCol), maxRetries, beforeCommit,
+        key, version) { tip =>
       // probe AFTER the data-tip read the attempt will CAS against —
       // the ordering the barrier proof needs
       gate.ensure(batch)
-      // re-verify the spec per attempt: a repartitionTable that won the
-      // race re-keyed the manifest, and a stale-spec retry would
-      // double-key the table — refuse loudly instead
-      if (attempt > 1) ensureSpec(fs, targetDir, partitionCol, key, version)
-      val entries = resolveAt(store, log, v).getOrElse(
-        throw new IllegalStateException(s"manifest chain for version $v is broken"))
-      val existingDirs = touchedKeys.flatMap(entries.get).map(_.leaf).distinct
-      val merged0 =
-        // the merge runs even when every touched partition is NEW (empty
-        // existing side of the batch's shape): a multi-version batch —
-        // a change feed drained in one micro-batch, a backfill carrying
-        // revisions — must collapse latest-wins IDENTICALLY whether the
-        // partition exists or not; the old write-the-batch shortcut made
-        // the same batch key-unique on existing partitions and
-        // duplicated on fresh ones
-        if (existingDirs.isEmpty) merge(batch.limit(0), batch)
-        else {
-          // immutable snapshot files: this read cannot be torn by a
-          // concurrent commit, unlike the live-directory read of the
-          // single-writer path. The key is re-derived by the SAME Spark
-          // expression (leaves are partition-pure, but defend the
-          // invariant anyway). Schemas align across an evolution commit:
-          // a widened batch nulls old rows' new columns, a narrow batch
-          // nulls its own missing ones.
-          val existing = leafRead(spark, targetDir, existingDirs, prevSchema)
-            .withColumn(PKey, keyExpr(partitionCol))
-            .filter(col(PKey).isInCollection(touchedKeys))
+      // the merge runs even when every touched partition is NEW: a
+      // multi-version batch (a change feed drained in one micro-batch)
+      // must collapse latest-wins IDENTICALLY whether the partition
+      // exists or not. Schemas align across an evolution commit. Not
+      // checkpointed: the staging write into a FRESH dir is the merge
+      // plan's only consumer.
+      val merged = touchedRows(spark, targetDir, partitionCol, tip, touchedKeys)
+        .fold(merge(batch.limit(0), batch)) { existing =>
           val (e2, b2) = alignSchemas(existing, batch)
           merge(e2, b2)
         }
-      // NOT checkpointed, unlike MergeWriter's merged frame: that path
-      // must materialize before overwriting the very directories it is
-      // lazily reading, while this write lands in a FRESH immutable dir
-      // with the staging job as the merge plan's only consumer — a
-      // checkpoint here would be one whole wasted pass per commit
-      val merged = merged0
-
-      // stage ALL touched partitions in ONE job: partitionBy on the key
-      // column fans the write out per partition without a driver loop.
-      requireAddOnly(prevSchema, merged)
-      val commitId = UUID.randomUUID().toString
-      val stageRel = s"$DataDir/$commitId"
-      writeLaidOut(merged, layout, s"$targetDir/$stageRel", touchedKeys.size)
-      // the written leaves ARE the staged manifest entries (key = leaf
-      // name minus the column prefix; hive escaping is the identity on
-      // the hex/NULL key alphabet); each carries its partition value
-      val staged = fs.listStatus(new Path(s"$targetDir/$stageRel")).toSeq
-        .map(_.getPath.getName)
-        .filter(_.startsWith(PKey + "="))
-        .map { leaf =>
-          val k = leaf.stripPrefix(PKey + "=")
-          k -> Entry(s"$stageRel/$leaf", touched.get(k))
-        }
-
-      if (attempt == 1) beforeCommit()
-
-      if (tryPublish(spark, store, log, v, entries, staged.toMap,
-          prevSchema, Some(stagedSchemaOf(merged)))) committed = true
-      else {
-        // lost the race: discard our stale staging and re-merge against
-        // the winner's snapshot
-        fs.delete(new Path(s"$targetDir/$stageRel"), true): Unit
-      }
+      Some(Stage(merged, touchedKeys, touched, layout, touchedKeys.size))
     }
   }
+
+  /** What one commit attempt writes: `rows` (carrying the key column)
+    * land through [[writeLaidOut]], one leaf per key; a rewritten key in
+    * `keys` that exists at the tip but stages no leaf is tombstoned (no
+    * keys: nothing is written). A leaf's partition value comes from
+    * `values`, else from its tip entry. */
+  private case class Stage(
+      rows: DataFrame, keys: Iterable[String],
+      values: Map[String, String] = Map.empty,
+      layout: Layout = Layout.none, widenTo: Int = 0)
+
+  /** The live rows of the tip's partitions among `keys` (None when none
+    * exists), re-keyed by the SAME Spark expression the write side uses
+    * — leaves are partition-pure, the filter defends it. Immutable
+    * files: a concurrent commit cannot tear this read. */
+  private def touchedRows(
+      spark: SparkSession, dir: String, spec: PartitionSpec, tip: Tip,
+      keys: Seq[String]): Option[DataFrame] = {
+    val leaves = keys.flatMap(tip.entries.get).map(_.leaf)
+    if (leaves.isEmpty) None
+    else Some(leafRead(spark, dir, leaves, tip.schema)
+      .withColumn(PKey, keyExpr(spec))
+      .filter(col(PKey).isInCollection(keys)))
+  }
+
+  /** THE optimistic commit every staging verb publishes through — the
+    * protocol in the object scaladoc. `stage` says what to write from
+    * the attempt's snapshot (None: publish nothing); unless the commit
+    * is `full` (a checkpoint of exactly the staged leaves under the
+    * staged schema) the frame must keep every column's type. The spec
+    * (`ensureSpec` with `key`/`version`; None only for
+    * [[repartitionTable]], which owns the pending record) is verified on
+    * EVERY attempt: after a respec won the race, a stale-spec retry would
+    * double-key the table or find none of its keys and silently do
+    * nothing. A never-committed path records its spec only once
+    * something stages, so maintenance on it stays a pure no-op (a typo'd
+    * spec must not lock out the table's real first writer).
+    * `beforeCommit` runs on the FIRST attempt only: the test seam into
+    * the race window. Returns the published version. */
+  private def commit(
+      spark: SparkSession, dir: String, op: String,
+      spec: Option[PartitionSpec], maxRetries: Int,
+      beforeCommit: () => Unit = () => (),
+      key: Option[String] = None, version: Option[String] = None,
+      full: Boolean = false)(stage: Tip => Option[Stage]): Option[Long] = {
+    val fs = fsOf(spark, dir)
+    val log = s"$dir/$LogDir"
+    val store = CommitStore.forPath(fs, log)
+    def checkSpec(): Unit = spec.foreach(ensureSpec(fs, dir, _, key, version))
+    var attempt = 0
+    while (attempt < maxRetries) {
+      attempt += 1
+      val tip @ Tip(v, entries, schema) = latestEntries(spark, dir)
+      if (v > 0) checkSpec()
+      val st = stage(tip) match {
+        case Some(st) => st
+        case None => return None
+      }
+      if (v == 0) checkSpec()
+      // refuse a re-typed column BEFORE any leaf is written
+      if (!full) requireAddOnly(schema, st.rows)
+      val stageRel = s"$DataDir/${UUID.randomUUID()}"
+      val stagePath = new Path(s"$dir/$stageRel")
+      val leaves: Map[String, Entry] =
+        if (st.keys.isEmpty) Map.empty
+        else {
+          // ALL rewritten partitions stage in ONE job; the written leaves
+          // ARE the staged entries (key = leaf name minus the column
+          // prefix; hive escaping is the identity on the hex/NULL alphabet)
+          writeLaidOut(st.rows, st.layout, stagePath.toString, st.widenTo)
+          fs.listStatus(stagePath).toSeq
+            .map(_.getPath.getName)
+            .filter(_.startsWith(PKey + "="))
+            .map { leaf =>
+              val k = leaf.stripPrefix(PKey + "=")
+              k -> Entry(s"$stageRel/$leaf",
+                st.values.get(k).orElse(entries.get(k).flatMap(_.vhex)))
+            }.toMap
+        }
+      // a rewritten partition that exists but staged no leaf was emptied:
+      // its entry must DROP, not linger pointing at old data
+      val staged =
+        if (full) leaves
+        else leaves ++ st.keys
+          .filter(k => entries.contains(k) && !leaves.contains(k))
+          .map(_ -> Entry(Tombstone, None))
+      if (staged.isEmpty && !full) {
+        fs.delete(stagePath, true): Unit
+        return None
+      }
+      if (attempt == 1) beforeCommit()
+      if (tryPublish(spark, store, log, v, entries, staged, schema,
+          stagedSchemaOf(st.rows), full)) return Some(v + 1)
+      // lost the race: discard the stale staging and re-stage against
+      // the winner's snapshot
+      fs.delete(stagePath, true): Unit
+    }
+    throw new LostRace(
+      s"TxTable.$op lost the commit race $maxRetries times on $dir")
+  }
+
+  /** [[commit]] ran out of attempts: every one lost its CAS. */
+  private final class LostRace(msg: String) extends IllegalStateException(msg)
 
   /** The ONE staging write every commit path shares — upserts, CDC
     * applies, deletes, and the maintenance rewrites all land their
@@ -2001,24 +1809,26 @@ object TxTable {
     * the staged schema alone. A legacy chain (predecessor carries no
     * schema) keeps writing schema-less bodies — claiming a schema
     * mid-history could under-describe columns living only in untouched
-    * pre-schema leaves. */
+    * pre-schema leaves. A `full` commit replaces the table: a checkpoint
+    * of exactly `staged`, under the staged schema. */
   private def tryPublish(
       spark: SparkSession, store: CommitStore, log: String,
       v: Long, baseEntries: Map[String, Entry],
       staged: Map[String, Entry],
       prevSchema: Option[StructType],
-      stagedSchema: Option[StructType]): Boolean = {
+      stagedSchema: StructType, full: Boolean): Boolean = {
     val next = v + 1
     val post =
-      if (v == 0) stagedSchema
-      else prevSchema.map(p => stagedSchema.fold(p)(s => unionSchema(p, s)))
-    val isCheckpoint = next == 1 || next % checkpointInterval(spark) == 0
+      if (full || v == 0) Some(stagedSchema)
+      else prevSchema.map(unionSchema(_, stagedSchema))
+    val isCheckpoint = full || next == 1 || next % checkpointInterval(spark) == 0
     // deltas stay O(touched) bytes: the schema field rides only on
     // checkpoints and on the (rare) commits that actually change it —
     // readers walk back to the nearest carrier (schemaAt)
     val carried = if (isCheckpoint) post else post.filterNot(prevSchema.contains)
     val body =
-      if (isCheckpoint) render("checkpoint", applyDelta(baseEntries, staged), carried)
+      if (isCheckpoint)
+        render("checkpoint", if (full) staged else applyDelta(baseEntries, staged), carried)
       else render("delta", staged, carried)
     store.tryCommit(log, next, body)
   }
@@ -2121,71 +1931,44 @@ object TxTable {
       beforeCommit: () => Unit = () => ()): Unit = {
     require(cols.nonEmpty && cols.size <= 4,
       s"optimizeZOrderBy takes 1-4 clustering columns, got ${cols.size}")
-    val fs = fsOf(spark, dir)
-    val log = s"$dir/$LogDir"
-    val store = CommitStore.forPath(fs, log)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      attempt += 1
-      val (v, tipLines) = store.latest(log)
-      if (v == 0) return
-      val prevSchema = schemaAtSeeded(store, log, v, tipLines)
-      // AFTER the emptiness guard: maintenance on a never-committed
-      // path must stay a pure no-op — recording a (possibly typo'd)
-      // spec here would lock out the table's real first writer
-      ensureSpec(fs, dir, partitionCol)
-      val entries = resolveAt(store, log, v).getOrElse(
-        throw new IllegalStateException(s"manifest chain for version $v is broken"))
+    commit(spark, dir, "optimizeZOrder", Some(partitionCol), maxRetries,
+        beforeCommit) { tip =>
       // scope BEFORE touching a file — and re-scope on every retry, so
       // a lost race recomputes against the winner's manifest and never
       // re-stages more than the predicate's leaves
-      val scope = where.fold(entries)(entriesWhere(spark, entries, partitionCol, _))
-      if (scope.isEmpty) return
-      val all = leafRead(spark, dir, scope.values.map(_.leaf).toSeq, prevSchema)
-        .withColumn(PKey, keyExpr(partitionCol))
-      val statCols = cols.flatMap(c => Seq(
-        min(col(c)).cast("double"), max(col(c)).cast("double")))
-      val statsRow = all.agg(statCols.head, statCols.tail: _*).head()
-      def bound(i: Int): Double =
-        if (statsRow.isNullAt(i)) 0.0 else statsRow.getDouble(i)
-      def bucket(c: Column, lo: Double, hi: Double): Column =
-        if (hi > lo)
-          floor((c.cast("double") - lit(lo)) / lit(hi - lo) * 65535).cast("int")
-        else lit(0)
-      val buckets = cols.zipWithIndex.map { case (c, i) =>
-        bucket(col(c), bound(2 * i), bound(2 * i + 1))
-      }
-      val zCol = Iterator.from(0).map(i => s"__z$i")
-        .find(n => !all.columns.contains(n)).get
-      val n = math.max(spark.sparkContext.defaultParallelism, scope.size)
-      val clustered = all
-        .withColumn(zCol, SortedWriter.zvalueN(buckets))
-        .repartitionByRange(n, col(PKey), col(zCol))
-        .sortWithinPartitions(col(PKey), col(zCol))
-        .drop(zCol)
-      val commitId = UUID.randomUUID().toString
-      val stageRel = s"$DataDir/$commitId"
-      // sortCols AND optimizeWrite stripped: the z-range repartition +
-      // sort above IS this write's placement — a hash re-shuffle here
-      // would undo the clustering it exists to lay down
-      writeLaidOut(clustered,
-        layout.copy(sortCols = Nil, optimizeWrite = false), s"$dir/$stageRel")
-      val staged = fs.listStatus(new Path(s"$dir/$stageRel")).toSeq
-        .map(_.getPath.getName)
-        .filter(_.startsWith(PKey + "="))
-        .map { leaf =>
-          val k = leaf.stripPrefix(PKey + "=")
-          // rows-preserving rewrite: the partition value rides over
-          k -> Entry(s"$stageRel/$leaf", entries.get(k).flatMap(_.vhex))
+      val scope = where.fold(tip.entries)(
+        entriesWhere(spark, tip.entries, partitionCol, _))
+      if (scope.isEmpty) None
+      else {
+        val all = leafRead(spark, dir, scope.values.map(_.leaf).toSeq, tip.schema)
+          .withColumn(PKey, keyExpr(partitionCol))
+        val statCols = cols.flatMap(c => Seq(
+          min(col(c)).cast("double"), max(col(c)).cast("double")))
+        val statsRow = all.agg(statCols.head, statCols.tail: _*).head()
+        def bound(i: Int): Double =
+          if (statsRow.isNullAt(i)) 0.0 else statsRow.getDouble(i)
+        def bucket(c: Column, lo: Double, hi: Double): Column =
+          if (hi > lo)
+            floor((c.cast("double") - lit(lo)) / lit(hi - lo) * 65535).cast("int")
+          else lit(0)
+        val buckets = cols.zipWithIndex.map { case (c, i) =>
+          bucket(col(c), bound(2 * i), bound(2 * i + 1))
         }
-      if (attempt == 1) beforeCommit()
-      // rows-preserving rewrite: schema unchanged
-      if (tryPublish(spark, store, log, v, entries, staged.toMap,
-          prevSchema, None)) return
-      fs.delete(new Path(s"$dir/$stageRel"), true): Unit
+        val zCol = Iterator.from(0).map(i => s"__z$i")
+          .find(n => !all.columns.contains(n)).get
+        val n = math.max(spark.sparkContext.defaultParallelism, scope.size)
+        val clustered = all
+          .withColumn(zCol, SortedWriter.zvalueN(buckets))
+          .repartitionByRange(n, col(PKey), col(zCol))
+          .sortWithinPartitions(col(PKey), col(zCol))
+          .drop(zCol)
+        // sortCols AND optimizeWrite stripped: the z-range repartition +
+        // sort above IS this write's placement — a hash re-shuffle here
+        // would undo the clustering it exists to lay down
+        Some(Stage(clustered, scope.keys,
+          layout = layout.copy(sortCols = Nil, optimizeWrite = false)))
+      }
     }
-    throw new IllegalStateException(
-      s"TxTable.optimizeZOrder lost the commit race $maxRetries times on $dir")
   }
 
   /** `where` bounds the fold set at the MANIFEST (shared
@@ -2198,46 +1981,20 @@ object TxTable {
       where: Option[Column] = None)(
       needsFold: Seq[org.apache.hadoop.fs.FileStatus] => Boolean): Unit = {
     val fs = fsOf(spark, dir)
-    val log = s"$dir/$LogDir"
-    val store = CommitStore.forPath(fs, log)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      attempt += 1
-      val (v, tipLines) = store.latest(log)
-      if (v == 0) return
-      val prevSchema = schemaAtSeeded(store, log, v, tipLines)
-      // after the emptiness guard — see optimizeZOrder
-      ensureSpec(fs, dir, partitionCol)
-      val entries = resolveAt(store, log, v).getOrElse(
-        throw new IllegalStateException(s"manifest chain for version $v is broken"))
-      val scope = where.fold(entries)(entriesWhere(spark, entries, partitionCol, _))
+    commit(spark, dir, op, Some(partitionCol), maxRetries) { tip =>
+      val scope = where.fold(tip.entries)(
+        entriesWhere(spark, tip.entries, partitionCol, _))
       val needy = scope.filter { case (_, e) =>
         needsFold(fs.listStatus(new Path(leafPath(dir, e.leaf))).toSeq
           .filter(_.getPath.getName.endsWith(".parquet")))
       }
-      if (needy.isEmpty) return
-      val commitId = UUID.randomUUID().toString
-      val stageRel = s"$DataDir/$commitId"
-      writeLaidOut(
-        leafRead(spark, dir, needy.values.map(_.leaf).toSeq, prevSchema)
+      if (needy.isEmpty) None
+      else Some(Stage(
+        leafRead(spark, dir, needy.values.map(_.leaf).toSeq, tip.schema)
           .withColumn(PKey, keyExpr(partitionCol))
           .repartition(needy.size, col(PKey)),
-        layout, s"$dir/$stageRel")
-      val staged = fs.listStatus(new Path(s"$dir/$stageRel")).toSeq
-        .map(_.getPath.getName)
-        .filter(_.startsWith(PKey + "="))
-        .map { leaf =>
-          val k = leaf.stripPrefix(PKey + "=")
-          // rows-preserving rewrite: the partition value rides over
-          k -> Entry(s"$stageRel/$leaf", entries.get(k).flatMap(_.vhex))
-        }
-      // rows-preserving fold: schema unchanged
-      if (tryPublish(spark, store, log, v, entries, staged.toMap,
-          prevSchema, None)) return
-      fs.delete(new Path(s"$dir/$stageRel"), true): Unit
+        needy.keys, layout = layout))
     }
-    throw new IllegalStateException(
-      s"TxTable.$op lost the commit race $maxRetries times on $dir")
   }
 
   /** Retention-windowed garbage collection: keep the last

@@ -1008,6 +1008,73 @@ class MergeWriterSpec extends SparkTestBase {
     assert(TxTable.latest(spark, target)._1 === 3L)
   }
 
+  test("every staging verb losing the CAS race re-stages against the winner and leaves no staging dir") {
+    import graft.io.TxTable
+    import org.apache.spark.sql.functions.col
+    val s = spark
+    import s.implicits._
+    def rows(data: (Long, Double, Long, Int)*) =
+      data.toDF("id", "price", "etl_seq", "date_id")
+    def boot(dir: String): Unit = TxTable.upsert(spark, dir,
+      rows((1L, 10.0, 1L, 20240101), (2L, 20.0, 1L, 20240102)),
+      "id", "etl_seq", "date_id")
+    // the competing writer: lands in the contended 20240101 partition
+    // inside the verb's race window
+    def winner(dir: String): Unit = TxTable.upsert(spark, dir,
+      rows((9L, 90.0, 2L, 20240101)), "id", "etl_seq", "date_id")
+    // (verb, run it with the race seam, rows expected after both commits)
+    val cases: Seq[(String, (String, () => Unit) => Unit, Set[(Long, Double)])] = Seq(
+      ("replaceWindow", (dir, race) => TxTable.replaceWindow(spark, dir,
+        rows((4L, 40.0, 2L, 20240101)), "date_id", col("id") === 1L,
+        beforeCommit = race),
+        Set((2L, 20.0), (4L, 40.0), (9L, 90.0))),
+      ("updateWhere", (dir, race) => TxTable.updateWhere(spark, dir, "date_id",
+        Seq("price" -> (col("price") * 10)), col("id") === 1L, beforeCommit = race),
+        Set((1L, 100.0), (2L, 20.0), (9L, 90.0))),
+      ("merge", (dir, race) => TxTable.merge(spark, dir,
+        rows((1L, 11.0, 2L, 20240101), (5L, 50.0, 2L, 20240101)),
+        "id", "date_id", updateSet = Seq("price" -> col("s.price")),
+        beforeCommit = race),
+        Set((1L, 11.0), (2L, 20.0), (5L, 50.0), (9L, 90.0))),
+      ("addColumns", (dir, race) => TxTable.addColumns(spark, dir, "date_id",
+        Seq(org.apache.spark.sql.types.StructField(
+          "extra", org.apache.spark.sql.types.StringType)), beforeCommit = race),
+        Set((1L, 10.0), (2L, 20.0), (9L, 90.0))),
+      ("materialize", (dir, race) =>
+        TxTable.materialize(spark, dir, "date_id", beforeCommit = race),
+        Set((1L, 10.0), (2L, 20.0), (9L, 90.0))))
+    for ((verb, run, expected) <- cases) {
+      val dir = Files.createTempDirectory(s"graft_tx_race_$verb").toString + "/fact"
+      // materialize only has work on a shallow clone's foreign leaves
+      if (verb == "materialize") {
+        val src = Files.createTempDirectory("graft_tx_race_src").toString + "/fact"
+        boot(src)
+        TxTable.cloneShallow(spark, src, dir)
+      } else boot(dir)
+      var raced = false
+      run(dir, () => { winner(dir); raced = true })
+      assert(raced, verb)
+      // version 1, the winner at 2, the verb's re-staged commit at 3
+      assert(TxTable.latestVersion(spark, dir) === 3L, verb)
+      val snap = TxTable.snapshot(spark, dir).get
+      assert(snap.select("id", "price").as[(Long, Double)].collect().toSeq.sorted ===
+        expected.toSeq.sorted, verb)
+      if (verb == "addColumns") assert(snap.columns.contains("extra"), verb)
+      if (verb == "materialize")
+        assert(TxTable.latest(spark, dir)._2.values.forall(l =>
+          !l.startsWith("/") && !l.contains(":/")), s"$verb left a foreign leaf")
+      // every staging dir under data/ belongs to a committed version:
+      // the lost attempt's dir was deleted, not orphaned
+      val committed = (1L to 3L).flatMap(v =>
+        TxTable.snapshotAt(spark, dir, v).toSeq.flatMap(_.inputFiles))
+        .map(f => new java.io.File(new java.net.URI(f)).getParentFile.getParentFile.getName)
+        .toSet
+      val onDisk = new java.io.File(s"$dir/data").listFiles().map(_.getName).toSet
+      assert(onDisk.subsetOf(committed),
+        s"$verb left staging dirs of a lost attempt: ${onDisk -- committed}")
+    }
+  }
+
   test("snapshotWhere: predicate pruning over manifest-stored partition values") {
     import graft.io.TxTable
     import org.apache.spark.sql.functions.col

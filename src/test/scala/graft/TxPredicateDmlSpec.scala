@@ -89,6 +89,27 @@ class TxPredicateDmlSpec extends SparkTestBase {
     }
   }
 
+  test("updateWhere refuses an assignment that re-types a column; the table stays readable") {
+    val s = spark; import s.implicits._
+    val dir = Files.createTempDirectory("graft_dml_retype").toString + "/fact"
+    TxTable.upsert(s, dir,
+      Seq((1L, "2024-01-01", 3), (2L, "2024-01-02", 4)).toDF("id", "day", "qty"),
+      "id", "id", "day")
+    val v = TxTable.latestVersion(spark, dir)
+    // int column, double assignment: committing double leaves under the
+    // int table schema would break every later read
+    val e = intercept[IllegalArgumentException](TxTable.updateWhere(spark, dir, "day",
+      Seq("qty" -> lit(1.5)), col("id") === 1L))
+    assert(e.getMessage.contains("add-only"), e.getMessage)
+    assert(TxTable.latestVersion(spark, dir) === v)
+    assert(TxTable.snapshot(spark, dir).get.select("id", "qty").as[(Long, Int)]
+      .collect().toSet === Set((1L, 3), (2L, 4)))
+    // an assignment of the column's own type commits
+    TxTable.updateWhere(spark, dir, "day", Seq("qty" -> lit(7)), col("id") === 1L)
+    assert(TxTable.snapshot(spark, dir).get.select("id", "qty").as[(Long, Int)]
+      .collect().toSet === Set((1L, 7), (2L, 4)))
+  }
+
   test("a predicate rewrite losing the CAS race re-runs against the winner") {
     val s = spark; import s.implicits._
     val dir = seed("graft_dml_race")

@@ -100,24 +100,75 @@ class TxRepartitionSpec extends SparkTestBase {
 
   test("a stale-spec retry refuses after a respec wins the race (no double-keying)") {
     val s = spark; import s.implicits._
-    val dir = freshDir()
-    boot(dir)
-    // the writer stages under the OLD spec, then the whole respec runs
-    // to completion inside its race window; the writer's CAS fails, and
-    // its retry must REFUSE on the new recorded spec instead of
-    // committing old-keyed leaves into the re-keyed manifest
-    val e = intercept[Exception](TxTable.upsert(spark, dir,
-      Seq((9L, 90.0, 1L, 20240109)).toDF("id", "price", "etl_seq", "date_id"),
-      "id", "etl_seq", "date_id",
-      beforeCommit = () =>
-        TxTable.repartitionTable(spark, dir, PartitionSpec(Seq("id")))))
-    assert(e.getMessage.contains("partitioned by"),
-      s"expected the stale-spec retry to refuse, got: ${e.getMessage}")
-    // the respec completed; the refused batch left no trace
-    val snap = TxTable.snapshot(spark, dir).get
-    assert(snap.count() === 3L)
-    assert(TxTable.partitionValues(spark, dir).flatten.toSet ===
-      Set("1", "2", "3"))
+    val row9 = Seq((9L, 90.0, 1L, 20240109)).toDF("id", "price", "etl_seq", "date_id")
+    // every verb with a race window: it stages under the OLD spec, then
+    // the whole respec runs to completion inside that window; the CAS
+    // fails, and the retry must REFUSE on the new recorded spec instead
+    // of committing old-keyed leaves into the re-keyed manifest (or, for
+    // a keyed delete, finding none of its keys and silently returning).
+    // replaceAll is point-in-time: it makes one attempt and refuses as such
+    val verbs: Seq[(String, (String, () => Unit) => Unit)] = Seq(
+      "upsert" -> ((dir, race) => TxTable.upsert(spark, dir, row9,
+        "id", "etl_seq", "date_id", beforeCommit = race)),
+      "replaceWindow" -> ((dir, race) => TxTable.replaceWindow(spark, dir, row9,
+        "date_id", col("id") === 9L, beforeCommit = race)),
+      "replaceAll" -> ((dir, race) => TxTable.replaceAll(spark, dir, row9,
+        "date_id", beforeCommit = race)),
+      "applyCdc" -> ((dir, race) => TxTable.applyCdc(spark, dir,
+        Seq((1L, "U", 2L, 11.0, 2L, 20240101))
+          .toDF("id", "_op", "_seq", "price", "etl_seq", "date_id"),
+        "id", "_op", "_seq", "date_id", beforeCommit = race)),
+      "delete" -> ((dir, race) => TxTable.delete(spark, dir,
+        Seq((1L, 20240101)).toDF("id", "date_id"), "id", "date_id",
+        beforeCommit = race)),
+      "deleteWhere" -> ((dir, race) => TxTable.deleteWhere(spark, dir,
+        "date_id", col("id") === 1L, beforeCommit = race)),
+      "updateWhere" -> ((dir, race) => TxTable.updateWhere(spark, dir,
+        "date_id", Seq("price" -> lit(0.0)), col("id") === 1L,
+        beforeCommit = race)),
+      "merge" -> ((dir, race) => TxTable.merge(spark, dir,
+        Seq((1L, 11.0, 2L, 20240101)).toDF("id", "price", "etl_seq", "date_id"),
+        "id", "date_id", updateSet = Seq("price" -> col("s.price")),
+        beforeCommit = race)),
+      "addColumns" -> ((dir, race) => TxTable.addColumns(spark, dir, "date_id",
+        Seq(org.apache.spark.sql.types.StructField(
+          "extra", org.apache.spark.sql.types.StringType)),
+        beforeCommit = race)),
+      "materialize" -> ((dir, race) =>
+        TxTable.materialize(spark, dir, "date_id", beforeCommit = race)),
+      "optimizeZOrderBy" -> ((dir, race) => TxTable.optimizeZOrderBy(spark, dir,
+        "date_id", Seq("price"), beforeCommit = race)))
+    // every verb runs; the failures are reported together
+    val problems = verbs.flatMap { case (verb, run) =>
+      val dir = freshDir()
+      // materialize needs foreign leaves: race it on a shallow clone
+      if (verb == "materialize") {
+        val src = freshDir()
+        boot(src)
+        TxTable.cloneShallow(spark, src, dir)
+      } else boot(dir)
+      val refusal = scala.util.Try(run(dir, () =>
+        TxTable.repartitionTable(spark, dir, PartitionSpec(Seq("id"))))) match {
+        case scala.util.Success(_) => Some("returned normally")
+        case scala.util.Failure(e) if !e.getMessage.contains(
+            if (verb == "replaceAll") "point-in-time" else "partitioned by") =>
+          Some(s"refused with: ${e.getMessage}")
+        case _ => None
+      }
+      // the respec completed; the refused call left no trace (a Seq, not
+      // a Set: double-keying shows up as a duplicated row)
+      val snap = TxTable.snapshot(spark, dir).get
+      val trace =
+        if (snap.select("id", "price").as[(Long, Double)].collect().toSeq.sorted !=
+            Seq((1L, 10.0), (2L, 20.0), (3L, 30.0)) ||
+            snap.columns.contains("extra") ||
+            TxTable.partitionValues(spark, dir).flatten.toSet != Set("1", "2", "3"))
+          Some("changed the table")
+        else None
+      (refusal ++ trace).map(p => s"$verb $p")
+    }
+    assert(problems.isEmpty,
+      s"stale-spec retries must refuse on the new spec: ${problems.mkString("; ")}")
   }
 
   test("a crashed respec leaves the table readable, write-refusing, and completable") {
