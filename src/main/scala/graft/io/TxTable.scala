@@ -1,12 +1,20 @@
 package graft.io
 
+import java.io.FileNotFoundException
 import java.util.UUID
 
 import graft.ops.Merge
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation,
+  InMemoryFileIndex, PartitionPath, PartitionSpec => FilePartitionSpec}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
 import scala.jdk.CollectionConverters._
 
 /** The column(s) a [[TxTable]] is partitioned by. Real fact tables
@@ -62,11 +70,12 @@ object PartitionSpec {
   * its current rows (the leaf written by the commit that last touched
   * it). The key is md5 of the partition value's Spark string cast
   * (NULL → the literal `NULL` — md5 is 32 hex chars, no collision),
-  * computed ONLY as a Spark expression on both the incoming batch and
-  * the snapshot read — there is no driver-side toString anywhere, so
-  * engine and manifest can never disagree on a value's identity, and
-  * the key doubles as a filesystem-safe directory name (hive escaping
-  * is the identity on hex). Staging is therefore ONE partitionBy job
+  * computed ONLY as a Spark expression on the incoming batch — there
+  * is no driver-side toString anywhere, so engine and manifest can
+  * never disagree on a value's identity — and the key doubles as a
+  * filesystem-safe directory name (hive escaping is the identity on
+  * hex), which is where keyed reads of existing rows take it from
+  * instead of re-hashing them. Staging is therefore ONE partitionBy job
   * whatever the touched-partition count — a backfill touching 500
   * partitions costs one write, not 500 driver-sequential jobs. Data
   * files keep the partition column as an ordinary column —
@@ -212,16 +221,48 @@ object TxTable {
   private def vhexSplit(field: String): Seq[String] =
     field.split(",", -1).toSeq.map(vdecode)
 
-  /** The one driver-side collect every commit pays: the batch's
-    * distinct (manifest key, per-column partition values) — O(touched
-    * partitions), with the value strings computed by the ENGINE's
-    * casts, never a driver toString. */
-  private def touchedOf(batch: DataFrame, spec: PartitionSpec): Map[String, String] =
-    batch.select(col(PKey) +: spec.cols.map(c => col(c).cast("string")): _*)
-      .distinct().collect()
-      .map(r => r.getString(0) ->
-        vhexJoin(spec.cols.indices.map(i => r.getString(i + 1))))
-      .toMap
+  /** A keyed batch: the incoming rows plus the key column, the touched
+    * key → partition-value map the manifest entries carry (the value
+    * strings are the ENGINE's casts, never a driver toString) and the
+    * row count. */
+  private case class Batch(rows: DataFrame, touched: Map[String, String], count: Long) {
+    def keys: IndexedSeq[String] = touched.keys.toIndexedSeq
+  }
+
+  /** The one pass every batch-staging verb pays: ONE Spark job, a
+    * Dataset action over the batch (materializing it when it is a lazy
+    * checkpoint, see [[pinned]]), collects each task's distinct (key,
+    * values) with its row count — O(touched partitions × tasks) to the
+    * driver, no exchange. The batch's own exchanges (if any) run as they
+    * would under any action. */
+  private def keyedBatch(incoming: DataFrame, spec: PartitionSpec): Batch = {
+    val rows = incoming.withColumn(PKey, keyExpr(spec))
+    val perTask = rows
+      .select(col(PKey) +: spec.cols.map(c => col(c).cast("string")): _*)
+      .mapPartitions { it =>
+        val seen = scala.collection.mutable.HashMap.empty[String, (String, Long)]
+        it.foreach { r =>
+          val k = r.getString(0)
+          seen(k) = seen.get(k) match {
+            case Some((v, n)) => (v, n + 1)
+            case None => (vhexJoin((1 until r.length).map(r.getString)), 1L)
+          }
+        }
+        seen.iterator.map { case (k, (v, n)) => (k, v, n) }
+      }(Encoders.tuple(Encoders.STRING, Encoders.STRING, Encoders.scalaLong))
+      .collect()
+    Batch(rows, perTask.map(t => t._1 -> t._2).toMap, perTask.map(_._3).sum)
+  }
+
+  /** `df` held stable across CAS retries: a lazy local checkpoint (the
+    * batch pass materializes it), unless `df` already reads a persisted
+    * RDD, as a checkpoint does — a caller that audits its batch before
+    * writing it (FactPipeline's window) pins it once, not twice. A frame
+    * over an unpersisted RDD (`createDataFrame(rdd, …)`) is pinned. */
+  private def pinned(df: DataFrame): DataFrame = df.queryExecution.logical match {
+    case l: LogicalRDD if l.rdd.getStorageLevel != StorageLevel.NONE => df
+    case _ => df.localCheckpoint(eager = false)
+  }
 
   private def parse(lines: Seq[String]): Map[String, Entry] =
     lines.filterNot(_.startsWith(Header + "\t")).map { line =>
@@ -915,12 +956,13 @@ object TxTable {
     * @param beforeCommit test seam: runs between staging and the CAS on
     *   the FIRST attempt only — lets a spec interleave a competing
     *   commit deterministically inside the race window.
+    * @return the batch's row count (counted by the batch's one pass)
     */
   def upsert(
       spark: SparkSession, targetDir: String, incoming: DataFrame,
       key: String, version: String, partitionCol: PartitionSpec,
       layout: Layout = Layout.none, maxRetries: Int = 10,
-      beforeCommit: () => Unit = () => ()): Unit =
+      beforeCommit: () => Unit = () => ()): Long =
     mergeCommit(spark, targetDir, incoming, partitionCol, layout,
       maxRetries, beforeCommit, "upsert", Some(key), Some(version))(
       (existing, batch) => Merge.upsertLatestWins(existing, batch, key, version))
@@ -933,12 +975,13 @@ object TxTable {
     * partitions survive untouched. Same contract as the single-writer
     * form: `windowPred` must be FALSE-or-TRUE on every existing row
     * and `incoming` must lie inside the window. An empty batch is a
-    * no-op (nothing to locate the window's partitions by). */
+    * no-op (nothing to locate the window's partitions by). Returns the
+    * batch's row count. */
   def replaceWindow(
       spark: SparkSession, targetDir: String, incoming: DataFrame,
       partitionCol: PartitionSpec, windowPred: org.apache.spark.sql.Column,
       layout: Layout = Layout.none, maxRetries: Int = 10,
-      beforeCommit: () => Unit = () => ()): Unit =
+      beforeCommit: () => Unit = () => ()): Long =
     mergeCommit(spark, targetDir, incoming, partitionCol, layout,
       maxRetries, beforeCommit, "replaceWindow")(
       (existing, batch) => existing.filter(!windowPred).unionByName(batch))
@@ -964,18 +1007,16 @@ object TxTable {
       spark: SparkSession, targetDir: String, incoming: DataFrame,
       partitionCol: PartitionSpec, layout: Layout = Layout.none,
       beforeCommit: () => Unit = () => ()): Unit = {
-    val batch = incoming.withColumn(PKey, keyExpr(partitionCol))
-      .localCheckpoint(true)
-    val touched = touchedOf(batch, partitionCol)
+    val batch = keyedBatch(pinned(incoming), partitionCol)
     val gate = new TxConstraints.Gate(spark, targetDir, "replaceAll")
-    gate.ensure(batch)
+    gate.ensure(batch.rows)
     // ONE attempt: a full replacement is point-in-time, so a lost race
     // refuses instead of re-staging. An empty batch stages nothing: the
     // truncate's empty checkpoint.
     try commit(spark, targetDir, "replaceAll", Some(partitionCol), maxRetries = 1,
         beforeCommit, full = true) { _ =>
-      gate.ensure(batch)
-      Some(Stage(batch, touched.keys, touched, layout, touched.size))
+      gate.ensure(batch.rows)
+      Some(Stage(batch.rows, batch.keys, batch.touched, layout, batch.touched.size))
     }: Unit
     catch {
       case _: LostRace => throw new IllegalStateException(
@@ -1042,13 +1083,12 @@ object TxTable {
     writeMeta(fs, dir, newSpec.cols, meta.key, meta.version,
       specPending = true, specSince = meta.specSince)
     // step 2: full re-keyed rewrite, one checkpoint commit (no spec
-    // check: this verb owns the pending record)
+    // check: this verb owns the pending record). Not pinned: each
+    // attempt re-reads the tip's immutable leaves
     val committedAt = commit(spark, dir, "repartitionTable", None, maxRetries,
         beforeCommit, full = true) { tip =>
-      val batch = read(spark, dir, tip.entries, tip.schema)
-        .withColumn(PKey, keyExpr(newSpec))
-      val touched = touchedOf(batch, newSpec)
-      Some(Stage(batch, touched.keys, touched, layout, touched.size))
+      val batch = keyedBatch(read(spark, dir, tip.entries, tip.schema), newSpec)
+      Some(Stage(batch.rows, batch.keys, batch.touched, layout, batch.touched.size))
     }
     // the final record: restore is fenced at the rewrite version — a
     // target below it is keyed under the old spec
@@ -1073,9 +1113,7 @@ object TxTable {
       key: String, opCol: String, seqCol: String, partitionCol: PartitionSpec,
       layout: Layout = Layout.none,
       maxRetries: Int = 10, beforeCommit: () => Unit = () => ()): Unit = {
-    val batch = changes.withColumn(PKey, keyExpr(partitionCol))
-      .localCheckpoint(true)
-    val touched = touchedOf(batch, partitionCol)
+    val Batch(batch, touched, _) = keyedBatch(pinned(changes), partitionCol)
     val touchedKeys = touched.keys.toIndexedSeq
     if (touchedKeys.isEmpty) return
     // constraint gate on the upserting changes only — D-rows carry no
@@ -1091,7 +1129,7 @@ object TxTable {
       // batch": D-rows must never land as data, so the merge always
       // runs — against an empty target of the batch's payload shape
       // when the partition is new
-      val existing0 = touchedRows(spark, targetDir, partitionCol, tip, touchedKeys)
+      val existing0 = touchedRows(spark, targetDir, tip, touchedKeys)
         .getOrElse(batch.drop(opCol, seqCol).limit(0))
       // evolution alignment, but op/seq must never leak into the
       // TARGET's payload shape (applyCdc derives payload from target
@@ -1123,10 +1161,9 @@ object TxTable {
       key: String, partitionCol: PartitionSpec, layout: Layout = Layout.none,
       maxRetries: Int = 10,
       beforeCommit: () => Unit = () => ()): Unit = {
-    val batch = keys.select(col(key), keyExpr(partitionCol).as(PKey))
-      .localCheckpoint(true)
-    val touchedKeys = batch.select(PKey).distinct()
-      .collect().map(_.getString(0)).toIndexedSeq
+    val batch = keyedBatch(
+      pinned(keys.select((key +: partitionCol.cols).distinct.map(col): _*)), partitionCol)
+    val touchedKeys = batch.keys
     if (touchedKeys.isEmpty) return
     commit(spark, targetDir, "delete", Some(partitionCol), maxRetries,
         beforeCommit, Some(key)) { tip =>
@@ -1134,8 +1171,8 @@ object TxTable {
       // partitions is vacuously done. A touched partition with no
       // surviving rows stages no leaf and tombstones out.
       val hit = touchedKeys.filter(tip.entries.contains)
-      touchedRows(spark, targetDir, partitionCol, tip, hit).map(existing =>
-        Stage(existing.join(batch.select(col(key)).distinct(), Seq(key), "left_anti"),
+      touchedRows(spark, targetDir, tip, hit).map(existing =>
+        Stage(existing.join(batch.rows.select(col(key)).distinct(), Seq(key), "left_anti"),
           hit, layout = layout, widenTo = hit.size))
     }
   }
@@ -1227,12 +1264,11 @@ object TxTable {
         // find pass: which candidate partitions actually hold a match —
         // the rewrite set must be matches-only, or a table-wide predicate
         // would rewrite every candidate leaf it MIGHT have matched
-        val hit = read(spark, targetDir, candidates, tip.schema)
-          .withColumn(PKey, keyExpr(partitionCol))
+        val hit = keyedRead(spark, targetDir, candidates, tip.schema)
           .filter(pred).select(PKey).distinct()
           .collect().map(_.getString(0)).toIndexedSeq
         // nothing matches: no version published
-        touchedRows(spark, targetDir, partitionCol, tip, hit).map(existing =>
+        touchedRows(spark, targetDir, tip, hit).map(existing =>
           Stage(transform(existing, pred), hit, layout = layout, widenTo = hit.size))
       }
     }
@@ -1268,8 +1304,7 @@ object TxTable {
     require(reassigned.intersect(frozen).isEmpty,
       s"merge updateSet must not reassign key/partition columns: " +
         s"${reassigned.intersect(frozen)}")
-    val batch = source.withColumn(PKey, keyExpr(partitionCol))
-      .localCheckpoint(true)
+    val Batch(batch, touched, _) = keyedBatch(pinned(source), partitionCol)
     // a duplicate source key would FAN OUT its target row through the
     // full-outer join — silent duplication, the one merge failure mode
     // worse than a crash. The check is one aggregate over the already-
@@ -1283,7 +1318,6 @@ object TxTable {
     require(dup.isEmpty,
       s"merge source is not key-unique on '$key' (e.g. ${dup.head.get(0)}) — " +
         "dedup upstream (seq-argmax) before merging")
-    val touched = touchedOf(batch, partitionCol)
     val touchedKeys = touched.keys.toIndexedSeq
     if (touchedKeys.isEmpty) return
     commit(spark, targetDir, "merge", Some(partitionCol), maxRetries,
@@ -1291,7 +1325,7 @@ object TxTable {
       // like applyCdc, the merge ALWAYS runs — an absent partition is
       // an empty target (only the INSERT clause can land rows there),
       // never a write-the-batch shortcut (clauses must filter it)
-      val existing0 = touchedRows(spark, targetDir, partitionCol, tip, touchedKeys)
+      val existing0 = touchedRows(spark, targetDir, tip, touchedKeys)
         .getOrElse(batch.limit(0))
       val (e2, b2) = alignSchemas(existing0, batch)
       val merged0 = Merge.mergeInto(
@@ -1580,7 +1614,7 @@ object TxTable {
       // rows-preserving rewrite: each partition value rides over
       if (foreign.isEmpty) None
       else Some(Stage(
-        read(spark, dir, foreign, tip.schema).withColumn(PKey, keyExpr(partitionCol)),
+        keyedRead(spark, dir, foreign, tip.schema),
         foreign.keys, layout = layout, widenTo = foreign.size))
     }
 
@@ -1592,16 +1626,11 @@ object TxTable {
       partitionCol: PartitionSpec, layout: Layout, maxRetries: Int,
       beforeCommit: () => Unit, op: String,
       key: Option[String] = None, version: Option[String] = None)(
-      merge: (DataFrame, DataFrame) => DataFrame): Unit = {
+      merge: (DataFrame, DataFrame) => DataFrame): Long = {
     // stable across retries: the batch itself never changes
-    val batch = incoming.withColumn(PKey, keyExpr(partitionCol))
-      .localCheckpoint(true)
-    // one collect serves both the touched-key list and the key→value
-    // map the manifest entries carry (the value strings are the
-    // ENGINE's casts, not a driver toString)
-    val touched = touchedOf(batch, partitionCol)
+    val Batch(batch, touched, count) = keyedBatch(pinned(incoming), partitionCol)
     val touchedKeys = touched.keys.toIndexedSeq
-    if (touchedKeys.isEmpty) return // empty batch: a no-op, not a failure
+    if (touchedKeys.isEmpty) return count // empty batch: a no-op, not a failure
     // CHECK-constraint gate on the incoming rows (existing rows were
     // validated when each constraint was added): one O(batch) pass,
     // skipped entirely on constraint-less tables. The Gate re-probes
@@ -1621,13 +1650,14 @@ object TxTable {
       // exists or not. Schemas align across an evolution commit. Not
       // checkpointed: the staging write into a FRESH dir is the merge
       // plan's only consumer.
-      val merged = touchedRows(spark, targetDir, partitionCol, tip, touchedKeys)
+      val merged = touchedRows(spark, targetDir, tip, touchedKeys)
         .fold(merge(batch.limit(0), batch)) { existing =>
           val (e2, b2) = alignSchemas(existing, batch)
           merge(e2, b2)
         }
       Some(Stage(merged, touchedKeys, touched, layout, touchedKeys.size))
     }
+    count
   }
 
   /** What one commit attempt writes: `rows` (carrying the key column)
@@ -1641,17 +1671,48 @@ object TxTable {
       layout: Layout = Layout.none, widenTo: Int = 0)
 
   /** The live rows of the tip's partitions among `keys` (None when none
-    * exists), re-keyed by the SAME Spark expression the write side uses
-    * — leaves are partition-pure, the filter defends it. Immutable
-    * files: a concurrent commit cannot tear this read. */
+    * exists), keyed ([[keyedRead]]). Immutable files: a concurrent
+    * commit cannot tear this read. */
   private def touchedRows(
-      spark: SparkSession, dir: String, spec: PartitionSpec, tip: Tip,
+      spark: SparkSession, dir: String, tip: Tip,
       keys: Seq[String]): Option[DataFrame] = {
-    val leaves = keys.flatMap(tip.entries.get).map(_.leaf)
-    if (leaves.isEmpty) None
-    else Some(leafRead(spark, dir, leaves, tip.schema)
-      .withColumn(PKey, keyExpr(spec))
-      .filter(col(PKey).isInCollection(keys)))
+    val live = keys.flatMap(k => tip.entries.get(k).map(k -> _)).toMap
+    if (live.isEmpty) None
+    else Some(keyedRead(spark, dir, live, tip.schema))
+  }
+
+  /** Manifest entries read WITH their key column. A leaf is
+    * partition-pure and its entry's key IS its rows' key, so the scan
+    * is handed the partition spec directly — each leaf one partition
+    * whose `__p` value is its manifest key — and `__p` rides as a
+    * per-file constant, with no per-row md5 and no directory discovery
+    * (leaves of many commits, or a shallow clone's absolute ones, are
+    * one scan). A schema-less legacy chain takes its data schema from
+    * the leaves' footers ([[leafRead]]'s mergeSchema read); `__p` is a
+    * declared string either way, so nothing is type-inferred. A leaf
+    * that is gone (a shallow clone whose source was vacuumed) fails the
+    * read as [[leafRead]] does: the index's root listing alone would
+    * read it as empty, and a rewrite would publish its rows away. */
+  private def keyedRead(
+      spark: SparkSession, dir: String, entries: Map[String, Entry],
+      schema: Option[StructType]): DataFrame = {
+    val s = schema.getOrElse(leafRead(spark, dir, entries.values.map(_.leaf).toSeq, None).schema)
+    val conf = spark.sessionState.newHadoopConf()
+    val keyCol = StructType(Seq(StructField(PKey, StringType)))
+    val parts = entries.toSeq.sortBy(_._2.leaf).map { case (k, e) =>
+      val p = new Path(leafPath(dir, e.leaf))
+      PartitionPath(InternalRow(UTF8String.fromString(k)),
+        p.getFileSystem(conf).makeQualified(p))
+    }
+    val index = new InMemoryFileIndex(spark, parts.map(_.path), Map.empty,
+      Some(s), FileStatusCache.getOrCreate(spark),
+      Some(FilePartitionSpec(keyCol, parts)))
+    // a published leaf holds files, so only a fileless one is probed
+    val listed = index.allFiles().map(_.getPath.getParent).toSet
+    parts.map(_.path).filterNot(listed).find(p => !p.getFileSystem(conf).exists(p))
+      .foreach(p => throw new FileNotFoundException(s"TxTable leaf does not exist: $p"))
+    spark.baseRelationToDataFrame(
+      HadoopFsRelation(index, keyCol, s, None, new ParquetFileFormat, Map.empty)(spark))
   }
 
   /** THE optimistic commit every staging verb publishes through — the
@@ -1749,10 +1810,11 @@ object TxTable {
     *   output's estimated size fits ONE advisory shuffle partition
     *   (i.e. the extra exchange moves less than AQE's own coalescing
     *   unit): each key hashes wholly into one task, so every leaf is
-    *   staged as exactly one file. Without it a one-leaf commit
-    *   stages as many files as its merge has input splits (a window
-    *   replacement re-stages the date leaf as 5–6 files an hour,
-    *   which compaction then rewrites under a commit of its own), and
+    *   staged as exactly one file (a one-leaf commit gets the same
+    *   placement from coalesce(1), without the exchange). Without it
+    *   a one-leaf commit stages as many files as its merge has input
+    *   splits (a window replacement re-stages the date leaf as 5–6
+    *   files an hour, which compaction then rewrites under a commit of its own), and
     *   a commit spanning many partitions lands in ~one task (AQE
     *   coalesces its tiny merge shuffle) that creates every leaf's
     *   file SERIALLY — measured ~2 s for a 124-leaf bootstrap on idle
@@ -1781,9 +1843,12 @@ object TxTable {
     // (tasks × leaves); one extra exchange, the wide-commit trade
     val placed =
       if (layout.optimizeWrite) df.repartition(col(PKey))
-      else if (smallCommit)
-        df.repartition(
+      else if (smallCommit) {
+        // one leaf: one task holds it without an exchange
+        if (widenTo == 1) df.coalesce(1)
+        else df.repartition(
           math.min(spark.sparkContext.defaultParallelism, widenTo), col(PKey))
+      }
       else df
     val sorted =
       if (layout.sortCols.isEmpty) placed
@@ -1940,8 +2005,7 @@ object TxTable {
         entriesWhere(spark, tip.entries, partitionCol, _))
       if (scope.isEmpty) None
       else {
-        val all = leafRead(spark, dir, scope.values.map(_.leaf).toSeq, tip.schema)
-          .withColumn(PKey, keyExpr(partitionCol))
+        val all = keyedRead(spark, dir, scope, tip.schema)
         val statCols = cols.flatMap(c => Seq(
           min(col(c)).cast("double"), max(col(c)).cast("double")))
         val statsRow = all.agg(statCols.head, statCols.tail: _*).head()
@@ -1990,8 +2054,7 @@ object TxTable {
       }
       if (needy.isEmpty) None
       else Some(Stage(
-        leafRead(spark, dir, needy.values.map(_.leaf).toSeq, tip.schema)
-          .withColumn(PKey, keyExpr(partitionCol))
+        keyedRead(spark, dir, needy, tip.schema)
           .repartition(needy.size, col(PKey)),
         needy.keys, layout = layout))
     }

@@ -8,8 +8,8 @@ import scala.util.{Failure, Success, Try}
 
 /** The reference's primary hourly pipeline (SURVEY.md §3.1,
   * /root/reference/dags/etl/fact_gold_price.py) as ONE driver program:
-  * extract/normalize → keyed upsert → densify+interpolate → upsert →
-  * validation gates, sequenced on a single SparkSession with plain
+  * extract/normalize → keyed upsert → densify+interpolate → validation
+  * gates → window replacement, sequenced on a single SparkSession with plain
   * DataFrame hand-offs — where the reference crosses a process or
   * serialization boundary between every task (scheduler → worker →
   * Postgres → XCom), this crosses only shuffle exchanges.
@@ -26,7 +26,13 @@ import scala.util.{Failure, Success, Try}
   *  - "now" is the (dateId, hour) parameter pair, never the wall clock
   *    (§7.4 determinism note), and the merge version is an explicit
   *    `runVersion` — replays with a higher version win, equal versions
-  *    tie-break deterministically (Merge.upsertLatestWins).
+  *    tie-break deterministically (Merge.upsertLatestWins);
+  *  - the gates run BEFORE the interpolated window publishes
+  *    (write-audit-publish): the densified hour is materialized once,
+  *    audited, and only then replaces its window, so a failing hour
+  *    leaves the interpolated table at its prior version with the prior
+  *    window readable, where validating after the write would leave a
+  *    bad hour visible to readers until a replay replaced it.
   *
   * The success/failure hooks are the Airflow TriggerRule analog
   * (ALL_SUCCESS → notify success, ONE_FAILED → notify failure,
@@ -107,18 +113,22 @@ object FactPipeline {
         .filter(col("date_id") === dateId &&
           floor(col("time_id") / 10000) === hour)
         .withColumn("etl_version", lit(runVersion))
-      val extracted = hourFacts.count()
 
-      // S5: keyed latest-wins upsert into the raw fact — replay-safe
+      // S5: keyed latest-wins upsert into the raw fact — replay-safe.
+      // The transactional upsert counts the batch in its one pass
       val factDir = s"$warehouseDir/fact_gold_price"
-      if (transactional)
-        TxTable.upsert(spark, factDir, hourFacts,
-          key = "id", version = "etl_version", partitionCol = "date_id",
-          layout = layout.restrictedTo(hourFacts.columns.toSeq))
-      else
-        MergeWriter.upsertPartitioned(spark, factDir, hourFacts,
-          key = "id", version = "etl_version", partitionCol = "date_id",
-          layout = layout.restrictedTo(hourFacts.columns.toSeq))
+      val extracted =
+        if (transactional)
+          TxTable.upsert(spark, factDir, hourFacts,
+            key = "id", version = "etl_version", partitionCol = "date_id",
+            layout = layout.restrictedTo(hourFacts.columns.toSeq))
+        else {
+          val n = hourFacts.count()
+          MergeWriter.upsertPartitioned(spark, factDir, hourFacts,
+            key = "id", version = "etl_version", partitionCol = "date_id",
+            layout = layout.restrictedTo(hourFacts.columns.toSeq))
+          n
+        }
 
       // T1–T3: read-back the hour (read-your-writes, like the
       // reference's interpolation task re-selecting from the warehouse),
@@ -136,7 +146,13 @@ object FactPipeline {
         .drop("etl_version")
         .withColumn("rounded_time_id", GoldModel.roundedTimeId(col("time_id")))
         .withColumn("is_interpolated", lit(false))
-      val densified = Interpolate.densify(t1)
+      // materialized once, by the gate's own pass (a lazy checkpoint):
+      // the gate audits and the window write stages the same rows
+      val densified = Interpolate.densify(t1).localCheckpoint(eager = false)
+
+      // §2.12 gates BEFORE publishing (class doc): one action, the
+      // hour's own grid is the completeness target
+      val profile = Validation.windowGate(densified)
 
       // S6/S7 as hour-window replacement instead of blind appends (see
       // class doc): the recomputed hour replaces its previous slice
@@ -163,16 +179,6 @@ object FactPipeline {
           layout = layout.restrictedTo(densified.columns.toSeq))
         compactTargetBytes.foreach(t => Compaction.compact(spark, interpDir, t))
       }
-
-      // §2.12 gates on what was just written, scoped to the window
-      // (manifest-pruned to the date in transactional mode, like above)
-      val window = (if (transactional)
-                      TxTable.snapshotPartitions(spark, interpDir, Seq(lit(dateId))).get
-                    else spark.read.parquet(interpDir))
-        .filter(col("date_id") === dateId &&
-          floor(col("rounded_time_id") / 10000) === hour)
-      // one action: the window's own grid is the completeness target
-      val profile = Validation.windowGate(window)
       val run = HourRun(dateId, hour, extracted, profile.nRows, profile.nMinutes)
 
       // retention maintenance AFTER the gates: a failed hour never

@@ -49,6 +49,6 @@ object TxStreamSink {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         TxTable.upsert(batch.sparkSession, targetDir, batch,
-          key, version, partitionCol, layout = layout)
+          key, version, partitionCol, layout = layout): Unit
       }
 }

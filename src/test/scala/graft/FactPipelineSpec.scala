@@ -137,6 +137,74 @@ class FactPipelineSpec extends SparkTestBase {
     assert(TxTable.snapshot(spark, interp).get.count() === 12L + r11.densifiedRows)
   }
 
+  test("transactional mode: an hour and its replay each run at most 13 Spark jobs; none reads the window back") {
+    // The hour's fixed costs, pinned (20 jobs each at the time of the
+    // one-pass batch): one pass per batch (materialize + touched keys +
+    // row count, which is also `extracted`), an exchange-free one-leaf
+    // placement, and the gate on the materialized densified hour
+    // instead of a parquet read-back of the published window. The
+    // window replacement reuses the audited hour's checkpoint, so an
+    // hour persists two batches: the fact batch and the densified hour.
+    import graft.io.TxTable
+    val wh = Files.createTempDirectory("graft_pipeline_jobs").toString
+    val interp = s"$wh/fact_gold_price_interpolated"
+    // jobs counted inside: the executions' own marker is a job, the
+    // job counter's marker is no SQL execution
+    def hourRun(v: Long): (Int, Seq[String], Int) = {
+      var jobs = 0
+      val sc = spark.sparkContext
+      val lastRdd = sc.parallelize(Seq(1)).id
+      val paths = SparkEvents.queryExecutions(spark) {
+        jobs = SparkEvents.jobs(spark) {
+          FactPipeline.runHour(spark, goodEvents, wh, D, hour = 10,
+            runVersion = v, transactional = true).get: Unit
+        }
+      }.flatMap(SparkEvents.scannedPaths)
+      (jobs, paths, sc.getPersistentRDDs.keys.count(_ > lastRdd))
+    }
+    def publishedLeaf(): String = {
+      val leaf = TxTable.latest(spark, interp)._2.values.toSeq match {
+        case Seq(one) => one
+        case other => fail(s"expected one interpolated leaf, got $other")
+      }
+      new java.io.File(interp, leaf).toURI.getPath.stripSuffix("/")
+    }
+    for (v <- Seq(1L, 2L)) {
+      val (jobs, scanned, persisted) = hourRun(v)
+      assert(jobs <= 13, s"run $v launched $jobs Spark jobs")
+      assert(persisted <= 2, s"run $v persisted $persisted batches")
+      val leaf = publishedLeaf()
+      assert(!scanned.exists(_.contains(leaf)),
+        s"run $v read its own published window back: $scanned")
+    }
+    assert(TxTable.latest(spark, interp)._1 === 2L)
+  }
+
+  test("transactional mode: a gate violation publishes nothing; the prior window stays readable") {
+    // write-audit-publish: the gates audit the densified hour before
+    // the window replacement publishes it
+    import graft.io.TxTable
+    val wh = Files.createTempDirectory("graft_pipeline_wap").toString
+    val interp = s"$wh/fact_gold_price_interpolated"
+    FactPipeline.runHour(spark, goodEvents, wh, D, hour = 10,
+      runVersion = 1L, transactional = true).get
+    def window(): Seq[String] =
+      TxTable.snapshot(spark, interp).get
+        .filter(floor(col("rounded_time_id") / 10000) === 10)
+        .collect().map(_.toString).sorted.toSeq
+    val (v1, _) = TxTable.latest(spark, interp)
+    val before = window()
+    assert(before.size === 12)
+    // source 9's single tick leaves its group short of the grid
+    val bad = goodEvents.unionByName(
+      evts((6L, "9", "click", 70.0, "2024-01-15 06:32:00")))
+    val r = FactPipeline.runHour(spark, bad, wh, D, hour = 10,
+      runVersion = 2L, transactional = true)
+    assert(r.failed.toOption.exists(_.isInstanceOf[GateViolation]), s"expected a gate violation: $r")
+    assert(TxTable.latest(spark, interp)._1 === v1, "the failing hour published its window")
+    assert(window() === before)
+  }
+
   test("transactional mode: an hour with zero events succeeds as a no-op") {
     // The legacy writer tolerated an empty hour; the TxTable path must
     // too (empty batches are no-op commits) — and it must not even

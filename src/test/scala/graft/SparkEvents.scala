@@ -1,12 +1,14 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.util.QueryExecutionListener
+import scala.jdk.CollectionConverters._
 
 /** Exact counts of what a block launches. Listener events arrive on an
   * asynchronous bus, so after the block a marker is launched and
@@ -38,12 +40,17 @@ object SparkEvents {
   }
 
   /** SQL executions (Dataset actions) that finished while `body` ran. */
-  def executions(spark: SparkSession)(body: => Unit): Int = {
+  def executions(spark: SparkSession)(body: => Unit): Int =
+    queryExecutions(spark)(body).size
+
+  /** The query executions (Dataset actions, writes included) that
+    * finished while `body` ran, in completion order. */
+  def queryExecutions(spark: SparkSession)(body: => Unit): Seq[QueryExecution] = {
     val marker = spark.range(1)
-    val n = new AtomicInteger
+    val seenQes = new ConcurrentLinkedQueue[QueryExecution]
     val done = new CountDownLatch(1)
     def seen(qe: QueryExecution): Unit =
-      if (qe eq marker.queryExecution) done.countDown() else n.incrementAndGet(): Unit
+      if (qe eq marker.queryExecution) done.countDown() else seenQes.add(qe): Unit
     val listener = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen(qe)
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = seen(qe)
@@ -53,7 +60,14 @@ object SparkEvents {
       body
       marker.collect()
       assert(done.await(60, TimeUnit.SECONDS), "marker execution never reached the listener")
-      n.get
+      seenQes.asScala.toSeq
     } finally spark.listenerManager.unregister(listener)
   }
+
+  /** The parquet directories a query execution's plan scans. */
+  def scannedPaths(qe: QueryExecution): Seq[String] =
+    qe.analyzed.collect {
+      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
+        fs.location.rootPaths.map(_.toString)
+    }.flatten
 }

@@ -609,28 +609,6 @@ class TxChangeFeedSpec extends SparkTestBase {
     assert(notes.toSeq == Seq("hello"))
   }
 
-  // strip the manifest-carried schema from every body file → legacy
-  // chain (the body files sit next to the version-slot symlinks; Hadoop
-  // local-FS .crc sidecars are binary and stale after the rewrite, so
-  // they are skipped and deleted)
-  private def stripRecordedSchemas(target: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    val log = java.nio.file.Paths.get(target, "_graft_log")
-    Files.list(log).iterator().asScala
-      .filter(p => Files.isRegularFile(p,
-        java.nio.file.LinkOption.NOFOLLOW_LINKS))
-      .filter(!_.getFileName.toString.startsWith("."))
-      .foreach { p =>
-        val stripped = Files.readAllLines(p).asScala.map { line =>
-          if (line.startsWith("#\t"))
-            line.split('\t').take(2).mkString("\t")
-          else line
-        }
-        Files.write(p, stripped.asJava)
-        Files.deleteIfExists(p.resolveSibling("." + p.getFileName + ".crc"))
-      }
-  }
-
   test("diff carries a widened column even when the range only touches pre-widening leaves") {
     // The r14 manifest-carried-schema change made every diff side read
     // under the version's FULL recorded schema. Edge pinned here: a
@@ -677,9 +655,9 @@ class TxChangeFeedSpec extends SparkTestBase {
       Seq((3L, 3.0, 2L, 20240101, "hello"))
         .toDF("id", "price", "etl_seq", "date_id", "note"),
       "id", "etl_seq", "date_id")
-    stripRecordedSchemas(target)
+    TxFixtures.stripRecordedSchemas(target)
     commit(target, Seq((4L, 4.0, 3L, 20240102)))
-    stripRecordedSchemas(target) // v3 re-recorded its staged schema
+    TxFixtures.stripRecordedSchemas(target) // v3 re-recorded its staged schema
 
     val legacy = TxTable.diff(spark, target, 2L, 3L, "id")
     assert(!legacy.columns.contains("note"),

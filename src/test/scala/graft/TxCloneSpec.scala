@@ -109,6 +109,36 @@ class TxCloneSpec extends SparkTestBase {
     intercept[Exception] { state(dst) }
   }
 
+  test("a vacuumed source: every rewrite of the clone's dead leaves refuses and publishes nothing") {
+    val s = spark; import s.implicits._
+    val src = seed("graft_clone_dead")
+    val dst = src.stripSuffix("/src") + "/dst"
+    TxTable.cloneShallow(spark, src, dst)
+    TxTable.optimizeZOrderBy(spark, src, "day", Seq("v"))
+    TxTable.vacuum(spark, src, retainVersions = 1, graceMs = 0L)
+    val v = TxTable.latestVersion(spark, dst)
+    // a missing leaf must fail the read, never read as an empty
+    // partition: a rewrite would then publish the partition's rows away
+    val verbs: Seq[(String, () => Unit)] = Seq(
+      "materialize" -> (() => TxTable.materialize(spark, dst, "day")),
+      "upsert" -> (() => TxTable.upsert(s, dst,
+        Seq((3L, "2024-01-02", 33.0)).toDF("id", "day", "v"), "id", "v", "day"): Unit),
+      "replaceWindow" -> (() => TxTable.replaceWindow(s, dst,
+        Seq((5L, "2024-01-02", 50.0)).toDF("id", "day", "v"), "day",
+        windowPred = col("id") >= 5): Unit),
+      "delete" -> (() => TxTable.delete(spark, dst,
+        Seq((3L, "2024-01-02")).toDF("id", "day"), "id", "day")),
+      "updateWhere" -> (() => TxTable.updateWhere(spark, dst, "day",
+        Seq("v" -> (col("v") + 1)), col("id") === 3L)),
+      "compactFiles" -> (() => TxTable.compactFiles(spark, dst, "day", maxFilesPerLeaf = 0)))
+    val published = verbs.flatMap { case (name, run) =>
+      intercept[Exception](run())
+      val now = TxTable.latestVersion(spark, dst)
+      if (now != v) Some(s"$name published v$now") else None
+    }
+    assert(published.isEmpty, published.mkString("; "))
+  }
+
   test("materialize cuts the source dependency; localized entries keep identity; no-op when local") {
     val s = spark; import s.implicits._
     val src = seed("graft_clone_mat")

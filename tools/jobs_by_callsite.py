@@ -18,6 +18,12 @@ Record an event log by passing Spark's own settings to the run's JVM:
 
 Prints a markdown table (jobs and job seconds per op, averaged over the
 timed ops, by call site); `--json out.json` also writes it as JSON.
+
+`--per-op` prints each op's job timeline instead: per job, in start order,
+the driver gap before it (since the previous job ended, or since the op's
+first span started), its duration and its call site, then the gap after
+the last job. An end-to-end median such as `op_p50_s` is ONE op, which an
+average over ops hides.
 """
 import argparse
 import collections
@@ -60,11 +66,55 @@ def load_events(path):
     return jobs, execs
 
 
+def call_site(job, execs):
+    return site_of(execs.get(job["exec"])) or site_of(job["stage_details"]) or "(no program frame)"
+
+
+def per_op(art, ops, windows, jobs, execs, json_out):
+    """One timeline per op: the spans it ran, then every job starting inside
+    it with the driver gap before it."""
+    names = [s.get("op") for s in art.get("op_samples", [])]
+    diag = art.get("diagnostics", {})
+    out = {"nproc": diag.get("nproc"), "calib_s": diag.get("calib_s"), "ops": []}
+    print(f"nproc {out['nproc']}, calib_s {out['calib_s']}")
+    for op in sorted(windows):
+        s0, s1 = windows[op]
+        spans = sorted(ops[op], key=lambda s: s["start_ms"])
+        mine = sorted((v for v in jobs.values() if s0 - 1 <= v["start"] <= s1 + 1),
+                      key=lambda v: v["start"])
+        rows, prev = [], s0
+        for v in mine:
+            end = v["end"] or v["start"]
+            rows.append({"gap_s": max(0.0, v["start"] - prev) / 1e3,
+                         "job_s": (end - v["start"]) / 1e3,
+                         "call_site": call_site(v, execs)})
+            prev = max(prev, end)
+        tail = max(0.0, s1 - prev) / 1e3
+        name = names[op] if isinstance(op, int) and op < len(names) else str(op)
+        span_txt = ", ".join(f"{s['name']} {(s['end_ms'] - s['start_ms']) / 1e3:.3f} s"
+                             for s in spans)
+        print(f"\n### op {op} ({name}): {len(rows)} jobs; {span_txt}\n")
+        print("| # | gap before s | job s | call site |")
+        print("|---:|---:|---:|---|")
+        for i, r in enumerate(rows):
+            print(f"| {i + 1} | {r['gap_s']:.3f} | {r['job_s']:.3f} | `{r['call_site']}` |")
+        print(f"| | {tail:.3f} | | (after the last job) |")
+        out["ops"].append({"op": op, "name": name,
+                           "spans": {s["name"]: (s["end_ms"] - s["start_ms"]) / 1e3 for s in spans},
+                           "jobs": rows, "gap_after_s": tail})
+    if json_out:
+        with open(json_out, "w") as fh:
+            json.dump(out, fh, indent=1)
+            fh.write("\n")
+
+
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("artifact", help="perfbench run artifact (JSON)")
     ap.add_argument("eventlog", help="uncompressed Spark event log file, or a directory of them")
     ap.add_argument("--json", help="also write the table here")
+    ap.add_argument("--per-op", action="store_true",
+                    help="print each op's job timeline instead of the averages")
     a = ap.parse_args()
 
     with open(a.artifact) as fh:
@@ -91,14 +141,17 @@ def main():
     if not jobs:
         sys.exit("no event log covers the artifact's ops")
 
+    if a.per_op:
+        per_op(art, ops, windows, jobs, execs, a.json)
+        return
+
     n_ops = len(windows)
     table = collections.defaultdict(lambda: {"jobs": 0, "job_s": 0.0})
     total = 0
     for v in jobs.values():
         if not any(s - 1 <= v["start"] <= e + 1 for s, e in windows.values()):
             continue
-        site = site_of(execs.get(v["exec"])) or site_of(v["stage_details"]) or "(no program frame)"
-        t = table[site]
+        t = table[call_site(v, execs)]
         t["jobs"] += 1
         t["job_s"] += ((v["end"] or v["start"]) - v["start"]) / 1e3
         total += 1
