@@ -18,7 +18,7 @@ import org.apache.spark.sql.{DataFrame, Row}
   * refreshes, report tables, the reference's fact feed) — bounded
   * result sets where an OLTP store is the consumer. A 100 TB fact
   * never funnels through JDBC; lake-side persistence is
-  * [[MergeWriter]]/[[TxTable]]. Parallelism = input partitions (each
+  * [[TxTable]]. Parallelism = input partitions (each
   * holds one connection); repartition the frame to the connection
   * count the database tolerates before calling.
   *

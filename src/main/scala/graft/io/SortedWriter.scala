@@ -6,15 +6,15 @@ import org.apache.spark.sql.functions._
 /** Sort-ordered parquet layout — the zone-map lever for predicates on
   * NON-partition columns.
   *
-  * Partitioning (MergeWriter) prunes directories and DPP prunes them
-  * through joins, but both stop at the partition key. For every other
-  * selective column the only scan-side reduction parquet offers is
-  * row-group min/max statistics — and those are useless under a random
-  * row order, because every row group then spans the whole value range
-  * and no filter can skip anything. Writing each file sorted by the
-  * query-predicate column makes row-group stats tight and disjoint, so
-  * a pushed range predicate skips all but the matching groups at the
-  * reader, before any row surfaces.
+  * Partitioning (TxTable's partition leaves) prunes files and DPP
+  * prunes them through joins, but both stop at the partition key. For
+  * every other selective column the only scan-side reduction parquet
+  * offers is row-group min/max statistics — and those are useless
+  * under a random row order, because every row group then spans the
+  * whole value range and no filter can skip anything. Writing each
+  * file sorted by the query-predicate column makes row-group stats
+  * tight and disjoint, so a pushed range predicate skips all but the
+  * matching groups at the reader, before any row surfaces.
   *
   * At 100 TB this is the difference between "scan the partition" and
   * "scan the row groups that can match" for time-range / id-range

@@ -7,12 +7,11 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** `spark.readStream.format("graft-tx")` — the COMMIT-LOG-NATIVE
-  * streaming source over a [[TxTable]], completing the three feed
-  * shapes: the driver loop ([[graft.streaming.TxChangeFeed]], for
-  * applyCdc-style consumers that own their cursor), the spool bridge
-  * ([[graft.streaming.TxChangeFeedStream]], when the feed must double
-  * as an archive), and this — a genuine Structured Streaming source a
-  * plain-Spark consumer reaches with zero graft imports:
+  * streaming source over a [[TxTable]], one of the two feed shapes:
+  * the driver loop ([[graft.streaming.TxChangeFeed]], for
+  * applyCdc-style consumers that own their cursor), and this — a
+  * genuine Structured Streaming source a plain-Spark consumer reaches
+  * with zero graft imports:
   *
   * {{{
   *   spark.readStream.format("graft-tx")
@@ -26,13 +25,15 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * Offsets ARE commit versions (dense by the CAS construction, so a
   * LongOffset cursor is exact): `getOffset` is the O(1) `_tip` probe,
   * and each micro-batch (start, end] is the union of the per-commit
-  * row-level diffs, every row stamped `_commit_version` — the same
-  * emission the spool materializes, with NO spool directory, no second
-  * copy of the change data, and no retention verb to operate: replay
+  * row-level diffs, every row stamped `_commit_version` — no second
+  * copy of the change data and no retention verb to operate: replay
   * depth is governed by the table's own [[TxTable.vacuum]] retention,
   * and a checkpoint resuming below the oldest retained version fails
   * loudly in [[TxTable.diff]] (re-bootstrap from a snapshot), the same
-  * contract every log-tailing CDC source documents.
+  * contract every log-tailing CDC source documents. A consumer that
+  * wants the feed as a replayable archive writes it with a plain
+  * `writeStream.format("parquet")` and tails that with a file source
+  * (the `t21_stream_feed_window` chain).
   *
   * Scale shape: a micro-batch costs the partitions its commits touched
   * (diff's manifest pruning) — never a table scan; an idle poll is one

@@ -39,24 +39,23 @@ object PartitionSpec {
 }
 
 /** Minimal optimistic-concurrency commit protocol for a partitioned
-  * parquet table — the multi-writer upgrade of [[MergeWriter]]'s
-  * single-writer upsert (reference semantics: the per-statement
-  * atomicity of `INSERT … ON CONFLICT DO UPDATE`,
+  * parquet table — the warehouse's one storage path (FactPipeline's
+  * hourly tables included), multi-writer safe (reference semantics:
+  * the per-statement atomicity of `INSERT … ON CONFLICT DO UPDATE`,
   * /root/reference/dags/etl/fact_gold_price.py:169-196 — two hourly
   * tasks landing distinct batches never lose each other's rows).
   *
-  * ==Why the plain writer can't be fixed in place==
+  * ==Why a plain partitioned writer can't be made safe==
   *
-  * `MergeWriter.upsertPartitioned` is read-merge-overwrite against the
-  * live partition directories: a second writer committing inside the
+  * A hive-layout upsert is read-merge-overwrite against the live
+  * partition directories: a second writer committing inside the
   * first's read→write window is clobbered at partition granularity
-  * (MergeWriterSpec demonstrates the lost update), and a concurrent
-  * reader can observe a half-replaced directory. Both failures come
-  * from the same root — the directory tree IS the table state, so
-  * there is no commit point. The fix is the one every transactional
-  * table format (public Delta/Iceberg design) uses: make state a
-  * VERSIONED MANIFEST published by an atomic primitive, and make data
-  * files immutable.
+  * (a lost update), and a concurrent reader can observe a
+  * half-replaced directory. Both failures come from the same root —
+  * the directory tree IS the table state, so there is no commit point.
+  * The fix is the one every transactional table format (public
+  * Delta/Iceberg design) uses: make state a VERSIONED MANIFEST
+  * published by an atomic primitive, and make data files immutable.
   *
   * ==Layout==
   *
@@ -948,10 +947,9 @@ object TxTable {
     * change feed drained in one micro-batch) collapses to the highest
     * `version` per key — on fresh and existing partitions identically;
     * an EMPTY batch is a no-op (no version published) —
-    * an hour with zero events must not fail the pipeline. Single-writer
-    * plan shape is identical to `MergeWriter.upsertPartitioned`
-    * (snapshot-pruned read of touched partitions, one keyed merge,
-    * O(touched) write) plus one manifest round-trip.
+    * an hour with zero events must not fail the pipeline. Plan shape:
+    * a snapshot-pruned read of the touched partitions, one keyed merge,
+    * an O(touched) write, plus one manifest round-trip.
     *
     * @param beforeCommit test seam: runs between staging and the CAS on
     *   the FIRST attempt only — lets a spec interleave a competing
@@ -968,12 +966,11 @@ object TxTable {
       (existing, batch) => Merge.upsertLatestWins(existing, batch, key, version))
 
   /** Replace a predicate-scoped WINDOW of the table — the idempotent
-    * write for RECOMPUTE-style loads (MergeWriter.replaceWindow's
-    * semantics, CAS-committed): within the batch's touched partitions,
-    * existing rows matching `windowPred` are dropped and `incoming`
-    * takes their place; rows outside the window and untouched
-    * partitions survive untouched. Same contract as the single-writer
-    * form: `windowPred` must be FALSE-or-TRUE on every existing row
+    * write for RECOMPUTE-style loads, CAS-committed: within the
+    * batch's touched partitions, existing rows matching `windowPred`
+    * are dropped and `incoming` takes their place; rows outside the
+    * window and untouched partitions survive untouched. Contract:
+    * `windowPred` must be FALSE-or-TRUE on every existing row
     * and `incoming` must lie inside the window. An empty batch is a
     * no-op (nothing to locate the window's partitions by). Returns the
     * batch's row count. */
@@ -1800,8 +1797,7 @@ object TxTable {
     * groups for zone-map skipping, blooms, sized groups) is applied
     * uniformly and can never be silently discarded by one path. The
     * leading PKey sort satisfies FileFormatWriter's required ordering,
-    * so the secondary layout sort survives into the files (the
-    * MergeWriter.laidOut discipline).
+    * so the secondary layout sort survives into the files.
     *
     * @param widenTo the commit's touched-partition count; 0 = the
     *   caller placed the rows itself (maintenance folds) — never
@@ -1925,14 +1921,13 @@ object TxTable {
     compactWhere(spark, dir, partitionCol, layout, maxRetries, "compactFiles",
       where)(files => files.length > maxFilesPerLeaf)
 
-  /** [[compactFiles]] with a BYTE threshold instead of a file count —
-    * the transactional face of Compaction.compact's `targetBytes`
-    * semantics: a leaf is folded when it holds more files than its
-    * total size warrants at `targetBytes` per file (i.e. its files are
-    * small relative to the target). The rewrite grain is unchanged —
-    * one file per leaf — so `targetBytes` decides WHICH leaves fold,
-    * not the output file size (a partition leaf is the table's
-    * maintenance grain). */
+  /** [[compactFiles]] with a BYTE threshold instead of a file count
+    * (FactPipeline's `compactTargetBytes`): a leaf is folded when it
+    * holds more files than its total size warrants at `targetBytes`
+    * per file (i.e. its files are small relative to the target). The
+    * rewrite grain is unchanged — one file per leaf — so `targetBytes`
+    * decides WHICH leaves fold, not the output file size (a partition
+    * leaf is the table's maintenance grain). */
   def compactSmallFiles(
       spark: SparkSession, dir: String, partitionCol: PartitionSpec,
       targetBytes: Long, layout: Layout = Layout.none,

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.io.{Compaction, Layout, MergeWriter, TxTable}
+import graft.io.{Layout, TxTable}
 import graft.ops.{GoldModel, Interpolate, Validation}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -12,11 +12,17 @@ import scala.util.{Failure, Success, Try}
   * gates → window replacement, sequenced on a single SparkSession with plain
   * DataFrame hand-offs — where the reference crosses a process or
   * serialization boundary between every task (scheduler → worker →
-  * Postgres → XCom), this crosses only shuffle exchanges.
+  * Postgres → XCom), this crosses only shuffle exchanges. Both tables
+  * are TxTables (io/TxTable): every write is a CAS-committed manifest
+  * version, so a concurrent backfill or a second hourly run cannot
+  * clobber this one, readers never see a torn hour, and the run
+  * history is time-travelable. The trade: the warehouse directory is
+  * no plain parquet tree — readers go through `TxTable.snapshot` or
+  * `spark.read.format("graft-tx")`.
   *
   * Deviations by design:
   *  - the INTERPOLATED table is written by WINDOW REPLACEMENT
-  *    (MergeWriter.replaceWindow): the recomputed hour supersedes the
+  *    (TxTable.replaceWindow): the recomputed hour supersedes the
   *    previous run's whole hour slice, so replay is idempotent AND
   *    late data retracts stale generated rows (a minute that gains a
   *    real tick stops being interpolated). The reference appends blind
@@ -58,25 +64,18 @@ object FactPipeline {
     * @param layout       physical layout applied to BOTH table writes
     *                     (sorted row groups / blooms / group size —
     *                     graft.io.Layout); default writes as before
-    * @param compactTargetBytes when set, run small-file compaction on
-    *                     the interpolated table after the write — the
-    *                     legacy path's hourly cadence accumulates a few
-    *                     files per run, so steady state without it is
-    *                     thousands of small files per hot partition. In
-    *                     transactional mode an hour's commit is small,
-    *                     so it already stages its date leaf as ONE file
-    *                     (TxTable.writeLaidOut) and the fold normally
-    *                     finds nothing to do and publishes no version;
-    *                     it only acts on a leaf a large or
+    * @param compactTargetBytes when set, run small-file compaction
+    *                     (TxTable.compactSmallFiles) on the interpolated
+    *                     table after the write. An hour's commit is
+    *                     small, so it already stages its date leaf as
+    *                     ONE file (TxTable.writeLaidOut) and the fold
+    *                     normally finds nothing to do and publishes no
+    *                     version; it only acts on a leaf a large or
     *                     coalescing-off commit fragmented, and then
     *                     re-applies `layout`, so sorted row groups and
-    *                     blooms survive compaction. The legacy path
-    *                     rewrites leaves via concatenation (per-file
-    *                     sort order coarsens to per-run runs —
-    *                     recluster with SortedWriter in a maintenance
-    *                     window there)
-    * @param vacuumRetainVersions transactional mode only: after the
-    *                     hour lands, run TxTable.vacuum on both tables
+    *                     blooms survive compaction
+    * @param vacuumRetainVersions after the hour lands, run
+    *                     TxTable.vacuum on both tables
     *                     keeping this many versions readable — the
     *                     steady-state retention maintenance an hourly
     *                     cadence needs (24 commits/day/table would
@@ -84,17 +83,11 @@ object FactPipeline {
     *                     grace period leaves any concurrent writer's
     *                     staging alone; readers of retained versions
     *                     are safe by construction
-    * @param transactional run both tables as TxTables (io/TxTable):
-    *                     every write is a CAS-committed manifest
-    *                     version, so a concurrent backfill or a second
-    *                     hourly run cannot clobber this one, readers
-    *                     never see a torn hour, and the run history is
-    *                     time-travelable. Same merge/replace semantics,
-    *                     same HourRun counters; small-file folding
-    *                     rides TxTable.compactFiles. Default off — the
-    *                     single-writer layout reads with any plain
-    *                     parquet tool, the TxTable layout needs the
-    *                     manifest-aware snapshot read
+    * @param transactional must be `true` (the default; `false` throws
+    *                     IllegalArgumentException before any write):
+    *                     TxTable is the only storage path. Kept only
+    *                     because the frozen perfbench harness passes
+    *                     it; the next benchmark change drops it
     */
   def runHour(
       spark: SparkSession, events: DataFrame, warehouseDir: String,
@@ -103,8 +96,11 @@ object FactPipeline {
       onFailure: Throwable => Unit = _ => (),
       layout: Layout = Layout.none,
       compactTargetBytes: Option[Long] = None,
-      transactional: Boolean = false,
+      transactional: Boolean = true,
       vacuumRetainVersions: Option[Int] = None): Try[HourRun] = {
+    require(transactional, "runHour(transactional = false): the hive-layout " +
+      "storage path (plain partitioned parquet plus its small-file " +
+      "compaction) was removed; TxTable is the only storage")
     val result = Try {
       // extract + normalize + key derivation (S1: P1/P2/P3), the closed
       // hour only — on a date-partitioned lake the predicate prunes to
@@ -115,32 +111,18 @@ object FactPipeline {
         .withColumn("etl_version", lit(runVersion))
 
       // S5: keyed latest-wins upsert into the raw fact — replay-safe.
-      // The transactional upsert counts the batch in its one pass
+      // The upsert counts the batch in its one pass
       val factDir = s"$warehouseDir/fact_gold_price"
-      val extracted =
-        if (transactional)
-          TxTable.upsert(spark, factDir, hourFacts,
-            key = "id", version = "etl_version", partitionCol = "date_id",
-            layout = layout.restrictedTo(hourFacts.columns.toSeq))
-        else {
-          val n = hourFacts.count()
-          MergeWriter.upsertPartitioned(spark, factDir, hourFacts,
-            key = "id", version = "etl_version", partitionCol = "date_id",
-            layout = layout.restrictedTo(hourFacts.columns.toSeq))
-          n
-        }
+      val extracted = TxTable.upsert(spark, factDir, hourFacts,
+        key = "id", version = "etl_version", partitionCol = "date_id",
+        layout = layout.restrictedTo(hourFacts.columns.toSeq))
 
       // T1–T3: read-back the hour (read-your-writes, like the
       // reference's interpolation task re-selecting from the warehouse),
-      // densify + interpolate. Transactional read-back is PARTITION-
-      // PRUNED at the manifest (snapshotPartitions): only this date's
-      // leaf opens, matching the legacy path's date_id= directory
-      // pruning instead of planning over every leaf in the table.
-      val factTable =
-        if (transactional)
-          TxTable.snapshotPartitions(spark, factDir, Seq(lit(dateId))).get
-        else spark.read.parquet(factDir)
-      val t1 = factTable
+      // densify + interpolate. The read-back is PARTITION-PRUNED at the
+      // manifest (snapshotPartitions): only this date's leaf opens
+      // instead of planning over every leaf in the table.
+      val t1 = TxTable.snapshotPartitions(spark, factDir, Seq(lit(dateId))).get
         .filter(col("date_id") === dateId &&
           floor(col("time_id") / 10000) === hour)
         .drop("etl_version")
@@ -159,31 +141,23 @@ object FactPipeline {
       val interpDir = s"$warehouseDir/fact_gold_price_interpolated"
       val hourWindow = col("date_id") === dateId &&
         floor(col("rounded_time_id") / 10000) === hour
-      if (transactional) {
-        TxTable.replaceWindow(spark, interpDir, densified,
-          partitionCol = "date_id", windowPred = hourWindow,
-          layout = layout.restrictedTo(densified.columns.toSeq))
-        // same byte-threshold semantics as the legacy Compaction.compact
-        // path: the target decides which leaves are fragmented enough
-        // to fold (TxTable.compactSmallFiles), not a fixed file count —
-        // normally none, the hour's leaf having staged as one file.
-        // The fold restates the table's layout — a compaction that
-        // dropped it would silently un-sort the row groups the write
-        // just laid down
-        compactTargetBytes.foreach(t =>
-          TxTable.compactSmallFiles(spark, interpDir, "date_id", t,
-            layout = layout.restrictedTo(densified.columns.toSeq)))
-      } else {
-        MergeWriter.replaceWindow(spark, interpDir, densified,
-          partitionCol = "date_id", windowPred = hourWindow,
-          layout = layout.restrictedTo(densified.columns.toSeq))
-        compactTargetBytes.foreach(t => Compaction.compact(spark, interpDir, t))
-      }
+      TxTable.replaceWindow(spark, interpDir, densified,
+        partitionCol = "date_id", windowPred = hourWindow,
+        layout = layout.restrictedTo(densified.columns.toSeq))
+      // a byte threshold: the target decides which leaves are
+      // fragmented enough to fold (TxTable.compactSmallFiles), not a
+      // fixed file count — normally none, the hour's leaf having staged
+      // as one file. The fold restates the table's layout — a
+      // compaction that dropped it would silently un-sort the row
+      // groups the write just laid down
+      compactTargetBytes.foreach(t =>
+        TxTable.compactSmallFiles(spark, interpDir, "date_id", t,
+          layout = layout.restrictedTo(densified.columns.toSeq)))
       val run = HourRun(dateId, hour, extracted, profile.nRows, profile.nMinutes)
 
       // retention maintenance AFTER the gates: a failed hour never
       // triggers reclamation of the state it might need to re-read
-      if (transactional) vacuumRetainVersions.foreach { n =>
+      vacuumRetainVersions.foreach { n =>
         val grace = 3600L * 1000
         TxTable.vacuum(spark, factDir, retainVersions = n, graceMs = grace)
         TxTable.vacuum(spark, interpDir, retainVersions = n, graceMs = grace)

@@ -177,7 +177,7 @@ object Maintenance {
     // parquet round-trip, so the protocol's read path (latest-pointer
     // resolution, per-partition data dirs, snapshot union) is value-
     // checked by the same harness as every operator — concurrency
-    // itself is MergeWriterSpec's race-seam test; this gates the
+    // itself is TxTable's race-seam specs; this gates the
     // single-writer data path those races reduce to. Temp table dirs
     // are deleted once the result materializes (the t16 discipline).
     "x_tx_upsert" -> Q(

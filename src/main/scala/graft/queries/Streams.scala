@@ -408,27 +408,30 @@ object Streams {
         |GROUP BY 1, 2
         |ORDER BY 1, 2""".stripMargin),
 
-    // The change feed flowing through a REAL Structured Streaming
-    // source (streaming/TxChangeFeedStream): the same four commits as
-    // t20 are spooled — one append-only parquet write per commit, each
-    // row stamped with its version — and a `readStream` file source
-    // tails the spool into a watermarked DAILY-WINDOW aggregate per
-    // change type, the stateful-operator composition the driver-loop
-    // feed (by design) cannot host. Append mode + AvailableNow: a
-    // window emits iff the final watermark (max feed event time − 35
-    // min, advanced by the no-data flush batch) passed its end — the
-    // t11/t17 emission contract, restated in the oracle's WHERE. The
-    // oracle rebuilds the feed itself in SQL (inserts from each
-    // commit's new rows, updates only where the revision actually
-    // changed the value — diff suppresses no-op updates — deletes with
-    // their last-state payload), so the whole chain commit-log → diff →
-    // spool → stream → windowed state is value-checked end-to-end.
+    // The change feed ARCHIVED on stock Spark, then windowed from the
+    // archive: the same four commits as t20 stream out of the native
+    // `graft-tx` source into a plain `writeStream.format("parquet")`
+    // archive (its own checkpoint, AvailableNow — each row stamped
+    // with its `_commit_version`), and a `readStream.parquet` file
+    // source tails that archive into a watermarked DAILY-WINDOW
+    // aggregate per change type, the stateful-operator composition the
+    // driver-loop feed (by design) cannot host. The archive is what a
+    // late consumer replays without touching the table. Append mode +
+    // AvailableNow: a window emits iff the final watermark (max feed
+    // event time − 35 min, advanced by the no-data flush batch) passed
+    // its end — the t11/t17 emission contract, restated in the
+    // oracle's WHERE. The oracle rebuilds the feed itself in SQL
+    // (inserts from each commit's new rows, updates only where the
+    // revision actually changed the value — diff suppresses no-op
+    // updates — deletes with their last-state payload), so the whole
+    // chain commit-log → diff → archive → file stream → windowed state
+    // is value-checked end-to-end.
     "t21_stream_feed_window" -> Q(
       (s, dir) => {
         val base = java.nio.file.Files
           .createTempDirectory("graft_txfw").toString
         val tbl = s"$base/fact"
-        val spoolDir = s"$base/spool"
+        val archive = s"$base/archive"
         val ev = graft.Tables.events(s, dir)
           .select(col("event_id"), col("user_id"), col("event_type"),
             col("value"), col("ts"))
@@ -449,15 +452,21 @@ object Streams {
             .select(col("event_id"), col("event_type")),
           "event_id", "event_type")
 
-        // a 4-commit backlog is the catch-up shape: drain it as ONE
-        // append (each row still stamped with its own _commit_version —
-        // spool's documented commitsPerAppend path) instead of one
-        // write job per commit; the streamed rows are identical
-        graft.streaming.TxChangeFeedStream.spool(s, tbl, "event_id", spoolDir,
-          commitsPerAppend = 4)
+        // the 4-commit backlog drains as ONE micro-batch (the source
+        // admits every commit up to the pinned tip), so the archive
+        // lands in one sink commit and the file source below reads it
+        // as one batch: the watermark advances once, after all rows
+        s.readStream.format("graft-tx")
+          .option("key", "event_id").load(tbl)
+          .writeStream.format("parquet")
+          .option("checkpointLocation", s"$base/archive_checkpoint")
+          .trigger(Trigger.AvailableNow())
+          .start(archive)
+          .awaitTermination()
         val name = s"t21_stream_feed_window_${runSeq.incrementAndGet()}"
         withStatePartitions(s, 8) {
-          val q = graft.streaming.TxChangeFeedStream.source(s, spoolDir)
+          val q = s.readStream.schema(s.read.parquet(archive).schema)
+            .parquet(archive)
             .withWatermark("ts", "35 minutes")
             .groupBy(window(col("ts"), "1 day").as("w"), col("change_type"))
             .agg(count(lit(1)).as("cnt"),
@@ -506,14 +515,14 @@ object Streams {
         |      <= (SELECT w FROM wm)
         |ORDER BY day, change_type""".stripMargin),
 
-    // t21's exact pipeline through the COMMIT-LOG-NATIVE source
-    // (io/TxStreamSource): the same four commits, but the stream is
-    // `spark.readStream.format("graft-tx")` straight off the table —
-    // no spool directory, no second copy of the change data; offsets
-    // ARE commit versions and each micro-batch is the manifest-pruned
-    // per-commit diff. Sharing t21's oracle is the point: the two feed
-    // shapes (spool bridge vs native source) must emit value-identical
-    // streams into an identical watermarked window aggregate.
+    // t21's window straight off the COMMIT-LOG-NATIVE source
+    // (io/TxStreamSource): the same four commits, but the window reads
+    // `spark.readStream.format("graft-tx")` directly — no archive, no
+    // second copy of the change data; offsets ARE commit versions and
+    // each micro-batch is the manifest-pruned per-commit diff. Sharing
+    // t21's oracle is the point: the feed read live and the feed read
+    // back from its parquet archive must emit value-identical streams
+    // into an identical watermarked window aggregate.
     "t22_stream_native_feed" -> Q(
       (s, dir) => {
         val base = java.nio.file.Files

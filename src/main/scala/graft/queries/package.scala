@@ -16,7 +16,7 @@ package object queries {
   }
 
   /** Recursive temp-dir cleanup for queries that materialize scratch
-    * state (TxTables, spools, stream checkpoints) during construction:
+    * state (TxTables, feed archives, stream checkpoints) during construction:
     * call AFTER the result frame is localCheckpoint'ed — a bench run
     * invokes each query several times and must not leak /tmp state.
     * One definition, not a per-query copy. */

@@ -77,9 +77,8 @@ object IncrementalStream {
     * batch below the maximum is provably committed, because batch N
     * only starts after N−1's commit.
     *
-    * CRASH-SAFE, partition-scoped swap (the same manifest protocol as
-    * [[graft.io.Compaction]]): the fold is staged into a sibling
-    * dot-directory, a `_manifest.tmp` → `_manifest` rename inside
+    * CRASH-SAFE, partition-scoped swap: the fold is staged into a
+    * sibling dot-directory, a `_manifest.tmp` → `_manifest` rename inside
     * staging is the commit point (listing exactly the folded
     * `batch_id=` partitions), and only then are the superseded
     * partition directories deleted and the staged `batch_id=-1` moved

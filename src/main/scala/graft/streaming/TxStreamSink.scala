@@ -12,7 +12,7 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
   *    other writers (a batch backfill, a second stream on disjoint or
   *    even overlapping partitions): commits serialize
   *    first-committer-wins and losers re-merge, so nobody clobbers
-  *    anybody (the MergeWriterSpec contention proof);
+  *    anybody (TxTable's injected-race and live-contention specs);
   *  - the keyed latest-wins merge makes micro-batch REPLAY idempotent:
   *    under at-least-once delivery a recovered batch re-upserts the
   *    same (key, version) rows, which the merge collapses to the same

@@ -1,5 +1,7 @@
 package graft
 
+import graft.io.TxTable
+import graft.ops.{GoldModel, Interpolate}
 import graft.ops.Validation.GateViolation
 import graft.pipeline.FactPipeline
 import java.nio.file.Files
@@ -10,7 +12,8 @@ import scala.util.{Failure, Success}
 /** §3.1 end-to-end: one closed hour through extract → upsert →
   * densify/interpolate → gates, then the properties the orchestration
   * must provide — replay idempotence across BOTH tables and the
-  * failure-hook path on a gate violation. */
+  * failure-hook path on a gate violation. Both tables are TxTables, so
+  * every read goes through the manifest (`TxTable.snapshot`). */
 class FactPipelineSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -21,6 +24,16 @@ class FactPipelineSpec extends SparkTestBase {
     }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
 
   private val D = 20240115
+
+  private def snap(dir: String) = TxTable.snapshot(spark, dir).get
+
+  // fixed column order: the pipeline and the storage-free reference
+  // project their columns in different orders — values must match
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+    val cols = df.columns.sorted.toIndexedSeq
+    df.select(cols.map(col): _*).collect().map(_.toString).sorted.toSeq
+  }
+
   // two (source, side) groups, each ≥2 ticks spanning minutes 00–05
   // of Tehran hour 10 → grid = 6 minutes, fully interpolable
   private val goodEvents = evts(
@@ -47,8 +60,7 @@ class FactPipelineSpec extends SparkTestBase {
     // group 8 has 2 actuals + 4 generated
     assert(run1.densifiedRows == 12L)
 
-    val factRows = spark.read.parquet(s"$wh/fact_gold_price").count()
-    assert(factRows == 5L)
+    assert(snap(s"$wh/fact_gold_price").count() == 5L)
 
     // replay the SAME hour (same events, higher version): no duplicates
     // anywhere, same row counts — the reference would duplicate its
@@ -56,48 +68,44 @@ class FactPipelineSpec extends SparkTestBase {
     val run2 = FactPipeline.runHour(spark, goodEvents, wh, D, hour = 10,
       runVersion = 2L).get
     assert(run2.densifiedRows == 12L)
-    assert(spark.read.parquet(s"$wh/fact_gold_price").count() == 5L)
-    assert(spark.read.parquet(s"$wh/fact_gold_price_interpolated").count() == 12L)
+    assert(snap(s"$wh/fact_gold_price").count() == 5L)
+    assert(snap(s"$wh/fact_gold_price_interpolated").count() == 12L)
 
     // interpolated values are the engine's interpolation, not copies:
     // group 7 minute 06:31 (wall 10:01) = linear between 100 and 106
-    val interp = spark.read.parquet(s"$wh/fact_gold_price_interpolated")
+    val interp = snap(s"$wh/fact_gold_price_interpolated")
       .filter(col("source_id") === 7 && col("rounded_time_id") === 100100)
       .select("price", "is_interpolated").as[(Double, Boolean)].head()
     assert(interp == ((102.0, true)))
   }
 
   test("transactional mode: same results, replay-idempotent, tables are versioned TxTables") {
-    // The same hour through TxTable-backed writes: identical HourRun
-    // counters and identical row contents as the single-writer mode,
-    // plus the transactional properties — every write is a manifest
-    // version (fact: v1 upsert + v2 replay; interp: v1 replace + v2
-    // replay) and the pre-replay state is still time-travelable.
-    import graft.io.TxTable
+    // The hour's tables equal a storage-free reference computed from
+    // the same events (the fact transform, the hour filter, densify),
+    // with the same HourRun counters, plus the transactional
+    // properties — every write is a manifest version (fact: v1 upsert
+    // + v2 replay; interp: v1 replace + v2 replay) and the pre-replay
+    // state is still time-travelable.
     val wh = Files.createTempDirectory("graft_pipeline_tx").toString
-    val whRef = Files.createTempDirectory("graft_pipeline_ref").toString
-
     val tx1 = FactPipeline.runHour(spark, goodEvents, wh, D, hour = 10,
-      runVersion = 1L, transactional = true).get
-    val ref1 = FactPipeline.runHour(spark, goodEvents, whRef, D, hour = 10,
       runVersion = 1L).get
-    assert(tx1 === ref1)
 
-    // fixed column order: the hive layout reads its partition column
-    // last, the TxTable layout preserves write order — values must match
-    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] = {
-      val cols = df.columns.sorted.toIndexedSeq
-      df.select(cols.map(col): _*).collect().map(_.toString).sorted.toSeq
-    }
-    assert(rows(TxTable.snapshot(spark, s"$wh/fact_gold_price").get)
-      === rows(spark.read.parquet(s"$whRef/fact_gold_price")))
-    assert(rows(TxTable.snapshot(spark, s"$wh/fact_gold_price_interpolated").get)
-      === rows(spark.read.parquet(s"$whRef/fact_gold_price_interpolated")))
+    val refFact = GoldModel.fact(goodEvents)
+      .filter(col("date_id") === D && floor(col("time_id") / 10000) === 10)
+    val refInterp = Interpolate.densify(refFact
+      .withColumn("rounded_time_id", GoldModel.roundedTimeId(col("time_id")))
+      .withColumn("is_interpolated", lit(false)))
+    assert(tx1.extracted === refFact.count())
+    assert(tx1.densifiedRows === refInterp.count())
+    assert(rows(snap(s"$wh/fact_gold_price"))
+      === rows(refFact.withColumn("etl_version", lit(1L))))
+    assert(rows(snap(s"$wh/fact_gold_price_interpolated")) === rows(refInterp))
 
     // replay: idempotent, and the write history is on the log
     val tx2 = FactPipeline.runHour(spark, goodEvents, wh, D, hour = 10,
-      runVersion = 2L, transactional = true).get
+      runVersion = 2L).get
     assert(tx2.densifiedRows === tx1.densifiedRows)
+    assert(rows(snap(s"$wh/fact_gold_price_interpolated")) === rows(refInterp))
     assert(TxTable.snapshot(spark, s"$wh/fact_gold_price").get.count() === 5L)
     assert(TxTable.latest(spark, s"$wh/fact_gold_price")._1 === 2L)
     assert(TxTable.latest(spark, s"$wh/fact_gold_price_interpolated")._1 === 2L)
@@ -107,7 +115,6 @@ class FactPipelineSpec extends SparkTestBase {
   }
 
   test("transactional mode: each hour stages one file per leaf, so compaction publishes nothing") {
-    import graft.io.TxTable
     val wh = Files.createTempDirectory("graft_pipeline_one_file").toString
     // goodEvents' hour 10 plus two groups' ticks in Tehran hour 11
     val events = goodEvents.unionByName(evts(
@@ -121,7 +128,7 @@ class FactPipelineSpec extends SparkTestBase {
       TxTable.latest(spark, dir)._2.values.toSeq.map(leaf =>
         new java.io.File(dir, leaf).list().count(_.endsWith(".parquet")))
     def hourRun(h: Int) = FactPipeline.runHour(spark, events, wh, D, hour = h,
-      runVersion = 1L, transactional = true,
+      runVersion = 1L,
       compactTargetBytes = Some(128L << 20)).get
 
     hourRun(10)
@@ -145,7 +152,6 @@ class FactPipelineSpec extends SparkTestBase {
     // instead of a parquet read-back of the published window. The
     // window replacement reuses the audited hour's checkpoint, so an
     // hour persists two batches: the fact batch and the densified hour.
-    import graft.io.TxTable
     val wh = Files.createTempDirectory("graft_pipeline_jobs").toString
     val interp = s"$wh/fact_gold_price_interpolated"
     // jobs counted inside: the executions' own marker is a job, the
@@ -157,7 +163,7 @@ class FactPipelineSpec extends SparkTestBase {
       val paths = SparkEvents.queryExecutions(spark) {
         jobs = SparkEvents.jobs(spark) {
           FactPipeline.runHour(spark, goodEvents, wh, D, hour = 10,
-            runVersion = v, transactional = true).get: Unit
+            runVersion = v).get: Unit
         }
       }.flatMap(SparkEvents.scannedPaths)
       (jobs, paths, sc.getPersistentRDDs.keys.count(_ > lastRdd))
@@ -183,11 +189,10 @@ class FactPipelineSpec extends SparkTestBase {
   test("transactional mode: a gate violation publishes nothing; the prior window stays readable") {
     // write-audit-publish: the gates audit the densified hour before
     // the window replacement publishes it
-    import graft.io.TxTable
     val wh = Files.createTempDirectory("graft_pipeline_wap").toString
     val interp = s"$wh/fact_gold_price_interpolated"
     FactPipeline.runHour(spark, goodEvents, wh, D, hour = 10,
-      runVersion = 1L, transactional = true).get
+      runVersion = 1L).get
     def window(): Seq[String] =
       TxTable.snapshot(spark, interp).get
         .filter(floor(col("rounded_time_id") / 10000) === 10)
@@ -199,25 +204,23 @@ class FactPipelineSpec extends SparkTestBase {
     val bad = goodEvents.unionByName(
       evts((6L, "9", "click", 70.0, "2024-01-15 06:32:00")))
     val r = FactPipeline.runHour(spark, bad, wh, D, hour = 10,
-      runVersion = 2L, transactional = true)
+      runVersion = 2L)
     assert(r.failed.toOption.exists(_.isInstanceOf[GateViolation]), s"expected a gate violation: $r")
     assert(TxTable.latest(spark, interp)._1 === v1, "the failing hour published its window")
     assert(window() === before)
   }
 
   test("transactional mode: an hour with zero events succeeds as a no-op") {
-    // The legacy writer tolerated an empty hour; the TxTable path must
-    // too (empty batches are no-op commits) — and it must not even
-    // publish a version for one.
-    import graft.io.TxTable
+    // An empty hour must succeed (empty batches are no-op commits) —
+    // and it must not even publish a version for one.
     val wh = Files.createTempDirectory("graft_pipeline_empty").toString
     FactPipeline.runHour(spark, goodEvents, wh, D, hour = 10,
-      runVersion = 1L, transactional = true).get
+      runVersion = 1L).get
     val vFact = TxTable.latest(spark, s"$wh/fact_gold_price")._1
     val vInterp = TxTable.latest(spark, s"$wh/fact_gold_price_interpolated")._1
 
     val empty = FactPipeline.runHour(spark, goodEvents, wh, D, hour = 23,
-      runVersion = 2L, transactional = true).get
+      runVersion = 2L).get
     assert(empty.extracted === 0L)
     assert(empty.densifiedRows === 0L)
     assert(empty.gridMinutes === 0L)
@@ -226,12 +229,11 @@ class FactPipelineSpec extends SparkTestBase {
   }
 
   test("transactional mode: the vacuum hook reclaims history past retention") {
-    import graft.io.TxTable
     val wh = Files.createTempDirectory("graft_pipeline_vac").toString
     FactPipeline.runHour(spark, goodEvents, wh, D, hour = 10,
-      runVersion = 1L, transactional = true).get
+      runVersion = 1L).get
     FactPipeline.runHour(spark, goodEvents, wh, D, hour = 10,
-      runVersion = 2L, transactional = true,
+      runVersion = 2L,
       vacuumRetainVersions = Some(1)).get
     val fact = s"$wh/fact_gold_price"
     // retain-1 destroyed run 1's history (checkpoint-on-demand tip),
@@ -249,7 +251,7 @@ class FactPipelineSpec extends SparkTestBase {
       (2L, "7", "click", 110.0, "2024-01-15 06:35:30"))
     FactPipeline.runHour(spark, run1, wh, D, hour = 10, runVersion = 1L).get
     val interpDir = s"$wh/fact_gold_price_interpolated"
-    val before = spark.read.parquet(interpDir)
+    val before = snap(interpDir)
       .filter(col("rounded_time_id") === 100200)
       .select("price", "is_interpolated").as[(Double, Boolean)].collect().toSeq
     assert(before == Seq((104.0, true))) // linear 100→110 at minute 2 of 5
@@ -262,17 +264,17 @@ class FactPipelineSpec extends SparkTestBase {
     FactPipeline.runHour(spark, run2, wh, D, hour = 10, runVersion = 2L).get
 
     // the stale generated row for 10:02 is GONE — the minute is actual
-    val after = spark.read.parquet(interpDir)
+    val after = snap(interpDir)
       .filter(col("rounded_time_id") === 100200)
       .select("price", "is_interpolated").as[(Double, Boolean)].collect().toSeq
     assert(after == Seq((107.0, false)))
     // both same-second ticks survive as distinct actual rows
-    val sameSecond = spark.read.parquet(interpDir)
+    val sameSecond = snap(interpDir)
       .filter(col("time_id") === 100010 && !col("is_interpolated"))
       .count()
     assert(sameSecond == 2L)
     // and nothing duplicated: 4 actuals + generated {10:01, 10:03, 10:04}
-    assert(spark.read.parquet(interpDir).count() == 7L)
+    assert(snap(interpDir).count() == 7L)
   }
 
   test("layout options: sorted row groups skip on a time probe, blooms exist, compaction merges") {
@@ -293,8 +295,12 @@ class FactPipelineSpec extends SparkTestBase {
     FactPipeline.runHour(spark, evts(many: _*), wh, D, hour = 10,
       runVersion = 1L, layout = layout).get
 
-    val leaf = new java.io.File(s"$wh/fact_gold_price_interpolated/date_id=$D")
-    val files = leaf.listFiles().filter(_.getName.endsWith(".parquet"))
+    // the table's current files, found through its manifest
+    def leafFiles(dir: String): Seq[java.io.File] =
+      TxTable.latest(spark, dir)._2.values.toSeq.flatMap(leaf =>
+        new java.io.File(dir, leaf).listFiles().filter(_.getName.endsWith(".parquet")))
+    val interpDir = s"$wh/fact_gold_price_interpolated"
+    val files = leafFiles(interpDir)
     assert(files.nonEmpty)
 
     val conf = spark.sessionState.newHadoopConf()
@@ -310,7 +316,7 @@ class FactPipelineSpec extends SparkTestBase {
       }
     // zone maps live on the INTERPOLATED table (sortCols survives its
     // canonical 7-column projection)
-    val blocks = footerBlocks(files.toSeq) { (_, b) =>
+    val blocks = footerBlocks(files) { (_, b) =>
       val st = b.getColumns.asScala
         .find(_.getPath.toDotString == "rounded_time_id").get
         .getStatistics
@@ -321,8 +327,7 @@ class FactPipelineSpec extends SparkTestBase {
     // the bloom column `id` exists only on the FACT table — densify's
     // canonical projection drops the tick id, and Layout.restrictedTo
     // drops the bloom from the interpolated write accordingly
-    val factLeaf = new java.io.File(s"$wh/fact_gold_price/date_id=$D")
-    val factFiles = factLeaf.listFiles().filter(_.getName.endsWith(".parquet")).toSeq
+    val factFiles = leafFiles(s"$wh/fact_gold_price")
     assert(factFiles.nonEmpty)
     val factBlooms = footerBlocks(factFiles) { (r, b) =>
       val idChunk = b.getColumns.asScala
@@ -340,16 +345,27 @@ class FactPipelineSpec extends SparkTestBase {
     assert(matching <= blocks.size / 2,
       s"sorted zone maps too loose: $matching of ${blocks.size} match the 1-minute probe")
 
-    // replay the hour with compaction on: the leaf's small files merge
-    // to one, with the window-replaced rows intact
-    val rowsBefore = spark.read.parquet(s"$wh/fact_gold_price_interpolated").count()
+    // replay the hour with compaction on: one file per leaf, with the
+    // window-replaced rows intact
+    val rowsBefore = snap(interpDir).count()
     FactPipeline.runHour(spark, evts(many: _*), wh, D, hour = 10,
       runVersion = 2L, layout = layout,
       compactTargetBytes = Some(128L << 20)).get
-    val filesAfter = leaf.listFiles().filter(_.getName.endsWith(".parquet"))
-    assert(filesAfter.length == 1,
+    val filesAfter = leafFiles(interpDir)
+    assert(filesAfter.length == TxTable.latest(spark, interpDir)._2.size,
       s"compaction left ${filesAfter.length} files")
-    assert(spark.read.parquet(s"$wh/fact_gold_price_interpolated").count() == rowsBefore)
+    assert(snap(interpDir).count() == rowsBefore)
+  }
+
+  test("transactional = false is refused and writes nothing") {
+    val wh = Files.createTempDirectory("graft_pipeline_refused").toString
+    var hooked = false
+    intercept[IllegalArgumentException] {
+      FactPipeline.runHour(spark, goodEvents, wh, D, hour = 10,
+        runVersion = 1L, onFailure = _ => hooked = true, transactional = false)
+    }
+    assert(!hooked, "an argument error is not a failed run")
+    assert(new java.io.File(wh).list().isEmpty)
   }
 
   test("a gate violation fails the run and fires the failure hook") {

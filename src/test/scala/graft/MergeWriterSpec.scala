@@ -1,80 +1,22 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 
-import graft.io.MergeWriter
 import scala.jdk.CollectionConverters._
 
-/** Partition-scoped upsert: latest-wins semantics AND the physical
-  * guarantee that untouched partitions' files are not rewritten —
-  * the property that bounds hourly-merge cost at 100 TB.
+/** Partition-scoped keyed writes on [[graft.io.TxTable]]: latest-wins
+  * semantics, CAS commits under contention, O(touched) rewrites and
+  * manifests, retention, and the commit stores underneath.
   */
 class MergeWriterSpec extends SparkTestBase {
 
-  private def filesOf(dir: Path): Set[String] =
-    Files.walk(dir).iterator().asScala
-      .filter(p => p.getFileName.toString.endsWith(".parquet"))
-      .map(_.toString).toSet
-
-  test("upsertPartitioned merges latest-wins and rewrites only touched partitions") {
-    val s = spark
-    import s.implicits._
-    val target = Files.createTempDirectory("graft_merge").toString + "/fact"
-
-    // bootstrap: two date partitions
-    MergeWriter.upsertPartitioned(spark, target,
-      Seq(
-        (1L, 100.0, 1L, 20240101),
-        (2L, 101.0, 1L, 20240101),
-        (3L, 200.0, 1L, 20240102)
-      ).toDF("id", "price", "etl_seq", "date_id"),
-      "id", "etl_seq", "date_id")
-
-    val untouchedBefore = filesOf(Paths.get(target, "date_id=20240102"))
-    assert(untouchedBefore.nonEmpty)
-
-    // hourly batch: replay id=2 with new price, insert id=4 — only
-    // 20240101 is touched
-    MergeWriter.upsertPartitioned(spark, target,
-      Seq(
-        (2L, 151.0, 2L, 20240101),
-        (4L, 102.0, 2L, 20240101)
-      ).toDF("id", "price", "etl_seq", "date_id"),
-      "id", "etl_seq", "date_id")
-
-    val out = spark.read.parquet(target)
-      .select("id", "price", "date_id").collect()
-      .map(r => (r.getLong(0), r.getDouble(1), r.getInt(2))).toSet
-    assert(out === Set(
-      (1L, 100.0, 20240101),
-      (2L, 151.0, 20240101), // replay overwrote, no duplicate
-      (3L, 200.0, 20240102),
-      (4L, 102.0, 20240101)))
-
-    // the untouched date's physical files are bit-identical (same paths,
-    // never rewritten)
-    assert(filesOf(Paths.get(target, "date_id=20240102")) === untouchedBefore)
-  }
-
-  test("upsert is idempotent: replaying the same batch changes nothing") {
-    val s = spark
-    import s.implicits._
-    val target = Files.createTempDirectory("graft_merge_idem").toString + "/fact"
-    val batch = Seq((1L, 10.0, 1L, 20240101), (2L, 20.0, 1L, 20240101))
-      .toDF("id", "price", "etl_seq", "date_id")
-    MergeWriter.upsertPartitioned(spark, target, batch, "id", "etl_seq", "date_id")
-    MergeWriter.upsertPartitioned(spark, target, batch, "id", "etl_seq", "date_id")
-    assert(spark.read.parquet(target).count() === 2)
-  }
-
   test("interleaved TRANSACTIONAL writers on one partition: both batches survive") {
-    // The concurrency gap the fast path documents, closed by TxTable's
-    // optimistic CAS: writer A merges against snapshot v1 and stages;
-    // writer B commits v2 inside A's stage→commit window (injected via
-    // the beforeCommit seam); A's CAS on v2 then FAILS, A re-merges
-    // against B's snapshot and commits v3 — so B's insert into the
-    // contended partition survives alongside A's, where the legacy
-    // path silently dropped it (next test).
+    // The lost-update window of a read-merge-overwrite writer, closed
+    // by TxTable's optimistic CAS: writer A merges against snapshot v1
+    // and stages; writer B commits v2 inside A's stage→commit window
+    // (injected via the beforeCommit seam); A's CAS on v2 then FAILS,
+    // A re-merges against B's snapshot and commits v3 — so B's insert
+    // into the contended partition survives alongside A's.
     import graft.io.TxTable
     val s = spark
     import s.implicits._
@@ -1119,50 +1061,5 @@ class MergeWriterSpec extends SparkTestBase {
     assert(conservative.filter($"date_id" === 20240101).count() === 1L)
     assert(conservative.count() === 4L,
       "value-less legacy entries must be read conservatively, not skipped")
-  }
-
-  test("interleaved LEGACY writers on one partition are last-writer-wins: the lost update is real") {
-    // The fast path's single-writer contract, demonstrated rather than
-    // implied: writer A reads the table, writer B commits a full upsert,
-    // then A writes its (now stale) merge. A's dynamic overwrite
-    // replaces the whole touched partition with A's merge of the PRE-B
-    // state — B's insert into that partition is silently lost, while
-    // B's write to a partition A never touched survives. This test
-    // reproduces A's read-then-write window by running the writer's own
-    // read+merge steps, snapshotting (localCheckpoint, exactly what
-    // upsertPartitioned does), and deferring the write until after B.
-    val s = spark
-    import s.implicits._
-    val target = Files.createTempDirectory("graft_merge_race").toString + "/fact"
-    MergeWriter.upsertPartitioned(spark, target,
-      Seq((1L, 10.0, 1L, 20240101)).toDF("id", "price", "etl_seq", "date_id"),
-      "id", "etl_seq", "date_id")
-
-    // writer A: read + merge (snapshot), write deferred
-    val aBatch = Seq((2L, 20.0, 2L, 20240101)).toDF("id", "price", "etl_seq", "date_id")
-    val aMerged = graft.ops.Merge.upsertLatestWins(
-      spark.read.parquet(target).filter($"date_id" === 20240101),
-      aBatch, "id", "etl_seq").localCheckpoint(true)
-
-    // writer B commits first: touches A's partition AND a fresh one
-    MergeWriter.upsertPartitioned(spark, target,
-      Seq((3L, 30.0, 2L, 20240101), (4L, 40.0, 2L, 20240102))
-        .toDF("id", "price", "etl_seq", "date_id"),
-      "id", "etl_seq", "date_id")
-
-    // writer A lands second (the tail of upsertPartitioned)
-    aMerged.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("date_id").parquet(target)
-
-    val out = spark.read.parquet(target)
-      .select("id", "date_id").collect()
-      .map(r => (r.getLong(0), r.getInt(1))).toSet
-    assert(out === Set(
-      (1L, 20240101), // pre-race row: in both writers' merges
-      (2L, 20240101), // A's insert: last writer, wins the partition
-      // (3L, 20240101) is GONE — B's insert, lost to A's overwrite
-      (4L, 20240102)  // B's insert to a partition A never touched: survives
-    ), s"interleaving contract changed: $out")
   }
 }

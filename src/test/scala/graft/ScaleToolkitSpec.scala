@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions._
 class ScaleToolkitSpec extends SparkTestBase {
 
   test("a dim-filter join dynamically prunes fact partitions") {
-    // The lake layout MergeWriter produces (fact partitioned by
-    // date_id) must let a selective dim filter prune fact partitions
+    // A hive-partitioned lake (fact partitioned by date_id) must let
+    // a selective dim filter prune fact partitions
     // THROUGH the join at runtime — on a 100 TB fact this is the
     // difference between scanning one day and scanning the lake.
     val s = spark

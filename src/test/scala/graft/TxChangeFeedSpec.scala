@@ -254,36 +254,6 @@ class TxChangeFeedSpec extends SparkTestBase {
     assert(cursor === 2L)
   }
 
-  test("spooled feed: a readStream source tails exactly the drained commits") {
-    // TxChangeFeedStream bridges the driver-loop feed into Structured
-    // Streaming: each commit appends once to the spool (stamped with
-    // its version), a persisted cursor resumes without replays, and
-    // the spool reads back as a genuine readStream source.
-    import graft.streaming.TxChangeFeedStream
-    val target = freshTable()
-    commit(target, Seq((1L, 1.0, 1L, 20240101), (2L, 2.0, 1L, 20240102)))
-    commit(target, Seq((1L, 1.5, 2L, 20240101)))
-    val spool = Files.createTempDirectory("graft_cf_spool").toString + "/s"
-    val c1 = TxChangeFeedStream.spool(spark, target, "id", spool)
-    assert(c1 === 2L)
-    commit(target, Seq((3L, 3.0, 3L, 20240103)))
-    val c2 = TxChangeFeedStream.spool(spark, target, "id", spool, fromVersion = c1)
-    assert(c2 === 3L)
-    val byVersion = spark.read.parquet(spool)
-      .groupBy("_commit_version").count().collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(byVersion === Map(1L -> 2L, 2L -> 1L, 3L -> 1L),
-      "spool does not hold exactly one batch per commit")
-    val name = "cf_spool_replay"
-    val q = TxChangeFeedStream.source(spark, spool)
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    assert(spark.table(name).count() === 4L)
-  }
-
   test("reserved control columns in the payload are refused, not corrupted") {
     // mirror/replicate inject _op/_seq into each diff before applyCdc;
     // a source payload already carrying either name would silently
@@ -311,302 +281,15 @@ class TxChangeFeedSpec extends SparkTestBase {
     val exD = intercept[IllegalArgumentException](
       TxTable.diff(spark, src2, 0L, 1L, "id").collect())
     assert(exD.getMessage.contains("change_type"))
-    // the spool stamps _commit_version the same way
+    // the native stream source stamps _commit_version the same way
     val src3 = freshTable()
     TxTable.upsert(spark, src3,
       Seq((1L, 1.0, 9L, 1L, 20240101))
         .toDF("id", "price", "_commit_version", "etl_seq", "date_id"),
       "id", "etl_seq", "date_id")
     val exS = intercept[IllegalArgumentException](
-      graft.streaming.TxChangeFeedStream.spool(
-        spark, src3, "id", freshTable()))
+      spark.readStream.format("graft-tx").option("key", "id").load(src3))
     assert(exS.getMessage.contains("_commit_version"))
-  }
-
-  test("vacuumSpool reclaims aged files; a checkpointed stream resumes past the horizon; a fresh consumer fails loudly") {
-    import graft.streaming.TxChangeFeedStream
-    import org.apache.spark.sql.streaming.Trigger
-    val target = freshTable()
-    val base = Files.createTempDirectory("graft_cf_vac").toString
-    val spool = s"$base/s"
-    val ckpt = s"$base/ckpt"
-    commit(target, Seq((1L, 1.0, 1L, 20240101)))
-    commit(target, Seq((2L, 2.0, 2L, 20240102)))
-    val c1 = TxChangeFeedStream.spool(spark, target, "id", spool)
-    assert(c1 === 2L)
-    // a consumer processes the first two commits and checkpoints (file
-    // sink: the memory sink cannot recover from a checkpoint, and
-    // recovery-across-restart is exactly what this test pins)
-    val sink = s"$base/sink"
-    def runOnce(): Unit = {
-      // resume from the recorded horizon (0 before any vacuum): the
-      // checkpoint's file log carries exactly-once across the restart
-      val q = TxChangeFeedStream.source(spark, spool,
-          resumeFromVersion = TxChangeFeedStream.readHorizon(spark, spool))
-        .writeStream.format("parquet")
-        .outputMode("append")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    runOnce()
-    assert(spark.read.parquet(sink).count() === 2L)
-
-    // age separation, then more commits spool as YOUNG files
-    Thread.sleep(1200)
-    val tSplit = System.currentTimeMillis()
-    commit(target, Seq((3L, 3.0, 3L, 20240103)))
-    commit(target, Seq((1L, 1.5, 4L, 20240101)))
-    TxChangeFeedStream.spool(spark, target, "id", spool, fromVersion = c1)
-
-    // reclaim exactly the files older than the split point
-    val reclaimed = TxChangeFeedStream.vacuumSpool(
-      spark, spool, olderThanMs = System.currentTimeMillis() - tSplit)
-    assert(reclaimed > 0, "no files reclaimed")
-    assert(TxChangeFeedStream.readHorizon(spark, spool) === 2L)
-    // surviving spool rows are exactly the post-horizon commits
-    assert(spark.read.parquet(spool).select("_commit_version")
-      .collect().map(_.getLong(0)).toSet === Set(3L, 4L))
-
-    // the RESTARTED stream (checkpoint already past the horizon)
-    // replays only the new commits, with no missing-file failure
-    runOnce()
-    assert(spark.read.parquet(sink).count() === 4L)
-
-    // a FRESH from-zero consumer must fail loudly, not silently skip
-    // the reclaimed history
-    val ex = intercept[IllegalArgumentException] {
-      TxChangeFeedStream.source(spark, spool)
-    }
-    assert(ex.getMessage.contains("reclaimed"))
-    // ...and a consumer passing its checkpointed cursor reads on
-    val name2 = "cf_vac_fresh_cursor"
-    val q2 = TxChangeFeedStream.source(spark, spool, resumeFromVersion = 3L)
-      .writeStream.format("memory").queryName(name2)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q2.awaitTermination()
-    assert(spark.table(name2).select("_commit_version")
-      .collect().map(_.getLong(0)).toSet === Set(4L),
-      "resumeFromVersion must filter rows at or below the cursor")
-  }
-
-  test("compactSpool folds aged files into a hidden archive; replaySpool is the exact feed; streams and horizon behave like vacuum") {
-    import graft.streaming.TxChangeFeedStream
-    import org.apache.spark.sql.streaming.Trigger
-    val target = freshTable()
-    val base = Files.createTempDirectory("graft_cf_cmp").toString
-    val spool = s"$base/s"
-    commit(target, Seq((1L, 1.0, 1L, 20240101)))
-    commit(target, Seq((2L, 2.0, 2L, 20240102)))
-    commit(target, Seq((1L, 1.5, 3L, 20240101)))
-    TxChangeFeedStream.spool(spark, target, "id", spool)
-    val before = TxChangeFeedStream.replaySpool(spark, spool)
-      .collect().map(_.toString).toSet
-
-    Thread.sleep(1200)
-    val tSplit = System.currentTimeMillis()
-    commit(target, Seq((3L, 3.0, 4L, 20240103)))
-    TxChangeFeedStream.spool(spark, target, "id", spool, fromVersion = 3L)
-
-    // fold exactly the aged (pre-split) files
-    val folded = TxChangeFeedStream.compactSpool(
-      spark, spool, olderThanMs = System.currentTimeMillis() - tSplit)
-    assert(folded === 3, s"expected 3 per-commit files folded, got $folded")
-    // live view now holds only the young commit; a running/fresh stream
-    // never sees the archive (underscore dir is path-filtered)
-    assert(spark.read.parquet(spool).select("_commit_version")
-      .collect().map(_.getLong(0)).toSet === Set(4L))
-    // the horizon advanced exactly as a vacuum's would
-    assert(TxChangeFeedStream.readHorizon(spark, spool) === 3L)
-    intercept[IllegalArgumentException] {
-      TxChangeFeedStream.source(spark, spool)
-    }
-    // but the CONTENT survived: replay = archive ∪ live, exactly the feed
-    val after = TxChangeFeedStream.replaySpool(spark, spool)
-      .collect().map(_.toString).toSet
-    val young = spark.read.parquet(spool).collect().map(_.toString).toSet
-    assert(after === before ++ young)
-
-    // a resumed consumer past the horizon streams the live view
-    val sink = s"$base/sink"
-    val q = TxChangeFeedStream.source(spark, spool, resumeFromVersion = 3L)
-      .writeStream.format("parquet").outputMode("append")
-      .option("path", sink)
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    assert(spark.read.parquet(sink).select("_commit_version")
-      .collect().map(_.getLong(0)).toSet === Set(4L))
-
-    // re-running compaction on an already-folded spool is a no-op for
-    // the replay view (self-healing distinct), and a SECOND round that
-    // folds the young file composes: replay stays exact with zero live
-    // files left (archive-only read path)
-    val folded2 = TxChangeFeedStream.compactSpool(spark, spool, olderThanMs = 0L)
-    assert(folded2 === 1)
-    assert(TxChangeFeedStream.readHorizon(spark, spool) === 4L)
-    val finalReplay = TxChangeFeedStream.replaySpool(spark, spool)
-      .collect().map(_.toString).toSet
-    assert(finalReplay === after)
-
-    // a caught-up consumer restarting over the FULLY-compacted spool
-    // (zero live files) must still pin a schema (from the archive) and
-    // run — emitting nothing until new files land
-    val q2 = TxChangeFeedStream.source(spark, spool, resumeFromVersion = 4L)
-      .writeStream.format("parquet").outputMode("append")
-      .option("path", s"$base/sink2")
-      .option("checkpointLocation", s"$base/ckpt2")
-      .trigger(Trigger.AvailableNow()).start()
-    q2.awaitTermination()
-    val sunk2 = new java.io.File(s"$base/sink2").listFiles()
-    assert(sunk2 == null || !sunk2.exists(_.getName.endsWith(".parquet")) ||
-      spark.read.parquet(s"$base/sink2").count() === 0L)
-  }
-
-  test("compactArchive re-folds a many-file archive in place; replaySpool stays exact; horizon unmoved") {
-    import graft.streaming.TxChangeFeedStream
-    val target = freshTable()
-    val base = Files.createTempDirectory("graft_cf_arc").toString
-    val spool = s"$base/s"
-    // five per-commit spool rounds, each compacted SEPARATELY so the
-    // archive accumulates one consolidated file per round — the
-    // many-rounds shape the re-fold exists for
-    (1 to 5).foreach { i =>
-      commit(target, Seq((i.toLong, i * 1.0, i.toLong, 20240101)))
-      TxChangeFeedStream.spool(spark, target, "id", spool, fromVersion = i - 1L)
-      assert(TxChangeFeedStream.compactSpool(spark, spool, olderThanMs = 0L) === 1)
-    }
-    def archiveFiles(): Seq[java.io.File] = {
-      val fs = new java.io.File(s"$spool/_archive").listFiles()
-      if (fs == null) Seq.empty
-      else fs.toSeq.filter(f => f.isFile &&
-        !f.getName.startsWith("_") && !f.getName.startsWith("."))
-    }
-    assert(archiveFiles().size >= 5, "each round must have appended a file")
-    val before = TxChangeFeedStream.replaySpool(spark, spool)
-      .collect().map(_.toString).toSet
-    val horizonBefore = TxChangeFeedStream.readHorizon(spark, spool)
-
-    val folded = TxChangeFeedStream.compactArchive(spark, spool)
-    assert(folded >= 5, s"expected all archive files folded, got $folded")
-    assert(archiveFiles().size === 1,
-      "tiny archive must re-fold to a single file")
-    // content and horizon are untouched — only file identity changed
-    assert(TxChangeFeedStream.replaySpool(spark, spool)
-      .collect().map(_.toString).toSet === before)
-    assert(TxChangeFeedStream.readHorizon(spark, spool) === horizonBefore)
-    // already-consolidated: the second pass is a no-op
-    assert(TxChangeFeedStream.compactArchive(spark, spool) === 0)
-    // and the pass composes with later rounds: a new commit, spool,
-    // fold, re-fold — replay still exact
-    commit(target, Seq((6L, 6.0, 6L, 20240102)))
-    TxChangeFeedStream.spool(spark, target, "id", spool, fromVersion = 5L)
-    TxChangeFeedStream.compactSpool(spark, spool, olderThanMs = 0L): Unit
-    TxChangeFeedStream.compactArchive(spark, spool): Unit
-    val after = TxChangeFeedStream.replaySpool(spark, spool)
-      .select("_commit_version").collect().map(_.getLong(0)).toSet
-    assert(after === (1L to 6L).toSet)
-  }
-
-  test("vacuumSpool over an all-empty aged set keeps the horizon at zero (nothing replayable lost)") {
-    import graft.streaming.TxChangeFeedStream
-    val target = freshTable()
-    commit(target, Seq((1L, 1.0, 1L, 20240101)))
-    val base = Files.createTempDirectory("graft_cf_vac0").toString
-    val schemaSrc = s"$base/a"
-    TxChangeFeedStream.spool(spark, target, "id", schemaSrc)
-    // a rows-preserving commit spools an EMPTY diff: same shape, 0 rows
-    val emptySpool = s"$base/b"
-    spark.read.parquet(schemaSrc).limit(0)
-      .write.parquet(emptySpool)
-    val reclaimed = TxChangeFeedStream.vacuumSpool(spark, emptySpool, 0L)
-    assert(TxChangeFeedStream.readHorizon(spark, emptySpool) === 0L,
-      s"an all-empty reclaim (files=$reclaimed) must not raise the horizon")
-    // and the normal spool's horizon is untouched by the other dir
-    assert(TxChangeFeedStream.readHorizon(spark, schemaSrc) === 0L)
-  }
-
-  test("bulk catch-up: a long-gap drain lands in ceil(commits/N) appends with identical spool rows") {
-    import graft.streaming.TxChangeFeedStream
-    val target = freshTable()
-    (1 to 12).foreach(i =>
-      commit(target, Seq((i.toLong, i * 1.0, i.toLong, 20240101 + (i % 3)))))
-    val base = Files.createTempDirectory("graft_cf_bulk").toString
-    val perCommit = s"$base/one"
-    val bulk = s"$base/bulk"
-
-    // the drain's cost unit is the WRITE ACTION (one sequential driver
-    // round trip each; under AQE a single action fans into one raw job
-    // per exchange, so raw job counts don't measure the drain shape) —
-    // count SQL executions instead
-    val execs = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
-        e match {
-          case _: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
-            execs.incrementAndGet(): Unit
-          case _ => ()
-        }
-    }
-    def countActions(body: => Unit): Long = {
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        execs.set(0); body
-        // events ride the async listener bus — settle it
-        var prev = -1L
-        while (execs.get != prev) { prev = execs.get; Thread.sleep(100) }
-        execs.get
-      }
-      finally spark.sparkContext.removeSparkListener(listener)
-    }
-
-    val jOne = countActions {
-      assert(TxChangeFeedStream.spool(spark, target, "id", perCommit) === 12L)
-    }
-    val jBulk = countActions {
-      assert(TxChangeFeedStream.spool(spark, target, "id", bulk,
-        commitsPerAppend = 4) === 12L)
-    }
-    assert(jOne === 12L, s"per-commit drain should be one write per commit, got $jOne")
-    assert(jBulk === 3L, s"bulk drain should be ceil(12/4) = 3 writes, got $jBulk")
-    // and the spooled rows are IDENTICAL, stamps included
-    def rows(dir: String): Seq[String] =
-      spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq
-    assert(rows(bulk) === rows(perCommit))
-  }
-
-  test("a schema-widening commit's spooled columns survive into the stream source") {
-    // source() pins the file-source schema from the spool; a
-    // single-footer pick could land on a pre-widening file and
-    // silently drop the widened column from every streamed row — the
-    // pin must be the mergeSchema resolution.
-    val s = spark
-    import s.implicits._
-    val target = freshTable()
-    commit(target, Seq((1L, 1.0, 1L, 20240101)))
-    val spool = Files.createTempDirectory("graft_cf_wide").toString + "/s"
-    val c1 = graft.streaming.TxChangeFeedStream.spool(spark, target, "id", spool)
-    TxTable.upsert(spark, target,
-      Seq((2L, 2.0, 2L, 20240101, "hello"))
-        .toDF("id", "price", "etl_seq", "date_id", "note"),
-      "id", "etl_seq", "date_id")
-    graft.streaming.TxChangeFeedStream.spool(
-      spark, target, "id", spool, fromVersion = c1)
-    val src = graft.streaming.TxChangeFeedStream.source(spark, spool)
-    assert(src.schema.fieldNames.contains("note"),
-      s"widened column lost from the stream schema: ${src.schema.fieldNames.toSeq}")
-    val name = "cf_spool_widened"
-    val q = src.writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val notes = spark.table(name)
-      .filter(col("id") === 2L).select("note")
-      .collect().map(_.getString(0))
-    assert(notes.toSeq == Seq("hello"))
   }
 
   test("diff carries a widened column even when the range only touches pre-widening leaves") {

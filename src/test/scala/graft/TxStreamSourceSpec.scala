@@ -10,7 +10,7 @@ import org.apache.spark.sql.streaming.Trigger
   * as `spark.readStream.format("graft-tx")`): offsets are commit
   * versions, each micro-batch is the stamped union of per-commit diffs,
   * the checkpoint carries the cursor across restarts, and the whole
-  * thing needs no spool directory.
+  * thing needs no second copy of the change data.
   */
 class TxStreamSourceSpec extends SparkTestBase {
 
@@ -347,6 +347,50 @@ class TxStreamSourceSpec extends SparkTestBase {
     intercept[IllegalArgumentException](create("maxBytesPerTrigger" -> "0"))
     intercept[IllegalArgumentException](create("maxCommitsPerTrigger" -> "-1"))
     create("maxBytesPerTrigger" -> "1", "maxCommitsPerTrigger" -> "1") // positive caps fine
+  }
+
+  test("a schema-widening commit's columns survive into the stream source") {
+    // The pinned stream schema must be the widened one: a stream
+    // started after the widening carries the new column from its first
+    // batch (pre-widening commits null-padded), and a stream started
+    // before it picks the column up on restart — never silently drops
+    // it from the widened commit's rows.
+    val s = spark
+    import s.implicits._
+    def widen(target: String): Unit =
+      TxTable.upsert(spark, target,
+        Seq((2L, 2.0, 2L, 20240101, "hello"))
+          .toDF("id", "price", "etl_seq", "date_id", "note"),
+        "id", "etl_seq", "date_id")
+    def notes(rows: org.apache.spark.sql.DataFrame): Set[(Long, String)] =
+      rows.select("id", "note").collect()
+        .map(r => (r.getLong(0), r.getString(1))).toSet
+
+    val fresh = freshTable()
+    commit(fresh, Seq((1L, 1.0, 1L, 20240101)))
+    widen(fresh)
+    val src = feed(fresh)
+    assert(src.schema.fieldNames.contains("note"),
+      s"widened column lost from the stream schema: ${src.schema.fieldNames.toSeq}")
+    val name = "txss_widened"
+    src.writeStream.format("memory").queryName(name)
+      .outputMode("append").trigger(Trigger.AvailableNow()).start()
+      .awaitTermination()
+    assert(notes(spark.table(name)) === Set((1L, null), (2L, "hello")))
+
+    val restarted = freshTable()
+    val base = Files.createTempDirectory("graft_txss_wide").toString
+    def runOnce(): Unit =
+      feed(restarted).writeStream.format("parquet").outputMode("append")
+        .option("path", s"$base/sink").option("checkpointLocation", s"$base/ckpt")
+        .trigger(Trigger.AvailableNow()).start()
+        .awaitTermination()
+    commit(restarted, Seq((1L, 1.0, 1L, 20240101)))
+    runOnce()
+    widen(restarted)
+    runOnce()
+    val sunk = spark.read.option("mergeSchema", "true").parquet(s"$base/sink")
+    assert(notes(sunk) === Set((1L, null), (2L, "hello")))
   }
 
   test("a never-committed table refuses to pin a stream schema") {
