@@ -1,14 +1,136 @@
 package graft
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicLong
+import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
+
 object Bench {
+  /** One query's layers in the recorded pass: its Spark jobs, stages and
+    * tasks; `job_s` the sum of its job spans; `gap_s` its wall time
+    * outside the union of those spans (driver planning, metadata I/O,
+    * commit logs — overlapping AQE stages are not counted twice);
+    * `plan_s` the outer query's analysis, optimization and planning;
+    * its shuffle-write and spill MB. */
+  final case class Layers(jobs: Int, stages: Long, tasks: Long, jobS: Double,
+      gapS: Double, planS: Double, shuffleMb: Double, spillMb: Double)
+
+  /** One pass: per query its time (ok queries only), its error (failed
+    * ones), and in the recorded pass its [[Layers]]. */
+  final case class Pass(times: Map[String, Double], failed: Map[String, String],
+      layers: Map[String, Layers])
+
+  /** Bench's one listener: cumulative task metrics, and each job's span
+    * from the events' own timestamps (not from when the async bus
+    * delivers them). */
+  final class Meter extends SparkListener {
+    val stages, tasks, shuffleBytes, spillBytes, events = new AtomicLong
+    val spans = new ConcurrentHashMap[Int, Array[Long]]
+    override def onJobStart(e: SparkListenerJobStart): Unit = {
+      spans.put(e.jobId, Array(e.time, -1L)); events.incrementAndGet(): Unit
+    }
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = {
+      Option(spans.get(e.jobId)).foreach(_(1) = e.time); events.incrementAndGet(): Unit
+    }
+    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = {
+      stages.incrementAndGet(); events.incrementAndGet(): Unit
+    }
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
+      Option(e.taskMetrics).foreach { m =>
+        shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+        spillBytes.addAndGet(m.diskBytesSpilled)
+      }
+      tasks.incrementAndGet(); events.incrementAndGet(): Unit
+    }
+    /** Drain the async bus: until no event arrives for 100 ms (2 s cap). */
+    def settle(): Unit = {
+      val t0 = System.nanoTime()
+      var prev = -1L
+      while (events.get != prev && System.nanoTime() - t0 < 2e9.toLong) {
+        prev = events.get; Thread.sleep(100)
+      }
+    }
+  }
+
+  /** Total length of the union of `[start, end]` intervals. */
+  private def unionMs(iv: Seq[(Long, Long)]): Long =
+    iv.sortBy(_._1).foldLeft((0L, Long.MinValue)) { case ((tot, end), (s, e)) =>
+      if (s >= end) (tot + e - s, e)
+      else if (e > end) (tot + e - end, e)
+      else (tot, end)
+    }._1
+
+  private def mb(bytes: Long): Double = math.round(bytes / 1e5) / 10.0
+  private def ms3(x: Double): Double = math.round(x * 1000) / 1000.0
+
+  /** One pass over the registry (or the `only` queries) at `dir`,
+    * session-injected so VerifyContractSpec can drive it in-process.
+    * With a `meter` attached to the session, this is the recorded
+    * pass: per ok query its [[Layers]], read after the query's own time
+    * is taken, so timings are unaffected.
+    *
+    * A query that throws must NOT record a timing: r5's artifact carried
+    * 44 ~0.05s analysis-failure floors that read as 20-38× speedups. A
+    * failed query gets no time and an entry in `failed`. */
+  def pass(spark: SparkSession, dir: String, only: Set[String] = Set.empty,
+      meter: Option[Meter] = None): Pass = {
+    val times = scala.collection.mutable.LinkedHashMap[String, Double]()
+    val failed = scala.collection.mutable.LinkedHashMap[String, String]()
+    val layers = scala.collection.mutable.LinkedHashMap[String, Layers]()
+    SparkEntry.queries
+      .filter { case (name, _) => only.isEmpty || only(name) }
+      .foreach { case (name, fn) =>
+      // drop shared materialized intermediates (dedup signature frames)
+      // so each query's timing charges its own full compute —
+      // intra-query reuse is the optimization under test, a previous
+      // query's warm cache is not
+      graft.ops.PlanCache.clear()
+      val before = meter.map { m =>
+        m.settle(); m.spans.clear()
+        (m.stages.get, m.tasks.get, m.shuffleBytes.get, m.spillBytes.get)
+      }
+      val t0 = System.nanoTime()
+      // toRdd executes the FULL plan — every output column is computed.
+      // A plain .count() would let Catalyst prune computed columns and
+      // under-report any query whose cost is in its projections.
+      val qe =
+        try { val q = fn(spark, dir).queryExecution; q.toRdd.count(); Some(q) }
+        catch { case e: Throwable =>
+          failed(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(300)
+          None
+        }
+      val elapsed = (System.nanoTime() - t0) / 1e9
+      qe.foreach { q =>
+        times(name) = elapsed
+        for (m <- meter; (st0, tk0, sh0, sp0) <- before) {
+          m.settle()
+          val iv = m.spans.values.asScala.toSeq.collect { case Array(s, e) if e >= 0 => (s, e) }
+          val ph = q.tracker.phases
+          val planMs = Seq("analysis", "optimization", "planning").flatMap(ph.get)
+            .map(p => p.endTimeMs - p.startTimeMs).sum
+          layers(name) = Layers(m.spans.size, m.stages.get - st0, m.tasks.get - tk0,
+            ms3(iv.map { case (s, e) => e - s }.sum / 1e3),
+            ms3(elapsed - unionMs(iv) / 1e3), ms3(planMs / 1e3),
+            mb(m.shuffleBytes.get - sh0), mb(m.spillBytes.get - sp0))
+        }
+      }
+    }
+    Pass(times.toMap, failed.toMap, layers.toMap)
+  }
+
+  /** Per query, its fastest time over `ps` (never-ok queries absent). */
+  private def best(ps: Seq[Pass]): Map[String, Double] =
+    ps.flatMap(_.times).groupMapReduce(_._1)(_._2)(math.min)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    // optional query names focus the run on those queries (dev loop);
+    // no names = the full surface
+    val only = args.toSet
+    require(only.subsetOf(SparkEntry.queries.keySet),
+      s"unknown queries: ${(only -- SparkEntry.queries.keySet).mkString(", ")}")
+    val cpus = LocalSpark.cpus
+    val spark = LocalSpark.builder(cpus)
       // the generated-class cache defaults to 100 entries; this suite's
       // 60+ queries × several codegen stages each evict one another
       // between passes, so every pass recompiles (and re-JITs) its hot
@@ -35,77 +157,25 @@ object Bench {
     // on an otherwise sub-second query, on BOTH passes of a 2-pass
     // run). Warm-then-min reports what the engine actually costs per
     // query at steady state, the same policy as any JMH-style harness.
-    // A query that throws must NOT record a timing: r5's artifact carried
-    // 44 ~0.05s analysis-failure floors that read as 20-38× speedups. A
-    // failed query times as +Infinity within the pass and is reported in
-    // a "failed" list with a null time — it can never improve the total.
-    val failed = scala.collection.mutable.LinkedHashMap[String, String]()
-    // Per-query shuffle volume: seconds at sf0.1 can hide a plan that
-    // is fast here but moves the whole input through an exchange — at
-    // 100 TB the shuffled BYTES are the cost model. A listener sums
-    // task-level shuffle writes; the final timed pass records them per
-    // query (reset → run → poll-stable read: task-end events arrive on
-    // the async bus, the SQL-metrics discipline). The poll runs AFTER
-    // the query's own timing is captured, so timings are unaffected.
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
-    val spillBytes = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = e.taskMetrics
-        if (m != null) {
-          shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          spillBytes.addAndGet(m.diskBytesSpilled)
-        }
-      }
-    })
-    def settled(a: java.util.concurrent.atomic.AtomicLong): Long = {
-      var prev = -1L
-      var cur = a.get
-      val t0 = System.nanoTime()
-      while (cur != prev && System.nanoTime() - t0 < 2e9.toLong) {
-        Thread.sleep(100); prev = cur; cur = a.get
-      }
-      cur
-    }
-    val shuffleMb = scala.collection.mutable.LinkedHashMap[String, Double]()
-    def pass(recordShuffle: Boolean = false, dir: String = sfDir): Map[String, Double] =
-      SparkEntry.queries.map { case (name, fn) =>
-      // drop shared materialized intermediates (dedup signature frames)
-      // so each query's timing charges its own full compute —
-      // intra-query reuse is the optimization under test, a previous
-      // query's warm cache is not
-      graft.ops.PlanCache.clear()
-      if (recordShuffle) { settled(shuffleBytes); shuffleBytes.set(0) }
-      val t0 = System.nanoTime()
-      // toRdd executes the FULL plan — every output column is computed.
-      // A plain .count() would let Catalyst prune computed columns and
-      // under-report any query whose cost is in its projections.
-      val ok =
-        try { fn(spark, dir).queryExecution.toRdd.count(); true }
-        catch { case e: Throwable =>
-          failed.getOrElseUpdate(name,
-            Option(e.getMessage).getOrElse(e.getClass.getName).take(300))
-          false
-        }
-      val elapsed = (System.nanoTime() - t0) / 1e9
-      if (recordShuffle && ok)
-        shuffleMb(name) = math.round(settled(shuffleBytes) / 1e5) / 10.0
-      name -> (if (ok) elapsed else Double.PositiveInfinity)
-    }
-    pass() // warm (JIT/codegen), untimed
-    val timed1 = pass()
-    val timed2 = pass()
-    // spill shares shuffle_mb's denominator (the final pass only):
-    // settle the async task-end bus, then zero before the recorded pass
-    settled(spillBytes); spillBytes.set(0)
-    val timed = Seq(timed1, timed2, pass(recordShuffle = true))
+    // Per-query layers: seconds at sf0.1 can hide a plan that moves the
+    // whole input through an exchange (at 100 TB the shuffled BYTES are
+    // the cost model) or spends its time in driver gaps, not jobs.
+    val meter = new Meter
+    spark.sparkContext.addSparkListener(meter)
+    pass(spark, sfDir, only) // warm (JIT/codegen), untimed
+    val timed1 = pass(spark, sfDir, only)
+    val timed2 = pass(spark, sfDir, only)
+    // spill shares shuffle_mb's denominator (the final pass only)
+    meter.settle()
+    val spill0 = meter.spillBytes.get
+    val recorded = pass(spark, sfDir, only, Some(meter))
     // capture before the skew measurement below adds its own spill
-    val spillFinalPassBytes = settled(spillBytes)
-    val resultsAll = timed.head.keys.map { k =>
-      k -> timed.map(_(k)).min
-    }.toMap
-    val results = resultsAll.filter { case (_, v) => v.isFinite }
-    val failedNames = resultsAll.collect { case (k, v) if !v.isFinite => k }.toSeq.sorted
+    meter.settle()
+    val spillFinalPassBytes = meter.spillBytes.get - spill0
+    val timed = Seq(timed1, timed2, recorded)
+    val results = best(timed)
+    val failed = timed.flatMap(_.failed).toMap
+    val failedNames = failed.keySet.diff(results.keySet).toSeq.sorted
     // Host-load calibration: a fixed 400M-step single-thread LCG loop.
     // Query timings vary run-to-run with machine contention (a loaded
     // host measured this same suite ~2× slower end-to-end, min-of-3
@@ -133,7 +203,7 @@ object Bench {
     // detectable from the artifact alone: queries up, calib_s flat,
     // calib_mt_s up ⇒ host contention, not a regression.
     def lcgMtPass(): Double = {
-      val n = cpus.toInt
+      val n = cpus
       val t0 = System.nanoTime()
       val threads = (0 until n).map { i =>
         new Thread(() => {
@@ -214,10 +284,8 @@ object Bench {
     val (secondaryJson, ratioJson, ratioNoisyJson) = secondaryDir match {
       case None => ("null", "null", "[]")
       case Some(d) =>
-        pass(dir = d) // warm at the secondary scale
-        val s1 = pass(dir = d); val s2 = pass(dir = d)
-        val sec = s1.keys.map(k => k -> math.min(s1(k), s2(k)))
-          .collect { case (k, v) if v.isFinite => k -> v }.toMap
+        pass(spark, d, only) // warm at the secondary scale
+        val sec = best(Seq(pass(spark, d, only), pass(spark, d, only)))
         val secJ = sec.map { case (k, v) => s"\"" + k + "\":" + v }
           .mkString("{", ",", "}")
         val ratJ = sec.collect { case (k, v) if v > 0 && results.contains(k) =>
@@ -238,18 +306,22 @@ object Bench {
     // fixture fingerprint: makes a between-rounds testdata regeneration
     // visible in the artifact instead of reading as a perf regression
     val fixturesJson = Fixtures.fingerprintJson(spark, sfDir)
-    val shuffleJson = shuffleMb
-      .map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
-    // same denominator as shuffle_mb: the final timed pass only (reset
-    // above) — the r8 artifact accumulated spill over all four passes
-    // while shuffle covered one, inviting cross-metric misreading
-    val spillMb = math.round(spillFinalPassBytes / 1e5) / 10.0
+    val shuffleJson = recorded.layers
+      .map { case (k, l) => s"\"$k\":${l.shuffleMb}" }.mkString("{", ",", "}")
+    val layersJson = recorded.layers.map { case (k, l) =>
+      s"\"$k\":{\"jobs\":${l.jobs},\"stages\":${l.stages},\"tasks\":${l.tasks}," +
+        s"\"job_s\":${l.jobS},\"gap_s\":${l.gapS},\"plan_s\":${l.planS},\"spill_mb\":${l.spillMb}}"
+    }.mkString("{", ",", "}")
+    // same denominator as shuffle_mb: the final timed pass only — the
+    // r8 artifact accumulated spill over all four passes while shuffle
+    // covered one, inviting cross-metric misreading
+    val spillMb = mb(spillFinalPassBytes)
     val metricJson =
-      s"""{"metric":"total","value":$total,"unit":"sec","calib_s":$calib,"calib_mt_s":$calibMt,"n_ok":${results.size},$skewJson,"failed":$failedJson,"fixtures":$fixturesJson,"spill_mb_final_pass":$spillMb,"shuffle_mb":$shuffleJson,"queries":$qs,"sf":"$sfDir","sf_secondary":${secondaryDir.fold("null")("\"" + _ + "\"")},"queries_secondary":$secondaryJson,"scale_ratio":$ratioJson,"scale_ratio_noisy":$ratioNoisyJson}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","calib_s":$calib,"calib_mt_s":$calibMt,"n_ok":${results.size},$skewJson,"failed":$failedJson,"fixtures":$fixturesJson,"spill_mb_final_pass":$spillMb,"shuffle_mb":$shuffleJson,"layers":$layersJson,"queries":$qs,"sf":"$sfDir","sf_secondary":${secondaryDir.fold("null")("\"" + _ + "\"")},"queries_secondary":$secondaryJson,"scale_ratio":$ratioJson,"scale_ratio_noisy":$ratioNoisyJson}"""
     if (failedNames.nonEmpty)
       System.err.println(s"[bench] ${failedNames.size} queries FAILED (excluded from total): " +
         failedNames.mkString(", ") + " — first errors: " +
-        failed.take(3).map { case (k, v) => s"$k: $v" }.mkString(" | "))
+        failedNames.take(3).map(k => s"$k: ${failed(k)}").mkString(" | "))
     // The metric JSON is the bench contract. With 90+ queries the line
     // outgrew the harness's log-tail capture (r4's official total was
     // lost to truncation), so it is persisted to its own file — the
@@ -258,26 +330,17 @@ object Bench {
       sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json"))
     java.nio.file.Files.write(outFile, metricJson.getBytes("UTF-8"))
     println(metricJson)
-    // The harness's round artifact keeps only the LAST 2000 chars of
-    // stdout and tries to parse them — which failed every round (the
-    // full line starts ~14KB before the window). Make that window a
-    // valid JSON document on its own: pad it out with newlines, then
-    // end stdout with a compact summary — the headline metrics plus the
-    // slowest queries' (2-decimal) timings, as many as fit the window.
-    // The full 150+-query map cannot fit 2000 chars at any useful
-    // precision; queries_top covers the whole comparable surface (the
-    // omitted tail is sub-~0.5s noise floor) and queries_total records
-    // the cut. Leading whitespace is legal around a JSON document, so
-    // json.loads(tail) now parses whether the harness takes the whole
-    // tail or its last line.
     // HARNESS CONTRACT (pinned here, the single source of truth): the
     // round artifact keeps only the last CaptureWindow chars of stdout
-    // and json-parses them. Everything below derives from that one
-    // constant — the newline pad that flushes earlier output past the
-    // window, and the byte budget the compact summary must fit —
-    // and the fit is ASSERTED, so a summary outgrowing the window
-    // fails this run loudly instead of silently shipping an
-    // unparseable artifact. Nothing may print after the summary.
+    // and json-parses them — which failed every round while the full
+    // line (~14KB) was the last output. So stdout ends with a newline
+    // pad that flushes earlier output past the window, then a compact
+    // summary: the headline metrics plus the slowest queries'
+    // (2-decimal) timings, as many as fit (the omitted tail is the
+    // sub-~0.5s noise floor; queries_total records the cut). The fit
+    // is ASSERTED, so a summary outgrowing the window fails this run
+    // loudly instead of shipping an unparseable artifact. Nothing may
+    // print after the summary.
     val CaptureWindow = 2000
     val sortedQ = results.toSeq.sortBy(-_._2)
       .map { case (k, v) => s"\"$k\":${math.round(v * 100) / 100.0}" }
@@ -300,13 +363,8 @@ object Bench {
     val budget = (CaptureWindow - 100) - head.length - 2
     // strict prefix of the slowest-first order (stop at the first
     // non-fit): queries_top must BE the slowest N, not "whatever fit"
-    val kept = scala.collection.mutable.ArrayBuffer[String]()
-    var used = 0
-    var full = false
-    sortedQ.foreach { s =>
-      if (!full && used + s.length + 1 <= budget) { kept += s; used += s.length + 1 }
-      else full = true
-    }
+    val kept = sortedQ.zip(sortedQ.scanLeft(0)(_ + _.length + 1).tail)
+      .takeWhile(_._2 <= budget).map(_._1)
     val compact = head + kept.mkString(",") + "}}"
     assert(compact.length <= CaptureWindow - 50,
       s"compact summary (${compact.length} chars) outgrew the $CaptureWindow-char capture window")

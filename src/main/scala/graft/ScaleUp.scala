@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Profiling-only fixture scaler (NOT on any bench/verify path).
@@ -23,13 +23,7 @@ import org.apache.spark.sql.functions._
 object ScaleUp {
   def main(args: Array[String]): Unit = {
     val src = args(0); val dst = args(1); val k = args(2).toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSpark.builder(LocalSpark.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     def reps(df: DataFrame): DataFrame = {

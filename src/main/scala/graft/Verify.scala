@@ -9,13 +9,7 @@ object Verify {
     // dump on those queries (dev loop); no names = the full surface.
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSpark.builder(LocalSpark.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     run(spark, sfDir, outDir, only)
     spark.stop()

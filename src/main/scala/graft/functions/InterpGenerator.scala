@@ -21,8 +21,8 @@ import org.apache.spark.sql.types._
   * target minutes. One output row `(time_id, price)` per grid minute
   * NOT already present in `times`.
   *
-  * Semantics are bit-identical to `ops/Interpolate.densify` /
-  * `densifyTyped` (same candidate order, same tie-break toward the
+  * Semantics are bit-identical to `ops/Interpolate.densify` and the
+  * specs' typed kernel `TypedDensify` (same candidate order, same tie-break toward the
   * earlier minute, same IEEE expression shape — InterpSqlSpec asserts
   * the differential; the reference behavior is
   * /root/reference/dags/etl/fact_gold_price.py:307-351): points are

@@ -14,10 +14,11 @@ import org.apache.spark.sql.functions._
   * gap 5 keep {0, 6} (6−0>5) where first-of-gap-island keeps only {0}
   * (both gaps are 3). That chain makes it inherently sequential: no
   * window frame or lag() spelling exists, so this is the typed
-  * per-group fold surface (SURVEY §2.11), same discipline as
-  * `Interpolate.densifyTyped` — one shuffle on the key, per-key history
-  * sorted in the task (bounded by per-key retention, the same contract
-  * the interpolation kernel documents).
+  * per-group fold surface (SURVEY §2.11), same discipline as the
+  * specs' typed interpolation kernel (`TypedDensify`, src/test) — one
+  * shuffle on the key, per-key history sorted in the task (bounded by
+  * per-key retention, the same contract the interpolation kernel
+  * documents).
   */
 object Debounce {
 

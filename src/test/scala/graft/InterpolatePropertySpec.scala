@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.Interpolate
+import graft.ops.{Interpolate, TypedDensify}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -58,7 +58,7 @@ class InterpolatePropertySpec extends SparkTestBase {
       val df = spark.createDataFrame(
         spark.sparkContext.parallelize(randomTicks(seed), 4), schema)
       val d = Interpolate.densify(df)
-      val t = Interpolate.densifyTyped(df, Interpolate.gridByDate(df))
+      val t = TypedDensify.densify(df, TypedDensify.gridByDate(df))
       val q = Interpolate.densifySql(spark, df)
       assert(d.count() === t.count())
       assert(d.exceptAll(t).isEmpty && t.exceptAll(d).isEmpty,

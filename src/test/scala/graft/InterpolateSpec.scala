@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.{GoldModel, Interpolate}
+import graft.ops.{GoldModel, Interpolate, TypedDensify}
 import org.apache.spark.sql.functions._
 
 /** Differential + invariant tests for the interpolation operator
@@ -17,14 +17,14 @@ class InterpolateSpec extends SparkTestBase {
       .cache()
   private lazy val declarative = Interpolate.densify(factRows).cache()
   private lazy val typed =
-    Interpolate.densifyTyped(factRows, Interpolate.gridByDate(factRows)).cache()
+    TypedDensify.densify(factRows, TypedDensify.gridByDate(factRows)).cache()
 
   test("declarative and typed kernels agree exactly") {
     val d = declarative
     val t = typed
     assert(d.count() === t.count())
     assert(d.exceptAll(t).isEmpty && t.exceptAll(d).isEmpty,
-      "densify() and densifyTyped() diverge")
+      "Interpolate.densify() and TypedDensify.densify() diverge")
   }
 
   test("actual rows pass through unaltered") {

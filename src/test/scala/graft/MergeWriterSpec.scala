@@ -431,6 +431,31 @@ class MergeWriterSpec extends SparkTestBase {
     assert(snap.filter($"id" === 1L).select("price").head().getDouble(0) === 9.9)
   }
 
+  test("a revision's Spark jobs do not grow with its touched partitions") {
+    // a commit stages all its partitions in one write, not a job per
+    // partition: a revision of 3 day partitions and one of 12 (both
+    // multi-leaf placements) launch the same jobs
+    import graft.io.TxTable
+    import org.apache.spark.sql.functions.sum
+    val s = spark
+    import s.implicits._
+    def revisionJobs(days: Int): Int = {
+      val target = Files.createTempDirectory(s"graft_tx_width$days").toString + "/fact"
+      val rows = (0 until days * 4)
+        .map(i => (i.toLong, f"2024-01-${i % days + 1}%02d", i.toDouble))
+        .toDF("id", "day", "v")
+      TxTable.upsert(spark, target, rows, "id", "v", "day")
+      val jobs = SparkEvents.jobs(spark) {
+        TxTable.upsert(spark, target, rows.withColumn("v", $"v" + 1), "id", "v", "day")
+      }
+      assert(TxTable.snapshot(spark, target).get.agg(sum("v")).head().getDouble(0) ===
+        rows.agg(sum("v")).head().getDouble(0) + days * 4)
+      jobs
+    }
+    val (three, twelve) = (revisionJobs(3), revisionJobs(12))
+    assert(three > 0 && three === twelve, s"3 days: $three jobs, 12 days: $twelve")
+  }
+
   test("checkpoint cadence: every Nth version is a checkpoint and every version resolves") {
     import graft.io.TxTable
     val s = spark

@@ -1,10 +1,10 @@
 package graft
 
 import graft.ops.{GoldModel, Interpolate, Report}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Scaling probe (dev tool, like Profile): multiply the tick corpus
+/** Scaling probe (dev tool): multiply the tick corpus
   * N× along the axes that grow real deployments — more DATES for the
   * rebuild (output-sized growth) and more SOURCES for the report
   * (group-count growth) — and print wall-clock per multiplier. A
@@ -16,12 +16,7 @@ import org.apache.spark.sql.functions._
 object ScaleCheck {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSpark.builder(LocalSpark.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     def time[T](f: => T): (Double, T) = {

@@ -1,7 +1,6 @@
 package graft
 
 import graft.functions.{GraftFunctions, TextHash, VectorOps}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** The extension surface: every native expression is SQL-callable, both
@@ -13,34 +12,15 @@ import org.apache.spark.sql.functions._
 class SqlExtensionsSpec extends SparkTestBase {
 
   test("GraftExtensions wires functions into a fresh session at build") {
-    // force creation of the shared context first, then build a sibling
-    // session on the same JVM context with the extensions injected.
-    // (`spark.sql.extensions` is a STATIC conf — read from the
-    // SparkContext at first-session build — so a suite sharing one
-    // context must inject through the builder hook; a real deployment
-    // passes --conf spark.sql.extensions=graft.GraftExtensions and hits
-    // the identical injectFunction path.)
-    spark.sparkContext
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s2 = SparkSession.builder()
-      .master("local[4]")
-      .withExtensions(new GraftExtensions())
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    try {
+    // a real deployment passes --conf spark.sql.extensions=
+    // graft.GraftExtensions and hits the identical injectFunction path
+    withExtSession { s2 =>
       val got = s2.sql(
         "SELECT simhash60(split('the quick brown fox', ' ')) AS h").head().getLong(0)
       val want = s2.range(1)
         .select(TextHash.simhash(split(lit("the quick brown fox"), " ")).as("h"))
         .head().getLong(0)
       assert(got == want)
-    } finally {
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      SparkSession.setDefaultSession(spark)
-      SparkSession.setActiveSession(spark)
     }
   }
 

@@ -13,22 +13,7 @@ import org.apache.spark.sql.functions._
 class Top1RewriteSpec extends SparkTestBase {
 
   /** A sibling session on the shared context with the rule injected. */
-  private lazy val s2: SparkSession = {
-    spark.sparkContext
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .withExtensions(new GraftExtensions())
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    SparkSession.setDefaultSession(spark)
-    SparkSession.setActiveSession(spark)
-    s
-  }
+  private lazy val s2: SparkSession = withExtSession(identity)
 
   private def events(s: SparkSession): DataFrame =
     Tables.events(s, sfSmoke)

@@ -4,7 +4,6 @@ import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
 import graft.io.{TxCatalog, TxTable}
-import org.apache.spark.sql.SparkSession
 
 /** The catalog face of graft-tx (io/TxCatalog): persistent `USING
   * graft-tx` tables managed with CREATE TABLE / INSERT INTO / ALTER
@@ -19,27 +18,6 @@ class TxCatalogSpec extends SparkTestBase {
 
   private def freshDir(): String =
     Files.createTempDirectory("graft_txcat").toString + "/t"
-
-  /** Extension-built sibling session on the shared context — the
-    * SqlExtensionsSpec pattern; restores the suite session on exit. */
-  private def withExtSession[A](f: SparkSession => A): A = {
-    spark.sparkContext
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s2 = SparkSession.builder()
-      .master("local[4]")
-      .withExtensions(new GraftExtensions())
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    try f(s2)
-    finally {
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      SparkSession.setDefaultSession(spark)
-      SparkSession.setActiveSession(spark)
-    }
-  }
 
   test("CREATE TABLE USING graft-tx + INSERT INTO + SELECT, across a new session") {
     val s = spark; import s.implicits._

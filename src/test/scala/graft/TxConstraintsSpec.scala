@@ -4,7 +4,6 @@ import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
 import graft.io.{TxCatalog, TxConstraints, TxTable}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** CHECK constraints on graft-tx (io/TxConstraints): SQL management
@@ -17,26 +16,6 @@ class TxConstraintsSpec extends SparkTestBase {
   private def freshDir(): String =
     Files.createTempDirectory("graft_txcons").toString + "/t"
   private def freshName(p: String): String = s"${p}_${seq.incrementAndGet()}"
-
-  /** Extension-built sibling session (the TxCatalogSpec pattern). */
-  private def withExtSession[A](f: SparkSession => A): A = {
-    spark.sparkContext
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s2 = SparkSession.builder()
-      .master("local[4]")
-      .withExtensions(new GraftExtensions())
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    try f(s2)
-    finally {
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      SparkSession.setDefaultSession(spark)
-      SparkSession.setActiveSession(spark)
-    }
-  }
 
   private def boot(dir: String): Unit = {
     val s = spark; import s.implicits._

@@ -3,7 +3,6 @@ package graft
 import java.nio.file.Files
 
 import graft.io.{TxSqlDml, TxTable}
-import org.apache.spark.sql.SparkSession
 
 /** SQL DML over graft-tx (io/TxSqlDml): `DELETE FROM` / `UPDATE` /
   * `MERGE INTO` statements against a `USING graft-tx` view convert at
@@ -215,16 +214,7 @@ class TxSqlDmlSpec extends SparkTestBase {
 
   test("GraftExtensions session: plain spark.sql drives all three verbs") {
     val (dir, _) = seed("graft_sqlext")
-    spark.sparkContext // share the context, then build a sibling session
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s2 = SparkSession.builder()
-      .master("local[4]")
-      .withExtensions(new GraftExtensions())
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    try {
+    withExtSession { s2 =>
       import s2.implicits._
       s2.sql(s"CREATE TEMPORARY VIEW fact USING `graft-tx` OPTIONS (path '$dir')")
       s2.sql("DELETE FROM fact WHERE v >= 400")
@@ -238,11 +228,6 @@ class TxSqlDmlSpec extends SparkTestBase {
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
       assert(got === Set(
         (1L, 100.0), (2L, 999.0), (3L, 300.0), (6L, 600.0), (7L, 70.0)))
-    } finally {
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      SparkSession.setDefaultSession(spark)
-      SparkSession.setActiveSession(spark)
     }
   }
 }

@@ -49,4 +49,29 @@ class VerifyContractSpec extends SparkTestBase {
     val node = mapper.readTree(txt)
     assert(node.size() === SparkEntry.oracleSql.size)
   }
+
+  /** Bench's recorded pass over a2_pricing_summary at `dir`. */
+  private def recorded(dir: String): Bench.Pass = {
+    val meter = new Bench.Meter
+    spark.sparkContext.addSparkListener(meter)
+    try Bench.pass(spark, dir, Set("a2_pricing_summary"), Some(meter))
+    finally spark.sparkContext.removeSparkListener(meter)
+  }
+
+  test("Bench: a failing query records no time and no layers, and is failed") {
+    val p = recorded("/nonexistent/sf0")
+    assert(!p.times.contains("a2_pricing_summary"))
+    assert(p.failed.contains("a2_pricing_summary"))
+    assert(!p.layers.contains("a2_pricing_summary"))
+  }
+
+  test("Bench: the recorded pass gives each query consistent layers") {
+    val p = recorded(sfSmoke)
+    val wall = p.times("a2_pricing_summary")
+    val l = p.layers("a2_pricing_summary")
+    assert(l.jobs >= 1 && l.tasks >= l.jobs && l.jobS >= 0, l)
+    // job spans carry millisecond event timestamps
+    assert(l.gapS >= -0.005 && l.gapS <= wall, s"$l, wall $wall")
+    assert(l.planS > 0, l)
+  }
 }
