@@ -347,7 +347,8 @@ private[io] case class TxRelation(
   private def snap: DataFrame = versionAsOf match {
     case Some(v) => TxTable.snapshotAt(spark, path, v).getOrElse(
       throw new IllegalArgumentException(
-        s"graft-tx: version $v of $path is not readable (vacuumed or never committed)"))
+        s"graft-tx: version $v of $path is not readable (vacuumed, never committed " +
+          "or without live partitions)"))
     case None => TxTable.snapshot(spark, path).getOrElse {
       // a declared-but-empty table (schema-ful CREATE before the first
       // commit, or a table whose every row was deleted) reads as zero
@@ -359,8 +360,8 @@ private[io] case class TxRelation(
     }
   }
 
-  // one mergeSchema footer pass on FIRST ACCESS — the same resolution
-  // a snapshot read performs. Lazy, not eager: the write path returns
+  // the snapshot's manifest-recorded schema, resolved on FIRST ACCESS
+  // (manifest I/O only, no footer read). Lazy, not eager: the write path returns
   // this relation after an append, and an EMPTY append to a fresh path
   // is a documented no-op that must not crash on "no committed
   // TxTable" just because the relation was constructed. When BOTH a

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, GraftStreamingFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.streaming.{Offset, Source}
 import org.apache.spark.sql.execution.streaming.runtime.LongOffset
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** `spark.readStream.format("graft-tx")` — the COMMIT-LOG-NATIVE
   * streaming source over a [[TxTable]], one of the two feed shapes:
@@ -249,43 +249,26 @@ object TxStreamSource {
     }
   }
 
-  /** The feed's pinned schema: the table's diff readout (change_type,
-    * key, payload) plus the `_commit_version` stamp. Requires at least
-    * the bootstrap commit — a never-committed table has no schema to
-    * pin (start the stream after the first write, exactly as a file
-    * source needs its directory to exist). */
+  /** The feed's pinned schema, derived from the tip's recorded table
+    * schema: the diff readout (`change_type`, the key, the payload, all
+    * nullable as diff's projections are) plus the `_commit_version`
+    * stamp. Requires at least the bootstrap commit — a never-committed
+    * table has no schema to pin (start the stream after the first
+    * write, exactly as a file source needs its directory to exist). */
   def feedSchema(spark: SparkSession, path: String, key: String): StructType = {
-    val tip = TxTable.latestVersion(spark, path)
+    val (tip, table) = TxTable.latestSchema(spark, path)
     require(tip >= 1L,
       s"graft-tx streaming: $path holds no committed TxTable yet — " +
         "start the stream after the bootstrap commit")
-    // schema-only use of a lazy diff plan (tip-1, tip]: nothing
-    // executes. When retention has reclaimed tip-1 (vacuum publishes a
-    // checkpoint-on-demand AT the tip, so a fresh table can sit exactly
-    // on the floor), derive the identical readout shape from the
-    // snapshot instead — change_type + key + payload, all nullable
-    // (diff's when/otherwise projections are), + the version stamp.
-    val base =
-      try TxTable.diff(spark, path, tip - 1, tip, key).schema
-      catch {
-        case _: IllegalArgumentException =>
-          val snap = TxTable.snapshot(spark, path).getOrElse(
-            throw new IllegalArgumentException(
-              s"graft-tx streaming: $path holds no live rows or readable " +
-                "diff to pin a schema from"))
-          val fields = snap.schema.fields
-          val keyF = fields.find(_.name == key).getOrElse(
-            throw new IllegalArgumentException(
-              s"graft-tx streaming: key '$key' is not a column of $path"))
-          StructType(
-            StructField("change_type",
-              org.apache.spark.sql.types.StringType, nullable = true) +:
-            (keyF +: fields.filterNot(_.name == key).toSeq)
-              .map(_.copy(nullable = true)))
-      }
-    require(!base.fieldNames.contains("_commit_version"),
-      "change-feed payload carries reserved column _commit_version — rename it upstream")
-    StructType(base.fields :+
-      StructField("_commit_version", LongType, nullable = false))
+    val keyF = table.fields.find(_.name == key).getOrElse(
+      throw new IllegalArgumentException(
+        s"graft-tx streaming: key '$key' is not a column of $path"))
+    val reserved = table.fieldNames.filter(Set("change_type", "_commit_version"))
+    require(reserved.isEmpty, s"change-feed payload carries reserved column(s) " +
+      s"${reserved.mkString(", ")} — rename upstream")
+    StructType(
+      (StructField("change_type", StringType) +: keyF +: table.fields.filterNot(_.name == key))
+        .map(_.copy(nullable = true)) :+
+        StructField("_commit_version", LongType, nullable = false))
   }
 }

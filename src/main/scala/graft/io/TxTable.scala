@@ -94,8 +94,11 @@ object PartitionSpec {
   * manifest bytes, not O(table) — the Delta/Iceberg log-compaction
   * move — and the full-map write is amortized 1/interval. Resolving a
   * snapshot walks back at most `interval` bodies to the nearest
-  * checkpoint and folds the deltas forward; headerless bodies (the
-  * pre-delta format) read as checkpoints, so old tables stay readable.
+  * checkpoint and folds the deltas forward. This is the one format:
+  * every data entry carries its partition value, and a body without a
+  * header, a checkpoint without a schema or a data entry without a
+  * value is refused (`IllegalStateException` naming the table and
+  * version) — tables written before those fields are not readable.
   *
   * ==Commit protocol (optimistic CAS, no locks)==
   *
@@ -135,15 +138,16 @@ object PartitionSpec {
   *
   * A commit may carry a WIDENED schema (new columns): the merge aligns
   * both sides by nulling each side's missing columns (the
-  * ops/SchemaEvolution discipline applied across versions). Every
-  * manifest body's header records the POST-commit table schema (the
-  * Delta/Iceberg schema-in-the-log move), so multi-leaf reads pass it
-  * to the parquet scan EXPLICITLY — pre-evolution leaves null-pad
-  * their missing columns with no footer-merge pass; snapshots of old
+  * ops/SchemaEvolution discipline applied across versions). The log
+  * records the table schema (the Delta/Iceberg schema-in-the-log
+  * move): every checkpoint carries it, and a delta carries it only
+  * when the commit changes it, so a version's schema is the newest one
+  * on its walk back to the checkpoint. Every read passes it to the
+  * parquet scan EXPLICITLY — pre-evolution leaves null-pad their
+  * missing columns with no footer-merge pass; snapshots of old
   * versions read that version's recorded shape, and [[diff]] across
-  * the evolution commit aligns its two sides the same way. Chains
-  * written before the schema field fall back to parquet `mergeSchema`
-  * per read — old tables stay readable unchanged.
+  * the evolution commit aligns its two sides the same way. A
+  * never-committed table's schema is the empty struct.
   */
 object TxTable {
 
@@ -192,25 +196,26 @@ object TxTable {
     new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
 
   /** One manifest entry: the data leaf holding the partition's current
-    * rows, plus (when known) the partition VALUE it stands for — the
-    * value's engine-computed string cast, hex-armored for TSV safety
-    * (`N` = SQL NULL, `V<hex>` otherwise). The value is what makes
-    * PREDICATE pruning possible ([[snapshotWhere]]): md5 keys alone can
-    * only serve exact value lists, the Delta/Iceberg lesson being that
-    * the manifest must carry values to prune ranges. Entries written
-    * before this field exists (`vhex = None`) are read conservatively
-    * by predicate pruning. */
-  private case class Entry(leaf: String, vhex: Option[String])
+    * rows, plus the partition VALUE it stands for — the value's
+    * engine-computed string cast, hex-armored for TSV safety (`N` = SQL
+    * NULL, `V<hex>` otherwise). The value is what makes PREDICATE
+    * pruning possible ([[snapshotWhere]]): md5 keys alone can only
+    * serve exact value lists, the Delta/Iceberg lesson being that the
+    * manifest must carry values to prune ranges. A tombstone carries no
+    * value (`vhex` empty). */
+  private case class Entry(leaf: String, vhex: String)
+
+  private def hexOf(s: String): String =
+    s.getBytes(java.nio.charset.StandardCharsets.UTF_8).map("%02x".format(_)).mkString
+
+  private def unhex(h: String): String =
+    new String(h.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray,
+      java.nio.charset.StandardCharsets.UTF_8)
 
   private[io] def vhexOf(engineString: String): String =
-    if (engineString == null) "N"
-    else "V" + engineString.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      .map("%02x".format(_)).mkString
+    if (engineString == null) "N" else "V" + hexOf(engineString)
 
-  private[io] def vdecode(f: String): String =
-    if (f == "N") null
-    else new String(f.drop(1).grouped(2).map(Integer.parseInt(_, 16).toByte).toArray,
-      java.nio.charset.StandardCharsets.UTF_8)
+  private[io] def vdecode(f: String): String = if (f == "N") null else unhex(f.drop(1))
 
   /** Multi-column value field: per-column vhex tokens joined with ","
     * (the token alphabet is hex + N/V — never a comma), so a 1-column
@@ -263,35 +268,46 @@ object TxTable {
     case _ => df.localCheckpoint(eager = false)
   }
 
-  private def parse(lines: Seq[String]): Map[String, Entry] =
-    lines.filterNot(_.startsWith(Header + "\t")).map { line =>
-      line.split('\t') match {
-        case Array(k, d) => k -> Entry(d, None)
-        case Array(k, d, v) => k -> Entry(d, Some(v))
-        case other => throw new IllegalStateException(
-          s"corrupt manifest line: ${other.mkString("|")}")
-      }
-    }.toMap
+  /** A parsed manifest body: checkpoint or delta, the hex-armored table
+    * schema its header records (always present on a checkpoint) and its
+    * entries. */
+  private case class Body(
+      checkpoint: Boolean, schemaHex: Option[String], entries: Map[String, Entry])
 
-  /** (kind, entry lines) of a manifest body. Headerless bodies are the
-    * pre-delta format — full maps, i.e. checkpoints. */
-  private def kindOf(lines: Seq[String]): String =
-    lines.headOption.filter(_.startsWith(Header + "\t"))
-      .map(_.split('\t')(1)).getOrElse("checkpoint")
+  private def refuse(dir: String, v: Long, what: String): Nothing =
+    throw new IllegalStateException(s"TxTable $dir: manifest version $v $what")
+
+  /** The kind field of a body's `#\tkind[\tschema]` header. */
+  private def kindOf(dir: String, v: Long, lines: Seq[String]): String =
+    headerOf(dir, v, lines)(1)
+
+  private def headerOf(dir: String, v: Long, lines: Seq[String]): Array[String] =
+    lines.headOption.filter(_.startsWith(Header + "\t")).map(_.split('\t'))
+      .getOrElse(refuse(dir, v, "has no header"))
+
+  private def parse(dir: String, v: Long, lines: Seq[String]): Body = {
+    val h = headerOf(dir, v, lines)
+    if (h(1) == "checkpoint" && h.length < 3)
+      refuse(dir, v, "is a checkpoint without a schema")
+    Body(h(1) == "checkpoint", h.lift(2), lines.tail.map { line =>
+      line.split('\t') match {
+        case Array(k, Tombstone) => k -> Entry(Tombstone, "")
+        case Array(k, d, x) => k -> Entry(d, x)
+        case Array(k, _) => refuse(dir, v, s"has a data entry without a value (key $k)")
+        case other => refuse(dir, v, s"has a corrupt line: ${other.mkString("|")}")
+      }
+    }.toMap)
+  }
 
   // ---- manifest-carried table schema ---------------------------------
-  // Every body's header carries the POST-commit table schema (third
-  // header field, hex-armored StructType JSON — the Delta/Iceberg
-  // schema-in-the-log move). Readers then pass the schema to the
-  // parquet scan EXPLICITLY instead of running a mergeSchema footer
-  // pass: on a 100 TB table that footer merge is a whole Spark job per
-  // snapshot/merge/diff read (and at bench scale it measured as one
-  // ~0.1s job per read, several per transactional query). Missing
-  // columns in pre-evolution leaves null-pad under an explicit schema
-  // exactly as they do under mergeSchema. Bodies written before this
-  // field (or by legacy tables whose chain predates it) read as
-  // schema-less and every read falls back to mergeSchema — old tables
-  // stay readable, new tables carry schema from their bootstrap commit.
+  // Checkpoints carry the POST-commit table schema as the third header
+  // field (hex-armored StructType JSON — the Delta/Iceberg
+  // schema-in-the-log move); a delta carries it only when its commit
+  // changes it, so deltas stay O(touched) bytes. Readers pass the
+  // schema to the parquet scan EXPLICITLY instead of merging the
+  // leaves' footers: on a 100 TB table that footer merge is a whole
+  // Spark job per snapshot/merge/diff read. Missing columns in
+  // pre-evolution leaves null-pad under an explicit schema.
 
   /** Deep nullability widening: a stored schema must accept any leaf —
     * including pre-evolution leaves where the column is wholly absent
@@ -308,59 +324,10 @@ object TxTable {
     case other => other
   }
 
-  private def schemaHex(s: StructType): String =
-    s.json.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      .map("%02x".format(_)).mkString
-
-  private def schemaOfBody(lines: Seq[String]): Option[StructType] =
-    lines.headOption.filter(_.startsWith(Header + "\t")).flatMap { h =>
-      val f = h.split('\t')
-      if (f.length >= 3 && f(2).nonEmpty)
-        scala.util.Try(org.apache.spark.sql.types.DataType.fromJson(
-          new String(f(2).grouped(2).map(Integer.parseInt(_, 16).toByte).toArray,
-            java.nio.charset.StandardCharsets.UTF_8)).asInstanceOf[StructType])
-          .toOption
-      else None
-    }
-
-  /** The table schema in force at `version`: a body carrying the field
-    * IS the post-commit schema; a DELTA without it means "unchanged —
-    * walk to the predecessor" (deltas stay O(touched) bytes: the field
-    * is only written by commits that change the schema and by
-    * checkpoints); a CHECKPOINT without it roots a legacy chain (None).
-    * The walk is bounded by the checkpoint cadence, like resolveAt. */
-  private def schemaAt(
-      store: CommitStore, log: String, version: Long): Option[StructType] = {
-    var cur = version
-    while (cur >= 1) {
-      store.at(log, cur) match {
-        case None => return None // vacuumed below: unknowable
-        case Some(lines) =>
-          schemaOfBody(lines) match {
-            case some @ Some(_) => return some
-            case None =>
-              if (kindOf(lines) == "checkpoint") return None
-              cur -= 1
-          }
-      }
-    }
-    None
-  }
-
-  /** [[schemaAt]] seeded with the already-read tip body (saves the
-    * first body fetch on every commit-loop attempt). */
-  private def schemaAtSeeded(
-      store: CommitStore, log: String, v: Long,
-      tipLines: Seq[String]): Option[StructType] =
-    if (v <= 0) None
-    else schemaOfBody(tipLines).orElse(
-      if (kindOf(tipLines) == "checkpoint") None
-      else schemaAt(store, log, v - 1))
-
   /** Post-commit table schema: previous fields keep their slot (and
     * their type — the owning-side rule alignSchemas applies per read),
     * staged-new fields append in commit order. Matches the union a
-    * mergeSchema read resolves over the same leaves.
+    * footer-merging read resolves over the same leaves.
     *
     * Evolution is ADD-ONLY: a staged batch re-writing an existing
     * column under a DIFFERENT type refuses loudly here, at commit time
@@ -388,20 +355,12 @@ object TxTable {
     nullableDeep(StructType(df.schema.fields.filterNot(_.name == PKey)))
       .asInstanceOf[StructType]
 
-  /** Pre-staging face of unionSchema's add-only rule: refuse a staged
-    * frame that re-types an existing column BEFORE any leaf is
-    * written, so a refused commit stages nothing on disk (unionSchema
-    * inside tryPublish remains the publish-time backstop — this is
-    * schema arithmetic only, no job). */
-  private def requireAddOnly(prev: Option[StructType], staged: DataFrame): Unit =
-    prev.foreach(p => { unionSchema(p, stagedSchemaOf(staged)): Unit })
-
   private def render(
       kind: String, entries: Map[String, Entry],
       schema: Option[StructType]): Seq[String] =
-    (s"$Header\t$kind" + schema.fold("")(s => s"\t${schemaHex(s)}")) +:
+    (s"$Header\t$kind" + schema.fold("")(s => s"\t${hexOf(s.json)}")) +:
       entries.toSeq.sortBy(_._1).map { case (k, e) =>
-        s"$k\t${e.leaf}" + e.vhex.fold("")(v => s"\t$v")
+        s"$k\t${e.leaf}" + (if (e.vhex.isEmpty) "" else s"\t${e.vhex}")
       }
 
   /** Fold one delta over a base map: remapped keys overwrite,
@@ -412,22 +371,34 @@ object TxTable {
     base ++ live -- dead.keys
   }
 
-  /** Full key→leaf map of `version`, folding deltas back to the nearest
-    * checkpoint (≤ interval bodies). None if any body on the chain was
-    * vacuumed or the version was never committed; Some(empty) at 0. */
+  /** A resolved version: its full key→entry map and the table schema in
+    * force there. */
+  private case class Tip(v: Long, entries: Map[String, Entry], schema: StructType)
+
+  /** Resolve `version` in ONE walk back to the nearest checkpoint (≤
+    * interval bodies): the deltas fold forward over the checkpoint's
+    * map, and the schema is the newest one recorded on the walk.
+    * `top` is the version's body when the caller already holds it.
+    * None if any body on the chain was vacuumed or the version was
+    * never committed; the empty table (empty struct) at 0. */
   private def resolveAt(
-      store: CommitStore, log: String, version: Long): Option[Map[String, Entry]] = {
-    if (version <= 0) return Some(Map.empty)
-    var deltas = List.empty[Seq[String]] // ascending version order
+      store: CommitStore, dir: String, version: Long,
+      top: Option[Seq[String]] = None): Option[Tip] = {
+    if (version <= 0) return Some(Tip(0L, Map.empty, StructType(Nil)))
+    var deltas = List.empty[Map[String, Entry]] // ascending version order
+    var schemaHex = Option.empty[String]
     var cur = version
     while (cur >= 1) {
-      store.at(log, cur) match {
+      top.filter(_ => cur == version).orElse(store.at(s"$dir/$LogDir", cur)) match {
         case None => return None
         case Some(lines) =>
-          if (kindOf(lines) == "checkpoint")
-            return Some(deltas.foldLeft(parse(lines))(
-              (m, d) => applyDelta(m, parse(d))))
-          deltas = lines :: deltas
+          val body = parse(dir, cur, lines)
+          schemaHex = schemaHex.orElse(body.schemaHex)
+          if (body.checkpoint)
+            return Some(Tip(version, deltas.foldLeft(body.entries)(applyDelta),
+              org.apache.spark.sql.types.DataType.fromJson(unhex(schemaHex.get))
+                .asInstanceOf[StructType]))
+          deltas = body.entries :: deltas
           cur -= 1
       }
     }
@@ -456,17 +427,17 @@ object TxTable {
     var attempt = 0
     while (attempt < maxRetries) {
       attempt += 1
-      val (v, _) = store.latest(log)
+      val (v, lines) = store.latest(log)
       val next = v + 1
       // respect the checkpoint cadence — a slot on the cadence must
-      // carry the full folded map or later resolves walk past it
+      // carry the full folded map and the schema, or later resolves
+      // walk past it
       val body =
-        if (next == 1 || next % checkpointInterval(spark) == 0)
-          render("checkpoint", resolveAt(store, log, v).getOrElse(
-            throw new IllegalStateException(
-              s"manifest chain for version $v is broken")),
-            schemaAt(store, log, v)) // checkpoint: schema rides over
-        else render("delta", Map.empty, None) // unchanged: walk-back finds it
+        if (next == 1 || next % checkpointInterval(spark) == 0) {
+          val t = resolveAt(store, dir, v, Some(lines)).getOrElse(
+            throw new IllegalStateException(s"manifest chain for version $v is broken"))
+          render("checkpoint", t.entries, Some(t.schema))
+        } else render("delta", Map.empty, None) // unchanged: walk-back finds it
       if (store.tryCommit(log, next, body)) return next
     }
     throw new IllegalStateException(
@@ -478,7 +449,7 @@ object TxTable {
     * raced a filesystem that refused the create). The names are
     * hex-armored on disk (vhex), so any legal column name round-trips. */
   def partitionColumnsOf(spark: SparkSession, dir: String): Option[Seq[String]] =
-    readMeta(fsOf(spark, dir), dir)
+    readMetaAll(fsOf(spark, dir), dir).map(_.partCols)
 
   /** One-read view of the whole `_meta` identity record:
     * (partitionColumns, mergeKey, versionColumn) — for callers that
@@ -514,9 +485,6 @@ object TxTable {
   private case class TableMeta(
       partCols: Seq[String], key: Option[String], version: Option[String],
       specPending: Boolean = false, specSince: Option[Long] = None)
-
-  private def readMeta(fs: FileSystem, dir: String): Option[Seq[String]] =
-    readMetaAll(fs, dir).map(_.partCols)
 
   private def readMetaAll(fs: FileSystem, dir: String): Option[TableMeta] = {
     val p = metaPath(dir)
@@ -622,21 +590,21 @@ object TxTable {
     }
   }
 
-  /** A committed snapshot: the tip version, its resolved manifest, and
-    * the table schema in force there. */
-  private case class Tip(
-      v: Long, entries: Map[String, Entry], schema: Option[StructType])
-
-  /** The latest [[Tip]] — the schema rides out of the SAME tip body
-    * `latest` already read, so a schema-aware snapshot costs no extra
-    * I/O. */
+  /** The latest [[Tip]], resolved from the tip body `latest` already
+    * read. */
   private def latestEntries(spark: SparkSession, dir: String): Tip = {
     val log = s"$dir/$LogDir"
     val store = CommitStore.forPath(fsOf(spark, dir), log)
     val (v, lines) = store.latest(log)
-    Tip(v, resolveAt(store, log, v).getOrElse(throw new IllegalStateException(
-      s"manifest chain for version $v is broken (concurrent unsafe vacuum?)")),
-      schemaAtSeeded(store, log, v, lines))
+    resolveAt(store, dir, v, Some(lines)).getOrElse(throw new IllegalStateException(
+      s"manifest chain for version $v is broken (concurrent unsafe vacuum?)"))
+  }
+
+  /** The latest version and the table schema recorded there (the empty
+    * struct on a never-committed table) — manifest I/O only. */
+  private[io] def latestSchema(spark: SparkSession, dir: String): (Long, StructType) = {
+    val t = latestEntries(spark, dir)
+    (t.v, t.schema)
   }
 
   /** Latest committed (version, full partition → data dir map).
@@ -698,37 +666,18 @@ object TxTable {
       .select(values.zipWithIndex.map { case (v, i) => keyExprVals(v).as(s"k$i") }: _*)
       .collect().head.toSeq.map(_.asInstanceOf[String]).toSet
     val hit = entries.filter { case (k, _) => keys(k) }
-    if (hit.nonEmpty) Some(read(spark, dir, hit, schema))
-    else Some(emptyWithSnapshotSchema(spark, dir, entries, schema))
+    Some(if (hit.nonEmpty) read(spark, dir, hit, schema) else localFrame(spark, Nil, schema))
   }
 
   /** The live partition VALUE TUPLES at the current tip, decoded from
     * the manifest alone — zero data I/O (the `SHOW PARTITIONS` face of
     * the manifest, [[graft.io.TxCatalog]] routes the SQL statement
     * here). Tuples are the ENGINE's string casts in `_meta` column
-    * order, sorted for stable output. Entries predating the value
-    * field (pre-vhex manifests, or written under a different arity)
-    * are omitted — their value is not decodable without a data read,
-    * and they upgrade as commits touch them. */
-  def partitionValues(spark: SparkSession, dir: String): Seq[Seq[String]] = {
-    val arity = readMeta(fsOf(spark, dir), dir).map(_.size)
-    val Tip(_, entries, _) = latestEntries(spark, dir)
-    entries.values.toSeq
-      .flatMap(_.vhex)
-      .map(vhexSplit)
-      .filter(t => arity.forall(_ == t.size))
+    * order, sorted for stable output. */
+  def partitionValues(spark: SparkSession, dir: String): Seq[Seq[String]] =
+    latestEntries(spark, dir).entries.values.toSeq
+      .map(e => vhexSplit(e.vhex))
       .sortBy(_.mkString("\u0000"))
-  }
-
-  /** Zero-row frame carrying the FULL snapshot schema: a no-hit pruned
-    * read must be union-shaped with a hit one. With a manifest-carried
-    * schema this is free; on a legacy chain the mergeSchema read over
-    * every live leaf is the same schema resolution a full snapshot
-    * performs, at footer-read cost, and only on the no-hit path. */
-  private def emptyWithSnapshotSchema(
-      spark: SparkSession, dir: String, entries: Map[String, Entry],
-      schema: Option[StructType]): DataFrame =
-    read(spark, dir, entries, schema).limit(0)
 
   /** PREDICATE-pruned snapshot — the range-read the exact-value form
     * above can't serve when the value set isn't enumerable (date
@@ -740,10 +689,7 @@ object TxTable {
     * multi-column table the predicate may reference any subset of the
     * partition columns. This is why manifest entries carry the values
     * at all — the Delta/Iceberg lesson that md5 keys alone cannot
-    * prune a range. Entries predating the value field (or written
-    * under a different column count) are read UNCONDITIONALLY
-    * (conservative — correctness over pruning); they upgrade as
-    * commits touch them. None on a never-committed table. */
+    * prune a range. None on a never-committed table. */
   def snapshotWhere(
       spark: SparkSession, dir: String, partitionCol: PartitionSpec,
       pred: Column): Option[DataFrame] = {
@@ -765,8 +711,7 @@ object TxTable {
     val Tip(_, entries, schema) = latestEntries(spark, dir)
     if (entries.isEmpty) return None
     val hit = entriesWhere(spark, entries, partitionCol, pred)
-    if (hit.nonEmpty) Some(read(spark, dir, hit, schema))
-    else Some(emptyWithSnapshotSchema(spark, dir, entries, schema))
+    Some(if (hit.nonEmpty) read(spark, dir, hit, schema) else localFrame(spark, Nil, schema))
   }
 
   /** The manifest-level predicate pruning [[snapshotWhere]] reads
@@ -774,47 +719,29 @@ object TxTable {
     * entries whose recorded partition VALUE satisfies `pred`, evaluated
     * ENGINE-side over a manifest-sized [[localFrame]] (one string
     * column per partition column, named after it), so a deterministic
-    * predicate runs no job. Entries predating the value
-    * field (or written under a different column count) are INCLUDED —
-    * conservative, correctness over pruning. */
+    * predicate runs no job. */
   private def entriesWhere(
       spark: SparkSession, entries: Map[String, Entry],
       spec: PartitionSpec, pred: Column): Map[String, Entry] = {
-    val n = spec.cols.size
-    val (known, unknown) = entries.partition(
-      _._2.vhex.exists(_.split(",", -1).length == n))
-    val hitKeys: Set[String] =
-      if (known.isEmpty) Set.empty
-      else {
-        val rows = known.toSeq.map { case (k, e) =>
-          Row.fromSeq(k +: vhexSplit(e.vhex.get))
-        }
-        val schema = org.apache.spark.sql.types.StructType(
-          ("__k" +: spec.cols).map(c =>
-            org.apache.spark.sql.types.StructField(
-              c, org.apache.spark.sql.types.StringType, nullable = true)))
-        localFrame(spark, rows, schema)
-          .filter(pred)
-          .select("__k").collect().map(_.getString(0)).toSet
-      }
-    entries.filter { case (k, _) => hitKeys(k) || unknown.contains(k) }
+    val rows = entries.toSeq.map { case (k, e) => Row.fromSeq(k +: vhexSplit(e.vhex)) }
+    val schema = StructType(("__k" +: spec.cols).map(StructField(_, StringType)))
+    val hitKeys = localFrame(spark, rows, schema)
+      .filter(pred)
+      .select("__k").collect().map(_.getString(0)).toSet
+    entries.filter { case (k, _) => hitKeys(k) }
   }
 
   /** Time travel: the table exactly as committed at `version`. Data
     * files are immutable and manifests are never rewritten, so every
     * version remains readable until [[vacuum]] reclaims it (None after
-    * that, or for a version never committed). */
+    * that, for a version never committed, or, as [[snapshot]] gives,
+    * for a version with no live partition). */
   def snapshotAt(spark: SparkSession, dir: String, version: Long): Option[DataFrame] = {
     val log = s"$dir/$LogDir"
-    val store = CommitStore.forPath(fsOf(spark, dir), log)
-    val body = store.at(log, version)
-    if (body.isEmpty) None
-    else resolveAt(store, log, version)
-      .map(read(spark, dir, _, body.flatMap(schemaOfBody)))
+    resolveAt(CommitStore.forPath(fsOf(spark, dir), log), dir, version)
+      .filter(_.entries.nonEmpty).map(t => read(spark, dir, t.entries, t.schema))
   }
 
-  // mergeSchema: leaves written before a schema-widening commit lack
-  // the new columns; the merged read nulls them (S10 across versions)
   /** Storage path of a manifest leaf: leaves are normally RELATIVE to
     * the table dir (rename-safe), but a shallow clone's manifest points
     * at the SOURCE table's leaves by qualified absolute path — those
@@ -822,27 +749,19 @@ object TxTable {
   private def leafPath(dir: String, leaf: String): String =
     if (leaf.startsWith("/") || leaf.contains(":/")) leaf else s"$dir/$leaf"
 
-  /** Multi-leaf snapshot read. With a manifest-carried `schema` the
-    * scan takes it EXPLICITLY — no footer-merge job, and pre-evolution
-    * leaves null-pad their missing columns exactly as mergeSchema
-    * would; schema-less (legacy) chains keep the mergeSchema read. */
+  /** Multi-leaf snapshot read under the version's recorded `schema`. */
   private def read(
       spark: SparkSession, dir: String, entries: Map[String, Entry],
-      schema: Option[StructType]): DataFrame =
+      schema: StructType): DataFrame =
     leafRead(spark, dir, entries.values.map(_.leaf).toSeq, schema)
 
-  /** The one leaf-set scan every read shares: explicit manifest-carried
-    * schema when available (no footer-merge job), mergeSchema on legacy
-    * chains. */
+  /** The one leaf-set scan every read shares: the manifest-carried
+    * schema EXPLICITLY (no footer-merge job) — pre-evolution leaves
+    * null-pad their missing columns. */
   private def leafRead(
       spark: SparkSession, dir: String, leaves: Seq[String],
-      schema: Option[StructType]): DataFrame = {
-    val paths = leaves.distinct.sorted.map(leafPath(dir, _))
-    schema match {
-      case Some(s) => spark.read.schema(s).parquet(paths: _*)
-      case None => spark.read.option("mergeSchema", "true").parquet(paths: _*)
-    }
-  }
+      schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(leaves.distinct.sorted.map(leafPath(dir, _)): _*)
 
   /** Null-pad each frame with the columns only the other one has (type
     * taken from the owning side) — the cross-version face of
@@ -875,39 +794,24 @@ object TxTable {
   def diff(
       spark: SparkSession, dir: String,
       fromVersion: Long, toVersion: Long, key: String): DataFrame = {
-    val log = s"$dir/$LogDir"
-    val store = CommitStore.forPath(fsOf(spark, dir), log)
-    def entriesOf(v: Long): Map[String, String] =
-      resolveAt(store, log, v).getOrElse(
-        throw new IllegalArgumentException(
-          s"version $v of $dir is not readable (vacuumed or never " +
-            "committed) — a change-feed consumer below the retention " +
-            "floor must re-bootstrap from a snapshot"))
-        .map { case (k, e) => k -> e.leaf }
-    val aE = entriesOf(fromVersion)
-    val bE = entriesOf(toVersion)
-    // per-side recorded schema (the version's own body): reads of each
-    // side take it explicitly — no footer-merge job per diff side
-    val aS = schemaAt(store, log, fromVersion)
-    val bS = schemaAt(store, log, toVersion)
-    val changedKeys = (aE.keySet ++ bE.keySet).filter(k => aE.get(k) != bE.get(k))
-    def changedDirs(entries: Map[String, String]): Seq[String] =
-      changedKeys.toSeq.flatMap(entries.get).distinct.sorted
-    val aDirs = changedDirs(aE)
-    val bDirs = changedDirs(bE)
-    require(aE.nonEmpty || bE.nonEmpty, "diff between two empty versions")
-    // schema anchor for a side with no changed (or no) leaves: one leaf
-    // of that version, or the other side's — a column living only in
-    // unchanged leaves cannot contribute a change row anyway, and
-    // alignSchemas below squares up whatever remains
-    def side(
-        dirs: Seq[String], own: Map[String, String],
-        schema: Option[StructType]): DataFrame =
-      if (dirs.nonEmpty) leafRead(spark, dir, dirs, schema)
-      else if (own.nonEmpty) leafRead(spark, dir, Seq(own.values.min), schema).limit(0)
-      else leafRead(spark, dir, Seq((bE ++ aE).values.min), schema.orElse(bS).orElse(aS))
-        .limit(0)
-    val (a, b) = alignSchemas(side(aDirs, aE, aS), side(bDirs, bE, bS))
+    val store = CommitStore.forPath(fsOf(spark, dir), s"$dir/$LogDir")
+    def resolved(v: Long): Tip = resolveAt(store, dir, v).getOrElse(
+      throw new IllegalArgumentException(
+        s"version $v of $dir is not readable (vacuumed or never " +
+          "committed) — a change-feed consumer below the retention " +
+          "floor must re-bootstrap from a snapshot"))
+    val (from, to) = (resolved(fromVersion), resolved(toVersion))
+    require(from.entries.nonEmpty || to.entries.nonEmpty, "diff between two empty versions")
+    val changedKeys = (from.entries.keySet ++ to.entries.keySet)
+      .filter(k => from.entries.get(k) != to.entries.get(k)).toSeq
+    // each side reads its changed leaves under its version's recorded
+    // schema; a side with none is an empty frame of that schema
+    def side(t: Tip): DataFrame = {
+      val leaves = changedKeys.flatMap(t.entries.get).map(_.leaf)
+      if (leaves.isEmpty) localFrame(spark, Nil, t.schema)
+      else leafRead(spark, dir, leaves, t.schema)
+    }
+    val (a, b) = alignSchemas(side(from), side(to))
     val payload = b.columns.filterNot(_ == key).toSeq
     // the readout injects change_type; a payload column of that name
     // would be silently overwritten in the emitted rows — refuse loudly
@@ -1366,7 +1270,7 @@ object TxTable {
     val log = s"$dir/$LogDir"
     val fs = fsOf(spark, dir)
     CommitStore.forPath(fs, log).at(log, v).map { lines =>
-      parse(lines).values.toSeq.map(_.leaf).filter(_ != Tombstone).distinct
+      parse(dir, v, lines).entries.values.toSeq.map(_.leaf).filter(_ != Tombstone).distinct
         .map { leaf =>
           try fs.listStatus(new Path(leafPath(dir, leaf))).map(_.getLen).sum
           catch { case _: java.io.IOException => 0L }
@@ -1383,7 +1287,7 @@ object TxTable {
     val log = s"$dir/$LogDir"
     val store = CommitStore.forPath(fsOf(spark, dir), log)
     val (tip, _) = store.latest(log)
-    (1L to tip).map(v => v -> store.at(log, v).map(kindOf).getOrElse("vacuumed"))
+    (1L to tip).map(v => v -> store.at(log, v).map(kindOf(dir, v, _)).getOrElse("vacuumed"))
   }
 
   /** [[history]] as a one-frame operational readout — the `DESCRIBE
@@ -1404,7 +1308,7 @@ object TxTable {
           new Path(log, CommitStore.slotName(v))).getModificationTime)
         catch { case _: java.io.IOException => None }
       org.apache.spark.sql.Row(v,
-        body.map(kindOf).getOrElse("vacuumed"),
+        body.map(kindOf(dir, v, _)).getOrElse("vacuumed"),
         ts.map(t => new java.sql.Timestamp(t)).orNull,
         body.map(lines => java.lang.Long.valueOf(lines.size - 1L)).orNull)
     }
@@ -1423,11 +1327,10 @@ object TxTable {
 
   /** `ALTER TABLE … ADD COLUMNS` as ONE rows-preserving commit: the
     * table schema widens by rewriting exactly the SMALLEST live leaf
-    * with the new columns appended as typed nulls — the mergeSchema
-    * snapshot resolution then surfaces them table-wide (every other
-    * leaf null-pads), the same union the write-side evolution
-    * produces, at O(smallest partition) cost instead of a table
-    * rewrite. Existing columns are refused loudly (SQL's rule); an
+    * with the new columns appended as typed nulls — the commit records
+    * the widened schema, so every other leaf null-pads under it: the
+    * same union the write-side evolution produces, at O(smallest
+    * partition) cost instead of a table rewrite. Existing columns are refused loudly (SQL's rule); an
     * empty table has no storage schema to widen and is refused too
     * (bootstrap with data carrying the columns instead). Rows-
     * preserving like every maintenance verb: [[diff]] across the
@@ -1450,12 +1353,8 @@ object TxTable {
       require(tip.entries.nonEmpty,
         s"addColumns on $dir: the table holds no live partitions — " +
           "write data carrying the columns instead")
-      // re-check per attempt: a racing widening commit may have landed.
-      // Schema-only probe: the manifest-carried schema answers without
-      // touching a footer; legacy chains resolve it the old way.
-      val existing = tip.schema
-        .getOrElse(read(spark, dir, tip.entries, None).schema)
-        .fieldNames.map(_.toLowerCase).toSet
+      // re-check per attempt: a racing widening commit may have landed
+      val existing = tip.schema.fieldNames.map(_.toLowerCase).toSet
       val clash = cols.map(_.name).filter(c => existing(c.toLowerCase))
       require(clash.isEmpty,
         s"addColumns on $dir: column(s) already exist: ${clash.mkString(", ")}")
@@ -1464,8 +1363,7 @@ object TxTable {
         try fs.getContentSummary(new Path(leafPath(dir, e.leaf))).getLength
         catch { case _: java.io.IOException => Long.MaxValue }
       }
-      val widened = cols.foldLeft(
-        spark.read.parquet(leafPath(dir, entry.leaf)))(
+      val widened = cols.foldLeft(leafRead(spark, dir, Seq(entry.leaf), tip.schema))(
         (d, f) => d.withColumn(f.name, lit(null).cast(f.dataType)))
       Some(Stage(widened.withColumn(PKey, lit(k)), Seq(k)))
     }
@@ -1501,27 +1399,26 @@ object TxTable {
           "under the old spec — repartitionTable back to the old columns " +
           "first, then restore"))
     }
-    val restored = resolveAt(store, log, version).getOrElse(
-      throw new IllegalStateException(
-        s"version $version of $dir is not restorable (vacuumed or never committed)"))
     // the restored state's schema is the TARGET version's recorded one
     // (columns added after `version` cease to exist at the new tip)
-    val restoredSchema = schemaAt(store, log, version)
+    val restored = resolveAt(store, dir, version).getOrElse(
+      throw new IllegalStateException(
+        s"version $version of $dir is not restorable (vacuumed or never committed)"))
     // constraint gate on the RESTORED state: restore is a row-writing
     // verb in effect (it republishes version n's rows as the tip), so a
     // table with an armed CHECK contract must not be able to resurrect
     // pre-constraint violations through it. One snapshot-at-version
     // pass, only when constraints exist; drop the constraint first to
     // deliberately restore a violating state.
-    if (TxConstraints.of(spark, dir).nonEmpty && restored.nonEmpty)
+    if (TxConstraints.of(spark, dir).nonEmpty && restored.entries.nonEmpty)
       TxConstraints.enforce(spark, dir,
-        read(spark, dir, restored, restoredSchema), "restore")
+        read(spark, dir, restored.entries, restored.schema), "restore")
     var attempt = 0
     while (attempt < maxRetries) {
       attempt += 1
       val (v, _) = store.latest(log)
       if (store.tryCommit(log, v + 1,
-          render("checkpoint", restored, restoredSchema))) return
+          render("checkpoint", restored.entries, Some(restored.schema)))) return
     }
     throw new IllegalStateException(
       s"TxTable.restore lost the commit race $maxRetries times on $dir")
@@ -1568,13 +1465,13 @@ object TxTable {
           "clone a post-respec version, or repartition the clone's spec " +
           "back by hand"))
     }
-    val entries = resolveAt(srcStore, srcLog, v).getOrElse(
+    val src = resolveAt(srcStore, sourceDir, v).getOrElse(
       throw new IllegalStateException(
         s"version $v of $sourceDir is not cloneable (vacuumed or never committed)"))
     // leaves absolutize against the source's QUALIFIED root, so the
     // clone's reads resolve them regardless of either table's scheme
     val srcRoot = srcFs.makeQualified(new Path(sourceDir)).toString
-    val absolute = entries.map { case (k, e) =>
+    val absolute = src.entries.map { case (k, e) =>
       k -> Entry(leafPath(srcRoot, e.leaf), e.vhex)
     }
     val fs = fsOf(spark, targetDir)
@@ -1588,7 +1485,7 @@ object TxTable {
     // the data is a branch of its quality contract
     TxConstraints.cloneInto(spark, sourceDir, targetDir)
     require(store.tryCommit(log, 1L,
-        render("checkpoint", absolute, schemaAt(srcStore, srcLog, v))),
+        render("checkpoint", absolute, Some(src.schema))),
       s"cloneShallow lost a creation race on $targetDir")
   }
 
@@ -1684,16 +1581,14 @@ object TxTable {
     * whose `__p` value is its manifest key — and `__p` rides as a
     * per-file constant, with no per-row md5 and no directory discovery
     * (leaves of many commits, or a shallow clone's absolute ones, are
-    * one scan). A schema-less legacy chain takes its data schema from
-    * the leaves' footers ([[leafRead]]'s mergeSchema read); `__p` is a
-    * declared string either way, so nothing is type-inferred. A leaf
+    * one scan). The data schema is the manifest-carried one and `__p`
+    * a declared string, so nothing is type-inferred. A leaf
     * that is gone (a shallow clone whose source was vacuumed) fails the
     * read as [[leafRead]] does: the index's root listing alone would
     * read it as empty, and a rewrite would publish its rows away. */
   private def keyedRead(
       spark: SparkSession, dir: String, entries: Map[String, Entry],
-      schema: Option[StructType]): DataFrame = {
-    val s = schema.getOrElse(leafRead(spark, dir, entries.values.map(_.leaf).toSeq, None).schema)
+      s: StructType): DataFrame = {
     val conf = spark.sessionState.newHadoopConf()
     val keyCol = StructType(Seq(StructField(PKey, StringType)))
     val parts = entries.toSeq.sortBy(_._2.leaf).map { case (k, e) =>
@@ -1746,8 +1641,9 @@ object TxTable {
         case None => return None
       }
       if (v == 0) checkSpec()
-      // refuse a re-typed column BEFORE any leaf is written
-      if (!full) requireAddOnly(schema, st.rows)
+      // unionSchema's add-only rule BEFORE any leaf is written, so a
+      // refused commit stages nothing (tryPublish re-applies it)
+      if (!full) unionSchema(schema, stagedSchemaOf(st.rows)): Unit
       val stageRel = s"$DataDir/${UUID.randomUUID()}"
       val stagePath = new Path(s"$dir/$stageRel")
       val leaves: Map[String, Entry] =
@@ -1762,8 +1658,9 @@ object TxTable {
             .filter(_.startsWith(PKey + "="))
             .map { leaf =>
               val k = leaf.stripPrefix(PKey + "=")
-              k -> Entry(s"$stageRel/$leaf",
-                st.values.get(k).orElse(entries.get(k).flatMap(_.vhex)))
+              k -> Entry(s"$stageRel/$leaf", st.values.get(k)
+                .orElse(entries.get(k).map(_.vhex))
+                .getOrElse(refuse(dir, v + 1, s"would stage key $k without a value")))
             }.toMap
         }
       // a rewritten partition that exists but staged no leaf was emptied:
@@ -1772,7 +1669,7 @@ object TxTable {
         if (full) leaves
         else leaves ++ st.keys
           .filter(k => entries.contains(k) && !leaves.contains(k))
-          .map(_ -> Entry(Tombstone, None))
+          .map(_ -> Entry(Tombstone, ""))
       if (staged.isEmpty && !full) {
         fs.delete(stagePath, true): Unit
         return None
@@ -1864,29 +1761,21 @@ object TxTable {
     * with the O(table) write amortized to 1/interval (and version 1
     * trivially full).
     *
-    * The header records the POST-commit table schema:
-    * union(predecessor's recorded schema, the staged frame's) on a
-    * schema-carrying chain; the bootstrap commit starts the chain from
-    * the staged schema alone. A legacy chain (predecessor carries no
-    * schema) keeps writing schema-less bodies — claiming a schema
-    * mid-history could under-describe columns living only in untouched
-    * pre-schema leaves. A `full` commit replaces the table: a checkpoint
-    * of exactly `staged`, under the staged schema. */
+    * The post-commit table schema is union(the tip's, the staged
+    * frame's) — the empty struct's union on a never-committed table —
+    * recorded on a checkpoint, and on a delta only when it changed. A
+    * `full` commit replaces the table: a checkpoint of exactly
+    * `staged`, under the staged schema. */
   private def tryPublish(
       spark: SparkSession, store: CommitStore, log: String,
       v: Long, baseEntries: Map[String, Entry],
       staged: Map[String, Entry],
-      prevSchema: Option[StructType],
+      prevSchema: StructType,
       stagedSchema: StructType, full: Boolean): Boolean = {
     val next = v + 1
-    val post =
-      if (full || v == 0) Some(stagedSchema)
-      else prevSchema.map(unionSchema(_, stagedSchema))
+    val post = if (full) stagedSchema else unionSchema(prevSchema, stagedSchema)
     val isCheckpoint = full || next == 1 || next % checkpointInterval(spark) == 0
-    // deltas stay O(touched) bytes: the schema field rides only on
-    // checkpoints and on the (rare) commits that actually change it —
-    // readers walk back to the nearest carrier (schemaAt)
-    val carried = if (isCheckpoint) post else post.filterNot(prevSchema.contains)
+    val carried = if (isCheckpoint || post != prevSchema) Some(post) else None
     val body =
       if (isCheckpoint)
         render("checkpoint", if (full) staged else applyDelta(baseEntries, staged), carried)
@@ -2085,14 +1974,14 @@ object TxTable {
     var (tip, tipLines) = store.latest(log)
     if (tip == 0) return
     var guard = 0
-    while (kindOf(tipLines) != "checkpoint") {
+    while (kindOf(dir, tip, tipLines) != "checkpoint") {
       guard += 1
       if (guard > 50) throw new IllegalStateException(
         s"vacuum lost the checkpoint race 50 times on $dir")
-      val full = resolveAt(store, log, tip).getOrElse(
+      val full = resolveAt(store, dir, tip, Some(tipLines)).getOrElse(
         throw new IllegalStateException(s"manifest chain for version $tip is broken"))
       if (!store.tryCommit(log, tip + 1,
-          render("checkpoint", full, schemaAtSeeded(store, log, tip, tipLines)))) {
+          render("checkpoint", full.entries, Some(full.schema)))) {
         // a live writer took the slot; fall through and re-read
       }
       val t = store.latest(log)
@@ -2108,14 +1997,14 @@ object TxTable {
     var walking = true
     while (walking && keepFrom >= 1) {
       store.at(log, keepFrom) match {
-        case Some(lines) if kindOf(lines) == "checkpoint" => walking = false
+        case Some(lines) if kindOf(dir, keepFrom, lines) == "checkpoint" => walking = false
         case Some(_) => keepFrom -= 1
         case None => walking = false // chain already truncated below
       }
     }
     val live: Set[String] = (keepFrom to tip)
-      .flatMap(w => resolveAt(store, log, w)
-        .map(_.values.map(_.leaf)).getOrElse(Nil)).toSet
+      .flatMap(w => resolveAt(store, dir, w)
+        .map(_.entries.values.map(_.leaf)).getOrElse(Nil)).toSet
 
     val cutoff = System.currentTimeMillis() - graceMs
     val data = new Path(s"$dir/$DataDir")

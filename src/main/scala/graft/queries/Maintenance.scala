@@ -621,8 +621,8 @@ object Maintenance {
     // a WIDENED schema (a quality score the pipeline started emitting
     // mid-history) touching only the back half of the month, and the
     // post-evolution snapshot reads the union shape with pre-evolution
-    // rows nulled (mergeSchema across immutable leaves of different
-    // vintages). The aggregate pins all of it: per-type counts and
+    // rows nulled (the recorded schema read across immutable leaves of
+    // different vintages). The aggregate pins all of it: per-type counts and
     // value sums span BOTH vintages, the non-null count and sum of the
     // new column come only from post-evolution rows — the oracle
     // restates the column's backfill-free semantics with a CASE.

@@ -1,12 +1,7 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
-import graft.ops.Merge
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
-import org.apache.spark.sql.Row
 
 /** Structured Streaming formulation of the reference's scheduled
   * micro-batch semantics (SURVEY.md §2.10).
@@ -24,8 +19,8 @@ import org.apache.spark.sql.Row
   *    minutes")` — late ticks inside the cushion still land in their
   *    hour; later ones are dropped, which the reference equally never
   *    re-processes (catchup=False, fact_gold_price.py:36);
-  *  - ON CONFLICT(id) DO UPDATE               →  `foreachBatch` keyed
-  *    merge (Merge.upsertLatestWins) into the fact target — replay of a
+  *  - ON CONFLICT(id) DO UPDATE               →  [[TxStreamSink]]: each
+  *    micro-batch lands as one keyed TxTable upsert commit — replay of a
   *    micro-batch overwrites instead of duplicating.
   *
   * Scale: state is one row per (source, side, hour) per watermark
@@ -53,31 +48,4 @@ object HourlyMicroBatch {
         col("hour.start").as("hour_start"),
         col("source"), col("side"),
         col("n_ticks"), col("avg_price"), col("min_price"), col("max_price"))
-
-  /** The upsert sink: each micro-batch merges into a parquet fact
-    * directory keyed by `id`, latest `etl_seq` wins — the streaming
-    * analog of the reference's per-row ON CONFLICT loop, executed as
-    * one set-based merge per batch. Idempotent under micro-batch replay
-    * because the merge key, not append order, determines the survivor.
-    */
-  def upsertSink(
-      ticks: DataFrame, targetDir: String): DataStreamWriter[Row] =
-    ticks.writeStream
-      .outputMode(OutputMode.Update())
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val incoming = batch.withColumn("etl_seq", lit(batchId))
-        val merged =
-          if (Files.exists(Paths.get(targetDir))) {
-            val existing = spark.read.parquet(targetDir)
-            Merge.upsertLatestWins(existing, incoming, "id", "etl_seq")
-          } else incoming
-        // Write-ahead to a staging dir, then swap: the read above and an
-        // in-place overwrite of the same path would race. On a table
-        // format this whole lambda is MERGE INTO.
-        val staging = targetDir + "_staging"
-        merged.write.mode("overwrite").parquet(staging)
-        spark.read.parquet(staging).write.mode("overwrite").parquet(targetDir)
-      }
 }

@@ -18,12 +18,13 @@ import org.apache.spark.sql.functions._
   * micro-batch here IS [[TxTable.diff]] — a manifest-pruned two-version
   * join Spark plans per commit. Wrapping that in a V2 `MicroBatchStream`
   * would re-express the same loop behind the streaming scaffolding
-  * without changing a single plan; the drain/poll surface below matches
-  * Trigger.AvailableNow / continuous-poll semantics directly and keeps
+  * without changing a single plan; the drain surface below matches
+  * Trigger.AvailableNow semantics directly (live tailing is the native
+  * `graft-tx` source, [[graft.io.TxStreamSource]]) and keeps
   * the cursor (a plain version number) in the consumer's hands, which
   * is exactly what a CDC consumer checkpoints anyway.
   *
-  * Scale shape: a poll costs one commit-log `latest` probe (no manifest
+  * Scale shape: a drain costs one commit-log `latest` probe (no manifest
   * fold — [[TxTable.latestVersion]]); each emitted batch costs the
   * partitions its commit touched (diff prunes identical manifest
   * entries before opening a file). Versions are dense (the CAS admits
@@ -46,24 +47,6 @@ object TxChangeFeed {
       fromVersion: Long = 0L): Seq[(Long, DataFrame)] = {
     val tip = TxTable.latestVersion(spark, dir)
     ((fromVersion + 1) to tip).map(v => v -> TxTable.diff(spark, dir, v - 1, v, key))
-  }
-
-  /** Continuous tail: poll the commit log every `pollMs`, handing each
-    * new commit's diff to `onBatch` in order, until `stop()` — the
-    * processing-trigger analog. Returns the final cursor (last version
-    * delivered); persist it and resume with `fromVersion = cursor`. */
-  def follow(
-      spark: SparkSession, dir: String, key: String,
-      fromVersion: Long, pollMs: Long, stop: () => Boolean)(
-      onBatch: (Long, DataFrame) => Unit): Long = {
-    var cursor = fromVersion
-    while (!stop()) {
-      drain(spark, dir, key, cursor).foreach { case (v, d) =>
-        onBatch(v, d); cursor = v
-      }
-      if (!stop()) Thread.sleep(pollMs)
-    }
-    cursor
   }
 
   /** TABLE-TO-TABLE replication — the capstone the pieces compose to:

@@ -383,9 +383,8 @@ class MergeWriterSpec extends SparkTestBase {
 
   private def bodyKind(target: String, version: Long): String = {
     val slot = Paths.get(target, "_graft_log", f"v$version%020d")
-    val first = Files.readAllLines(
-      slot.resolveSibling(Files.readSymbolicLink(slot))).get(0)
-    if (first.startsWith("#\t")) first.split('\t')(1) else "checkpoint"
+    Files.readAllLines(slot.resolveSibling(Files.readSymbolicLink(slot)))
+      .get(0).split('\t')(1)
   }
 
   private def withCheckpointInterval[T](n: Int)(f: => T): T = {
@@ -1067,24 +1066,27 @@ class MergeWriterSpec extends SparkTestBase {
     assert(ranged.inputFiles.nonEmpty &&
       ranged.inputFiles.forall(f => wanted.exists(f.contains)),
       "snapshotWhere read a leaf outside the predicate")
+  }
 
-    // entries WITHOUT a stored value (the pre-value manifest format)
-    // are read conservatively: strip the value field from the live
-    // manifest body and re-point the slot at the legacy spelling
-    val log = Paths.get(target, "_graft_log")
-    val slot = log.resolve(f"v${1L}%020d")
-    val body = slot.resolveSibling(Files.readSymbolicLink(slot))
-    val legacy = Files.readAllLines(body).asScala.map { line =>
-      line.split('\t') match {
-        case Array(k, d, _) => s"$k\t$d"
-        case _ => line
-      }
+  test("old manifest spellings are refused, naming the table and the version") {
+    import graft.io.TxTable
+    val s = spark
+    import s.implicits._
+    // v1 checkpoint + v2 delta, then one old spelling edited into a body
+    def refused(v: Long, what: String)(edit: Seq[String] => Seq[String]): Unit = {
+      val target = Files.createTempDirectory("graft_tx_old").toString + "/fact"
+      Seq(20240101, 20240102).foreach(d => TxTable.upsert(spark, target,
+        Seq((d.toLong, 1.0, 1L, d)).toDF("id", "price", "etl_seq", "date_id"),
+        "id", "etl_seq", "date_id"))
+      TxFixtures.editBody(target, v)(edit)
+      val e = intercept[IllegalStateException](TxTable.snapshot(spark, target))
+      assert(e.getMessage.contains(s"TxTable $target: manifest version $v $what"),
+        e.getMessage)
     }
-    Files.write(body, legacy.asJava)
-    val conservative = TxTable.snapshotWhere(spark, target, "date_id",
-      col("date_id") === 20240101).get
-    assert(conservative.filter($"date_id" === 20240101).count() === 1L)
-    assert(conservative.count() === 4L,
-      "value-less legacy entries must be read conservatively, not skipped")
+    refused(2L, "has no header")(_.tail)
+    refused(1L, "is a checkpoint without a schema")(b =>
+      b.head.split('\t').take(2).mkString("\t") +: b.tail)
+    refused(2L, "has a data entry without a value")(b =>
+      b.head +: b.tail.map(_.split('\t').take(2).mkString("\t")))
   }
 }

@@ -56,40 +56,6 @@ class StreamingSpec extends SparkTestBase {
     } finally q.stop()
   }
 
-  test("foreachBatch keyed upsert is idempotent: late duplicate overwrites, never duplicates") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-
-    val target = Files.createTempDirectory("graft_stream_fact").toString + "/fact"
-    val ckpt = Files.createTempDirectory("graft_stream_ckpt").toString
-
-    val in = MemoryStream[Tick]
-    def runBatch(ticks: Tick*): Unit = {
-      in.addData(ticks: _*)
-      // AvailableNow drains what's pending then stops; the shared
-      // checkpoint makes the next start() resume from committed offsets
-      // — i.e. each call is one replayable micro-batch.
-      val q = HourlyMicroBatch.upsertSink(in.toDF(), target)
-        .option("checkpointLocation", ckpt)
-        .start()
-      q.awaitTermination()
-    }
-
-    runBatch(
-      Tick(1, "src_a", "buy", 100.0, ts("2024-01-15 10:05:00")),
-      Tick(2, "src_a", "buy", 101.0, ts("2024-01-15 10:06:00")))
-    // replayed id=2 with an updated price + a new id=3
-    runBatch(
-      Tick(2, "src_a", "buy", 201.0, ts("2024-01-15 10:06:00")),
-      Tick(3, "src_b", "sell", 55.0, ts("2024-01-15 10:07:00")))
-
-    val out = spark.read.parquet(target)
-      .select("id", "price").collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(out === Map(1L -> 100.0, 2L -> 201.0, 3L -> 55.0))
-  }
-
   case class Evt(day: String, event_type: String, value: Double)
 
   test("incremental state sink maintains the partial log across micro-batches") {

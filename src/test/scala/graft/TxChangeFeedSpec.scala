@@ -8,8 +8,7 @@ import org.apache.spark.sql.functions._
 
 /** The change-feed contract t20's oracle can't see: cursor semantics
   * (resume from a persisted version, no replays, no gaps), the replica
-  * ≡ snapshot identity at every intermediate version, and the poll
-  * loop delivering commits that land WHILE following.
+  * ≡ snapshot identity at every intermediate version.
   */
 class TxChangeFeedSpec extends SparkTestBase {
 
@@ -235,25 +234,6 @@ class TxChangeFeedSpec extends SparkTestBase {
     assert(full(dst) === full(src))
   }
 
-  test("follow delivers commits that land while tailing, in order") {
-    val target = freshTable()
-    commit(target, Seq((1L, 1.0, 1L, 20240101)))
-    val seen = scala.collection.mutable.ArrayBuffer[Long]()
-    var extraDone = false
-    val cursor = TxChangeFeed.follow(spark, target, "id",
-      fromVersion = 0L, pollMs = 10L,
-      stop = () => extraDone && seen.size >= 2) { (v, _) =>
-      seen += v
-      if (!extraDone) {
-        // a writer lands a commit while the feed is live
-        commit(target, Seq((2L, 2.0, 2L, 20240102)))
-        extraDone = true
-      }
-    }
-    assert(seen.toSeq === Seq(1L, 2L))
-    assert(cursor === 2L)
-  }
-
   test("reserved control columns in the payload are refused, not corrupted") {
     // mirror/replicate inject _op/_seq into each diff before applyCdc;
     // a source payload already carrying either name would silently
@@ -321,32 +301,6 @@ class TxChangeFeedSpec extends SparkTestBase {
       Set(("insert", 4L)))
     assert(rows.forall(_.isNullAt(d.columns.indexOf("note"))),
       "a column the v2 side's leaves never held must read as null")
-  }
-
-  test("legacy (schema-less) chains resolve diff schema from the changed leaves only") {
-    // Same shape, but the chain loses its recorded schema BEFORE the
-    // post-widening commit: that commit's merge then aligns against a
-    // mergeSchema read of just its own partition (which never saw
-    // `note`), so the staged leaf physically lacks the column and the
-    // legacy diff's per-changed-leaf fallback must omit it — the
-    // documented legacy behavior, pinned so a change is loud.
-    val s = spark
-    import s.implicits._
-    val target = freshTable()
-    commit(target, Seq((1L, 1.0, 1L, 20240101), (2L, 2.0, 1L, 20240102)))
-    TxTable.upsert(spark, target,
-      Seq((3L, 3.0, 2L, 20240101, "hello"))
-        .toDF("id", "price", "etl_seq", "date_id", "note"),
-      "id", "etl_seq", "date_id")
-    TxFixtures.stripRecordedSchemas(target)
-    commit(target, Seq((4L, 4.0, 3L, 20240102)))
-    TxFixtures.stripRecordedSchemas(target) // v3 re-recorded its staged schema
-
-    val legacy = TxTable.diff(spark, target, 2L, 3L, "id")
-    assert(!legacy.columns.contains("note"),
-      s"legacy chains resolve schema from the changed leaves only: ${legacy.columns.toSeq}")
-    assert(legacy.collect().map(r => (r.getString(0), r.getLong(1))).toSet ===
-      Set(("insert", 4L)))
   }
 
   test("schema evolution is add-only: re-typing a column refuses at commit time") {

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
-import graft.io.{TxCatalog, TxConstraints, TxTable}
+import graft.io.{TxCatalog, TxConstraints, TxStreamSource, TxTable}
 import org.apache.spark.sql.functions._
 
 /** CHECK constraints on graft-tx (io/TxConstraints): SQL management
@@ -311,8 +311,21 @@ class TxConstraintsSpec extends SparkTestBase {
         assert(ei.getMessage.contains("c3"))
         TxTable.upsert(s2, dir,
           Seq((1L, 1.0, 1L, 20240101)).toDF("id", "price", "etl_seq", "date_id"),
-          "id", "etl_seq", "date_id")
+          "id", "etl_seq", "date_id")                                  // v2
         assert(TxTable.snapshot(s2, dir).get.count() === 1L)
+        // the barrier (v1) was the table's first commit: it records the
+        // empty schema and v2 its own, so a snapshot merges no footers,
+        // and a widening reaches diff and the feed past a plain commit
+        TxTable.upsert(s2, dir,
+          Seq((2L, 2.0, 2L, 20240102, "hi")).toDF("id", "price", "etl_seq", "date_id", "note"),
+          "id", "etl_seq", "date_id")                                  // v3
+        TxTable.upsert(s2, dir,
+          Seq((3L, 3.0, 3L, 20240101)).toDF("id", "price", "etl_seq", "date_id"),
+          "id", "etl_seq", "date_id")                                  // v4
+        assert(TxFixtures.schemaFieldFaults(dir, 4L).isEmpty)
+        assert(SparkEvents.jobs(s2)(TxTable.snapshot(s2, dir)) === 0)
+        assert(TxTable.diff(s2, dir, 3L, 4L, "id").columns.contains("note"))
+        assert(TxStreamSource.feedSchema(s2, dir, "id").fieldNames.contains("note"))
       } finally s2.sql(s"DROP TABLE $tbl")
     }
   }

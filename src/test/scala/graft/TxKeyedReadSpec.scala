@@ -12,10 +12,9 @@ import org.apache.spark.sql.functions._
 /** Keyed reads of existing rows (the merge's touched partitions, the
   * predicate rewrites' find pass, compaction) take each row's partition
   * key from its manifest entry instead of re-hashing the row. Pinned on
-  * the three layouts where the key could drift: a two-column spec with a
-  * NULL partition value, a shallow clone whose leaves are absolute paths
-  * into its source, and a schema-less legacy chain (its data schema
-  * read from the leaves' footers). After every verb the table must hold the model's rows, under
+  * the two layouts where the key could drift: a two-column spec with a
+  * NULL partition value, and a shallow clone whose leaves are absolute
+  * paths into its source. After every verb the table must hold the model's rows, under
   * exactly the manifest keys and leaf contents that a fresh bootstrap of
   * those rows (keyed on the batch side) produces.
   */
@@ -125,13 +124,5 @@ class TxKeyedReadSpec extends SparkTestBase {
     runVerbs(clone, "d", seedRows)
     // copy-on-write: the source never changed
     assert(rowsOf(TxTable.snapshot(spark, src).get) === seedRows)
-  }
-
-  test("schema-less legacy chain: footer schema, no re-keying, same keys and rows") {
-    val dir = fresh("graft_keyed_legacy")
-    TxTable.upsert(spark, dir, frame(seedRows.take(3)), "id", "ver", "d")
-    TxTable.upsert(spark, dir, frame(seedRows.drop(3)), "id", "ver", "d")
-    TxFixtures.stripRecordedSchemas(dir)
-    runVerbs(dir, "d", seedRows)
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import graft.io.TxTable
+import graft.io.{TxStreamSource, TxTable}
 import graft.ops.Merge
 import org.apache.spark.sql.functions._
 
@@ -226,6 +226,45 @@ class TxMergeRestoreSpec extends SparkTestBase {
     val ops = d.select("id", "change_type").collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
     assert(ops == Set((1L, "insert"), (2L, "update"), (8L, "delete")))
+
+    // a restore to version 0 empties the table under the empty schema;
+    // the next commit records its own, so a snapshot merges no footers,
+    // and a widening reaches diff and the feed past a plain commit
+    TxTable.restore(s, dir, 0L)                                          // v5
+    assert(TxTable.snapshot(s, dir).isEmpty)
+    TxTable.upsert(s, dir, target, "id", "v", "p")                       // v6
+    TxTable.upsert(s, dir,
+      Seq((9L, "c", 90.0, "hi")).toDF("id", "p", "v", "note"), "id", "v", "p") // v7
+    TxTable.upsert(s, dir, Seq((10L, "a", 100.0)).toDF("id", "p", "v"), "id", "v", "p") // v8
+    assert(TxFixtures.schemaFieldFaults(dir, 8L).isEmpty)
+    assert(SparkEvents.jobs(s)(TxTable.snapshot(s, dir)) === 0)
+    val widened = TxTable.diff(s, dir, 7L, 8L, "id")
+    assert(widened.columns.contains("note"))
+    // the feed's pinned shape is the diff readout plus the version stamp
+    assert(TxStreamSource.feedSchema(s, dir, "id").dropRight(1) == widened.schema.fields.toSeq)
+  }
+
+  test("snapshotAt(v) is the snapshot taken when v was the tip, built without a job") {
+    val s = spark; import s.implicits._
+    val dir = Files.createTempDirectory("graft_tx_at").toString + "/fact"
+    val seen = scala.collection.mutable.ArrayBuffer.empty[(Long, Option[(String, Set[String])])]
+    def shape(d: org.apache.spark.sql.DataFrame): (String, Set[String]) =
+      (d.schema.json, d.collect().map(_.toString).toSet)
+    def record(): Unit =
+      seen += TxTable.latestVersion(s, dir) -> TxTable.snapshot(s, dir).map(shape)
+    TxTable.upsert(s, dir, target, "id", "v", "p"); record()             // v1 bootstrap
+    TxTable.upsert(s, dir,
+      Seq((5L, "c", 50.0, "hi")).toDF("id", "p", "v", "note"), "id", "v", "p")
+    record()                                                             // v2 widening
+    TxTable.upsert(s, dir, Seq((6L, "a", 60.0)).toDF("id", "p", "v"), "id", "v", "p")
+    record()                                                             // v3 same schema
+    TxTable.deleteWhere(s, dir, "p", lit(true)); record()                // v4 delete-all
+    assert(seen.map(_._1) == Seq(1L, 2L, 3L, 4L) && seen.last._2.isEmpty)
+    seen.foreach { case (v, expected) =>
+      var at: Option[org.apache.spark.sql.DataFrame] = None
+      assert(SparkEvents.jobs(s) { at = TxTable.snapshotAt(s, dir, v) } === 0, s"v$v")
+      assert(at.map(shape) == expected, s"v$v")
+    }
   }
 
   test("restore of a never-committed or vacuumed version throws") {
