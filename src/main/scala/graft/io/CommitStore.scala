@@ -128,7 +128,40 @@ object CommitStore {
       new ExclusiveCreateCommitStore(fs)
     else new RenameCommitStore(fs)
   }
+
+  /** Attempts every optimistic publish gets before it gives up. */
+  private[io] val MaxAttempts = 10
+
+  /** One attempt's publish: `lines` as `version` of the log. `won` is
+    * the result when the slot is taken; `lost` cleans up before the
+    * next attempt. */
+  private[io] final case class Publish[A](
+      version: Long, lines: Seq[String], won: A, lost: () => Unit = () => ())
+
+  /** THE optimistic retry loop every CAS publish runs on (TxTable's
+    * commits, barrier, restore and vacuum checkpoint; the constraint
+    * log's ADD and DROP): `attempt(n)`, n counting from 1, reads the
+    * tip and either finishes without publishing (`Left`) or builds the
+    * next body (`Right`), which the loop tries on `store`'s slot; a
+    * lost slot runs the next attempt against the new tip. After
+    * [[MaxAttempts]] losses it throws [[LostRace]] naming `op` and
+    * `dir`. */
+  private[io] def retrying[A](store: CommitStore, log: String, op: String, dir: String)(
+      attempt: Int => Either[A, Publish[A]]): A =
+    Iterator.range(1, MaxAttempts + 1).flatMap { n =>
+      attempt(n) match {
+        case Left(done) => Some(done)
+        case Right(p) =>
+          if (store.tryCommit(log, p.version, p.lines)) Some(p.won)
+          else { p.lost(); None }
+      }
+    }.nextOption().getOrElse(throw new LostRace(op, dir))
 }
+
+/** [[CommitStore.retrying]] ran out of attempts: every one lost its CAS. */
+private[io] final class LostRace(op: String, dir: String)
+    extends IllegalStateException(
+      s"$op lost the commit race ${CommitStore.MaxAttempts} times on $dir")
 
 /** Local-filesystem store: version slot = a symlink whose target is the
   * fully-written body file. POSIX `symlink(2)` fails with EEXIST if the

@@ -1,6 +1,7 @@
 package graft.io
 
-/** Physical-layout options a table write can apply (SURVEY.md §4.3):
+/** Physical-layout options every TxTable staging write applies
+  * (TxTable.writeLaidOut; SURVEY.md §4.3):
   * the three parquet-side levers that decide what a 100 TB probe scans.
   *
   *  - `sortCols`: rows sorted by these columns WITHIN each output file
@@ -9,19 +10,12 @@ package graft.io
   *    mostly-disjoint row-group min/max stats per file → a pushed range
   *    predicate skips non-matching groups at the reader. Per-file zone
   *    maps only; global clustering across files is the maintenance
-  *    rewrite's job (SortedWriter.writeZOrdered).
+  *    rewrite's job (TxTable.optimizeZOrderBy).
   *  - `bloomCols`: per-row-group bloom filters for equality probes on
   *    high-cardinality columns, where min/max stats are useless under
   *    any ordering the sort doesn't own.
   *  - `rowGroupBytes`: row-group granularity — smaller groups, finer
   *    skipping, more footer; probe-heavy tables want 8–32 MB.
-  *  - `optimizeWrite`: shuffle the staged batch onto the partition key
-  *    before writing, so each output partition is written by one task
-  *    → ONE file per leaf per commit instead of (tasks × leaves) —
-  *    the public table formats' optimized-write move. Costs one extra
-  *    exchange per commit; buy it on WIDE commits (many touched
-  *    partitions per batch), where the default shape's small-file debt
-  *    (every task touching every leaf) outruns compaction.
   *
   * `Layout.none` (the default everywhere) writes exactly as before:
   * layout is opt-in per table, because the sort costs CPU at write time
@@ -31,10 +25,7 @@ case class Layout(
     sortCols: Seq[String] = Nil,
     bloomCols: Seq[String] = Nil,
     bloomNdv: Long = 1L << 20,
-    rowGroupBytes: Option[Long] = None,
-    optimizeWrite: Boolean = false) {
-  def isNone: Boolean =
-    sortCols.isEmpty && bloomCols.isEmpty && rowGroupBytes.isEmpty && !optimizeWrite
+    rowGroupBytes: Option[Long] = None) {
 
   /** The layout with sort/bloom columns restricted to `columns` — for
     * callers that apply one layout across tables of different schemas

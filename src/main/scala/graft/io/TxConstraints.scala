@@ -170,18 +170,13 @@ object TxConstraints {
     }
     val log = logOf(dir)
     val store = CommitStore.forPath(TxTable.fsOf(spark, dir), log)
-    var attempt = 0
-    var published = false
-    while (!published && attempt < 10) {
-      attempt += 1
+    CommitStore.retrying(store, log, "ADD CONSTRAINT", dir) { _ =>
       val (v, lines) = store.latest(log)
       val cur = if (v == 0) Seq.empty else parseLines(lines)
       require(!cur.exists(_._1.equalsIgnoreCase(name)),
         s"constraint $name already exists on $dir")
-      published = store.tryCommit(log, v + 1, render(cur :+ (name -> condition)))
+      Right(CommitStore.Publish(v + 1, render(cur :+ (name -> condition)), ()))
     }
-    if (!published) throw new IllegalStateException(
-      s"ADD CONSTRAINT lost the update race 10 times on $dir")
     beforeBarrier()
     // barrier: after this empty data-log commit wins version m, any
     // writer landing a later slot provably probed the published set
@@ -209,20 +204,15 @@ object TxConstraints {
       ifExists: Boolean = false): Unit = {
     val log = logOf(dir)
     val store = CommitStore.forPath(TxTable.fsOf(spark, dir), log)
-    var attempt = 0
-    while (attempt < 10) {
-      attempt += 1
+    CommitStore.retrying(store, log, "DROP CONSTRAINT", dir) { _ =>
       val (v, lines) = store.latest(log)
       val cur = if (v == 0) Seq.empty else parseLines(lines)
       val kept = cur.filterNot(_._1.equalsIgnoreCase(name))
       if (kept.size == cur.size) {
         require(ifExists, s"constraint $name does not exist on $dir")
-        return
-      }
-      if (store.tryCommit(log, v + 1, render(kept))) return
+        Left(())
+      } else Right(CommitStore.Publish(v + 1, render(kept), ()))
     }
-    throw new IllegalStateException(
-      s"DROP CONSTRAINT lost the update race 10 times on $dir")
   }
 
   /** Copy the source table's constraint set onto a fresh clone (first

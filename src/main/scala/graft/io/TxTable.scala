@@ -103,8 +103,9 @@ object PartitionSpec {
   * ==Commit protocol (optimistic CAS, no locks)==
   *
   * Every verb that stages data publishes through ONE private
-  * `commit(op, spec, …)(stage)`, which owns the retry loop (the Delta
-  * Lake shape: every write is one optimistic transaction). Per attempt:
+  * `commit(op, spec, …)(stage)` (the Delta Lake shape: every write is
+  * one optimistic transaction), on the one retry loop every CAS publish
+  * shares ([[CommitStore.retrying]]). Per attempt:
   *
   *  1. read the latest manifest version v (0 = empty table), its
   *     resolved entries and its recorded schema, and re-verify the
@@ -420,13 +421,10 @@ object TxTable {
     * provably read the data tip — and therefore probed the constraint
     * log — after the barrier was taken ([[TxConstraints]] scaladoc).
     * Returns the barrier's version. */
-  private[io] def barrierCommit(
-      spark: SparkSession, dir: String, maxRetries: Int = 10): Long = {
+  private[io] def barrierCommit(spark: SparkSession, dir: String): Long = {
     val log = s"$dir/$LogDir"
     val store = CommitStore.forPath(fsOf(spark, dir), log)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      attempt += 1
+    CommitStore.retrying(store, log, "TxTable.barrierCommit", dir) { _ =>
       val (v, lines) = store.latest(log)
       val next = v + 1
       // respect the checkpoint cadence — a slot on the cadence must
@@ -438,10 +436,8 @@ object TxTable {
             throw new IllegalStateException(s"manifest chain for version $v is broken"))
           render("checkpoint", t.entries, Some(t.schema))
         } else render("delta", Map.empty, None) // unchanged: walk-back finds it
-      if (store.tryCommit(log, next, body)) return next
+      Right(CommitStore.Publish(next, body, next))
     }
-    throw new IllegalStateException(
-      s"barrier commit lost the race $maxRetries times on $dir")
   }
 
   /** The partition columns recorded in the table's `_meta` slot — None
@@ -863,10 +859,10 @@ object TxTable {
   def upsert(
       spark: SparkSession, targetDir: String, incoming: DataFrame,
       key: String, version: String, partitionCol: PartitionSpec,
-      layout: Layout = Layout.none, maxRetries: Int = 10,
+      layout: Layout = Layout.none,
       beforeCommit: () => Unit = () => ()): Long =
     mergeCommit(spark, targetDir, incoming, partitionCol, layout,
-      maxRetries, beforeCommit, "upsert", Some(key), Some(version))(
+      beforeCommit, "upsert", Some(key), Some(version))(
       (existing, batch) => Merge.upsertLatestWins(existing, batch, key, version))
 
   /** Replace a predicate-scoped WINDOW of the table — the idempotent
@@ -881,10 +877,10 @@ object TxTable {
   def replaceWindow(
       spark: SparkSession, targetDir: String, incoming: DataFrame,
       partitionCol: PartitionSpec, windowPred: org.apache.spark.sql.Column,
-      layout: Layout = Layout.none, maxRetries: Int = 10,
+      layout: Layout = Layout.none,
       beforeCommit: () => Unit = () => ()): Long =
     mergeCommit(spark, targetDir, incoming, partitionCol, layout,
-      maxRetries, beforeCommit, "replaceWindow")(
+      beforeCommit, "replaceWindow")(
       (existing, batch) => existing.filter(!windowPred).unionByName(batch))
 
   /** Replace the ENTIRE table content as ONE commit — the whole-table
@@ -911,20 +907,23 @@ object TxTable {
     val batch = keyedBatch(pinned(incoming), partitionCol)
     val gate = new TxConstraints.Gate(spark, targetDir, "replaceAll")
     gate.ensure(batch.rows)
-    // ONE attempt: a full replacement is point-in-time, so a lost race
-    // refuses instead of re-staging. An empty batch stages nothing: the
+    // ONE attempt: a full replacement is point-in-time, so a second
+    // stage — the retry after a lost race — refuses instead of
+    // re-staging. The stage checks the spec itself, after that refusal
+    // (commit's own check would run first and report a respec that won
+    // the race as a spec mismatch). An empty batch stages nothing: the
     // truncate's empty checkpoint.
-    try commit(spark, targetDir, "replaceAll", Some(partitionCol), maxRetries = 1,
-        beforeCommit, full = true) { _ =>
-      gate.ensure(batch.rows)
-      Some(Stage(batch.rows, batch.keys, batch.touched, layout, batch.touched.size))
-    }: Unit
-    catch {
-      case _: LostRace => throw new IllegalStateException(
+    var staged = false
+    commit(spark, targetDir, "replaceAll", None, beforeCommit, full = true) { _ =>
+      if (staged) throw new IllegalStateException(
         s"TxTable.replaceAll lost to a concurrent commit on $targetDir — " +
           "a full replacement is point-in-time: recompute it against the " +
           "new tip and rerun")
-    }
+      staged = true
+      gate.ensure(batch.rows)
+      ensureSpec(fsOf(spark, targetDir), targetDir, partitionCol)
+      Some(Stage(batch.rows, batch.keys, batch.touched, layout, batch.touched.size))
+    }: Unit
   }
 
   /** Partition-SPEC evolution — re-key the table on different partition
@@ -952,7 +951,7 @@ object TxTable {
     * table already has (and no pending respec) is a no-op. */
   def repartitionTable(
       spark: SparkSession, dir: String, newSpec: PartitionSpec,
-      layout: Layout = Layout.none, maxRetries: Int = 10,
+      layout: Layout = Layout.none,
       beforeCommit: () => Unit = () => ()): Unit = {
     require(newSpec.cols.nonEmpty, "repartitionTable needs partition columns")
     val fs = fsOf(spark, dir)
@@ -986,7 +985,7 @@ object TxTable {
     // step 2: full re-keyed rewrite, one checkpoint commit (no spec
     // check: this verb owns the pending record). Not pinned: each
     // attempt re-reads the tip's immutable leaves
-    val committedAt = commit(spark, dir, "repartitionTable", None, maxRetries,
+    val committedAt = commit(spark, dir, "repartitionTable", None,
         beforeCommit, full = true) { tip =>
       val batch = keyedBatch(read(spark, dir, tip.entries, tip.schema), newSpec)
       Some(Stage(batch.rows, batch.keys, batch.touched, layout, batch.touched.size))
@@ -1013,7 +1012,7 @@ object TxTable {
       spark: SparkSession, targetDir: String, changes: DataFrame,
       key: String, opCol: String, seqCol: String, partitionCol: PartitionSpec,
       layout: Layout = Layout.none,
-      maxRetries: Int = 10, beforeCommit: () => Unit = () => ()): Unit = {
+      beforeCommit: () => Unit = () => ()): Unit = {
     val Batch(batch, touched, _) = keyedBatch(pinned(changes), partitionCol)
     val touchedKeys = touched.keys.toIndexedSeq
     if (touchedKeys.isEmpty) return
@@ -1023,7 +1022,7 @@ object TxTable {
     val upserting = batch.filter(col(opCol).isNull || col(opCol) =!= "D")
     val gate = new TxConstraints.Gate(spark, targetDir, "applyCdc")
     gate.ensure(upserting)
-    commit(spark, targetDir, "applyCdc", Some(partitionCol), maxRetries,
+    commit(spark, targetDir, "applyCdc", Some(partitionCol),
         beforeCommit, Some(key)) { tip =>
       gate.ensure(upserting) // probe after the data-tip read
       // unlike upsert, an absent partition does NOT mean "write the
@@ -1060,13 +1059,12 @@ object TxTable {
   def delete(
       spark: SparkSession, targetDir: String, keys: DataFrame,
       key: String, partitionCol: PartitionSpec, layout: Layout = Layout.none,
-      maxRetries: Int = 10,
       beforeCommit: () => Unit = () => ()): Unit = {
     val batch = keyedBatch(
       pinned(keys.select((key +: partitionCol.cols).distinct.map(col): _*)), partitionCol)
     val touchedKeys = batch.keys
     if (touchedKeys.isEmpty) return
-    commit(spark, targetDir, "delete", Some(partitionCol), maxRetries,
+    commit(spark, targetDir, "delete", Some(partitionCol),
         beforeCommit, Some(key)) { tip =>
       // only partitions that EXIST participate; deleting from absent
       // partitions is vacuously done. A touched partition with no
@@ -1095,10 +1093,10 @@ object TxTable {
   def deleteWhere(
       spark: SparkSession, targetDir: String, partitionCol: PartitionSpec,
       pred: Column, scope: Option[Column] = None,
-      layout: Layout = Layout.none, maxRetries: Int = 10,
+      layout: Layout = Layout.none,
       beforeCommit: () => Unit = () => ()): Unit =
     rewriteWhere(spark, targetDir, partitionCol, pred, scope, layout,
-      maxRetries, beforeCommit, "deleteWhere")(
+      beforeCommit, "deleteWhere")(
       (rows, p) => rows.filter(!p))
 
   /** Predicate UPDATE — `UPDATE … SET … WHERE` as one CAS commit:
@@ -1111,7 +1109,7 @@ object TxTable {
   def updateWhere(
       spark: SparkSession, targetDir: String, partitionCol: PartitionSpec,
       set: Seq[(String, Column)], pred: Column, scope: Option[Column] = None,
-      layout: Layout = Layout.none, maxRetries: Int = 10,
+      layout: Layout = Layout.none,
       beforeCommit: () => Unit = () => ()): Unit = {
     require(set.nonEmpty, "updateWhere needs at least one assignment")
     // set.toMap below keeps the LAST duplicate silently — refuse instead
@@ -1123,7 +1121,7 @@ object TxTable {
       s"updateWhere must not reassign partition columns: $reassigned " +
         "(a row may not migrate partitions)")
     rewriteWhere(spark, targetDir, partitionCol, pred, scope, layout,
-      maxRetries, beforeCommit, "updateWhere") { (rows, p) =>
+      beforeCommit, "updateWhere") { (rows, p) =>
       val assigned = set.toMap
       val unknown = assigned.keySet.diff(rows.columns.toSet)
       require(unknown.isEmpty,
@@ -1153,10 +1151,9 @@ object TxTable {
   private def rewriteWhere(
       spark: SparkSession, targetDir: String, partitionCol: PartitionSpec,
       pred: Column, scope: Option[Column], layout: Layout,
-      maxRetries: Int, beforeCommit: () => Unit, op: String)(
+      beforeCommit: () => Unit, op: String)(
       transform: (DataFrame, Column) => DataFrame): Unit =
-    commit(spark, targetDir, op, Some(partitionCol), maxRetries,
-        beforeCommit) { tip =>
+    commit(spark, targetDir, op, Some(partitionCol), beforeCommit) { tip =>
       // an empty table is vacuously done
       val candidates = scope.fold(tip.entries)(
         entriesWhere(spark, tip.entries, partitionCol, _))
@@ -1197,7 +1194,7 @@ object TxTable {
       updateCond: org.apache.spark.sql.Column = lit(true),
       deleteCond: Option[org.apache.spark.sql.Column] = None,
       insertCond: Option[org.apache.spark.sql.Column] = Some(lit(true)),
-      layout: Layout = Layout.none, maxRetries: Int = 10,
+      layout: Layout = Layout.none,
       beforeCommit: () => Unit = () => (),
       outputCols: Option[Seq[String]] = None): Unit = {
     val reassigned = updateSet.map(_._1).toSet
@@ -1221,7 +1218,7 @@ object TxTable {
         "dedup upstream (seq-argmax) before merging")
     val touchedKeys = touched.keys.toIndexedSeq
     if (touchedKeys.isEmpty) return
-    commit(spark, targetDir, "merge", Some(partitionCol), maxRetries,
+    commit(spark, targetDir, "merge", Some(partitionCol),
         beforeCommit, Some(key)) { tip =>
       // like applyCdc, the merge ALWAYS runs — an absent partition is
       // an empty target (only the INSERT clause can land rows there),
@@ -1278,25 +1275,14 @@ object TxTable {
     }.getOrElse(0L)
   }
 
-  /** Commit history: (version, kind) ascending from 1 to the tip —
-    * kind ∈ "delta" | "checkpoint", or "vacuumed" where retention has
-    * reclaimed the body. Bodies are O(touched partitions), so the walk
-    * costs one small read per retained version — an operational probe,
-    * not a data path. */
-  def history(spark: SparkSession, dir: String): Seq[(Long, String)] = {
-    val log = s"$dir/$LogDir"
-    val store = CommitStore.forPath(fsOf(spark, dir), log)
-    val (tip, _) = store.latest(log)
-    (1L to tip).map(v => v -> store.at(log, v).map(kindOf(dir, v, _)).getOrElse("vacuumed"))
-  }
-
-  /** [[history]] as a one-frame operational readout — the `DESCRIBE
+  /** Commit history as a one-frame operational readout — the `DESCRIBE
     * HISTORY` face ([[graft.io.TxCatalog]] routes the SQL statement
     * here): one row per version 1..tip with the body kind ("delta" |
-    * "checkpoint" | "vacuumed"), the commit slot's modification time,
-    * and the count of manifest entries the commit touched. Costs one
-    * small body read + one stat per retained version — an operational
-    * probe, never a data path. */
+    * "checkpoint", or "vacuumed" where retention has reclaimed the
+    * body), the commit slot's modification time, and the count of
+    * manifest entries the commit touched. Costs one small body read +
+    * one stat per retained version — an operational probe, never a
+    * data path. */
   def historyFrame(spark: SparkSession, dir: String): DataFrame = {
     val log = s"$dir/$LogDir"
     val fs = fsOf(spark, dir)
@@ -1338,15 +1324,14 @@ object TxTable {
   def addColumns(
       spark: SparkSession, dir: String, partitionCol: PartitionSpec,
       cols: Seq[org.apache.spark.sql.types.StructField],
-      maxRetries: Int = 10, beforeCommit: () => Unit = () => ()): Unit = {
+      beforeCommit: () => Unit = () => ()): Unit = {
     require(cols.nonEmpty, "addColumns needs at least one column")
     val dup = cols.map(_.name.toLowerCase).diff(
       cols.map(_.name.toLowerCase).distinct)
     require(dup.isEmpty,
       s"addColumns lists ${dup.distinct.mkString(", ")} more than once")
     val fs = fsOf(spark, dir)
-    commit(spark, dir, "addColumns", Some(partitionCol), maxRetries,
-        beforeCommit) { tip =>
+    commit(spark, dir, "addColumns", Some(partitionCol), beforeCommit) { tip =>
       require(tip.v >= 1,
         s"addColumns on $dir: an empty table has no storage schema to " +
           "widen — bootstrap it with a write carrying the columns")
@@ -1379,9 +1364,7 @@ object TxTable {
     * vacuum retention — IllegalState when it was vacuumed or never
     * committed. The body is a full checkpoint (self-contained: the
     * restored state must not depend on the delta chain it bypasses). */
-  def restore(
-      spark: SparkSession, dir: String, version: Long,
-      maxRetries: Int = 10): Unit = {
+  def restore(spark: SparkSession, dir: String, version: Long): Unit = {
     val log = s"$dir/$LogDir"
     val store = CommitStore.forPath(fsOf(spark, dir), log)
     // a restore must not cross a partition respec backwards: the target
@@ -1413,15 +1396,10 @@ object TxTable {
     if (TxConstraints.of(spark, dir).nonEmpty && restored.entries.nonEmpty)
       TxConstraints.enforce(spark, dir,
         read(spark, dir, restored.entries, restored.schema), "restore")
-    var attempt = 0
-    while (attempt < maxRetries) {
-      attempt += 1
-      val (v, _) = store.latest(log)
-      if (store.tryCommit(log, v + 1,
-          render("checkpoint", restored.entries, Some(restored.schema)))) return
+    val body = render("checkpoint", restored.entries, Some(restored.schema))
+    CommitStore.retrying(store, log, "TxTable.restore", dir) { _ =>
+      Right(CommitStore.Publish(store.latest(log)._1 + 1, body, ()))
     }
-    throw new IllegalStateException(
-      s"TxTable.restore lost the commit race $maxRetries times on $dir")
   }
 
   /** SHALLOW CLONE — a new table whose version-1 manifest points at the
@@ -1498,10 +1476,9 @@ object TxTable {
     * former source cannot break the table. */
   def materialize(
       spark: SparkSession, dir: String, partitionCol: PartitionSpec,
-      layout: Layout = Layout.none, maxRetries: Int = 10,
+      layout: Layout = Layout.none,
       beforeCommit: () => Unit = () => ()): Unit =
-    commit(spark, dir, "materialize", Some(partitionCol), maxRetries,
-        beforeCommit) { tip =>
+    commit(spark, dir, "materialize", Some(partitionCol), beforeCommit) { tip =>
       val foreign = tip.entries.filter { case (_, e) =>
         leafPath(dir, e.leaf) == e.leaf // absolute → not under this dir
       }
@@ -1517,7 +1494,7 @@ object TxTable {
     * supplied by the caller) and stage one leaf per touched key. */
   private def mergeCommit(
       spark: SparkSession, targetDir: String, incoming: DataFrame,
-      partitionCol: PartitionSpec, layout: Layout, maxRetries: Int,
+      partitionCol: PartitionSpec, layout: Layout,
       beforeCommit: () => Unit, op: String,
       key: Option[String] = None, version: Option[String] = None)(
       merge: (DataFrame, DataFrame) => DataFrame): Long = {
@@ -1533,7 +1510,7 @@ object TxTable {
     // of the ADD-vs-writer barrier protocol (TxConstraints scaladoc).
     val gate = new TxConstraints.Gate(spark, targetDir, op)
     gate.ensure(batch) // fail-fast before any staging cost
-    commit(spark, targetDir, op, Some(partitionCol), maxRetries, beforeCommit,
+    commit(spark, targetDir, op, Some(partitionCol), beforeCommit,
         key, version) { tip =>
       // probe AFTER the data-tip read the attempt will CAS against —
       // the ordering the barrier proof needs
@@ -1623,7 +1600,7 @@ object TxTable {
     * the race window. Returns the published version. */
   private def commit(
       spark: SparkSession, dir: String, op: String,
-      spec: Option[PartitionSpec], maxRetries: Int,
+      spec: Option[PartitionSpec],
       beforeCommit: () => Unit = () => (),
       key: Option[String] = None, version: Option[String] = None,
       full: Boolean = false)(stage: Tip => Option[Stage]): Option[Long] = {
@@ -1631,62 +1608,56 @@ object TxTable {
     val log = s"$dir/$LogDir"
     val store = CommitStore.forPath(fs, log)
     def checkSpec(): Unit = spec.foreach(ensureSpec(fs, dir, _, key, version))
-    var attempt = 0
-    while (attempt < maxRetries) {
-      attempt += 1
+    CommitStore.retrying[Option[Long]](store, log, s"TxTable.$op", dir) { attempt =>
       val tip @ Tip(v, entries, schema) = latestEntries(spark, dir)
       if (v > 0) checkSpec()
-      val st = stage(tip) match {
-        case Some(st) => st
-        case None => return None
+      stage(tip) match {
+        case None => Left(None)
+        case Some(st) =>
+          if (v == 0) checkSpec()
+          // unionSchema's add-only rule BEFORE any leaf is written, so a
+          // refused commit stages nothing (nextBody re-applies it)
+          if (!full) unionSchema(schema, stagedSchemaOf(st.rows)): Unit
+          val stageRel = s"$DataDir/${UUID.randomUUID()}"
+          val stagePath = new Path(s"$dir/$stageRel")
+          val leaves: Map[String, Entry] =
+            if (st.keys.isEmpty) Map.empty
+            else {
+              // ALL rewritten partitions stage in ONE job; the written leaves
+              // ARE the staged entries (key = leaf name minus the column
+              // prefix; hive escaping is the identity on the hex/NULL alphabet)
+              writeLaidOut(st.rows, st.layout, stagePath.toString, st.widenTo)
+              fs.listStatus(stagePath).toSeq
+                .map(_.getPath.getName)
+                .filter(_.startsWith(PKey + "="))
+                .map { leaf =>
+                  val k = leaf.stripPrefix(PKey + "=")
+                  k -> Entry(s"$stageRel/$leaf", st.values.get(k)
+                    .orElse(entries.get(k).map(_.vhex))
+                    .getOrElse(refuse(dir, v + 1, s"would stage key $k without a value")))
+                }.toMap
+            }
+          // a rewritten partition that exists but staged no leaf was emptied:
+          // its entry must DROP, not linger pointing at old data
+          val staged =
+            if (full) leaves
+            else leaves ++ st.keys
+              .filter(k => entries.contains(k) && !leaves.contains(k))
+              .map(_ -> Entry(Tombstone, ""))
+          if (staged.isEmpty && !full) {
+            fs.delete(stagePath, true): Unit
+            Left(None)
+          } else {
+            if (attempt == 1) beforeCommit()
+            // a lost race discards the stale staging and re-stages against
+            // the winner's snapshot
+            Right(CommitStore.Publish(v + 1,
+              nextBody(spark, v, entries, staged, schema, stagedSchemaOf(st.rows), full),
+              Some(v + 1), () => fs.delete(stagePath, true): Unit))
+          }
       }
-      if (v == 0) checkSpec()
-      // unionSchema's add-only rule BEFORE any leaf is written, so a
-      // refused commit stages nothing (tryPublish re-applies it)
-      if (!full) unionSchema(schema, stagedSchemaOf(st.rows)): Unit
-      val stageRel = s"$DataDir/${UUID.randomUUID()}"
-      val stagePath = new Path(s"$dir/$stageRel")
-      val leaves: Map[String, Entry] =
-        if (st.keys.isEmpty) Map.empty
-        else {
-          // ALL rewritten partitions stage in ONE job; the written leaves
-          // ARE the staged entries (key = leaf name minus the column
-          // prefix; hive escaping is the identity on the hex/NULL alphabet)
-          writeLaidOut(st.rows, st.layout, stagePath.toString, st.widenTo)
-          fs.listStatus(stagePath).toSeq
-            .map(_.getPath.getName)
-            .filter(_.startsWith(PKey + "="))
-            .map { leaf =>
-              val k = leaf.stripPrefix(PKey + "=")
-              k -> Entry(s"$stageRel/$leaf", st.values.get(k)
-                .orElse(entries.get(k).map(_.vhex))
-                .getOrElse(refuse(dir, v + 1, s"would stage key $k without a value")))
-            }.toMap
-        }
-      // a rewritten partition that exists but staged no leaf was emptied:
-      // its entry must DROP, not linger pointing at old data
-      val staged =
-        if (full) leaves
-        else leaves ++ st.keys
-          .filter(k => entries.contains(k) && !leaves.contains(k))
-          .map(_ -> Entry(Tombstone, ""))
-      if (staged.isEmpty && !full) {
-        fs.delete(stagePath, true): Unit
-        return None
-      }
-      if (attempt == 1) beforeCommit()
-      if (tryPublish(spark, store, log, v, entries, staged, schema,
-          stagedSchemaOf(st.rows), full)) return Some(v + 1)
-      // lost the race: discard the stale staging and re-stage against
-      // the winner's snapshot
-      fs.delete(stagePath, true): Unit
     }
-    throw new LostRace(
-      s"TxTable.$op lost the commit race $maxRetries times on $dir")
   }
-
-  /** [[commit]] ran out of attempts: every one lost its CAS. */
-  private final class LostRace(msg: String) extends IllegalStateException(msg)
 
   /** The ONE staging write every commit path shares — upserts, CDC
     * applies, deletes, and the maintenance rewrites all land their
@@ -1731,12 +1702,8 @@ object TxTable {
         .getOrElse(BigInt(Long.MaxValue))
       est <= advisoryBytes
     }
-    // optimizeWrite: co-locate each partition's rows in one task before
-    // the write — one file per leaf per commit instead of
-    // (tasks × leaves); one extra exchange, the wide-commit trade
     val placed =
-      if (layout.optimizeWrite) df.repartition(col(PKey))
-      else if (smallCommit) {
+      if (smallCommit) {
         // one leaf: one task holds it without an exchange
         if (widenTo == 1) df.coalesce(1)
         else df.repartition(
@@ -1754,7 +1721,7 @@ object TxTable {
     }.partitionBy(PKey).parquet(path)
   }
 
-  /** Publish version v+1: a DELTA body of just this commit's entries
+  /** The body of version v+1: a DELTA of just this commit's entries
     * (tombstones included), except at the checkpoint cadence (v+1 = 1
     * or a multiple of the interval) where the full folded map is
     * written — so steady-state commit cost is O(touched partitions),
@@ -1766,21 +1733,17 @@ object TxTable {
     * recorded on a checkpoint, and on a delta only when it changed. A
     * `full` commit replaces the table: a checkpoint of exactly
     * `staged`, under the staged schema. */
-  private def tryPublish(
-      spark: SparkSession, store: CommitStore, log: String,
-      v: Long, baseEntries: Map[String, Entry],
-      staged: Map[String, Entry],
-      prevSchema: StructType,
-      stagedSchema: StructType, full: Boolean): Boolean = {
+  private def nextBody(
+      spark: SparkSession, v: Long, baseEntries: Map[String, Entry],
+      staged: Map[String, Entry], prevSchema: StructType,
+      stagedSchema: StructType, full: Boolean): Seq[String] = {
     val next = v + 1
     val post = if (full) stagedSchema else unionSchema(prevSchema, stagedSchema)
     val isCheckpoint = full || next == 1 || next % checkpointInterval(spark) == 0
     val carried = if (isCheckpoint || post != prevSchema) Some(post) else None
-    val body =
-      if (isCheckpoint)
-        render("checkpoint", if (full) staged else applyDelta(baseEntries, staged), carried)
-      else render("delta", staged, carried)
-    store.tryCommit(log, next, body)
+    if (isCheckpoint)
+      render("checkpoint", if (full) staged else applyDelta(baseEntries, staged), carried)
+    else render("delta", staged, carried)
   }
 
   /** Fold fragmented leaves — a rows-preserving maintenance commit:
@@ -1806,8 +1769,8 @@ object TxTable {
   def compactFiles(
       spark: SparkSession, dir: String, partitionCol: PartitionSpec,
       maxFilesPerLeaf: Int = 4, layout: Layout = Layout.none,
-      maxRetries: Int = 10, where: Option[Column] = None): Unit =
-    compactWhere(spark, dir, partitionCol, layout, maxRetries, "compactFiles",
+      where: Option[Column] = None): Unit =
+    compactWhere(spark, dir, partitionCol, layout, "compactFiles",
       where)(files => files.length > maxFilesPerLeaf)
 
   /** [[compactFiles]] with a BYTE threshold instead of a file count
@@ -1820,39 +1783,32 @@ object TxTable {
   def compactSmallFiles(
       spark: SparkSession, dir: String, partitionCol: PartitionSpec,
       targetBytes: Long, layout: Layout = Layout.none,
-      maxRetries: Int = 10, where: Option[Column] = None): Unit =
-    compactWhere(spark, dir, partitionCol, layout, maxRetries,
+      where: Option[Column] = None): Unit =
+    compactWhere(spark, dir, partitionCol, layout,
       "compactSmallFiles", where) { files =>
       val total = files.map(_.getLen).sum
       files.length > math.max(1L, (total + targetBytes - 1) / targetBytes)
     }
 
-  /** Global clustering rewrite — the transactional OPTIMIZE ZORDER:
-    * every live leaf is rewritten with rows clustered on the Morton
-    * curve of (`xCol`, `yCol`), as ONE rows-preserving maintenance
+  /** Global clustering rewrite — the transactional `OPTIMIZE … WHERE …
+    * ZORDER BY (…)`: every live leaf is rewritten with rows clustered
+    * on the Morton curve of `cols`, as ONE rows-preserving maintenance
     * commit through the same CAS as any writer ([[diff]] across it
-    * emits nothing — its correctness probe). [[Layout]]'s per-file
-    * sort ([[compactFiles]] preserves it) gives zone maps on the sort
-    * column only; this is the complementary move when TWO independent
-    * probe columns matter and only one dimension can own the directory
-    * partitioning — each row group's (x, y) bounding box comes out
-    * tight in both coordinates, so a range probe on either column
-    * skips ~√G of G groups (the SortedWriter.writeZOrdered layout,
-    * landed transactionally). Mechanics: one 4-value stats pass bounds
-    * the 16-bit bucket scale (at lake scale these come from table
-    * metadata), a range repartition on (partition key, z) hands each
-    * task a contiguous z-slice so FILES get tight bounds too, and the
-    * z column drops out of the written schema. `layout` contributes
-    * blooms/row-group sizing only — its `sortCols` are ignored (the
-    * z-cluster IS the sort; a secondary sort would undo it). */
-  def optimizeZOrder(
-      spark: SparkSession, dir: String, partitionCol: PartitionSpec,
-      xCol: String, yCol: String, layout: Layout = Layout.none,
-      maxRetries: Int = 10): Unit =
-    optimizeZOrderBy(spark, dir, partitionCol, Seq(xCol, yCol), layout, maxRetries)
-
-  /** [[optimizeZOrder]] generalized on both axes the public formats'
-    * `OPTIMIZE … WHERE … ZORDER BY (…)` has:
+    * emits nothing, whatever the scope — its correctness probe).
+    * [[Layout]]'s per-file sort ([[compactFiles]] preserves it) gives
+    * zone maps on the sort column only; this is the complementary move
+    * when SEVERAL independent probe columns matter and only one
+    * dimension can own the directory partitioning — each row group's
+    * bounding box comes out tight in every coordinate, so a range probe
+    * on either of two columns skips ~√G of G groups. Mechanics: one
+    * min/max stats pass bounds each column's 16-bit bucket scale (at
+    * lake scale these come from table metadata), a range repartition
+    * on (partition key, z) hands each task a contiguous z-slice so
+    * FILES get tight bounds too, and the z column (named clear of the
+    * table's columns) drops out of the written schema. `layout`
+    * contributes blooms/row-group sizing only — its `sortCols` are
+    * ignored (the z-cluster IS the sort; a secondary sort would undo
+    * it).
     *
     *  - `cols`: 1–4 clustering columns — the Morton interleave
     *    ([[SortedWriter.zvalueN]]) generalizes, at the usual lake
@@ -1869,19 +1825,15 @@ object TxTable {
     *    while `where`-scoped runs (yesterday's partitions, one tenant)
     *    bound both. Z-bucket bounds are computed over the SCOPED rows,
     *    so a scoped pass clusters its slice as tightly as a full pass
-    *    would.
-    *
-    * Rows-preserving like every maintenance verb: [[diff]] across the
-    * commit emits nothing, whatever the scope. */
+    *    would. */
   def optimizeZOrderBy(
       spark: SparkSession, dir: String, partitionCol: PartitionSpec,
       cols: Seq[String], layout: Layout = Layout.none,
-      maxRetries: Int = 10, where: Option[Column] = None,
+      where: Option[Column] = None,
       beforeCommit: () => Unit = () => ()): Unit = {
     require(cols.nonEmpty && cols.size <= 4,
       s"optimizeZOrderBy takes 1-4 clustering columns, got ${cols.size}")
-    commit(spark, dir, "optimizeZOrder", Some(partitionCol), maxRetries,
-        beforeCommit) { tip =>
+    commit(spark, dir, "optimizeZOrder", Some(partitionCol), beforeCommit) { tip =>
       // scope BEFORE touching a file — and re-scope on every retry, so
       // a lost race recomputes against the winner's manifest and never
       // re-stages more than the predicate's leaves
@@ -1910,11 +1862,9 @@ object TxTable {
           .repartitionByRange(n, col(PKey), col(zCol))
           .sortWithinPartitions(col(PKey), col(zCol))
           .drop(zCol)
-        // sortCols AND optimizeWrite stripped: the z-range repartition +
-        // sort above IS this write's placement — a hash re-shuffle here
-        // would undo the clustering it exists to lay down
-        Some(Stage(clustered, scope.keys,
-          layout = layout.copy(sortCols = Nil, optimizeWrite = false)))
+        // sortCols stripped: the z-range repartition + sort above IS this
+        // write's order — a secondary sort would undo the clustering
+        Some(Stage(clustered, scope.keys, layout = layout.copy(sortCols = Nil)))
       }
     }
   }
@@ -1925,11 +1875,11 @@ object TxTable {
     * is itself the cost a scoped compaction avoids. */
   private def compactWhere(
       spark: SparkSession, dir: String, partitionCol: PartitionSpec,
-      layout: Layout, maxRetries: Int, op: String,
+      layout: Layout, op: String,
       where: Option[Column] = None)(
       needsFold: Seq[org.apache.hadoop.fs.FileStatus] => Boolean): Unit = {
     val fs = fsOf(spark, dir)
-    commit(spark, dir, op, Some(partitionCol), maxRetries) { tip =>
+    commit(spark, dir, op, Some(partitionCol)) { tip =>
       val scope = where.fold(tip.entries)(
         entriesWhere(spark, tip.entries, partitionCol, _))
       val needy = scope.filter { case (_, e) =>
@@ -1971,22 +1921,18 @@ object TxTable {
     val fs = fsOf(spark, dir)
     val log = s"$dir/$LogDir"
     val store = CommitStore.forPath(fs, log)
-    var (tip, tipLines) = store.latest(log)
-    if (tip == 0) return
-    var guard = 0
-    while (kindOf(dir, tip, tipLines) != "checkpoint") {
-      guard += 1
-      if (guard > 50) throw new IllegalStateException(
-        s"vacuum lost the checkpoint race 50 times on $dir")
-      val full = resolveAt(store, dir, tip, Some(tipLines)).getOrElse(
-        throw new IllegalStateException(s"manifest chain for version $tip is broken"))
-      if (!store.tryCommit(log, tip + 1,
-          render("checkpoint", full.entries, Some(full.schema)))) {
-        // a live writer took the slot; fall through and re-read
+    // a lost race to a live writer re-reads the new tip
+    val tip = CommitStore.retrying(store, log, "TxTable.vacuum", dir) { _ =>
+      val (v, lines) = store.latest(log)
+      if (v == 0 || kindOf(dir, v, lines) == "checkpoint") Left(v)
+      else {
+        val full = resolveAt(store, dir, v, Some(lines)).getOrElse(
+          throw new IllegalStateException(s"manifest chain for version $v is broken"))
+        Right(CommitStore.Publish(v + 1,
+          render("checkpoint", full.entries, Some(full.schema)), v + 1))
       }
-      val t = store.latest(log)
-      tip = t._1; tipLines = t._2
     }
+    if (tip == 0) return
 
     val keepOldest = math.max(1L, tip - math.max(1, retainVersions) + 1)
     // walk down to the checkpoint the oldest retained version resolves

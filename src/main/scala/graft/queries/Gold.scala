@@ -140,12 +140,6 @@ object Gold {
       "WITH " + densifiedCte(s"date_id = $D") +
         "\nSELECT * FROM densified"),
 
-    // T3 again, through the SQL extension surface (§2.11): the same
-    // densification written as plain SQL text with the
-    // `linear_interpolate` table function (a Catalyst Generator,
-    // fn/InterpGenerator) doing the per-group kernel via LATERAL VIEW
-    // over collect_list'd points. Same oracle as t3 — the two
-    // formulations must agree to the bit.
     // Gap REPORT — the reference's completeness gate
     // (/root/reference/dags/etl/fact_gold_price.py:433-440 expects
     // sources × sides × 60 rows/hour) generalized into a queryable
@@ -190,6 +184,12 @@ object Gold {
          |  MIN(m) AS first_minute, MAX(m) AS last_minute
          |FROM g GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin),
 
+    // T3 again, through the SQL extension surface (§2.11): the same
+    // densification written as plain SQL text with the
+    // `linear_interpolate` table function (a Catalyst Generator,
+    // fn/InterpGenerator) doing the per-group kernel via LATERAL VIEW
+    // over collect_list'd points. Same oracle as t3 — the two
+    // formulations must agree to the bit.
     "t8_interp_sql" -> Q(
       (s, dir) =>
         Interpolate.densifySql(s,

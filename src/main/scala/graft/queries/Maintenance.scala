@@ -124,28 +124,29 @@ object Maintenance {
         |GROUP BY 1, 2
         |ORDER BY 1, 2""".stripMargin),
 
-    // The layout layer run END-TO-END under the oracle gate (it was
-    // spec-only before): events are rewritten through
-    // SortedWriter.writeZOrdered on (user_id, value) with deliberately
-    // small row groups, then a 2-D range probe — the exact query shape
-    // Z-ordering exists for — reads BACK through the skipping path
-    // (both predicates push to the parquet scan, whose row-group
-    // min/max bounds are tight in both dimensions under the Z layout)
-    // and aggregates per event_type with decimal sums. The oracle runs
-    // the same probe over the RAW table: values must survive the
-    // rewrite bit-for-bit, proving the layout pass reorders rows and
-    // nothing else. Temp layout dirs are deleted once the result
-    // materializes (the t16 discipline — a bench run is 10+
+    // The layout layer run END-TO-END under the oracle gate: events
+    // land in a TxTable partitioned by event_type and are re-clustered
+    // by OPTIMIZE ZORDER on (user_id, value) with deliberately small
+    // row groups, then a 2-D range probe — the exact query shape
+    // Z-ordering exists for — reads the snapshot BACK through the
+    // skipping path (both predicates push to the parquet scan, whose
+    // row-group min/max bounds are tight in both dimensions under the
+    // Z layout) and aggregates per event_type with decimal sums. The
+    // oracle runs the same probe over the RAW table: values must
+    // survive the rewrite bit-for-bit, proving the layout pass reorders
+    // rows and nothing else. Temp table dirs are deleted once the
+    // result materializes (the t16 discipline — a bench run is 10+
     // invocations).
     "x_zorder_scan" -> Q(
       (s, dir) => {
         val base = java.nio.file.Files
           .createTempDirectory("graft_zorder").toString
-        val zDir = s"$base/events_z"
-        graft.io.SortedWriter.writeZOrdered(
-          Tables.events(s, dir), zDir, "user_id", "value",
-          rowGroupBytes = 256L * 1024)
-        val out = s.read.parquet(zDir)
+        val tbl = s"$base/events_z"
+        graft.io.TxTable.replaceAll(s, tbl, Tables.events(s, dir), "event_type")
+        graft.io.TxTable.optimizeZOrderBy(s, tbl, "event_type",
+          Seq("user_id", "value"),
+          graft.io.Layout(rowGroupBytes = Some(256L * 1024)))
+        val out = graft.io.TxTable.snapshot(s, tbl).get
           .filter(col("user_id").between(10, 60) &&
             col("value").between(10.0, 60.0))
           .groupBy(col("event_type"))
@@ -553,8 +554,8 @@ object Maintenance {
           Tables.events(s, dir)
             .select(col("event_id"), col("event_type"), col("value")),
           "event_id", "event_id", "event_type")
-        graft.io.TxTable.optimizeZOrder(s, tbl, "event_type",
-          "value", "event_id")
+        graft.io.TxTable.optimizeZOrderBy(s, tbl, "event_type",
+          Seq("value", "event_id"))
         val out = graft.io.TxTable.snapshot(s, tbl).get
           .filter(col("value") >= 100.0 && col("value") < 400.0)
           .groupBy(col("event_type"))

@@ -144,7 +144,7 @@ class MergeWriterSpec extends SparkTestBase {
                 (id, id * 1.0, 1L, 20240101),          // contended partition
                 (1000L + id, 1.0, 1L, 20240200 + w)    // writer-private partition
               ).toDF("id", "price", "etl_seq", "date_id"),
-              "id", "etl_seq", "date_id", maxRetries = 50)
+              "id", "etl_seq", "date_id")
           }
         }
       }

@@ -2,8 +2,9 @@ package graft
 
 import java.nio.file.Files
 
-import graft.io.BucketedWriter
+import graft.io.{BucketedWriter, Layout, TxTable}
 import graft.ops.Skew
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale techniques that only show up under load: salting for skewed
@@ -185,19 +186,31 @@ class ScaleToolkitSpec extends SparkTestBase {
     (perGroup.collect { case (n, true) => n }.sum, perGroup.map(_._1).sum)
   }
 
+  /** The one leaf directory of a one-partition TxTable at `dir`. */
+  private def onlyLeaf(dir: String): String =
+    s"$dir/${TxTable.latest(spark, dir)._2.values.toSeq match { case Seq(l) => l }}"
+
+  /** `rows` committed as a one-partition TxTable under `layout`; returns
+    * its leaf directory. */
+  private def txLeaf(dir: String, rows: DataFrame, layout: Layout): String = {
+    TxTable.replaceAll(spark, dir, rows.withColumn("part", lit(0)), "part", layout)
+    onlyLeaf(dir)
+  }
+
   test("sorted layout lets row-group statistics skip most of a range scan") {
-    // SortedWriter's zone-map claim, measured on footers: the same rows
-    // written sorted vs shuffled by the predicate column, same small row
-    // groups — under the sorted layout only a small fraction of rows
-    // live in groups whose min/max overlaps a narrow range probe, while
-    // under the shuffled layout every group spans the range
+    // Layout's zone-map claim, measured on footers: the same rows
+    // written sorted (a TxTable commit under `sortCols`) vs shuffled by
+    // the predicate column, same small row groups — under the sorted
+    // layout only a small fraction of rows live in groups whose min/max
+    // overlaps a narrow range probe, while under the shuffled layout
+    // every group spans the range
     val s = spark
     import s.implicits._
     val base = Files.createTempDirectory("graft_sorted").toString
     val rows = (1 to 300000).map(i => (i.toLong, i.toLong, s"payload_$i"))
       .toDF("k", "id", "pay")
-    graft.io.SortedWriter.writeSorted(
-      rows.repartition(1), s"$base/sorted", Seq("k"), rowGroupBytes = 1L << 20)
+    val sortedLeaf = txLeaf(s"$base/sorted", rows.repartition(1),
+      Layout(sortCols = Seq("k"), rowGroupBytes = Some(1L << 20)))
     // same row groups, adversarial order: k scattered by hash so every
     // group's min/max spans the whole range
     rows.repartition(1).sortWithinPartitions(xxhash64(col("k")))
@@ -205,12 +218,11 @@ class ScaleToolkitSpec extends SparkTestBase {
       .mode("overwrite").parquet(s"$base/shuffled")
 
     // both layouts return the same answer through a live scan
-    def answer(path: String): Long =
-      spark.read.parquet(path).filter(col("k").between(1000, 2000)).count()
-    assert(answer(s"$base/sorted") === 1001L)
-    assert(answer(s"$base/shuffled") === 1001L)
+    def answer(df: DataFrame): Long = df.filter(col("k").between(1000, 2000)).count()
+    assert(answer(TxTable.snapshot(spark, s"$base/sorted").get) === 1001L)
+    assert(answer(spark.read.parquet(s"$base/shuffled")) === 1001L)
 
-    val (sorted, totalS) = statSurfacedRows(s"$base/sorted", "k", 1000, 2000)
+    val (sorted, totalS) = statSurfacedRows(sortedLeaf, "k", 1000, 2000)
     val (shuffled, totalH) = statSurfacedRows(s"$base/shuffled", "k", 1000, 2000)
     assert(totalS === 300000L && totalH === 300000L)
     assert(shuffled === 300000L,
@@ -226,30 +238,30 @@ class ScaleToolkitSpec extends SparkTestBase {
     // the z-curve claim, measured on footers: one layout, two
     // independent probe columns, both get row-group skipping — where a
     // single-column sort gives skipping on its own column and none on
-    // the other. 256 z-range files give each file an (x, y) bounding
-    // box of ~1/16 of either dimension, so a 1%-wide probe structurally
-    // overlaps at most ~2/16 of the files even when the sampled range
-    // boundaries straddle z-cell edges — the 4x floors below hold with
-    // 2x headroom, where the old 32-file layout sat exactly at its 2x
-    // floor and flaked with boundary-sampling jitter.
+    // the other. OPTIMIZE ZORDER lays the rows along the curve in 32 KB
+    // row groups, ~256 of them, each a z-slice whose (x, y) bounding
+    // box is ~1/16 of either dimension, so a 1%-wide probe structurally
+    // overlaps at most ~2/16 of the groups even where a slice straddles
+    // z-cell edges — the 4x floors below hold with 2x headroom.
     val s = spark
     import s.implicits._
     val base = Files.createTempDirectory("graft_zorder").toString
     val rows = (1 to 300000).map { i =>
       val x = (i * 2654435761L) % 100000L        // Knuth-scrambled
       val y = (i * 1103515245L + 12345L) % 100000L
-      (x, y, s"payload_$i")
-    }.toDF("x", "y", "pay")
-    graft.io.SortedWriter.writeZOrdered(
-      rows, s"$base/zorder", "x", "y", rowGroupBytes = 1L << 20,
-      numFiles = Some(256))
+      (x, y, s"payload_$i", 0)
+    }.toDF("x", "y", "pay", "part")
+    TxTable.replaceAll(spark, s"$base/zorder", rows, "part")
+    TxTable.optimizeZOrderBy(spark, s"$base/zorder", "part", Seq("x", "y"),
+      Layout(rowGroupBytes = Some(32L * 1024)))
     // control: sorted by x only — perfect on x, blind on y
-    graft.io.SortedWriter.writeSorted(
-      rows.repartition(1), s"$base/xsorted", Seq("x"), rowGroupBytes = 1L << 20)
+    val xsortedLeaf = txLeaf(s"$base/xsorted", rows.drop("part").repartition(1),
+      Layout(sortCols = Seq("x"), rowGroupBytes = Some(1L << 20)))
 
-    val (blindY, totalC) = statSurfacedRows(s"$base/xsorted", "y", 40000, 41000)
-    val (zX, totalZ) = statSurfacedRows(s"$base/zorder", "x", 40000, 41000)
-    val (zY, _) = statSurfacedRows(s"$base/zorder", "y", 40000, 41000)
+    val zLeaf = onlyLeaf(s"$base/zorder")
+    val (blindY, totalC) = statSurfacedRows(xsortedLeaf, "y", 40000, 41000)
+    val (zX, totalZ) = statSurfacedRows(zLeaf, "x", 40000, 41000)
+    val (zY, _) = statSurfacedRows(zLeaf, "y", 40000, 41000)
     assert(totalC === 300000L && totalZ === 300000L)
     assert(blindY === 300000L,
       s"x-sorted control unexpectedly skips on y ($blindY) — control broken")
@@ -258,8 +270,9 @@ class ScaleToolkitSpec extends SparkTestBase {
     assert(zY * 4 <= blindY,
       s"z-order y-probe surfaces $zY rows vs $blindY unskipped — weak y skipping")
     // and the same answers come back through a live scan
-    assert(spark.read.parquet(s"$base/zorder").filter(col("x").between(40000, 41000)).count() ===
-      spark.read.parquet(s"$base/xsorted").filter(col("x").between(40000, 41000)).count())
+    def answer(t: String): Long = TxTable.snapshot(spark, s"$base/$t").get
+      .filter(col("x").between(40000, 41000)).count()
+    assert(answer("zorder") === answer("xsorted"))
   }
 
   test("salted join is row-identical to the direct join on a skewed key") {
@@ -280,16 +293,17 @@ class ScaleToolkitSpec extends SparkTestBase {
     assert(plan.contains("_salt"), s"salt column missing from the join plan:\n$plan")
   }
 
-  test("writeZOrdered tolerates user columns named like its internals") {
+  test("optimizeZOrderBy tolerates user columns named like its internals") {
     val s = spark
     import s.implicits._
     val base = Files.createTempDirectory("graft_zcollide").toString
-    // xmin / __z0 used to be internal names — must survive as user data
+    // __z0 is the first z-column name optimizeZOrderBy tries: it and
+    // xmin must survive as user data, the partition column included
     val rows = (1 to 5000).map(i => (i.toLong, (i * 7 % 5000).toLong,
       s"xmin_$i", i % 3)).toDF("x", "y", "xmin", "__z0")
-    graft.io.SortedWriter.writeZOrdered(
-      rows, s"$base/z", "x", "y", rowGroupBytes = 1L << 20)
-    val back = spark.read.parquet(s"$base/z")
+    TxTable.replaceAll(spark, s"$base/z", rows, "__z0")
+    TxTable.optimizeZOrderBy(spark, s"$base/z", "__z0", Seq("x", "y"))
+    val back = TxTable.snapshot(spark, s"$base/z").get
     assert(back.columns.sorted.toSeq === Seq("__z0", "x", "xmin", "y"))
     assert(back.count() === 5000)
     assert(back.exceptAll(rows).isEmpty && rows.exceptAll(back).isEmpty,
@@ -336,9 +350,8 @@ class ScaleToolkitSpec extends SparkTestBase {
     val base = Files.createTempDirectory("graft_bloom").toString
     val rows = (1 to 300000).map(i => ((i * 2654435761L) % 1000000L, s"payload_$i"))
       .toDF("k", "pay")
-    graft.io.SortedWriter.writeWithBloom(
-      rows.repartition(1), s"$base/bloom", Seq("k"),
-      expectedNdv = 300000, rowGroupBytes = 1L << 20)
+    val bloomLeaf = txLeaf(s"$base/bloom", rows.repartition(1),
+      Layout(bloomCols = Seq("k"), bloomNdv = 300000, rowGroupBytes = Some(1L << 20)))
     rows.repartition(1).write
       .option("parquet.block.size", 1L << 20)
       .mode("overwrite").parquet(s"$base/plain")
@@ -352,7 +365,7 @@ class ScaleToolkitSpec extends SparkTestBase {
     // the probe key in (at least) most groups: at a 1% false-positive
     // rate the chance of even half the groups false-matching is nil, so
     // the half floor is structural, not tuned
-    val verdicts = footerBlocks(s"$base/bloom") { (r, b) =>
+    val verdicts = footerBlocks(bloomLeaf) { (r, b) =>
       val kChunk = b.getColumns.asScala.find(_.getPath.toDotString == "k").get
       val bf = r.getBloomFilterDataReader(b).readBloomFilter(kChunk)
       assert(bf != null, "k bloom filter missing from a row group")
@@ -363,7 +376,7 @@ class ScaleToolkitSpec extends SparkTestBase {
     assert(rejected * 2 >= verdicts.size,
       s"bloom rejected only $rejected of ${verdicts.size} groups — bloom skipping is not engaging")
     // and the probe answer itself is layout-independent
-    assert(spark.read.parquet(s"$base/bloom").filter(col("k") === 999983L).count() ===
+    assert(TxTable.snapshot(spark, s"$base/bloom").get.filter(col("k") === 999983L).count() ===
       spark.read.parquet(s"$base/plain").filter(col("k") === 999983L).count())
   }
 

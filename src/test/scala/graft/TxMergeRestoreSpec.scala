@@ -136,22 +136,21 @@ class TxMergeRestoreSpec extends SparkTestBase {
     assert(TxTable.snapshot(s, dir).get.filter(col("id").isNull).count() == 2)
   }
 
-  test("optimizeWrite stages ONE file per leaf on a wide fragmented commit") {
+  test("a small wide fragmented commit stages ONE file per leaf") {
     val s = spark; import s.implicits._
-    import graft.io.Layout
     val dir = Files.createTempDirectory("graft_tx_ow").toString + "/fact"
-    // 6-way repartitioned batch over 4 partitions: the default shape
-    // writes up to 6 files per leaf; optimizeWrite collapses to 1
+    // 6-way repartitioned batch over 4 partitions: an unplaced write
+    // lands up to 6 files per leaf; the small-commit placement, one
+    // task per key, collapses each leaf to 1
     val batch = (1L to 400L)
       .map(i => (i, s"p${i % 4}", i.toDouble)).toDF("id", "p", "v")
       .repartition(6)
-    TxTable.upsert(s, dir, batch, "id", "v", "p",
-      layout = Layout(optimizeWrite = true))
+    TxTable.upsert(s, dir, batch, "id", "v", "p")
     val leaves = TxTable.latest(s, dir)._2.values
     leaves.foreach { leaf =>
       val files = new java.io.File(dir, leaf)
         .listFiles().count(_.getName.endsWith(".parquet"))
-      assert(files == 1, s"optimizeWrite left $files files in $leaf")
+      assert(files == 1, s"the commit left $files files in $leaf")
     }
     // rows intact
     assert(TxTable.snapshot(s, dir).get.count() == 400)
@@ -210,11 +209,13 @@ class TxMergeRestoreSpec extends SparkTestBase {
       Seq((2L, "a", 999.0), (8L, "b", 80.0)).toDF("id", "p", "v"),
       "id", "v", "p")                                                    // v2
     TxTable.delete(s, dir, Seq((1L, "a")).toDF("id", "p"), "id", "p")    // v3
-    assert(TxTable.history(s, dir) ==
-      Seq(1L -> "checkpoint", 2L -> "delta", 3L -> "delta"))
+    def kinds(): Seq[(Long, String)] = TxTable.historyFrame(s, dir)
+      .orderBy("version").select("version", "kind").collect().toSeq
+      .map(r => r.getLong(0) -> r.getString(1))
+    assert(kinds() == Seq(1L -> "checkpoint", 2L -> "delta", 3L -> "delta"))
 
     TxTable.restore(s, dir, 1L)                                          // v4
-    assert(TxTable.history(s, dir).last == (4L -> "checkpoint"))
+    assert(kinds().last == (4L -> "checkpoint"))
     val now = TxTable.snapshot(s, dir).get
     val v1 = TxTable.snapshotAt(s, dir, 1L).get
     assert(now.unionByName(v1).except(now.intersect(v1)).count() == 0)

@@ -43,7 +43,7 @@ class TxMetaSpec extends SparkTestBase {
       TxTable.compactFiles(s, dir, "event_type", maxFilesPerLeaf = 1)
     }
     intercept[IllegalArgumentException] {
-      TxTable.optimizeZOrder(s, dir, "event_type", "v", "id")
+      TxTable.optimizeZOrderBy(s, dir, "event_type", Seq("v", "id"))
     }
     // multi-column mismatch (same first column) is equally fatal
     intercept[IllegalArgumentException] {
@@ -261,7 +261,7 @@ class TxMetaSpec extends SparkTestBase {
     val s = spark
     val dir = Files.createTempDirectory("graft_meta_fresh").toString + "/fact"
     TxTable.compactFiles(s, dir, "wrong_col", maxFilesPerLeaf = 1)
-    TxTable.optimizeZOrder(s, dir, "wrong_col", "v", "id")
+    TxTable.optimizeZOrderBy(s, dir, "wrong_col", Seq("v", "id"))
     assert(TxTable.partitionColumnsOf(s, dir).isEmpty)
     TxTable.upsert(s, dir, rows, "id", "v", "day") // the REAL first writer
     assert(TxTable.partitionColumnsOf(s, dir).contains(Seq("day")))

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 import scala.jdk.CollectionConverters._
 
-/** The transactional OPTIMIZE ZORDER (io/TxTable.optimizeZOrder):
+/** The transactional OPTIMIZE ZORDER (io/TxTable.optimizeZOrderBy):
   * rows-preserving at the manifest level (diff emits nothing), and the
   * physical claim measured on footers — post-optimize row groups carry
   * tight (x, y) bounding boxes where the pre-optimize write's spanned
@@ -60,7 +60,7 @@ class TxOptimizeSpec extends SparkTestBase {
     val snapBefore = TxTable.snapshot(s, dir).get
       .collect().map(_.toString).sorted.toSeq
 
-    TxTable.optimizeZOrder(s, dir, "part", "x", "y", layout = lay)
+    TxTable.optimizeZOrderBy(s, dir, "part", Seq("x", "y"), layout = lay)
 
     assert(TxTable.latestVersion(s, dir) == 2L)
     val snapAfter = TxTable.snapshot(s, dir).get
@@ -76,7 +76,7 @@ class TxOptimizeSpec extends SparkTestBase {
   test("optimizeZOrder on an empty or never-committed table is a no-op") {
     val s = spark
     val dir = Files.createTempDirectory("graft_tx_zo_empty").toString + "/fact"
-    TxTable.optimizeZOrder(s, dir, "part", "x", "y")
+    TxTable.optimizeZOrderBy(s, dir, "part", Seq("x", "y"))
     assert(TxTable.latestVersion(s, dir) == 0L)
   }
 
