@@ -1,5 +1,6 @@
 package graft.io
 
+import graft.functions.Param
 import org.apache.spark.sql.{DataFrame, GraftStreamingFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.streaming.{Offset, Source}
 import org.apache.spark.sql.execution.streaming.runtime.LongOffset
@@ -152,13 +153,13 @@ class TxStreamSource(
     val opening =
       if (initialSnapshot && start.isEmpty && startingVersion >= 1)
         Seq(align(TxTable.diff(spark, path, 0L, startingVersion, key)
-          .withColumn("_commit_version", lit(startingVersion))))
+          .withColumn("_commit_version", Param(startingVersion))))
       else Seq.empty
     val incremental =
       if (fromV >= toV) Seq.empty
       else ((fromV + 1) to toV).map { v =>
         align(TxTable.diff(spark, path, v - 1, v, key)
-          .withColumn("_commit_version", lit(v)))
+          .withColumn("_commit_version", Param(v)))
       }
     val parts = opening ++ incremental
     val body =

@@ -1521,11 +1521,21 @@ object TxTable {
       // exists or not. Schemas align across an evolution commit. Not
       // checkpointed: the staging write into a FRESH dir is the merge
       // plan's only consumer.
-      val merged = touchedRows(spark, targetDir, tip, touchedKeys)
-        .fold(merge(batch.limit(0), batch)) { existing =>
-          val (e2, b2) = alignSchemas(existing, batch)
+      val existing = touchedRows(spark, targetDir, tip, touchedKeys)
+      def mergeOf(place: DataFrame => DataFrame): DataFrame =
+        existing.fold(merge(place(batch).limit(0), place(batch))) { e =>
+          val (e2, b2) = alignSchemas(place(e), place(batch))
           merge(e2, b2)
         }
+      // a small one-leaf commit merges on ONE partition: both inputs
+      // report a single partition, so their union does too, the merge
+      // (a latest-wins window, or none) plans no exchange, the
+      // staging write's coalesce(1) has nothing to do, and the existing
+      // rows stay ahead of the batch in the staged file
+      val onOne = mergeOf(_.coalesce(1))
+      val merged =
+        if (touchedKeys.size == 1 && smallCommit(onOne)) onOne
+        else mergeOf(identity)
       Some(Stage(merged, touchedKeys, touched, layout, touchedKeys.size))
     }
     count
@@ -1690,20 +1700,8 @@ object TxTable {
   private def writeLaidOut(
       df: DataFrame, layout: Layout, path: String, widenTo: Int = 0): Unit = {
     val spark = df.sparkSession
-    def advisoryBytes: Long = scala.util.Try(
-      org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")))
-      .getOrElse(64L * 1024 * 1024)
-    def coalescingOn: Boolean =
-      spark.conf.get("spark.sql.adaptive.enabled", "true").toBoolean &&
-        spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled", "true").toBoolean
-    def smallCommit: Boolean = widenTo >= 1 && coalescingOn && {
-      val est = scala.util.Try(df.queryExecution.optimizedPlan.stats.sizeInBytes)
-        .getOrElse(BigInt(Long.MaxValue))
-      est <= advisoryBytes
-    }
     val placed =
-      if (smallCommit) {
+      if (widenTo >= 1 && smallCommit(df)) {
         // one leaf: one task holds it without an exchange
         if (widenTo == 1) df.coalesce(1)
         else df.repartition(
@@ -1719,6 +1717,25 @@ object TxTable {
       acc.option(s"parquet.bloom.filter.enabled#$c", "true")
         .option(s"parquet.bloom.filter.expected.ndv#$c", layout.bloomNdv.toString)
     }.partitionBy(PKey).parquet(path)
+  }
+
+  /** The small-commit rule of [[writeLaidOut]]'s placement (and of
+    * [[mergeCommit]]'s one-partition merge): coalescing is on and the
+    * estimated size of `df` fits one advisory shuffle partition. */
+  private def smallCommit(df: DataFrame): Boolean = {
+    val conf = df.sparkSession.conf
+    def advisoryBytes: Long = scala.util.Try(
+      org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")))
+      .getOrElse(64L * 1024 * 1024)
+    val coalescingOn =
+      conf.get("spark.sql.adaptive.enabled", "true").toBoolean &&
+        conf.get("spark.sql.adaptive.coalescePartitions.enabled", "true").toBoolean
+    coalescingOn && {
+      val est = scala.util.Try(df.queryExecution.optimizedPlan.stats.sizeInBytes)
+        .getOrElse(BigInt(Long.MaxValue))
+      est <= advisoryBytes
+    }
   }
 
   /** The body of version v+1: a DELTA of just this commit's entries

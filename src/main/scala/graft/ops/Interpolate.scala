@@ -46,6 +46,15 @@ import org.apache.spark.sql.functions._
   * exchange ever touches them. Per-group state is bounded by 1440
   * minutes/day regardless of total data size; a hot source/date still
   * caps at its day's minute count, so there is no unbounded skew.
+  *
+  * The hour path (`onePartition = true`, FactPipeline.runHour) is the
+  * same plan on one partition: the input and the output are
+  * `coalesce(1)`'d, so the per-minute aggregate, the neighbor window
+  * and the bounds aggregate are satisfied by the single partition and
+  * plan no exchange; only the bounds broadcast runs a job of its own.
+  * An hour holds a few hundred ticks, far below what one task handles,
+  * where the explicit-width repartition would pay an exchange per
+  * subtree for nothing.
   */
 object Interpolate {
 
@@ -62,12 +71,19 @@ object Interpolate {
   /** Full densified table from a T1-shaped input
     * (source_id, side_id, date_id, time_id, rounded_time_id, price,
     * is_interpolated=false): actual rows unioned with generated rows.
+    *
+    * @param onePartition the caller's placement: `false` (the default;
+    *   the rebuild, `t3`) repartitions the points by the group keys to
+    *   an explicit width; `true` runs the whole operator on one
+    *   partition, for a batch one task holds (the hourly pipeline's
+    *   hour; see "Plan shape" above)
     */
-  def densify(factRows: DataFrame): DataFrame = {
+  def densify(factRows: DataFrame, onePartition: Boolean = false): DataFrame = {
     val spark = factRows.sparkSession
     import spark.implicits._
 
-    // The points subtree is repartitioned by the group keys with an
+    // Unless the caller places the batch on one partition, the points
+    // subtree is repartitioned by the group keys with an
     // EXPLICIT width. Two reasons, both scale-critical:
     //  - AQE sizes post-shuffle stages by their INPUT bytes, but this
     //    stage's downstream explode amplifies rows 100–1000× (minutes
@@ -84,7 +100,9 @@ object Interpolate {
     //    (partition by keys) — so the whole points pipeline runs on
     //    ONE exchange instead of two.
     val width = spark.sessionState.conf.numShufflePartitions
-    val ticks = factRows.repartition(width, keys.map(col): _*)
+    val ticks =
+      if (onePartition) factRows.coalesce(1)
+      else factRows.repartition(width, keys.map(col): _*)
 
     // One exact point per (group, minute): decimal mean of that minute's
     // non-NULL prices (deterministic — see scaladoc; all-NULL → NULL
@@ -195,11 +213,12 @@ object Interpolate {
         ).as("price"),
         lit(true).as("is_interpolated"))
 
-    val actualsOut = factRows.select(
+    val actualsOut = (if (onePartition) ticks else factRows).select(
       $"source_id", $"side_id", $"date_id", $"time_id", $"rounded_time_id",
       $"price", $"is_interpolated")
 
-    actualsOut.unionByName(interpolated)
+    val out = actualsOut.unionByName(interpolated)
+    if (onePartition) out.coalesce(1) else out
   }
 
   /** Same contract as [[densify]], expressed as plain SQL text over the

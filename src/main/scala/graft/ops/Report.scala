@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.functions.Param
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -57,7 +58,7 @@ object Report {
     // (broadcast) join off the fact-sized side. The inner join applies
     // the dim filter identically before or after the per-source mean.
     val perMinute = densified
-      .filter(col("date_id") === dateId)
+      .filter(col("date_id") === Param(dateId))
       .groupBy(col("source_id"), col("rounded_time_id").as("time_id"))
       .agg((sum(col("price").cast("decimal(28,10)")).cast("double") /
         count(col("price"))).as("price"))

@@ -144,11 +144,12 @@ class FactPipelineSpec extends SparkTestBase {
     assert(TxTable.snapshot(spark, interp).get.count() === 12L + r11.densifiedRows)
   }
 
-  test("transactional mode: an hour and its replay each run at most 13 Spark jobs; none reads the window back") {
+  test("transactional mode: an hour and its replay each run at most 6 Spark jobs; none reads the window back") {
     // The hour's fixed costs, pinned (20 jobs each at the time of the
     // one-pass batch): one pass per batch (materialize + touched keys +
-    // row count, which is also `extracted`), an exchange-free one-leaf
-    // placement, and the gate on the materialized densified hour
+    // row count, which is also `extracted`), one-partition merges and
+    // densify with no exchange (only densify's bounds broadcast runs a
+    // job of its own), and the gate on the materialized densified hour
     // instead of a parquet read-back of the published window. The
     // window replacement reuses the audited hour's checkpoint, so an
     // hour persists two batches: the fact batch and the densified hour.
@@ -177,13 +178,61 @@ class FactPipelineSpec extends SparkTestBase {
     }
     for (v <- Seq(1L, 2L)) {
       val (jobs, scanned, persisted) = hourRun(v)
-      assert(jobs <= 13, s"run $v launched $jobs Spark jobs")
+      assert(jobs <= 6, s"run $v launched $jobs Spark jobs")
       assert(persisted <= 2, s"run $v persisted $persisted batches")
       val leaf = publishedLeaf()
       assert(!scanned.exists(_.contains(leaf)),
         s"run $v read its own published window back: $scanned")
     }
     assert(TxTable.latest(spark, interp)._1 === 2L)
+  }
+
+  // goodEvents one hour later: Tehran hour 11 on the same date
+  private val nextHourEvents = evts(
+    (11L, "7", "click", 101.0, "2024-01-15 07:30:10"),
+    (12L, "7", "click", 107.0, "2024-01-15 07:32:20"),
+    (13L, "7", "click", 111.0, "2024-01-15 07:34:30"),
+    (14L, "8", "purchase", 51.0, "2024-01-15 07:30:40"),
+    (15L, "8", "purchase", 57.0, "2024-01-15 07:34:50"))
+
+  test("transactional mode: a second, different hour compiles no generated class") {
+    // the hour's date, hour and version reach the generated code as
+    // parameters, so hour 11 at a new version runs the classes hour 10
+    // compiled. Hour 10 runs twice first: its replay is the first run
+    // that merges against existing leaves, as every later hour does.
+    // The events are read from parquet, as a lake's are: over local
+    // rows the optimizer would evaluate the extract on the driver
+    val wh = Files.createTempDirectory("graft_pipeline_codegen").toString
+    goodEvents.unionByName(nextHourEvents).write.parquet(s"$wh/events")
+    val events = spark.read.parquet(s"$wh/events")
+    for (v <- Seq(1L, 2L))
+      FactPipeline.runHour(spark, events, wh, D, hour = 10, runVersion = v).get
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val before = compiles.getCount
+    val r = FactPipeline.runHour(spark, events, wh, D, hour = 11, runVersion = 3L).get
+    assert(compiles.getCount - before === 0L, "hour 11 compiled generated classes")
+    assert(r.extracted === 5L && r.gridMinutes === 5L)
+  }
+
+  test("transactional mode: a window replacement stages the rows outside the window ahead of the hour's") {
+    // the existing rows and the audited hour are merged on one
+    // partition, existing rows first; read in file order, the date
+    // leaf holds hour 10 (outside hour 11's window) and then hour 11
+    val wh = Files.createTempDirectory("graft_pipeline_order").toString
+    val interp = s"$wh/fact_gold_price_interpolated"
+    val events = goodEvents.unionByName(nextHourEvents)
+    for (h <- Seq(10, 11))
+      FactPipeline.runHour(spark, events, wh, D, hour = h, runVersion = 1L).get
+    val leaf = TxTable.latest(spark, interp)._2.values.toSeq match {
+      case Seq(one) => new java.io.File(interp, one)
+      case other => fail(s"expected one interpolated leaf, got $other")
+    }
+    val files = leaf.listFiles().filter(_.getName.endsWith(".parquet")).toSeq
+    assert(files.size === 1, s"the leaf staged ${files.size} files")
+    val hours = spark.read.parquet(files.head.getPath).collect()
+      .map(r => r.getAs[Int]("rounded_time_id") / 10000).toSeq
+    assert(hours.toSet === Set(10, 11))
+    assert(hours === hours.sorted, "the hour's rows precede rows outside its window")
   }
 
   test("transactional mode: a gate violation publishes nothing; the prior window stays readable") {

@@ -1,6 +1,8 @@
 package graft
 
 import graft.ops.{GoldModel, Interpolate, TypedDensify}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
 /** Differential + invariant tests for the interpolation operator
@@ -18,6 +20,7 @@ class InterpolateSpec extends SparkTestBase {
   private lazy val declarative = Interpolate.densify(factRows).cache()
   private lazy val typed =
     TypedDensify.densify(factRows, TypedDensify.gridByDate(factRows)).cache()
+  private object Aqe extends AdaptiveSparkPlanHelper
 
   test("declarative and typed kernels agree exactly") {
     val d = declarative
@@ -25,6 +28,17 @@ class InterpolateSpec extends SparkTestBase {
     assert(d.count() === t.count())
     assert(d.exceptAll(t).isEmpty && t.exceptAll(d).isEmpty,
       "Interpolate.densify() and TypedDensify.densify() diverge")
+  }
+
+  test("densify on one partition plans no shuffle and yields the same rows") {
+    // the hourly pipeline's placement: only the bounds broadcast remains
+    val one = Interpolate.densify(factRows, onePartition = true)
+    one.collect() // let AQE settle on the final plan
+    val plan = one.queryExecution.executedPlan
+    assert(Aqe.collect(plan) { case e: ShuffleExchangeExec => e }.isEmpty, plan.toString)
+    assert(one.rdd.getNumPartitions === 1)
+    assert(one.exceptAll(declarative).isEmpty && declarative.exceptAll(one).isEmpty,
+      "the one-partition placement changed the rows")
   }
 
   test("actual rows pass through unaltered") {

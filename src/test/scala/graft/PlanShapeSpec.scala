@@ -1,11 +1,17 @@
 package graft
 
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+
 /** Plan-shape invariants: the properties that make the engine hold at
   * 100 TB are asserted on the optimized physical plans themselves, so a
   * regression that silently de-optimizes a query (lost broadcast, lost
   * pruning, accidental cartesian) fails CI rather than a cluster.
   */
 class PlanShapeSpec extends SparkTestBase {
+
+  private object Aqe extends AdaptiveSparkPlanHelper
 
   private def executedPlanString(name: String): String = {
     val df = SparkEntry.queries(name)(spark, sfSmoke)
@@ -118,13 +124,21 @@ class PlanShapeSpec extends SparkTestBase {
     // AQE sizes post-shuffle stages by input bytes, but densify's explode
     // amplifies rows 100-1000x — the points exchange must be
     // user-specified (REPARTITION_BY_NUM origin) so AQE cannot coalesce
-    // the kernel loop down to a handful of tasks (see Interpolate).
+    // the kernel loop down to a handful of tasks (see Interpolate): the
+    // default placement, on the group keys at the session's width
     for (name <- Seq("t3_densify_interpolate", "t8_interp_sql")) {
       val df = SparkEntry.queries(name)(spark, sfSmoke)
-      df.count()
-      val plan = df.queryExecution.executedPlan.toString
-      assert(plan.contains("REPARTITION_BY_NUM"),
-        s"$name lost the explicit-width repartition of the points stage")
+      df.collect() // let AQE settle on the final plan
+      val byNum = Aqe.collect(df.queryExecution.executedPlan) {
+        case e: ShuffleExchangeExec if e.shuffleOrigin == REPARTITION_BY_NUM => e
+      }
+      assert(byNum.nonEmpty, s"$name lost the explicit-width repartition of the points stage")
+      byNum.map(_.outputPartitioning).foreach {
+        case HashPartitioning(exprs, n) =>
+          assert(n === spark.sessionState.conf.numShufflePartitions, name)
+          assert(exprs.map(_.references.head.name) === Seq("source_id", "side_id", "date_id"), name)
+        case other => fail(s"$name: the points exchange is $other")
+      }
     }
   }
 
