@@ -130,14 +130,7 @@ object Bench {
     require(only.subsetOf(SparkEntry.queries.keySet),
       s"unknown queries: ${(only -- SparkEntry.queries.keySet).mkString(", ")}")
     val cpus = LocalSpark.cpus
-    val spark = LocalSpark.builder(cpus)
-      // the generated-class cache defaults to 100 entries; this suite's
-      // 60+ queries × several codegen stages each evict one another
-      // between passes, so every pass recompiles (and re-JITs) its hot
-      // loops — measured 3× on the heaviest query. Any long-running
-      // cluster serving a query mix wants this raised the same way.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
+    val spark = LocalSpark.builder(cpus).getOrCreate()
     // ERROR: the one WARN this suite emits by design (Report's
     // single-partition grand-total window over the already-aggregated
     // per-source rows — deliberate and documented there) would repeat

@@ -413,15 +413,11 @@ private[io] case class TxRelation(
 }
 
 /** The batch change-feed relation behind `option("changesFrom", v)`:
-  * one frame of the per-commit row-level diffs in (fromV, toV], each
-  * row stamped `_commit_version` — [[TxStreamSource]]'s emission as a
-  * batch read, for consumers (audits, downstream batch ETL) that want
-  * a version range rather than a running stream. Costs the partitions
-  * the range's commits touched (diff's manifest pruning), never a
-  * table scan; schemas align across an evolution commit inside the
-  * range (older diffs null-padded). No filter pushdown — the frame is
-  * change-volume-sized by construction and Spark evaluates predicates
-  * on top. */
+  * [[TxTable.changes]] over (fromV, toV] — [[TxStreamSource]]'s
+  * emission as a batch read, for consumers (audits, downstream batch
+  * ETL) that want a version range rather than a running stream. No
+  * filter pushdown — the frame is change-volume-sized by construction
+  * and Spark evaluates predicates on top. */
 private[io] case class TxChangesRelation(
     spark: SparkSession, path: String, key: String,
     fromV: Long, toV: Long)
@@ -430,17 +426,7 @@ private[io] case class TxChangesRelation(
   override def sqlContext: SQLContext = spark.sqlContext
   override val needConversion: Boolean = false
 
-  private lazy val frame: DataFrame =
-    if (fromV >= toV) {
-      // empty range: a zero-row frame of the feed's pinned shape
-      val shape = TxStreamSource.feedSchema(spark, path, key)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row], shape)
-    } else
-      ((fromV + 1) to toV).map { v =>
-        TxTable.diff(spark, path, v - 1, v, key)
-          .withColumn("_commit_version", lit(v))
-      }.reduce(_.unionByName(_, allowMissingColumns = true))
+  private lazy val frame: DataFrame = TxTable.changes(spark, path, key, fromV, toV)
 
   override lazy val schema: StructType = frame.schema
 

@@ -1,6 +1,5 @@
 package graft.io
 
-import graft.functions.Param
 import org.apache.spark.sql.{DataFrame, GraftStreamingFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.streaming.{Offset, Source}
 import org.apache.spark.sql.execution.streaming.runtime.LongOffset
@@ -8,11 +7,11 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** `spark.readStream.format("graft-tx")` — the COMMIT-LOG-NATIVE
-  * streaming source over a [[TxTable]], one of the two feed shapes:
-  * the driver loop ([[graft.streaming.TxChangeFeed]], for
-  * applyCdc-style consumers that own their cursor), and this — a
-  * genuine Structured Streaming source a plain-Spark consumer reaches
-  * with zero graft imports:
+  * streaming source over a [[TxTable]]: a genuine Structured Streaming
+  * source a plain-Spark consumer reaches with zero graft imports. Its
+  * batches, the batch `changesFrom` read and
+  * [[graft.streaming.TxChangeFeed]]'s mirror and replicate all read
+  * one [[TxTable.changes]]:
   *
   * {{{
   *   spark.readStream.format("graft-tx")
@@ -25,8 +24,9 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   *
   * Offsets ARE commit versions (dense by the CAS construction, so a
   * LongOffset cursor is exact): `getOffset` is the O(1) `_tip` probe,
-  * and each micro-batch (start, end] is the union of the per-commit
-  * row-level diffs, every row stamped `_commit_version` — no second
+  * and each micro-batch (start, end] is [[TxTable.changes]] over that
+  * range — the per-commit row-level diffs, every row stamped
+  * `_commit_version`, aligned once to the pinned schema — no second
   * copy of the change data and no retention verb to operate: replay
   * depth is governed by the table's own [[TxTable.vacuum]] retention,
   * and a checkpoint resuming below the oldest retained version fails
@@ -129,10 +129,10 @@ class TxStreamSource(
   override def reportLatestOffset(): OffsetV2 =
     tipOffset(TxTable.latestVersion(spark, path))
 
-  /** Conform one commit's diff to the pinned schema: null-pad columns
-    * the diff lacks (pre-evolution commits), fix the column order, and
-    * drop columns the pinned schema predates (post-start widenings —
-    * they surface when the stream restarts, the file-source rule). */
+  /** Conform a batch to the pinned schema: null-pad columns it lacks
+    * (pre-evolution commits), fix the column order, and drop columns
+    * the pinned schema predates (post-start widenings — they surface
+    * when the stream restarts, the file-source rule). */
   private def align(d: DataFrame): DataFrame = {
     val padded = schema.fields.foldLeft(d)((acc, f) =>
       if (acc.columns.contains(f.name)) acc
@@ -141,8 +141,8 @@ class TxStreamSource(
   }
 
   override def getBatch(start: Option[Offset], end: Offset): DataFrame = {
-    val fromV = start.map(ver).getOrElse(startingVersion)
-    val toV = ver(end)
+    val incremental = TxTable.changes(spark, path, key,
+      start.map(ver).getOrElse(startingVersion), ver(end))
     // initial-snapshot bootstrap (startingVersion="snapshot"): the very
     // first batch (no prior offset) opens with the WHOLE state at the
     // pinned version as insert rows — diff(0 → pin) is exactly that and
@@ -150,24 +150,12 @@ class TxStreamSource(
     // replay fails (early history vacuumed) and costs one table read
     // instead of O(commits) diffs. Recovery re-plans the same range
     // deterministically (start is still None for batch 0).
-    val opening =
-      if (initialSnapshot && start.isEmpty && startingVersion >= 1)
-        Seq(align(TxTable.diff(spark, path, 0L, startingVersion, key)
-          .withColumn("_commit_version", Param(startingVersion))))
-      else Seq.empty
-    val incremental =
-      if (fromV >= toV) Seq.empty
-      else ((fromV + 1) to toV).map { v =>
-        align(TxTable.diff(spark, path, v - 1, v, key)
-          .withColumn("_commit_version", Param(v)))
-      }
-    val parts = opening ++ incremental
     val body =
-      if (parts.isEmpty) // defensive: an empty range is an empty batch
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[Row], schema)
-      else parts.reduce(_ unionByName _)
-    GraftStreamingFrame.ofBatch(body)
+      if (initialSnapshot && start.isEmpty && startingVersion >= 1)
+        TxTable.stampVersion(TxTable.diff(spark, path, 0L, startingVersion, key),
+          startingVersion).unionByName(incremental, allowMissingColumns = true)
+      else incremental
+    GraftStreamingFrame.ofBatch(align(body))
   }
 
   override def commit(end: Offset): Unit = ()
@@ -264,9 +252,7 @@ object TxStreamSource {
     val keyF = table.fields.find(_.name == key).getOrElse(
       throw new IllegalArgumentException(
         s"graft-tx streaming: key '$key' is not a column of $path"))
-    val reserved = table.fieldNames.filter(Set("change_type", "_commit_version"))
-    require(reserved.isEmpty, s"change-feed payload carries reserved column(s) " +
-      s"${reserved.mkString(", ")} — rename upstream")
+    TxTable.requireUnreserved(table.fieldNames.toSeq, "change_type", "_commit_version")
     StructType(
       (StructField("change_type", StringType) +: keyF +: table.fields.filterNot(_.name == key))
         .map(_.copy(nullable = true)) :+

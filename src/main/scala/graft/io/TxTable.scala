@@ -3,6 +3,7 @@ package graft.io
 import java.io.FileNotFoundException
 import java.util.UUID
 
+import graft.functions.Param
 import graft.ops.Merge
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
@@ -809,10 +810,7 @@ object TxTable {
     }
     val (a, b) = alignSchemas(side(from), side(to))
     val payload = b.columns.filterNot(_ == key).toSeq
-    // the readout injects change_type; a payload column of that name
-    // would be silently overwritten in the emitted rows — refuse loudly
-    require(!payload.contains("change_type"),
-      "diff payload carries reserved column change_type — rename it upstream")
+    requireUnreserved(payload, "change_type")
     val an = payload.foldLeft(a.select(b.columns.toSeq.map(col): _*))(
         (d, c) => d.withColumnRenamed(c, s"__a_$c"))
       .withColumnRenamed(key, "__a_key")
@@ -837,6 +835,41 @@ object TxTable {
           when(col("change_type") === "delete", col(s"__a_$c"))
             .otherwise(col(c)).as(c)): _*)
   }
+
+  /** Refuse a change-feed payload column named like a column the feed
+    * injects (`change_type`, `_commit_version`, a consumer's `_op` or
+    * `_seq`): the injected values would silently replace the data. */
+  private[graft] def requireUnreserved(columns: Seq[String], reserved: String*): Unit = {
+    val clash = columns.filter(reserved.contains)
+    require(clash.isEmpty, "change-feed payload carries reserved column(s) " +
+      s"${clash.mkString(", ")} — rename upstream")
+  }
+
+  /** `d` with every row stamped `_commit_version` = `v`, passed as a
+    * [[graft.functions.Param]] so every version runs the same generated
+    * code. */
+  private[io] def stampVersion(d: DataFrame, v: Long): DataFrame = {
+    requireUnreserved(d.columns.toSeq, "_commit_version")
+    d.withColumn("_commit_version", Param(v))
+  }
+
+  /** The change feed over (fromVersion, toVersion]: each commit's
+    * [[diff]] stamped with its version, unioned by name; a column a
+    * later commit adds is null in the earlier commits' rows. An empty
+    * range is an empty frame of the feed's shape
+    * ([[TxStreamSource.feedSchema]]). The one reader behind the batch
+    * `changesFrom` read, the `graft-tx` stream and
+    * [[graft.streaming.TxChangeFeed]]; it costs the partitions the
+    * range's commits touched, and a range reaching below the retention
+    * floor throws `IllegalArgumentException` as [[diff]] does. */
+  private[graft] def changes(
+      spark: SparkSession, dir: String, key: String,
+      fromVersion: Long, toVersion: Long): DataFrame =
+    if (fromVersion >= toVersion)
+      localFrame(spark, Nil, TxStreamSource.feedSchema(spark, dir, key))
+    else ((fromVersion + 1) to toVersion)
+      .map(v => stampVersion(diff(spark, dir, v - 1, v, key), v))
+      .reduce(_.unionByName(_, allowMissingColumns = true))
 
   // ---- transactional upsert -------------------------------------------
 
@@ -1001,8 +1034,8 @@ object TxTable {
     * atomically, which two separate upsert+delete commits cannot give a
     * reader. This is what makes a TxTable a change-feed SINK — a mirror
     * maintained by [[graft.streaming.TxChangeFeed.mirror]] applies each
-    * source commit's diff with this and is bit-equal to the source
-    * snapshot after every batch. Merge semantics are
+    * source commit's [[changes]] with this and is bit-equal to the
+    * source snapshot after every commit. Merge semantics are
     * [[Merge.applyCdc]]'s (latest change per key by seq wins, I/U
     * upsert, D drops); `changes` must carry the row's `partitionCol`
     * (the key→partition stability contract), and a partition whose

@@ -62,11 +62,12 @@ object FactPipeline {
     * and `runVersion` reach the generated code as parameters
     * (graft.functions.Param), so the next hour runs the classes the
     * last one compiled — provided the session's codegen cache
-    * (`spark.sql.codegen.cache.maxEntries`) holds an hour's classes.
-    * At Spark's default of 100 entries an hourly loop with a feed and a
-    * reader thrashes it: runHour compiles 88 classes every hour though
-    * its plans repeat, and takes 2.6–3.6 s against 0.9–1.5 s at 5,000
-    * entries (tools/compiles_per_hour.sc, 4 cores).
+    * (`spark.sql.codegen.cache.maxEntries`) holds an hour's classes,
+    * as `graft.LocalSpark`'s 5,000 entries do. At Spark's default of
+    * 100 entries an hourly loop with a feed and a reader thrashes it:
+    * runHour compiles 88 classes every hour though its plans repeat,
+    * and takes 2.6–3.6 s against 0.9–1.5 s at 5,000 entries
+    * (tools/compiles_per_hour.sc, 4 cores).
     *
     * @param events       raw tick source (events-shaped)
     * @param warehouseDir parquet warehouse root (fact + interpolated

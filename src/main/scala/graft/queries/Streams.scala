@@ -674,7 +674,7 @@ object Streams {
             .withColumn("value", col("value") * 2),
           "event_id", "ts", "event_type")
         graft.io.TxTable.vacuum(s, tbl, retainVersions = 1, graceMs = 0L)
-        def drain(): Unit = {
+        def runAvailableNow(): Unit = {
           val q = s.readStream.format("graft-tx")
             .option("key", "event_id")
             .option("startingVersion", "snapshot").load(tbl)
@@ -683,14 +683,14 @@ object Streams {
             .trigger(Trigger.AvailableNow()).start()
           q.awaitTermination()
         }
-        drain() // opening batch = the post-vacuum snapshot as inserts
+        runAvailableNow() // opening batch = the post-vacuum snapshot as inserts
         graft.io.TxTable.upsert(s, tbl, ev.filter(col("ts") >= d20),
           "event_id", "ts", "event_type")
         graft.io.TxTable.delete(s, tbl,
           ev.filter(col("event_type") === "click" && col("ts") >= d28)
             .select(col("event_id"), col("event_type")),
           "event_id", "event_type")
-        drain() // restart: per-commit tail off the checkpoint
+        runAvailableNow() // restart: per-commit tail off the checkpoint
         val out = s.read.parquet(sink)
           .groupBy(col("change_type"))
           .agg(count(lit(1)).as("n"),

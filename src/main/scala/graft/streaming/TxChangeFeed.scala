@@ -5,145 +5,103 @@ import graft.ops.Merge
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Streaming change-feed SOURCE over a [[graft.io.TxTable]] — the read
-  * half of the CDC loop [[TxStreamSink]] opened: the sink lands each
-  * micro-batch as one transactional commit; this tails the commit log
-  * and emits each commit's row-level diff, so a downstream consumer
-  * replays exactly what changed, in commit order, never rescanning the
-  * table. Together they are the public Delta "streaming from a table"
-  * surface (its streaming source is the same thing: a commit-log tailer
-  * that turns each version's file delta into a micro-batch).
+/** Change-feed CONSUMERS over a [[graft.io.TxTable]] — the read half of
+  * the CDC loop [[TxStreamSink]] opened: the sink lands each
+  * micro-batch as one transactional commit; these fold the commits'
+  * row-level changes into a mirror table or an in-memory replica, so a
+  * downstream copy replays exactly what changed, in commit order, never
+  * rescanning the table.
   *
-  * Why this is a driver loop and not a DataSourceV2 stream: each
-  * micro-batch here IS [[TxTable.diff]] — a manifest-pruned two-version
-  * join Spark plans per commit. Wrapping that in a V2 `MicroBatchStream`
-  * would re-express the same loop behind the streaming scaffolding
-  * without changing a single plan; the drain surface below matches
-  * Trigger.AvailableNow semantics directly (live tailing is the native
-  * `graft-tx` source, [[graft.io.TxStreamSource]]) and keeps
-  * the cursor (a plain version number) in the consumer's hands, which
-  * is exactly what a CDC consumer checkpoints anyway.
+  * Both read [[TxTable.changes]], the one change-range reader the
+  * batch `changesFrom` read and the native `graft-tx` stream
+  * ([[graft.io.TxStreamSource]]) share, and keep the cursor (a plain
+  * version number) in the consumer's hands, which is exactly what a
+  * CDC consumer checkpoints anyway.
   *
-  * Scale shape: a drain costs one commit-log `latest` probe (no manifest
-  * fold — [[TxTable.latestVersion]]); each emitted batch costs the
-  * partitions its commit touched (diff prunes identical manifest
-  * entries before opening a file). Versions are dense (the CAS admits
-  * no gaps), so the cursor advances +1 per batch. The cursor must stay
-  * within [[TxTable.vacuum]]'s retention window — resuming a feed from
-  * below the oldest retained version throws (re-bootstrap from a
-  * snapshot instead), the same contract every log-tailing CDC source
-  * documents.
+  * Scale shape: a call costs one commit-log tip probe (no manifest
+  * fold — [[TxTable.latestVersion]]) plus the partitions the commits
+  * past the cursor touched (diff prunes identical manifest entries
+  * before opening a file). Versions are dense (the CAS admits no
+  * gaps). The cursor must stay within [[TxTable.vacuum]]'s retention
+  * window — resuming from below the oldest retained version throws
+  * (re-bootstrap from a snapshot instead), the same contract every
+  * log-tailing CDC source documents.
   */
 object TxChangeFeed {
 
-  /** Drain every commit after `fromVersion` (exclusive) up to the
-    * current tip — the Trigger.AvailableNow analog. Returns
-    * (version, diff) in commit order; `fromVersion = 0` replays the
-    * table from genesis (the first batch is the bootstrap commit's
-    * all-insert diff). Frames are lazy — nothing executes until the
-    * consumer acts on a batch. */
-  def drain(
-      spark: SparkSession, dir: String, key: String,
-      fromVersion: Long = 0L): Seq[(Long, DataFrame)] = {
-    val tip = TxTable.latestVersion(spark, dir)
-    ((fromVersion + 1) to tip).map(v => v -> TxTable.diff(spark, dir, v - 1, v, key))
+  /** `changes` as a CDC log for applyCdc: `change_type` becomes `_op`
+    * (`D` for a delete, else `U`) and `_commit_version` becomes `_seq`.
+    * A payload column already named `_op` or `_seq` is refused. */
+  private def cdcLog(changes: DataFrame): DataFrame = {
+    TxTable.requireUnreserved(changes.columns.toSeq, "_op", "_seq")
+    changes
+      .withColumn("_op", when(col("change_type") === "delete", "D").otherwise("U"))
+      .withColumnRenamed("_commit_version", "_seq")
+      .drop("change_type")
   }
 
   /** TABLE-TO-TABLE replication — the capstone the pieces compose to:
     * every source commit past the cursor is applied to a mirror
     * TxTable as ONE transactional commit ([[TxTable.applyCdc]] —
-    * upserts and deletes land atomically), so after each batch the
+    * upserts and deletes land atomically), so after each commit the
     * mirror's snapshot is row-equal to the source's at that version
     * and mirror readers enjoy the same can't-tear guarantees as source
     * readers. The mirror lags by exactly (source tip − cursor)
     * commits; re-running from a persisted cursor resumes without
-    * replays, and replaying a batch anyway is idempotent through the
+    * replays, and replaying a commit anyway is idempotent through the
     * keyed apply. Returns the new cursor.
     *
     * @param partitionCol the MIRROR's partition column — must appear in
     *   the source's payload (same column, typically) */
-  /** A diff payload column literally named `_op`/`_seq` would silently
-    * collide with the injected CDC control columns and corrupt the
-    * applied changes — refuse loudly instead (rename upstream; the
-    * names are reserved by [[TxTable.applyCdc]]'s call convention). */
-  private def requireNoReservedColumns(d: DataFrame): DataFrame = {
-    val clash = d.columns.filter(c => c == "_op" || c == "_seq")
-    require(clash.isEmpty,
-      s"change-feed payload carries reserved column(s) ${clash.mkString(", ")} — " +
-        "rename them before mirroring/replicating (the feed injects _op/_seq " +
-        "as CDC control columns)")
-    d
-  }
-
   def mirror(
       spark: SparkSession, srcDir: String, dstDir: String,
       key: String, partitionCol: graft.io.PartitionSpec,
       fromVersion: Long = 0L): Long = {
-    var cursor = fromVersion
-    drain(spark, srcDir, key, fromVersion).foreach { case (v, d0) =>
-      val d = requireNoReservedColumns(d0)
+    val tip = TxTable.latestVersion(spark, srcDir)
+    ((fromVersion + 1) to tip).foreach { v =>
       TxTable.applyCdc(spark, dstDir,
-        d.withColumn("_op",
-            when(col("change_type") === "delete", "D").otherwise("U"))
-          .withColumn("_seq", lit(v))
-          .drop("change_type"),
+        cdcLog(TxTable.changes(spark, srcDir, key, v - 1, v)),
         key, "_op", "_seq", partitionCol)
-      cursor = v
     }
-    cursor
+    math.max(tip, fromVersion)
   }
+
+  /** Commits folded per applyCdc pass. Each pass's plan is one union
+    * of ≤ this many diff subplans — wide enough that a realistic
+    * backlog folds in one or two passes, bounded enough that a
+    * thousands-of-commits replay cannot build an analyzer-breaking
+    * left-deep Union (the per-chunk localCheckpoint re-roots the plan). */
+  private val ReplicateChunk = 64
 
   /** The CDC loop closed in one call: fold the feed into a replica via
     * [[Merge.applyCdc]] (insert/update upsert, delete drops the key) —
     * the downstream "current state by key" table a change consumer
     * maintains. Starts from `base` (a prior replica at `fromVersion`)
-    * or empty. Returns (cursor, replica); the replica equals
-    * `TxTable.snapshot` at that version by construction, which is
-    * exactly what the t20 oracle pins.
+    * or empty, shaped like the first chunk's changes. Returns
+    * (cursor, replica); the replica equals `TxTable.snapshot` at that
+    * version by construction, which is exactly what the t20 oracle
+    * pins.
     *
-    * The whole drained backlog folds in ONE applyCdc pass (r15,
-    * guide §2.4 — one pass instead of N): the per-commit diffs union
-    * with `_seq` = commit version and applyCdc's keyed latest-wins
+    * Each chunk of ≤ `ReplicateChunk` commits folds in ONE applyCdc
+    * pass: with `_seq` = commit version, applyCdc's keyed latest-wins
     * collapse picks each key's highest-version change, which is
-    * EXACTLY what folding the commits one at a time produced — a
-    * key's last change is an update/insert (payload = its state at
-    * that version, untouched afterwards) or a delete (key gone). The
-    * r14 spelling re-materialized (localCheckpoint) the FULL replica
-    * per commit — an O(table) pass per commit just to keep lineage
-    * flat; the union's lineage is one join per drained commit wide
-    * and ONE materialization deep. Catch-up over an N-commit backlog
-    * now costs one table-sized pass, not N. */
-  /** Commits folded per applyCdc pass. Each pass's plan is one union
-    * of ≤ this many diff subplans — wide enough that a realistic
-    * backlog folds in one or two passes, bounded enough that a
-    * thousands-of-commits replay cannot build an analyzer-breaking
-    * left-deep Union (the per-K localCheckpoint re-roots the plan,
-    * exactly what the r14 per-commit fold did per commit). */
-  private val ReplicateChunk = 64
-
+    * EXACTLY what folding the commits one at a time produces — a key's
+    * last change is an update/insert (payload = its state at that
+    * version, untouched afterwards) or a delete (key gone). Catch-up
+    * over an N-commit backlog costs one table-sized pass per chunk,
+    * not N. */
   def replicate(
       spark: SparkSession, dir: String, key: String,
       fromVersion: Long = 0L, base: Option[DataFrame] = None): (Long, DataFrame) = {
-    val batches = drain(spark, dir, key, fromVersion)
-    require(batches.nonEmpty || base.nonEmpty,
+    val tip = TxTable.latestVersion(spark, dir)
+    require(tip > fromVersion || base.nonEmpty,
       s"nothing to replicate: no commits after $fromVersion and no base")
-    if (batches.isEmpty) return (fromVersion, base.get)
-    var replica = base.getOrElse(
-      batches.head._2.drop("change_type").limit(0))
-    batches.grouped(ReplicateChunk).foreach { chunk =>
-      val changes = chunk.map { case (v, d0) =>
-        val d = requireNoReservedColumns(d0)
-        d.withColumn("_op",
-            when(col("change_type") === "delete", "D").otherwise("U"))
-          .withColumn("_seq", lit(v))
-          .drop("change_type")
-        // add-only evolution: later diffs may carry MORE columns; pad
-        // earlier ones (applyCdc then projects to the base's payload —
-        // the same columns the per-commit fold kept)
-      }.reduce(_.unionByName(_, allowMissingColumns = true))
-      replica = Merge.applyCdc(replica, changes, key, "_op", "_seq")
-        .localCheckpoint(true)
+    val replica = ((fromVersion + 1) to tip).grouped(ReplicateChunk).foldLeft(base) {
+      (acc, chunk) =>
+        val log = cdcLog(TxTable.changes(spark, dir, key, chunk.head - 1, chunk.last))
+        val target = acc.getOrElse(log.drop("_op", "_seq").limit(0))
+        Some(Merge.applyCdc(target, log, key, "_op", "_seq").localCheckpoint(true))
     }
-    (batches.last._1, replica)
+    (math.max(tip, fromVersion), replica.get)
   }
 }

@@ -5,13 +5,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for suites (one per suite, lazily created).
   * The codegen cache is one per JVM, sized by the session that first
-  * generates code; it holds what a long-lived hourly session needs
-  * (FactPipeline.runHour): at Spark's default of 100 entries an hour's
-  * classes evict each other and every hour compiles them again. */
+  * generates code — `LocalSpark.builder`'s 5,000 entries, so specs can
+  * pin compile counts. */
 trait SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession =
-    LocalSpark.builder(4).appName(getClass.getSimpleName)
-      .config("spark.sql.codegen.cache.maxEntries", "5000").getOrCreate()
+    LocalSpark.builder(4).appName(getClass.getSimpleName).getOrCreate()
 
   val sfSmoke = "/root/testdata/sf0.001"
 

@@ -27,24 +27,63 @@ class TxChangeFeedSpec extends SparkTestBase {
     df.select("id", "price").collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSet
 
-  test("drain emits one diff per commit and a resumed cursor replays nothing") {
+  /** The change range (from, to] split into its per-commit batches:
+    * (version, rows without the stamp), in version order. */
+  private def batches(target: String, from: Long, to: Long)
+      : Seq[(Long, org.apache.spark.sql.DataFrame)] = {
+    val range = TxTable.changes(spark, target, "id", from, to)
+    range.select("_commit_version").distinct().collect().map(_.getLong(0)).sorted
+      .toSeq.map(v => v -> range.filter(col("_commit_version") === v)
+        .drop("_commit_version"))
+  }
+
+  test("changes holds one diff per commit and a resumed cursor replays nothing") {
     val target = freshTable()
     commit(target, Seq((1L, 1.0, 1L, 20240101), (2L, 2.0, 1L, 20240102)))
     commit(target, Seq((1L, 1.5, 2L, 20240101)))                  // update
     commit(target, Seq((3L, 3.0, 3L, 20240103)))                  // insert
 
-    val all = TxChangeFeed.drain(spark, target, "id")
+    val all = batches(target, 0L, 3L)
     assert(all.map(_._1) === Seq(1L, 2L, 3L))
     assert(all.head._2.select("change_type").collect()
       .map(_.getString(0)).toSet === Set("insert")) // genesis batch
     assert(state(all(1)._2.drop("change_type")) === Set((1L, 1.5)))
 
     // consumer checkpointed cursor=2: only the third commit arrives
-    val resumed = TxChangeFeed.drain(spark, target, "id", fromVersion = 2L)
+    val resumed = batches(target, 2L, 3L)
     assert(resumed.map(_._1) === Seq(3L))
     assert(state(resumed.head._2.drop("change_type")) === Set((3L, 3.0)))
     // caught-up feed is empty, not an error
-    assert(TxChangeFeed.drain(spark, target, "id", fromVersion = 3L).isEmpty)
+    assert(batches(target, 3L, 3L).isEmpty)
+  }
+
+  test("a new version range reads and mirrors without compiling a generated class") {
+    // every version reaches the generated code as a parameter, so a
+    // range or a commit the feed has not seen runs the classes the
+    // warm range compiled (a literal version compiles them again)
+    val src = freshTable()
+    val dst = freshTable()
+    commit(src, Seq((1L, 1.0, 1L, 20240101), (2L, 2.0, 1L, 20240102)))
+    // each later commit updates one existing row: one plan shape per commit
+    def revise(v: Long): Unit =
+      commit(src, Seq((v % 2 + 1, v.toDouble, v, 20240101 + (v % 2).toInt)))
+    (2L to 9L).foreach(revise)
+    def read(from: Long, to: Long): Array[org.apache.spark.sql.Row] =
+      spark.read.format("graft-tx").option("key", "id")
+        .option("changesFrom", from.toString).option("changesTo", to.toString)
+        .load(src).collect()
+    read(1L, 5L)
+    assert(TxChangeFeed.mirror(spark, src, dst, "id", "date_id") === 9L)
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val beforeRead = compiles.getCount
+    val rows = read(5L, 9L)
+    assert(compiles.getCount - beforeRead === 0L, "a new range compiled generated classes")
+    assert(rows.map(_.getAs[Long]("_commit_version")).sorted.toSeq === (6L to 9L))
+    revise(10L)
+    val beforeMirror = compiles.getCount
+    assert(TxChangeFeed.mirror(spark, src, dst, "id", "date_id", fromVersion = 9L) === 10L)
+    assert(compiles.getCount - beforeMirror === 0L, "mirroring a new commit compiled generated classes")
+    assert(state(TxTable.snapshot(spark, dst).get) === state(TxTable.snapshot(spark, src).get))
   }
 
   test("replicate equals the snapshot at every cursor, including across a resume") {
@@ -76,12 +115,11 @@ class TxChangeFeedSpec extends SparkTestBase {
     TxTable.vacuum(spark, target) // retain 1: checkpoint-on-demand → v4
     val tip = TxTable.latestVersion(spark, target)
     assert(tip === 4L)
-    // cursor=tip: caught up, empty drain — fine
-    assert(TxChangeFeed.drain(spark, target, "id", fromVersion = tip).isEmpty)
+    // cursor=tip: caught up, empty range — fine
+    assert(batches(target, tip, tip).isEmpty)
     // cursor below retention: diff needs a vacuumed version → throws
     intercept[IllegalArgumentException] {
-      TxChangeFeed.drain(spark, target, "id", fromVersion = 1L)
-        .foreach(_._2.count())
+      TxTable.changes(spark, target, "id", 1L, tip).count()
     }
   }
 
@@ -92,8 +130,7 @@ class TxChangeFeedSpec extends SparkTestBase {
     commit(target, Seq((1L, 1.0, 1L, 20240101), (2L, 2.0, 1L, 20240101)))
     TxTable.delete(spark, target,
       Seq((1L, 20240101)).toDF("id", "date_id"), "id", "date_id")
-    val batches = TxChangeFeed.drain(spark, target, "id")
-    val del = batches(1)._2.select("change_type", "id").collect()
+    val del = batches(target, 0L, 2L)(1)._2.select("change_type", "id").collect()
       .map(r => (r.getString(0), r.getLong(1))).toSet
     assert(del === Set(("delete", 1L)))
     val (_, replica) = TxChangeFeed.replicate(spark, target, "id")
@@ -214,7 +251,8 @@ class TxChangeFeedSpec extends SparkTestBase {
   test("schema evolution rides the whole loop: a widened source mirrors correctly") {
     // v2 widens the source schema; the diff aligns its sides, applyCdc
     // aligns the mirror, and the mirrored snapshot matches the source
-    // including the nulls on pre-evolution rows.
+    // including the nulls on pre-evolution rows; a replica folded in one
+    // call from the same range carries the new column too.
     val s = spark
     import s.implicits._
     val src = freshTable()
@@ -225,13 +263,14 @@ class TxChangeFeedSpec extends SparkTestBase {
         .toDF("id", "price", "etl_seq", "date_id", "note"),
       "id", "etl_seq", "date_id")
     TxChangeFeed.mirror(spark, src, dst, "id", "date_id")
-    def full(dir: String): Set[(Long, Double, Option[String])] = {
-      val df = TxTable.snapshot(spark, dir).get
+    def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Double, Option[String])] =
       df.select("id", "price", "note").collect()
         .map(r => (r.getLong(0), r.getDouble(1), Option(r.getString(2)))).toSet
-    }
+    def full(dir: String): Set[(Long, Double, Option[String])] =
+      rows(TxTable.snapshot(spark, dir).get)
     assert(full(dst) === Set((1L, 1.5, Some("revised")), (2L, 2.0, None)))
     assert(full(dst) === full(src))
+    assert(rows(TxChangeFeed.replicate(spark, src, "id")._2) === full(src))
   }
 
   test("reserved control columns in the payload are refused, not corrupted") {

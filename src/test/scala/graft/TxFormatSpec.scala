@@ -156,13 +156,14 @@ class TxFormatSpec extends SparkTestBase {
     assert(empty.count() === 0L)
     assert(empty.columns.contains("change_type") &&
       empty.columns.contains("_commit_version"))
-    // ...and the full-history read equals the native drain's union
-    val native = graft.streaming.TxChangeFeed.drain(s, dir, "id")
-      .map { case (v, d) => d.withColumn("_commit_version", lit(v)) }
+    // ...and the full-history read equals the per-commit diffs stamped
+    // by hand
+    val byHand = (1L to 3L)
+      .map(v => TxTable.diff(s, dir, v - 1, v, "id").withColumn("_commit_version", lit(v)))
       .reduce(_.unionByName(_, allowMissingColumns = true))
       .collect().map(_.toString).sorted.toSeq
     val viaFormat = changes(0L).collect().map(_.toString).sorted.toSeq
-    assert(viaFormat === native)
+    assert(viaFormat === byHand)
     // versionAsOf and changesFrom cannot combine
     intercept[IllegalArgumentException] {
       changes(1L, Map("versionAsOf" -> "1")).collect()
@@ -175,6 +176,25 @@ class TxFormatSpec extends SparkTestBase {
       "SELECT change_type, id FROM fmt_changes ORDER BY id")
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
     assert(viaSql === Seq(("delete", 2L)))
+  }
+
+  test("changesFrom refuses a payload column named _commit_version, as the stream does") {
+    // the stamp would replace the column's values with the version
+    val s = spark; import s.implicits._
+    val dir = Files.createTempDirectory("graft_fmt_cdc_reserved").toString + "/fact"
+    TxTable.upsert(s, dir,
+      Seq((1L, "2024-01-01", 7L, 1.0), (2L, "2024-01-01", 107L, 2.0),
+        (3L, "2024-01-02", 207L, 3.0)).toDF("id", "day", "_commit_version", "v"),
+      "id", "v", "day")
+    val ex = intercept[IllegalArgumentException] {
+      s.read.format("graft-tx").option("key", "id").option("changesFrom", "0")
+        .load(dir).collect()
+    }
+    assert(ex.getMessage.contains(
+      "change-feed payload carries reserved column(s) _commit_version"))
+    val exS = intercept[IllegalArgumentException](
+      s.readStream.format("graft-tx").option("key", "id").load(dir))
+    assert(exS.getMessage === ex.getMessage)
   }
 
   test("an EMPTY append to a fresh path is a no-op, not a crash") {

@@ -132,14 +132,14 @@ class TxStreamSourceSpec extends SparkTestBase {
     val base = Files.createTempDirectory("graft_txss_snap").toString
     val sink = s"$base/sink"
     val ckpt = s"$base/ckpt"
-    def drain(): Unit = {
+    def runAvailableNow(): Unit = {
       val q = feed(target, Map("startingVersion" -> "snapshot"))
         .writeStream.format("parquet").outputMode("append")
         .option("path", sink).option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
     }
-    drain()
+    runAvailableNow()
     // the opening batch IS the snapshot: every live row as an insert,
     // stamped with the pinned version (the tip at stream build — vacuum
     // publishes a checkpoint-on-demand commit, so never assert exact
@@ -156,7 +156,7 @@ class TxStreamSourceSpec extends SparkTestBase {
     // new commits tail per-commit; the restart does NOT re-emit the
     // snapshot (the checkpointed cursor is past the pin)
     commit(target, Seq((4L, 4.0, 4L, 20240101)))
-    drain()
+    runAvailableNow()
     val got2 = spark.read.parquet(sink)
       .select("_commit_version", "change_type", "id")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
@@ -234,7 +234,7 @@ class TxStreamSourceSpec extends SparkTestBase {
     val base = Files.createTempDirectory("graft_txss_latest").toString
     commit(target, Seq((1L, 1.0, 1L, 20240101)))
     commit(target, Seq((2L, 2.0, 2L, 20240102)))
-    def drain(): Set[Long] = {
+    def runAvailableNow(): Set[Long] = {
       val q = feed(target, Map("startingVersion" -> "latest"))
         .writeStream.format("parquet").outputMode("append")
         .option("path", s"$base/sink")
@@ -248,11 +248,11 @@ class TxStreamSourceSpec extends SparkTestBase {
         .select("_commit_version").collect().map(_.getLong(0)).toSet
     }
     // history (v1, v2) is skipped: nothing emits
-    assert(drain() === Set.empty[Long])
+    assert(runAvailableNow() === Set.empty[Long])
     // a NEW commit lands; the restarted stream (same checkpoint, whose
     // WAL already pinned the latest-at-start cursor) emits only it
     commit(target, Seq((3L, 3.0, 3L, 20240103)))
-    assert(drain() === Set(3L))
+    assert(runAvailableNow() === Set(3L))
   }
 
   test("the sink accepts .partitionBy as the partitionColumns spelling") {
