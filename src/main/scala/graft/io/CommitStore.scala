@@ -140,16 +140,15 @@ object CommitStore {
 
   /** THE optimistic retry loop every CAS publish runs on (TxTable's
     * commits, barrier, restore and vacuum checkpoint; the constraint
-    * log's ADD and DROP): `attempt(n)`, n counting from 1, reads the
-    * tip and either finishes without publishing (`Left`) or builds the
-    * next body (`Right`), which the loop tries on `store`'s slot; a
-    * lost slot runs the next attempt against the new tip. After
-    * [[MaxAttempts]] losses it throws [[LostRace]] naming `op` and
-    * `dir`. */
+    * log's ADD and DROP): each `attempt` reads the tip and either
+    * finishes without publishing (`Left`) or builds the next body
+    * (`Right`), which the loop tries on `store`'s slot; a lost slot
+    * runs the next attempt against the new tip. After [[MaxAttempts]]
+    * losses it throws [[LostRace]] naming `op` and `dir`. */
   private[io] def retrying[A](store: CommitStore, log: String, op: String, dir: String)(
-      attempt: Int => Either[A, Publish[A]]): A =
-    Iterator.range(1, MaxAttempts + 1).flatMap { n =>
-      attempt(n) match {
+      attempt: => Either[A, Publish[A]]): A =
+    Iterator.range(0, MaxAttempts).flatMap { _ =>
+      attempt match {
         case Left(done) => Some(done)
         case Right(p) =>
           if (store.tryCommit(log, p.version, p.lines)) Some(p.won)

@@ -88,9 +88,9 @@ object TxCatalog {
     }
   }
 
-  /** One-statement live-session entry — the [[TxSqlDml.sql]] retrofit
-    * for the catalog statements (resolution rules and parsers cannot be
-    * added to an already-built session): DESCRIBE HISTORY matches
+  /** The one-statement live-session entry — the retrofit for the
+    * whole SQL surface (resolution rules and parsers cannot be added to
+    * an already-built session): DESCRIBE HISTORY matches
     * [[GraftSqlParser]]'s pattern directly; everything else parses with
     * the session parser, analyzes, and converts through [[Resolution]]
     * (and [[TxSqlDml.convert]], so one entry point serves the whole SQL

@@ -119,14 +119,9 @@ object TxConstraints {
     * neither a snapshot nor a hint there is NOTHING to validate column
     * references or determinism against, and the ADD refuses loudly — a
     * typo'd column would otherwise pass vacuously on every future batch
-    * and the constraint would silently never enforce.
-    *
-    * @param beforeBarrier test seam: runs between the constraint
-    *   publish and the data-log barrier — the race window a concurrent
-    *   writer's commit can land in. */
+    * and the constraint would silently never enforce. */
   def add(spark: SparkSession, dir: String, name: String, condition: String,
-      schemaHint: Option[org.apache.spark.sql.types.StructType] = None,
-      beforeBarrier: () => Unit = () => ()): Unit = {
+      schemaHint: Option[org.apache.spark.sql.types.StructType] = None): Unit = {
     require(name.nonEmpty && name.forall(c => c.isLetterOrDigit || c == '_'),
       s"constraint name must be [A-Za-z0-9_]+, got '$name'")
     val parsed = CatalystSqlParser.parseExpression(condition)
@@ -170,14 +165,13 @@ object TxConstraints {
     }
     val log = logOf(dir)
     val store = CommitStore.forPath(TxTable.fsOf(spark, dir), log)
-    CommitStore.retrying(store, log, "ADD CONSTRAINT", dir) { _ =>
+    CommitStore.retrying(store, log, "ADD CONSTRAINT", dir) {
       val (v, lines) = store.latest(log)
       val cur = if (v == 0) Seq.empty else parseLines(lines)
       require(!cur.exists(_._1.equalsIgnoreCase(name)),
         s"constraint $name already exists on $dir")
       Right(CommitStore.Publish(v + 1, render(cur :+ (name -> condition)), ()))
     }
-    beforeBarrier()
     // barrier: after this empty data-log commit wins version m, any
     // writer landing a later slot provably probed the published set
     val m = TxTable.barrierCommit(spark, dir)
@@ -204,7 +198,7 @@ object TxConstraints {
       ifExists: Boolean = false): Unit = {
     val log = logOf(dir)
     val store = CommitStore.forPath(TxTable.fsOf(spark, dir), log)
-    CommitStore.retrying(store, log, "DROP CONSTRAINT", dir) { _ =>
+    CommitStore.retrying(store, log, "DROP CONSTRAINT", dir) {
       val (v, lines) = store.latest(log)
       val cur = if (v == 0) Seq.empty else parseLines(lines)
       val kept = cur.filterNot(_._1.equalsIgnoreCase(name))

@@ -40,9 +40,10 @@ import org.apache.spark.sql.graft.bridge
   *
   *  - session build: `spark.sql.extensions=graft.GraftExtensions`
   *    (injected as a resolution rule) — then plain `spark.sql(…)` works;
-  *  - live session: [[TxSqlDml.sql]] parses, analyzes, converts and
+  *  - live session: [[TxCatalog.sql]] parses, analyzes, converts and
   *    runs one statement (resolution rules cannot be added to an
-  *    already-built session; this entry point is the retrofit).
+  *    already-built session; that entry point is the retrofit for the
+  *    whole SQL surface, ending in [[TxSqlDml.convert]]).
   *
   * Condition/assignment expressions are detached from the analyzed
   * relation by rebinding every column reference BY NAME (the commit
@@ -89,14 +90,6 @@ object TxSqlDml extends PredicateHelper {
     * through untouched. */
   object Resolution extends Rule[LogicalPlan] {
     override def apply(plan: LogicalPlan): LogicalPlan = convert(plan)
-  }
-
-  /** One-statement live-session entry: parse, analyze, convert, run.
-    * Non-DML statements (and DML over non-tx relations) execute
-    * exactly as `spark.sql` would — this is a superset, not a fork. */
-  def sql(spark: SparkSession, sqlText: String): org.apache.spark.sql.DataFrame = {
-    val analyzed = bridge.analyze(spark, bridge.parsePlan(spark, sqlText))
-    bridge.ofRows(spark, convert(analyzed))
   }
 
   /** The conversion itself — public so a custom driver can compose it

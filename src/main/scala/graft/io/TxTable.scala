@@ -425,7 +425,7 @@ object TxTable {
   private[io] def barrierCommit(spark: SparkSession, dir: String): Long = {
     val log = s"$dir/$LogDir"
     val store = CommitStore.forPath(fsOf(spark, dir), log)
-    CommitStore.retrying(store, log, "TxTable.barrierCommit", dir) { _ =>
+    CommitStore.retrying(store, log, "TxTable.barrierCommit", dir) {
       val (v, lines) = store.latest(log)
       val next = v + 1
       // respect the checkpoint cadence — a slot on the cadence must
@@ -763,7 +763,7 @@ object TxTable {
   /** Null-pad each frame with the columns only the other one has (type
     * taken from the owning side) — the cross-version face of
     * ops/SchemaEvolution.ensureColumns. */
-  private def alignSchemas(a: DataFrame, b: DataFrame): (DataFrame, DataFrame) = {
+  private[graft] def alignSchemas(a: DataFrame, b: DataFrame): (DataFrame, DataFrame) = {
     def widen(x: DataFrame, y: DataFrame): DataFrame =
       y.schema.fields.foldLeft(x)((d, f) =>
         if (d.columns.contains(f.name)) d
@@ -884,18 +884,14 @@ object TxTable {
     * a snapshot-pruned read of the touched partitions, one keyed merge,
     * an O(touched) write, plus one manifest round-trip.
     *
-    * @param beforeCommit test seam: runs between staging and the CAS on
-    *   the FIRST attempt only — lets a spec interleave a competing
-    *   commit deterministically inside the race window.
     * @return the batch's row count (counted by the batch's one pass)
     */
   def upsert(
       spark: SparkSession, targetDir: String, incoming: DataFrame,
       key: String, version: String, partitionCol: PartitionSpec,
-      layout: Layout = Layout.none,
-      beforeCommit: () => Unit = () => ()): Long =
+      layout: Layout = Layout.none): Long =
     mergeCommit(spark, targetDir, incoming, partitionCol, layout,
-      beforeCommit, "upsert", Some(key), Some(version))(
+      "upsert", Some(key), Some(version))(
       (existing, batch) => Merge.upsertLatestWins(existing, batch, key, version))
 
   /** Replace a predicate-scoped WINDOW of the table — the idempotent
@@ -910,10 +906,8 @@ object TxTable {
   def replaceWindow(
       spark: SparkSession, targetDir: String, incoming: DataFrame,
       partitionCol: PartitionSpec, windowPred: org.apache.spark.sql.Column,
-      layout: Layout = Layout.none,
-      beforeCommit: () => Unit = () => ()): Long =
-    mergeCommit(spark, targetDir, incoming, partitionCol, layout,
-      beforeCommit, "replaceWindow")(
+      layout: Layout = Layout.none): Long =
+    mergeCommit(spark, targetDir, incoming, partitionCol, layout, "replaceWindow")(
       (existing, batch) => existing.filter(!windowPred).unionByName(batch))
 
   /** Replace the ENTIRE table content as ONE commit — the whole-table
@@ -935,8 +929,7 @@ object TxTable {
     * half-built index. */
   def replaceAll(
       spark: SparkSession, targetDir: String, incoming: DataFrame,
-      partitionCol: PartitionSpec, layout: Layout = Layout.none,
-      beforeCommit: () => Unit = () => ()): Unit = {
+      partitionCol: PartitionSpec, layout: Layout = Layout.none): Unit = {
     val batch = keyedBatch(pinned(incoming), partitionCol)
     val gate = new TxConstraints.Gate(spark, targetDir, "replaceAll")
     gate.ensure(batch.rows)
@@ -947,7 +940,7 @@ object TxTable {
     // the race as a spec mismatch). An empty batch stages nothing: the
     // truncate's empty checkpoint.
     var staged = false
-    commit(spark, targetDir, "replaceAll", None, beforeCommit, full = true) { _ =>
+    commit(spark, targetDir, "replaceAll", None, full = true) { _ =>
       if (staged) throw new IllegalStateException(
         s"TxTable.replaceAll lost to a concurrent commit on $targetDir — " +
           "a full replacement is point-in-time: recompute it against the " +
@@ -984,8 +977,7 @@ object TxTable {
     * table already has (and no pending respec) is a no-op. */
   def repartitionTable(
       spark: SparkSession, dir: String, newSpec: PartitionSpec,
-      layout: Layout = Layout.none,
-      beforeCommit: () => Unit = () => ()): Unit = {
+      layout: Layout = Layout.none): Unit = {
     require(newSpec.cols.nonEmpty, "repartitionTable needs partition columns")
     val fs = fsOf(spark, dir)
     val meta = readMetaAll(fs, dir).getOrElse(throw new IllegalArgumentException(
@@ -1018,8 +1010,7 @@ object TxTable {
     // step 2: full re-keyed rewrite, one checkpoint commit (no spec
     // check: this verb owns the pending record). Not pinned: each
     // attempt re-reads the tip's immutable leaves
-    val committedAt = commit(spark, dir, "repartitionTable", None,
-        beforeCommit, full = true) { tip =>
+    val committedAt = commit(spark, dir, "repartitionTable", None, full = true) { tip =>
       val batch = keyedBatch(read(spark, dir, tip.entries, tip.schema), newSpec)
       Some(Stage(batch.rows, batch.keys, batch.touched, layout, batch.touched.size))
     }
@@ -1044,8 +1035,7 @@ object TxTable {
   def applyCdc(
       spark: SparkSession, targetDir: String, changes: DataFrame,
       key: String, opCol: String, seqCol: String, partitionCol: PartitionSpec,
-      layout: Layout = Layout.none,
-      beforeCommit: () => Unit = () => ()): Unit = {
+      layout: Layout = Layout.none): Unit = {
     val Batch(batch, touched, _) = keyedBatch(pinned(changes), partitionCol)
     val touchedKeys = touched.keys.toIndexedSeq
     if (touchedKeys.isEmpty) return
@@ -1055,8 +1045,7 @@ object TxTable {
     val upserting = batch.filter(col(opCol).isNull || col(opCol) =!= "D")
     val gate = new TxConstraints.Gate(spark, targetDir, "applyCdc")
     gate.ensure(upserting)
-    commit(spark, targetDir, "applyCdc", Some(partitionCol),
-        beforeCommit, Some(key)) { tip =>
+    commit(spark, targetDir, "applyCdc", Some(partitionCol), Some(key)) { tip =>
       gate.ensure(upserting) // probe after the data-tip read
       // unlike upsert, an absent partition does NOT mean "write the
       // batch": D-rows must never land as data, so the merge always
@@ -1091,14 +1080,12 @@ object TxTable {
     * change. */
   def delete(
       spark: SparkSession, targetDir: String, keys: DataFrame,
-      key: String, partitionCol: PartitionSpec, layout: Layout = Layout.none,
-      beforeCommit: () => Unit = () => ()): Unit = {
+      key: String, partitionCol: PartitionSpec, layout: Layout = Layout.none): Unit = {
     val batch = keyedBatch(
       pinned(keys.select((key +: partitionCol.cols).distinct.map(col): _*)), partitionCol)
     val touchedKeys = batch.keys
     if (touchedKeys.isEmpty) return
-    commit(spark, targetDir, "delete", Some(partitionCol),
-        beforeCommit, Some(key)) { tip =>
+    commit(spark, targetDir, "delete", Some(partitionCol), Some(key)) { tip =>
       // only partitions that EXIST participate; deleting from absent
       // partitions is vacuously done. A touched partition with no
       // surviving rows stages no leaf and tombstones out.
@@ -1126,10 +1113,8 @@ object TxTable {
   def deleteWhere(
       spark: SparkSession, targetDir: String, partitionCol: PartitionSpec,
       pred: Column, scope: Option[Column] = None,
-      layout: Layout = Layout.none,
-      beforeCommit: () => Unit = () => ()): Unit =
-    rewriteWhere(spark, targetDir, partitionCol, pred, scope, layout,
-      beforeCommit, "deleteWhere")(
+      layout: Layout = Layout.none): Unit =
+    rewriteWhere(spark, targetDir, partitionCol, pred, scope, layout, "deleteWhere")(
       (rows, p) => rows.filter(!p))
 
   /** Predicate UPDATE — `UPDATE … SET … WHERE` as one CAS commit:
@@ -1142,8 +1127,7 @@ object TxTable {
   def updateWhere(
       spark: SparkSession, targetDir: String, partitionCol: PartitionSpec,
       set: Seq[(String, Column)], pred: Column, scope: Option[Column] = None,
-      layout: Layout = Layout.none,
-      beforeCommit: () => Unit = () => ()): Unit = {
+      layout: Layout = Layout.none): Unit = {
     require(set.nonEmpty, "updateWhere needs at least one assignment")
     // set.toMap below keeps the LAST duplicate silently — refuse instead
     val dupNames = set.map(_._1.toLowerCase).diff(set.map(_._1.toLowerCase).distinct)
@@ -1154,7 +1138,7 @@ object TxTable {
       s"updateWhere must not reassign partition columns: $reassigned " +
         "(a row may not migrate partitions)")
     rewriteWhere(spark, targetDir, partitionCol, pred, scope, layout,
-      beforeCommit, "updateWhere") { (rows, p) =>
+      "updateWhere") { (rows, p) =>
       val assigned = set.toMap
       val unknown = assigned.keySet.diff(rows.columns.toSet)
       require(unknown.isEmpty,
@@ -1183,10 +1167,9 @@ object TxTable {
     * Re-runs whole on a lost CAS race. */
   private def rewriteWhere(
       spark: SparkSession, targetDir: String, partitionCol: PartitionSpec,
-      pred: Column, scope: Option[Column], layout: Layout,
-      beforeCommit: () => Unit, op: String)(
+      pred: Column, scope: Option[Column], layout: Layout, op: String)(
       transform: (DataFrame, Column) => DataFrame): Unit =
-    commit(spark, targetDir, op, Some(partitionCol), beforeCommit) { tip =>
+    commit(spark, targetDir, op, Some(partitionCol)) { tip =>
       // an empty table is vacuously done
       val candidates = scope.fold(tip.entries)(
         entriesWhere(spark, tip.entries, partitionCol, _))
@@ -1228,7 +1211,6 @@ object TxTable {
       deleteCond: Option[org.apache.spark.sql.Column] = None,
       insertCond: Option[org.apache.spark.sql.Column] = Some(lit(true)),
       layout: Layout = Layout.none,
-      beforeCommit: () => Unit = () => (),
       outputCols: Option[Seq[String]] = None): Unit = {
     val reassigned = updateSet.map(_._1).toSet
     val frozen = partitionCol.cols.toSet + key
@@ -1251,8 +1233,7 @@ object TxTable {
         "dedup upstream (seq-argmax) before merging")
     val touchedKeys = touched.keys.toIndexedSeq
     if (touchedKeys.isEmpty) return
-    commit(spark, targetDir, "merge", Some(partitionCol),
-        beforeCommit, Some(key)) { tip =>
+    commit(spark, targetDir, "merge", Some(partitionCol), Some(key)) { tip =>
       // like applyCdc, the merge ALWAYS runs — an absent partition is
       // an empty target (only the INSERT clause can land rows there),
       // never a write-the-batch shortcut (clauses must filter it)
@@ -1356,15 +1337,14 @@ object TxTable {
     * commit emits nothing. */
   def addColumns(
       spark: SparkSession, dir: String, partitionCol: PartitionSpec,
-      cols: Seq[org.apache.spark.sql.types.StructField],
-      beforeCommit: () => Unit = () => ()): Unit = {
+      cols: Seq[org.apache.spark.sql.types.StructField]): Unit = {
     require(cols.nonEmpty, "addColumns needs at least one column")
     val dup = cols.map(_.name.toLowerCase).diff(
       cols.map(_.name.toLowerCase).distinct)
     require(dup.isEmpty,
       s"addColumns lists ${dup.distinct.mkString(", ")} more than once")
     val fs = fsOf(spark, dir)
-    commit(spark, dir, "addColumns", Some(partitionCol), beforeCommit) { tip =>
+    commit(spark, dir, "addColumns", Some(partitionCol)) { tip =>
       require(tip.v >= 1,
         s"addColumns on $dir: an empty table has no storage schema to " +
           "widen — bootstrap it with a write carrying the columns")
@@ -1430,7 +1410,7 @@ object TxTable {
       TxConstraints.enforce(spark, dir,
         read(spark, dir, restored.entries, restored.schema), "restore")
     val body = render("checkpoint", restored.entries, Some(restored.schema))
-    CommitStore.retrying(store, log, "TxTable.restore", dir) { _ =>
+    CommitStore.retrying(store, log, "TxTable.restore", dir) {
       Right(CommitStore.Publish(store.latest(log)._1 + 1, body, ()))
     }
   }
@@ -1509,9 +1489,8 @@ object TxTable {
     * former source cannot break the table. */
   def materialize(
       spark: SparkSession, dir: String, partitionCol: PartitionSpec,
-      layout: Layout = Layout.none,
-      beforeCommit: () => Unit = () => ()): Unit =
-    commit(spark, dir, "materialize", Some(partitionCol), beforeCommit) { tip =>
+      layout: Layout = Layout.none): Unit =
+    commit(spark, dir, "materialize", Some(partitionCol)) { tip =>
       val foreign = tip.entries.filter { case (_, e) =>
         leafPath(dir, e.leaf) == e.leaf // absolute → not under this dir
       }
@@ -1527,8 +1506,7 @@ object TxTable {
     * supplied by the caller) and stage one leaf per touched key. */
   private def mergeCommit(
       spark: SparkSession, targetDir: String, incoming: DataFrame,
-      partitionCol: PartitionSpec, layout: Layout,
-      beforeCommit: () => Unit, op: String,
+      partitionCol: PartitionSpec, layout: Layout, op: String,
       key: Option[String] = None, version: Option[String] = None)(
       merge: (DataFrame, DataFrame) => DataFrame): Long = {
     // stable across retries: the batch itself never changes
@@ -1543,7 +1521,7 @@ object TxTable {
     // of the ADD-vs-writer barrier protocol (TxConstraints scaladoc).
     val gate = new TxConstraints.Gate(spark, targetDir, op)
     gate.ensure(batch) // fail-fast before any staging cost
-    commit(spark, targetDir, op, Some(partitionCol), beforeCommit,
+    commit(spark, targetDir, op, Some(partitionCol),
         key, version) { tip =>
       // probe AFTER the data-tip read the attempt will CAS against —
       // the ordering the barrier proof needs
@@ -1639,19 +1617,17 @@ object TxTable {
     * nothing. A never-committed path records its spec only once
     * something stages, so maintenance on it stays a pure no-op (a typo'd
     * spec must not lock out the table's real first writer).
-    * `beforeCommit` runs on the FIRST attempt only: the test seam into
-    * the race window. Returns the published version. */
+    * Returns the published version. */
   private def commit(
       spark: SparkSession, dir: String, op: String,
       spec: Option[PartitionSpec],
-      beforeCommit: () => Unit = () => (),
       key: Option[String] = None, version: Option[String] = None,
       full: Boolean = false)(stage: Tip => Option[Stage]): Option[Long] = {
     val fs = fsOf(spark, dir)
     val log = s"$dir/$LogDir"
     val store = CommitStore.forPath(fs, log)
     def checkSpec(): Unit = spec.foreach(ensureSpec(fs, dir, _, key, version))
-    CommitStore.retrying[Option[Long]](store, log, s"TxTable.$op", dir) { attempt =>
+    CommitStore.retrying[Option[Long]](store, log, s"TxTable.$op", dir) {
       val tip @ Tip(v, entries, schema) = latestEntries(spark, dir)
       if (v > 0) checkSpec()
       stage(tip) match {
@@ -1691,7 +1667,6 @@ object TxTable {
             fs.delete(stagePath, true): Unit
             Left(None)
           } else {
-            if (attempt == 1) beforeCommit()
             // a lost race discards the stale staging and re-stages against
             // the winner's snapshot
             Right(CommitStore.Publish(v + 1,
@@ -1879,11 +1854,10 @@ object TxTable {
   def optimizeZOrderBy(
       spark: SparkSession, dir: String, partitionCol: PartitionSpec,
       cols: Seq[String], layout: Layout = Layout.none,
-      where: Option[Column] = None,
-      beforeCommit: () => Unit = () => ()): Unit = {
+      where: Option[Column] = None): Unit = {
     require(cols.nonEmpty && cols.size <= 4,
       s"optimizeZOrderBy takes 1-4 clustering columns, got ${cols.size}")
-    commit(spark, dir, "optimizeZOrder", Some(partitionCol), beforeCommit) { tip =>
+    commit(spark, dir, "optimizeZOrder", Some(partitionCol)) { tip =>
       // scope BEFORE touching a file — and re-scope on every retry, so
       // a lost race recomputes against the winner's manifest and never
       // re-stages more than the predicate's leaves
@@ -1972,7 +1946,7 @@ object TxTable {
     val log = s"$dir/$LogDir"
     val store = CommitStore.forPath(fs, log)
     // a lost race to a live writer re-reads the new tip
-    val tip = CommitStore.retrying(store, log, "TxTable.vacuum", dir) { _ =>
+    val tip = CommitStore.retrying(store, log, "TxTable.vacuum", dir) {
       val (v, lines) = store.latest(log)
       if (v == 0 || kindOf(dir, v, lines) == "checkpoint") Left(v)
       else {

@@ -930,13 +930,13 @@ object Maintenance {
         ev.filter(col("day") >= "2024-01-15" && col("day") < "2024-01-26")
           .withColumn("value", col("value") * 3)
           .createOrReplaceTempView(src)
-        graft.io.TxSqlDml.sql(s,
+        graft.io.TxCatalog.sql(s,
           s"UPDATE $v SET value = value * 2 WHERE event_type = 'click' " +
             "AND day >= '2024-01-12' AND day < '2024-01-18'")
-        graft.io.TxSqlDml.sql(s,
+        graft.io.TxCatalog.sql(s,
           s"DELETE FROM $v WHERE value < 100 " +
             "AND day >= '2024-01-05' AND day < '2024-01-09'")
-        graft.io.TxSqlDml.sql(s,
+        graft.io.TxCatalog.sql(s,
           s"""MERGE INTO $v t USING $src s ON t.event_id = s.event_id
              |WHEN MATCHED AND s.value > t.value THEN UPDATE SET value = s.value
              |WHEN MATCHED AND s.event_type = 'view' THEN DELETE
@@ -1175,12 +1175,12 @@ object Maintenance {
         val v = s"txcons_v_${jdbcSeq.incrementAndGet()}"
         s.sql(s"CREATE TEMPORARY VIEW $v USING `graft-tx` OPTIONS (path '$tbl')")
         // gated SQL UPDATE: a passing assignment lands…
-        graft.io.TxSqlDml.sql(s,
+        graft.io.TxCatalog.sql(s,
           s"UPDATE $v SET value = value + 1 WHERE event_type = 'click'")
         // …a violating one refuses and changes nothing
         val refusedUpdate =
           try {
-            graft.io.TxSqlDml.sql(s,
+            graft.io.TxCatalog.sql(s,
               s"UPDATE $v SET value = -1.0 WHERE event_type = 'view'")
             false
           } catch { case e: IllegalArgumentException =>

@@ -76,8 +76,9 @@ object TxChangeFeed {
   /** The CDC loop closed in one call: fold the feed into a replica via
     * [[Merge.applyCdc]] (insert/update upsert, delete drops the key) —
     * the downstream "current state by key" table a change consumer
-    * maintains. Starts from `base` (a prior replica at `fromVersion`)
-    * or empty, shaped like the first chunk's changes. Returns
+    * maintains. Starts from `base` (a prior replica at `fromVersion`,
+    * null-padded with every column a later commit adds) or empty,
+    * shaped like the first chunk's changes. Returns
     * (cursor, replica); the replica equals `TxTable.snapshot` at that
     * version by construction, which is exactly what the t20 oracle
     * pins.
@@ -99,7 +100,10 @@ object TxChangeFeed {
     val replica = ((fromVersion + 1) to tip).grouped(ReplicateChunk).foldLeft(base) {
       (acc, chunk) =>
         val log = cdcLog(TxTable.changes(spark, dir, key, chunk.head - 1, chunk.last))
-        val target = acc.getOrElse(log.drop("_op", "_seq").limit(0))
+        val payload = log.drop("_op", "_seq")
+        // applyCdc keeps the target's columns only: widen the replica by
+        // the columns a commit past it added, as TxTable.applyCdc does
+        val (target, _) = TxTable.alignSchemas(acc.getOrElse(payload.limit(0)), payload)
         Some(Merge.applyCdc(target, log, key, "_op", "_seq").localCheckpoint(true))
     }
     (math.max(tip, fromVersion), replica.get)

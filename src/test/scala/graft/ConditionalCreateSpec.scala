@@ -3,7 +3,7 @@ package graft
 import java.io.ByteArrayOutputStream
 import java.nio.file.Files
 
-import graft.io.{CommitStore, ExclusiveCreateCommitStore, TxTable}
+import graft.io.{ExclusiveCreateCommitStore, TxTable}
 import org.apache.hadoop.fs.{CreateFlag, FSDataOutputStream, FSDataOutputStreamBuilder, FileSystem, Path, PathIOException, RawLocalFileSystem}
 
 /** The conditional-PUT HAPPY PATH of [[ExclusiveCreateCommitStore]],
@@ -54,25 +54,26 @@ class ConditionalCreateSpec extends SparkTestBase {
     val s = spark; import s.implicits._
     val fs = mockFs()
     val base = Files.createTempDirectory("graft_cond_tx").toString
-    CommitStore.forceForPrefix(base, _ => new ExclusiveCreateCommitStore(fs))
-    try {
+    FaultStore.over(base, new ExclusiveCreateCommitStore(fs)) { race =>
       val target = s"$base/fact"
       TxTable.upsert(s, target,
         Seq((1L, 10.0, 1L, 20240101)).toDF("id", "price", "etl_seq", "date_id"),
         "id", "etl_seq", "date_id")
       // writer A stages, then B commits inside A's race window: A's CAS
       // fails with the mock's 412, A re-merges on the new snapshot
+      race.beforeFirstCas(target) {
+        TxTable.upsert(s, target,
+          Seq((3L, 30.0, 1L, 20240101)).toDF("id", "price", "etl_seq", "date_id"),
+          "id", "etl_seq", "date_id")
+      }
       TxTable.upsert(s, target,
         Seq((2L, 20.0, 1L, 20240101)).toDF("id", "price", "etl_seq", "date_id"),
-        "id", "etl_seq", "date_id",
-        beforeCommit = () => TxTable.upsert(s, target,
-          Seq((3L, 30.0, 1L, 20240101)).toDF("id", "price", "etl_seq", "date_id"),
-          "id", "etl_seq", "date_id"))
+        "id", "etl_seq", "date_id")
       assert(TxTable.latestVersion(s, target) == 3L)
       assert(TxTable.snapshot(s, target).get.select("id")
         .as[Long].collect().toSet == Set(1L, 2L, 3L),
         "the 412-losing writer dropped rows instead of re-merging")
-    } finally CommitStore.clearForce(base)
+    }
   }
 
   test("a connector without the capability fails FAST instead of running an unsound protocol") {

@@ -14,7 +14,7 @@ class MergeWriterSpec extends SparkTestBase {
     // The lost-update window of a read-merge-overwrite writer, closed
     // by TxTable's optimistic CAS: writer A merges against snapshot v1
     // and stages; writer B commits v2 inside A's stage→commit window
-    // (injected via the beforeCommit seam); A's CAS on v2 then FAILS,
+    // (injected through FaultStore); A's CAS on v2 then FAILS,
     // A re-merges against B's snapshot and commits v3 — so B's insert
     // into the contended partition survives alongside A's.
     import graft.io.TxTable
@@ -26,18 +26,19 @@ class MergeWriterSpec extends SparkTestBase {
       "id", "etl_seq", "date_id")
 
     var bRan = false
-    TxTable.upsert(spark, target,
-      Seq((2L, 20.0, 2L, 20240101)).toDF("id", "price", "etl_seq", "date_id"),
-      "id", "etl_seq", "date_id",
-      beforeCommit = () => {
-        // writer B lands inside A's race window: contended partition
-        // AND a fresh one
-        TxTable.upsert(spark, target,
-          Seq((3L, 30.0, 2L, 20240101), (4L, 40.0, 2L, 20240102))
-            .toDF("id", "price", "etl_seq", "date_id"),
-          "id", "etl_seq", "date_id")
-        bRan = true
-      })
+    FaultStore.racing(target) {
+      // writer B lands inside A's race window: contended partition
+      // AND a fresh one
+      TxTable.upsert(spark, target,
+        Seq((3L, 30.0, 2L, 20240101), (4L, 40.0, 2L, 20240102))
+          .toDF("id", "price", "etl_seq", "date_id"),
+        "id", "etl_seq", "date_id")
+      bRan = true
+    } {
+      TxTable.upsert(spark, target,
+        Seq((2L, 20.0, 2L, 20240101)).toDF("id", "price", "etl_seq", "date_id"),
+        "id", "etl_seq", "date_id")
+    }
     assert(bRan)
 
     val out = TxTable.snapshot(spark, target).get
@@ -755,12 +756,14 @@ class MergeWriterSpec extends SparkTestBase {
     TxTable.upsert(spark, t1,
       Seq((1L, 1.0, 1L, 20240101)).toDF("id", "price", "etl_seq", "date_id"),
       "id", "etl_seq", "date_id")
-    TxTable.upsert(spark, t1,
-      Seq((1L, 9.0, 2L, 20240101)).toDF("id", "price", "etl_seq", "date_id"),
-      "id", "etl_seq", "date_id",
-      beforeCommit = () =>
-        TxTable.delete(spark, t1,
-          Seq((1L, 20240101)).toDF("id", "date_id"), "id", "date_id"))
+    FaultStore.racing(t1) {
+      TxTable.delete(spark, t1,
+        Seq((1L, 20240101)).toDF("id", "date_id"), "id", "date_id")
+    } {
+      TxTable.upsert(spark, t1,
+        Seq((1L, 9.0, 2L, 20240101)).toDF("id", "price", "etl_seq", "date_id"),
+        "id", "etl_seq", "date_id")
+    }
     assert(TxTable.snapshot(spark, t1).get
       .select("id", "price").collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSet === Set((1L, 9.0)),
@@ -773,13 +776,15 @@ class MergeWriterSpec extends SparkTestBase {
       Seq((1L, 1.0, 1L, 20240101), (2L, 2.0, 1L, 20240101))
         .toDF("id", "price", "etl_seq", "date_id"),
       "id", "etl_seq", "date_id")
-    TxTable.delete(spark, t2,
-      Seq((1L, 20240101)).toDF("id", "date_id"), "id", "date_id",
-      beforeCommit = () =>
-        TxTable.upsert(spark, t2,
-          Seq((1L, 5.0, 2L, 20240101), (3L, 3.0, 2L, 20240101))
-            .toDF("id", "price", "etl_seq", "date_id"),
-          "id", "etl_seq", "date_id"))
+    FaultStore.racing(t2) {
+      TxTable.upsert(spark, t2,
+        Seq((1L, 5.0, 2L, 20240101), (3L, 3.0, 2L, 20240101))
+          .toDF("id", "price", "etl_seq", "date_id"),
+        "id", "etl_seq", "date_id")
+    } {
+      TxTable.delete(spark, t2,
+        Seq((1L, 20240101)).toDF("id", "date_id"), "id", "date_id")
+    }
     assert(TxTable.snapshot(spark, t2).get
       .select("id").collect().map(_.getLong(0)).toSet === Set(2L, 3L),
       "the re-run delete must still kill the key AND keep the winner's other insert")
@@ -958,14 +963,16 @@ class MergeWriterSpec extends SparkTestBase {
       "id", "etl_seq", "date_id")
     // one atomic change batch: update 1, delete 2 — with a competing
     // upsert landing inside the race window
-    TxTable.applyCdc(spark, target,
-      Seq((1L, "U", 2L, 1.5, 20240101), (2L, "D", 2L, 2.0, 20240101))
-        .toDF("id", "_op", "_seq", "price", "date_id"),
-      "id", "_op", "_seq", "date_id",
-      beforeCommit = () =>
-        TxTable.upsert(spark, target,
-          Seq((3L, 3.0, 2L, 20240101)).toDF("id", "price", "etl_seq", "date_id"),
-          "id", "etl_seq", "date_id"))
+    FaultStore.racing(target) {
+      TxTable.upsert(spark, target,
+        Seq((3L, 3.0, 2L, 20240101)).toDF("id", "price", "etl_seq", "date_id"),
+        "id", "etl_seq", "date_id")
+    } {
+      TxTable.applyCdc(spark, target,
+        Seq((1L, "U", 2L, 1.5, 20240101), (2L, "D", 2L, 2.0, 20240101))
+          .toDF("id", "_op", "_seq", "price", "date_id"),
+        "id", "_op", "_seq", "date_id")
+    }
     val out = TxTable.snapshot(spark, target).get
       .select("id", "price").collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSet
@@ -988,26 +995,23 @@ class MergeWriterSpec extends SparkTestBase {
     // inside the verb's race window
     def winner(dir: String): Unit = TxTable.upsert(spark, dir,
       rows((9L, 90.0, 2L, 20240101)), "id", "etl_seq", "date_id")
-    // (verb, run it with the race seam, rows expected after both commits)
-    val cases: Seq[(String, (String, () => Unit) => Unit, Set[(Long, Double)])] = Seq(
-      ("replaceWindow", (dir, race) => TxTable.replaceWindow(spark, dir,
-        rows((4L, 40.0, 2L, 20240101)), "date_id", col("id") === 1L,
-        beforeCommit = race),
+    // (verb, run it, rows expected after both commits)
+    val cases: Seq[(String, String => Unit, Set[(Long, Double)])] = Seq(
+      ("replaceWindow", dir => TxTable.replaceWindow(spark, dir,
+        rows((4L, 40.0, 2L, 20240101)), "date_id", col("id") === 1L),
         Set((2L, 20.0), (4L, 40.0), (9L, 90.0))),
-      ("updateWhere", (dir, race) => TxTable.updateWhere(spark, dir, "date_id",
-        Seq("price" -> (col("price") * 10)), col("id") === 1L, beforeCommit = race),
+      ("updateWhere", dir => TxTable.updateWhere(spark, dir, "date_id",
+        Seq("price" -> (col("price") * 10)), col("id") === 1L),
         Set((1L, 100.0), (2L, 20.0), (9L, 90.0))),
-      ("merge", (dir, race) => TxTable.merge(spark, dir,
+      ("merge", dir => TxTable.merge(spark, dir,
         rows((1L, 11.0, 2L, 20240101), (5L, 50.0, 2L, 20240101)),
-        "id", "date_id", updateSet = Seq("price" -> col("s.price")),
-        beforeCommit = race),
+        "id", "date_id", updateSet = Seq("price" -> col("s.price"))),
         Set((1L, 11.0), (2L, 20.0), (5L, 50.0), (9L, 90.0))),
-      ("addColumns", (dir, race) => TxTable.addColumns(spark, dir, "date_id",
+      ("addColumns", dir => TxTable.addColumns(spark, dir, "date_id",
         Seq(org.apache.spark.sql.types.StructField(
-          "extra", org.apache.spark.sql.types.StringType)), beforeCommit = race),
+          "extra", org.apache.spark.sql.types.StringType))),
         Set((1L, 10.0), (2L, 20.0), (9L, 90.0))),
-      ("materialize", (dir, race) =>
-        TxTable.materialize(spark, dir, "date_id", beforeCommit = race),
+      ("materialize", dir => TxTable.materialize(spark, dir, "date_id"),
         Set((1L, 10.0), (2L, 20.0), (9L, 90.0))))
     for ((verb, run, expected) <- cases) {
       val dir = Files.createTempDirectory(s"graft_tx_race_$verb").toString + "/fact"
@@ -1018,7 +1022,7 @@ class MergeWriterSpec extends SparkTestBase {
         TxTable.cloneShallow(spark, src, dir)
       } else boot(dir)
       var raced = false
-      run(dir, () => { winner(dir); raced = true })
+      FaultStore.racing(dir) { winner(dir); raced = true }(run(dir))
       assert(raced, verb)
       // version 1, the winner at 2, the verb's re-staged commit at 3
       assert(TxTable.latestVersion(spark, dir) === 3L, verb)

@@ -95,13 +95,24 @@ class TxChangeFeedSpec extends SparkTestBase {
     assert(c1 === 2L)
     assert(state(replica1) === state(TxTable.snapshot(spark, target).get))
 
-    // more commits land; resume replication FROM the old replica
+    // more commits land, the second adding a column; resume replication
+    // FROM the old replica, which widens to the new column
+    val s = spark
+    import s.implicits._
     commit(target, Seq((1L, 9.0, 3L, 20240101)))
+    TxTable.upsert(spark, target,
+      Seq((2L, 2.5, 4L, 20240102, "late")).toDF("id", "price", "etl_seq", "date_id", "note"),
+      "id", "etl_seq", "date_id")
     val (c2, replica2) = TxChangeFeed.replicate(spark, target, "id",
       fromVersion = c1, base = Some(replica1))
-    assert(c2 === 3L)
-    assert(state(replica2) === state(TxTable.snapshot(spark, target).get))
+    assert(c2 === 4L)
+    val snap2 = TxTable.snapshot(spark, target).get
+    assert(state(replica2) === state(snap2))
     assert(state(replica2) === Set((1L, 9.0), (2L, 2.5), (3L, 3.0)))
+    def full(df: org.apache.spark.sql.DataFrame): Set[String] =
+      df.select(snap2.columns.toIndexedSeq.map(col): _*).collect().map(_.toString).toSet
+    assert(full(replica2) === full(snap2))
+    assert(replica2.filter(col("note") === "late").count() === 1L)
   }
 
   test("a cursor vacuumed out of retention fails loudly; the tip still drains") {

@@ -214,16 +214,17 @@ class TxConstraintsSpec extends SparkTestBase {
     val dir = freshDir()
     boot(dir)
     // the writer stages a VIOLATING batch; in the window between its
-    // staging and its CAS (the beforeCommit seam), the constraint
+    // staging and its CAS (FaultStore's hook), the constraint
     // publishes and takes its barrier — the writer's CAS loses to the
     // barrier, re-probes the constraint log on retry, re-enforces with
     // the new set, and refuses. The old validate-then-publish protocol
     // let exactly this batch land unvalidated.
-    val e = intercept[Exception](TxTable.upsert(spark, dir,
-      Seq((7L, -3.0, 2L, 20240105)).toDF("id", "price", "etl_seq", "date_id"),
-      "id", "etl_seq", "date_id",
-      beforeCommit = () =>
-        TxConstraints.add(spark, dir, "price_pos", "price > 0")))
+    val e = intercept[Exception](FaultStore.racing(dir)(
+      TxConstraints.add(spark, dir, "price_pos", "price > 0")) {
+      TxTable.upsert(spark, dir,
+        Seq((7L, -3.0, 2L, 20240105)).toDF("id", "price", "etl_seq", "date_id"),
+        "id", "etl_seq", "date_id")
+    })
     assert(e.getMessage.contains("price_pos"))
     // the constraint is armed and the violating batch left no trace
     assert(TxConstraints.of(spark, dir) === Seq(("price_pos", "price > 0")))
@@ -231,11 +232,12 @@ class TxConstraintsSpec extends SparkTestBase {
     // the symmetric case: a CONFORMING racing batch retries and lands
     val dir2 = freshDir()
     boot(dir2)
-    TxTable.upsert(spark, dir2,
-      Seq((8L, 99.0, 2L, 20240105)).toDF("id", "price", "etl_seq", "date_id"),
-      "id", "etl_seq", "date_id",
-      beforeCommit = () =>
-        TxConstraints.add(spark, dir2, "price_pos", "price > 0"))
+    FaultStore.racing(dir2)(
+      TxConstraints.add(spark, dir2, "price_pos", "price > 0")) {
+      TxTable.upsert(spark, dir2,
+        Seq((8L, 99.0, 2L, 20240105)).toDF("id", "price", "etl_seq", "date_id"),
+        "id", "etl_seq", "date_id")
+    }
     assert(TxTable.snapshot(spark, dir2).get.count() === 3L)
     assert(TxConstraints.of(spark, dir2).map(_._1) === Seq("price_pos"))
   }
@@ -248,24 +250,28 @@ class TxConstraintsSpec extends SparkTestBase {
     // forbid: the writer probed the (empty) constraint set BEFORE the
     // publish and wins its CAS before the barrier is taken. The ADD
     // must then re-validate, find the violating row, un-publish and
-    // refuse — the writer's commit stands.
+    // refuse — the writer's commit stands. The ADD parks at its
+    // barrier's first CAS, after the barrier read its tip: that CAS
+    // loses to the writer and the barrier retries one slot higher.
     val published = new java.util.concurrent.CountDownLatch(1)
     val writerDone = new java.util.concurrent.CountDownLatch(1)
     @volatile var addError: Option[Throwable] = None
-    val adder = new Thread(() => {
-      try TxConstraints.add(spark, dir, "price_pos", "price > 0",
-        beforeBarrier = () => { published.countDown(); writerDone.await() })
-      catch { case t: Throwable => addError = Some(t) }
-    })
-    try {
-      TxTable.upsert(spark, dir,
-        Seq((9L, -4.0, 2L, 20240106)).toDF("id", "price", "etl_seq", "date_id"),
-        "id", "etl_seq", "date_id",
-        // the writer has already staged and gate-probed (empty set);
-        // now let the ADD validate + publish, then commit before its barrier
-        beforeCommit = () => { adder.start(); published.await() })
-    } finally writerDone.countDown()
-    adder.join()
+    FaultStore.over(dir) { race =>
+      val adder = new Thread(() => {
+        race.beforeFirstCas(dir) { published.countDown(); writerDone.await() }
+        try TxConstraints.add(spark, dir, "price_pos", "price > 0")
+        catch { case t: Throwable => addError = Some(t) }
+      })
+      // the writer has already staged and gate-probed (empty set); now
+      // let the ADD validate + publish, then commit before its barrier
+      race.beforeFirstCas(dir) { adder.start(); published.await() }
+      try {
+        TxTable.upsert(spark, dir,
+          Seq((9L, -4.0, 2L, 20240106)).toDF("id", "price", "etl_seq", "date_id"),
+          "id", "etl_seq", "date_id")
+      } finally writerDone.countDown()
+      adder.join()
+    }
     // the writer's commit stands — it raced legitimately
     assert(TxTable.snapshot(spark, dir).get
       .filter(col("id") === 9L && col("price") === -4.0).count() === 1L)

@@ -1,6 +1,8 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
 
 import graft.io.{TxStreamSource, TxTable}
 import graft.ops.Merge
@@ -280,5 +282,37 @@ class TxMergeRestoreSpec extends SparkTestBase {
     }
     TxTable.vacuum(s, dir, retainVersions = 1)
     intercept[IllegalStateException] { TxTable.restore(s, dir, 1L) }
+  }
+
+  test("a restore losing its CAS to a racing upsert republishes its version on the new tip") {
+    val s = spark; import s.implicits._
+    val dir = Files.createTempDirectory("graft_tx_restore_race").toString + "/fact"
+    TxTable.upsert(s, dir, target, "id", "v", "p")                       // v1
+    TxTable.upsert(s, dir,
+      Seq((2L, "a", 999.0)).toDF("id", "p", "v"), "id", "v", "p")        // v2
+    val tip = TxTable.latestVersion(s, dir)
+    def names(sub: String): Seq[String] = {
+      val listing = Files.list(Paths.get(dir, sub))
+      try listing.iterator().asScala.map(_.getFileName.toString).toList.sorted
+      finally listing.close()
+    }
+    val dataBefore = names("data")
+    var raced = false
+    FaultStore.racing(dir) {
+      TxTable.upsert(s, dir,
+        Seq((8L, "b", 80.0)).toDF("id", "p", "v"), "id", "v", "p")       // v3 wins
+      raced = true
+    } { TxTable.restore(s, dir, 1L) }                                    // v4
+    assert(raced)
+    assert(TxTable.latestVersion(s, dir) == tip + 2)
+    val now = TxTable.snapshot(s, dir).get
+    val v1 = TxTable.snapshotAt(s, dir, 1L).get
+    assert(now.unionByName(v1).except(now.intersect(v1)).count() == 0)
+    assert(now.count() == 4)
+    // nothing staged is left behind: the racer's leaf is the only new
+    // data dir, and every manifest body backs a published slot
+    assert(names("data").diff(dataBefore).size == 1)
+    val log = names("_graft_log")
+    assert(log.count(_.startsWith("m-")) == log.count(_.startsWith("v")))
   }
 }

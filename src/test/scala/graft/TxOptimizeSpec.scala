@@ -132,11 +132,14 @@ class TxOptimizeSpec extends SparkTestBase {
     // day the optimize is NOT scoped to — the optimize must lose its
     // CAS, re-read the winner's manifest, re-stage only its scope, and
     // the winner's row must survive
-    TxTable.optimizeZOrderBy(s, dir, "day", Seq("x", "y"),
-      where = Some(col("day") >= "2024-01-03"),
-      beforeCommit = () => TxTable.upsert(s, dir,
+    FaultStore.racing(dir) {
+      TxTable.upsert(s, dir,
         Seq((9001L, 1.0, 2.0, "2024-01-01")).toDF("id", "x", "y", "day"),
-        "id", "id", "day"))
+        "id", "id", "day")
+    } {
+      TxTable.optimizeZOrderBy(s, dir, "day", Seq("x", "y"),
+        where = Some(col("day") >= "2024-01-03"))
+    }
 
     // versions: 1 bootstrap, 2 racing upsert, 3 the optimize's retry
     assert(TxTable.latestVersion(s, dir) === 3L)

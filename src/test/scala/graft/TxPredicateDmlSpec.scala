@@ -113,10 +113,11 @@ class TxPredicateDmlSpec extends SparkTestBase {
   test("a predicate rewrite losing the CAS race re-runs against the winner") {
     val s = spark; import s.implicits._
     val dir = seed("graft_dml_race")
-    TxTable.deleteWhere(spark, dir, "day", col("v") >= 400.0,
-      beforeCommit = () => TxTable.upsert(s, dir,
+    FaultStore.racing(dir) {
+      TxTable.upsert(s, dir,
         Seq((7L, "2024-01-01", "click", 70.0)).toDF("id", "day", "event_type", "v"),
-        "id", "v", "day"))
+        "id", "v", "day")
+    }(TxTable.deleteWhere(spark, dir, "day", col("v") >= 400.0))
     // the racing writer's row survives AND the delete applied
     assert(state(dir) ===
       Set((1L, 10.0), (2L, 200.0), (3L, 30.0), (6L, 60.0), (7L, 70.0)))

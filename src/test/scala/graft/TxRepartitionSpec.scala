@@ -73,18 +73,20 @@ class TxRepartitionSpec extends SparkTestBase {
     val atWindow = new java.util.concurrent.CountDownLatch(1)
     val proceed = new java.util.concurrent.CountDownLatch(1)
     @volatile var repartErr: Option[Throwable] = None
-    val repart = new Thread(() => {
-      try TxTable.repartitionTable(spark, dir, PartitionSpec(Seq("id")),
-        beforeCommit = () => { atWindow.countDown(); proceed.await() })
-      catch { case t: Throwable => repartErr = Some(t) }
-    })
-    try {
-      TxTable.upsert(spark, dir,
-        Seq((9L, 90.0, 1L, 20240109)).toDF("id", "price", "etl_seq", "date_id"),
-        "id", "etl_seq", "date_id",
-        beforeCommit = () => { repart.start(); atWindow.await() })
-    } finally proceed.countDown()
-    repart.join()
+    FaultStore.over(dir) { race =>
+      val repart = new Thread(() => {
+        race.beforeFirstCas(dir) { atWindow.countDown(); proceed.await() }
+        try TxTable.repartitionTable(spark, dir, PartitionSpec(Seq("id")))
+        catch { case t: Throwable => repartErr = Some(t) }
+      })
+      race.beforeFirstCas(dir) { repart.start(); atWindow.await() }
+      try {
+        TxTable.upsert(spark, dir,
+          Seq((9L, 90.0, 1L, 20240109)).toDF("id", "price", "etl_seq", "date_id"),
+          "id", "etl_seq", "date_id")
+      } finally proceed.countDown()
+      repart.join()
+    }
     assert(repartErr.isEmpty, s"repartition failed: $repartErr")
     val snap = TxTable.snapshot(spark, dir).get
     assert(snap.count() === 4L)
@@ -107,37 +109,31 @@ class TxRepartitionSpec extends SparkTestBase {
     // of committing old-keyed leaves into the re-keyed manifest (or, for
     // a keyed delete, finding none of its keys and silently returning).
     // replaceAll is point-in-time: it makes one attempt and refuses as such
-    val verbs: Seq[(String, (String, () => Unit) => Unit)] = Seq(
-      "upsert" -> ((dir, race) => TxTable.upsert(spark, dir, row9,
-        "id", "etl_seq", "date_id", beforeCommit = race)),
-      "replaceWindow" -> ((dir, race) => TxTable.replaceWindow(spark, dir, row9,
-        "date_id", col("id") === 9L, beforeCommit = race)),
-      "replaceAll" -> ((dir, race) => TxTable.replaceAll(spark, dir, row9,
-        "date_id", beforeCommit = race)),
-      "applyCdc" -> ((dir, race) => TxTable.applyCdc(spark, dir,
+    val verbs: Seq[(String, String => Unit)] = Seq(
+      "upsert" -> (dir => TxTable.upsert(spark, dir, row9,
+        "id", "etl_seq", "date_id")),
+      "replaceWindow" -> (dir => TxTable.replaceWindow(spark, dir, row9,
+        "date_id", col("id") === 9L)),
+      "replaceAll" -> (dir => TxTable.replaceAll(spark, dir, row9, "date_id")),
+      "applyCdc" -> (dir => TxTable.applyCdc(spark, dir,
         Seq((1L, "U", 2L, 11.0, 2L, 20240101))
           .toDF("id", "_op", "_seq", "price", "etl_seq", "date_id"),
-        "id", "_op", "_seq", "date_id", beforeCommit = race)),
-      "delete" -> ((dir, race) => TxTable.delete(spark, dir,
-        Seq((1L, 20240101)).toDF("id", "date_id"), "id", "date_id",
-        beforeCommit = race)),
-      "deleteWhere" -> ((dir, race) => TxTable.deleteWhere(spark, dir,
-        "date_id", col("id") === 1L, beforeCommit = race)),
-      "updateWhere" -> ((dir, race) => TxTable.updateWhere(spark, dir,
-        "date_id", Seq("price" -> lit(0.0)), col("id") === 1L,
-        beforeCommit = race)),
-      "merge" -> ((dir, race) => TxTable.merge(spark, dir,
+        "id", "_op", "_seq", "date_id")),
+      "delete" -> (dir => TxTable.delete(spark, dir,
+        Seq((1L, 20240101)).toDF("id", "date_id"), "id", "date_id")),
+      "deleteWhere" -> (dir => TxTable.deleteWhere(spark, dir,
+        "date_id", col("id") === 1L)),
+      "updateWhere" -> (dir => TxTable.updateWhere(spark, dir,
+        "date_id", Seq("price" -> lit(0.0)), col("id") === 1L)),
+      "merge" -> (dir => TxTable.merge(spark, dir,
         Seq((1L, 11.0, 2L, 20240101)).toDF("id", "price", "etl_seq", "date_id"),
-        "id", "date_id", updateSet = Seq("price" -> col("s.price")),
-        beforeCommit = race)),
-      "addColumns" -> ((dir, race) => TxTable.addColumns(spark, dir, "date_id",
+        "id", "date_id", updateSet = Seq("price" -> col("s.price")))),
+      "addColumns" -> (dir => TxTable.addColumns(spark, dir, "date_id",
         Seq(org.apache.spark.sql.types.StructField(
-          "extra", org.apache.spark.sql.types.StringType)),
-        beforeCommit = race)),
-      "materialize" -> ((dir, race) =>
-        TxTable.materialize(spark, dir, "date_id", beforeCommit = race)),
-      "optimizeZOrderBy" -> ((dir, race) => TxTable.optimizeZOrderBy(spark, dir,
-        "date_id", Seq("price"), beforeCommit = race)))
+          "extra", org.apache.spark.sql.types.StringType)))),
+      "materialize" -> (dir => TxTable.materialize(spark, dir, "date_id")),
+      "optimizeZOrderBy" -> (dir => TxTable.optimizeZOrderBy(spark, dir,
+        "date_id", Seq("price"))))
     // every verb runs; the failures are reported together
     val problems = verbs.flatMap { case (verb, run) =>
       val dir = freshDir()
@@ -147,8 +143,8 @@ class TxRepartitionSpec extends SparkTestBase {
         boot(src)
         TxTable.cloneShallow(spark, src, dir)
       } else boot(dir)
-      val refusal = scala.util.Try(run(dir, () =>
-        TxTable.repartitionTable(spark, dir, PartitionSpec(Seq("id"))))) match {
+      val refusal = scala.util.Try(FaultStore.racing(dir)(
+          TxTable.repartitionTable(spark, dir, PartitionSpec(Seq("id"))))(run(dir))) match {
         case scala.util.Success(_) => Some("returned normally")
         case scala.util.Failure(e) if !e.getMessage.contains(
             if (verb == "replaceAll") "point-in-time" else "partitioned by") =>
@@ -176,9 +172,9 @@ class TxRepartitionSpec extends SparkTestBase {
     val dir = freshDir()
     boot(dir)
     // crash between the transitional _meta and the rewrite commit
-    val eBoom = intercept[RuntimeException](TxTable.repartitionTable(spark, dir,
-      PartitionSpec(Seq("id")),
-      beforeCommit = () => throw new RuntimeException("crash window")))
+    val eBoom = intercept[RuntimeException](
+      FaultStore.racing(dir)(throw new RuntimeException("crash window"))(
+        TxTable.repartitionTable(spark, dir, PartitionSpec(Seq("id")))))
     assert(eBoom.getMessage === "crash window")
     // reads stay correct (pruning conservatively disabled)...
     assert(TxTable.snapshot(spark, dir).get.count() === 3L)
@@ -267,12 +263,15 @@ class TxRepartitionSpec extends SparkTestBase {
     // the pre-swap version still reads whole (reader isolation)
     assert(TxTable.snapshotAt(spark, dir, v1).get.count() === 3L)
     // a concurrent commit invalidates the point-in-time replacement
-    val e = intercept[IllegalStateException](TxTable.replaceAll(spark, dir,
-      Seq((9L, 90.0, 3L, 20240109)).toDF("id", "price", "etl_seq", "date_id"),
-      "date_id",
-      beforeCommit = () => TxTable.upsert(spark, dir,
+    val e = intercept[IllegalStateException](FaultStore.racing(dir) {
+      TxTable.upsert(spark, dir,
         Seq((6L, 60.0, 3L, 20240106)).toDF("id", "price", "etl_seq", "date_id"),
-        "id", "etl_seq", "date_id")))
+        "id", "etl_seq", "date_id")
+    } {
+      TxTable.replaceAll(spark, dir,
+        Seq((9L, 90.0, 3L, 20240109)).toDF("id", "price", "etl_seq", "date_id"),
+        "date_id")
+    })
     assert(e.getMessage.contains("point-in-time"))
     // the interleaved commit stands; the failed replacement left no trace
     val after = TxTable.snapshot(spark, dir).get

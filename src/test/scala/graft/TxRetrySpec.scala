@@ -1,9 +1,8 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
-import graft.io.{CommitStore, SymlinkCommitStore, TxConstraints, TxTable}
+import graft.io.{TxConstraints, TxTable}
 
 /** Every optimistic publish of the io layer runs on one retry loop with
   * one bound: against a store whose every slot is already taken, each
@@ -11,26 +10,11 @@ import graft.io.{CommitStore, SymlinkCommitStore, TxConstraints, TxTable}
   * exception type naming the op and the table. */
 class TxRetrySpec extends SparkTestBase {
 
-  /** The local store, except that `tryCommit` on a log matching
-    * `losing` always loses, counting the calls. */
-  private final class LosingStore extends CommitStore {
-    @volatile var losing: String => Boolean = _ => false
-    val lost = new AtomicInteger
-    def latest(logDir: String): (Long, Seq[String]) = SymlinkCommitStore.latest(logDir)
-    def at(logDir: String, version: Long): Option[Seq[String]] =
-      SymlinkCommitStore.at(logDir, version)
-    def tryCommit(logDir: String, version: Long, lines: Seq[String]): Boolean =
-      if (losing(logDir)) { lost.incrementAndGet(); false }
-      else SymlinkCommitStore.tryCommit(logDir, version, lines)
-  }
-
   test("every CAS publish gives up after the same attempts, naming the op and the table") {
     val s = spark; import s.implicits._
     val base = Files.createTempDirectory("graft_tx_retry").toString
     val dir = s"$base/fact"
-    val store = new LosingStore
-    CommitStore.forceForPrefix(base, _ => store)
-    try {
+    FaultStore.over(base) { store =>
       def rows(v: Double) = Seq((1L, v, 20240101)).toDF("id", "price", "date_id")
       TxTable.upsert(s, dir, rows(1.0), "id", "price", "date_id") // v1: checkpoint
       TxTable.upsert(s, dir, rows(2.0), "id", "price", "date_id") // v2: delta
@@ -63,6 +47,6 @@ class TxRetrySpec extends SparkTestBase {
       assert(attempts.forall(_._2 == 10), s"attempts per op: $attempts")
       assert(TxTable.latestVersion(s, dir) == 2L)
       assert(TxConstraints.of(s, dir).map(_._1) == Seq("pos"))
-    } finally CommitStore.clearForce(base)
+    }
   }
 }

@@ -2,12 +2,12 @@ package graft
 
 import java.nio.file.Files
 
-import graft.io.{TxSqlDml, TxTable}
+import graft.io.{TxCatalog, TxTable}
 
 /** SQL DML over graft-tx (io/TxSqlDml): `DELETE FROM` / `UPDATE` /
   * `MERGE INTO` statements against a `USING graft-tx` view convert at
   * analysis time to the transactional verbs — through the live-session
-  * entry (TxSqlDml.sql) and through a GraftExtensions-built session's
+  * entry (TxCatalog.sql) and through a GraftExtensions-built session's
   * plain `spark.sql`. Pins the statement→verb mapping: scope-pruned
   * deletes keep untouched-partition file identity, SQL's first-match-
   * wins clause order survives the verb's fixed precedence, identity
@@ -44,7 +44,7 @@ class TxSqlDmlSpec extends SparkTestBase {
   test("SQL DELETE: predicate applies, partition conjunct prunes (file identity kept)") {
     val (dir, view) = seed("graft_sqldel")
     val before = TxTable.latest(spark, dir)._2
-    TxSqlDml.sql(spark,
+    TxCatalog.sql(spark,
       s"DELETE FROM $view WHERE day = '2024-01-02' AND v > 100")
     assert(state(dir) ===
       Set((1L, 10.0), (2L, 200.0), (3L, 30.0), (5L, 500.0), (6L, 60.0)))
@@ -59,7 +59,7 @@ class TxSqlDmlSpec extends SparkTestBase {
 
   test("SQL DELETE without WHERE empties the table") {
     val (dir, view) = seed("graft_sqldel_all")
-    TxSqlDml.sql(spark, s"DELETE FROM $view")
+    TxCatalog.sql(spark, s"DELETE FROM $view")
     // every partition tombstoned out: the snapshot has no live entries
     assert(TxTable.snapshot(spark, dir).forall(_.count() === 0L))
     assert(TxTable.latest(spark, dir)._2.isEmpty)
@@ -67,7 +67,7 @@ class TxSqlDmlSpec extends SparkTestBase {
 
   test("SQL UPDATE: simultaneous assignment against the old row, expressions allowed") {
     val (dir, view) = seed("graft_sqlupd")
-    TxSqlDml.sql(spark,
+    TxCatalog.sql(spark,
       s"UPDATE $view SET v = v + id, id = id + 100 WHERE event_type = 'click'")
     assert(state(dir) === Set(
       (101L, 11.0), (2L, 200.0), (103L, 33.0), (4L, 400.0),
@@ -90,7 +90,7 @@ class TxSqlDmlSpec extends SparkTestBase {
       (8L, "2024-01-04", "click", -1.0))
       .toDF("id", "day", "event_type", "v")
       .createOrReplaceTempView(s"${view}_src")
-    TxSqlDml.sql(spark,
+    TxCatalog.sql(spark,
       s"""MERGE INTO $view t USING ${view}_src s ON t.id = s.id
          |WHEN MATCHED AND s.v > t.v THEN UPDATE SET v = s.v
          |WHEN MATCHED AND s.event_type = 'view' THEN DELETE
@@ -107,7 +107,7 @@ class TxSqlDmlSpec extends SparkTestBase {
     Seq((2L, "2024-01-01", "view", 250.0))
       .toDF("id", "day", "event_type", "v")
       .createOrReplaceTempView(s"${view}_src")
-    TxSqlDml.sql(spark,
+    TxCatalog.sql(spark,
       s"""MERGE INTO $view t USING ${view}_src s ON t.id = s.id
          |WHEN MATCHED AND s.event_type = 'view' THEN DELETE
          |WHEN MATCHED AND s.v > t.v THEN UPDATE SET v = s.v
@@ -122,7 +122,7 @@ class TxSqlDmlSpec extends SparkTestBase {
     Seq((1L, "2024-01-01", "tap", 11.0), (9L, "2024-01-05", "tap", 90.0))
       .toDF("id", "day", "event_type", "v")
       .createOrReplaceTempView(s"${view}_src")
-    TxSqlDml.sql(spark,
+    TxCatalog.sql(spark,
       s"""MERGE INTO $view t USING ${view}_src s ON t.id = s.id
          |WHEN MATCHED THEN UPDATE SET *
          |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
@@ -139,7 +139,7 @@ class TxSqlDmlSpec extends SparkTestBase {
   test("unsupported shapes refuse loudly at conversion") {
     val (dir, view) = seed("graft_sqlrefuse")
     def refuse(sql: String, needle: String): Unit = {
-      val e = intercept[Exception](TxSqlDml.sql(spark, sql))
+      val e = intercept[Exception](TxCatalog.sql(spark, sql))
       assert(e.getMessage != null && e.getMessage.contains(needle),
         s"wanted '$needle' in: ${e.getMessage}")
     }
@@ -183,7 +183,7 @@ class TxSqlDmlSpec extends SparkTestBase {
         (7L, "2024-01-04", "click", 70.0, "I"))
       .toDF("id", "day", "event_type", "v", "op")
       .createOrReplaceTempView(s"${view}_src")
-    TxSqlDml.sql(spark,
+    TxCatalog.sql(spark,
       s"""MERGE INTO $view t USING ${view}_src s ON t.id = s.id
          |WHEN MATCHED AND s.op = 'D' THEN DELETE
          |WHEN NOT MATCHED AND s.op = 'I' THEN INSERT (id, day, event_type, v)
@@ -204,9 +204,9 @@ class TxSqlDmlSpec extends SparkTestBase {
     spark.sql(s"CREATE TABLE $tbl USING `graft-tx` OPTIONS (path 'file:$dir')")
     try {
       assert(spark.table(tbl).count() === 6L)
-      TxSqlDml.sql(spark, s"DELETE FROM $tbl WHERE v >= 400")
+      TxCatalog.sql(spark, s"DELETE FROM $tbl WHERE v >= 400")
       assert(state(dir) === Set((1L, 10.0), (2L, 200.0), (3L, 30.0), (6L, 60.0)))
-      TxSqlDml.sql(spark, s"UPDATE $tbl SET v = v + 1 WHERE id = 1")
+      TxCatalog.sql(spark, s"UPDATE $tbl SET v = v + 1 WHERE id = 1")
       assert(spark.table(tbl).filter("id = 1")
         .select("v").head().getDouble(0) === 11.0)
     } finally spark.sql(s"DROP TABLE $tbl")
