@@ -22,9 +22,10 @@ import org.apache.spark.sql.types._
   * NOT already present in `times`.
   *
   * Semantics are bit-identical to `ops/Interpolate.densify` and the
-  * specs' typed kernel `TypedDensify` (same candidate order, same tie-break toward the
-  * earlier minute, same IEEE expression shape — InterpSqlSpec asserts
-  * the differential; the reference behavior is
+  * specs' typed kernel `TypedDensify` (same candidate order, same
+  * tie-break toward the earlier minute, same IEEE expression shape —
+  * InterpolatePropertySpec asserts the differential; the reference
+  * behavior is
   * /root/reference/dags/etl/fact_gold_price.py:307-351): points are
   * time-sorted; for a missing minute m the two nearest by
   * |t − m| on the raw HHmmss encoding win, ties by sort position;
@@ -37,6 +38,12 @@ import org.apache.spark.sql.types._
   * aggregation), emitting only the missing minutes — output-sized work
   * with per-group state bounded by the day's minute count, exactly like
   * the operator formulation.
+  *
+  * Two callers share the per-group kernel
+  * ([[LinearInterpolateRows.interpolate]]): this generator, which
+  * `ops/Interpolate.densifySql` (query `t8_interp_sql`) reaches through
+  * SQL text, and the hourly pipeline's driver-side hour,
+  * `ops/Interpolate.densifyHour`.
   */
 case class LinearInterpolateRows(
     times: Expression, prices: Expression, grid: Expression)
@@ -76,25 +83,45 @@ case class LinearInterpolateRows(
       s"linear_interpolate: times ($n) and prices (${pArr.numElements()}) lengths differ")
     if (n == 0) return Nil
 
-    // time-sorted points; prices stay boxed so NULL propagates. NULL
-    // TIMES (or grid minutes, below) are rejected loudly — ArrayData
-    // would silently read a null slot as 0, fabricating a midnight
-    // point that skews nearest-2 selection.
+    // prices stay boxed so NULL propagates. NULL TIMES (or grid
+    // minutes, below) are rejected loudly — ArrayData would silently
+    // read a null slot as 0, fabricating a midnight point that skews
+    // nearest-2 selection.
     val pts = Array.tabulate(n) { i =>
       require(!tArr.isNullAt(i),
         "linear_interpolate: times must not contain NULL")
       val p: java.lang.Double =
         if (pArr.isNullAt(i)) null else pArr.getDouble(i)
       (tArr.getInt(i), p)
-    }.sortBy(_._1)
-    val existing = pts.map(_._1).toSet
-
-    val out = Vector.newBuilder[InternalRow]
-    var gi = 0
-    while (gi < gArr.numElements()) {
-      require(!gArr.isNullAt(gi),
+    }
+    val minutes = Array.tabulate(gArr.numElements()) { i =>
+      require(!gArr.isNullAt(i),
         "linear_interpolate: grid must not contain NULL")
-      val m = gArr.getInt(gi)
+      gArr.getInt(i)
+    }
+    LinearInterpolateRows.interpolate(pts, minutes).map { case (m, price) =>
+      new GenericInternalRow(Array[Any](m, price)): InternalRow
+    }
+  }
+}
+
+object LinearInterpolateRows {
+
+  /** The kernel on one group: `points` are its (minute, price) pairs,
+    * minutes distinct, in any order; prices may be NULL. Returns one
+    * (minute, price) per `grid` minute absent from `points`, in grid
+    * order. The pure form of [[LinearInterpolateRows.eval]], shared
+    * with the driver-side hour (`ops/Interpolate.densifyHour`). */
+  def interpolate(
+      points: Array[(Int, java.lang.Double)],
+      grid: Array[Int]): Vector[(Int, java.lang.Double)] = {
+    if (points.isEmpty) return Vector.empty
+    val pts = points.sortBy(_._1)
+    val existing = pts.map(_._1).toSet
+    val out = Vector.newBuilder[(Int, java.lang.Double)]
+    var gi = 0
+    while (gi < grid.length) {
+      val m = grid(gi)
       gi += 1
       if (!existing.contains(m)) {
         // two smallest by (|t − m|, sort position) — the numpy-argsort
@@ -121,7 +148,7 @@ case class LinearInterpolateRows(
               a + (m - t1) * (b - a) / (t2 - t1)
             }
           }
-        out += new GenericInternalRow(Array[Any](m, price))
+        out += ((m, price))
       }
     }
     out.result()

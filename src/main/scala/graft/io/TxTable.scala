@@ -8,6 +8,7 @@ import graft.ops.Merge
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation,
   InMemoryFileIndex, PartitionPath, PartitionSpec => FilePartitionSpec}
@@ -261,12 +262,15 @@ object TxTable {
   }
 
   /** `df` held stable across CAS retries: a lazy local checkpoint (the
-    * batch pass materializes it), unless `df` already reads a persisted
-    * RDD, as a checkpoint does — a caller that audits its batch before
-    * writing it (FactPipeline's window) pins it once, not twice. A frame
+    * batch pass materializes it), unless `df` is already stable — it
+    * reads a persisted RDD, as a checkpoint does, or it is local rows
+    * (`createDataFrame(rows, schema)`, a `LocalRelation`), whose rows
+    * live in the plan: a caller that audits its batch on the driver
+    * before writing it (FactPipeline's window) persists nothing. A frame
     * over an unpersisted RDD (`createDataFrame(rdd, …)`) is pinned. */
   private def pinned(df: DataFrame): DataFrame = df.queryExecution.logical match {
     case l: LogicalRDD if l.rdd.getStorageLevel != StorageLevel.NONE => df
+    case _: LocalRelation => df
     case _ => df.localCheckpoint(eager = false)
   }
 

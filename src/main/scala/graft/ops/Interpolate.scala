@@ -1,7 +1,8 @@
 package graft.ops
 
-import graft.functions.InterpKernel
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.functions.{InterpKernel, LinearInterpolateRows}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -46,15 +47,6 @@ import org.apache.spark.sql.functions._
   * exchange ever touches them. Per-group state is bounded by 1440
   * minutes/day regardless of total data size; a hot source/date still
   * caps at its day's minute count, so there is no unbounded skew.
-  *
-  * The hour path (`onePartition = true`, FactPipeline.runHour) is the
-  * same plan on one partition: the input and the output are
-  * `coalesce(1)`'d, so the per-minute aggregate, the neighbor window
-  * and the bounds aggregate are satisfied by the single partition and
-  * plan no exchange; only the bounds broadcast runs a job of its own.
-  * An hour holds a few hundred ticks, far below what one task handles,
-  * where the explicit-width repartition would pay an exchange per
-  * subtree for nothing.
   */
 object Interpolate {
 
@@ -70,20 +62,12 @@ object Interpolate {
 
   /** Full densified table from a T1-shaped input
     * (source_id, side_id, date_id, time_id, rounded_time_id, price,
-    * is_interpolated=false): actual rows unioned with generated rows.
-    *
-    * @param onePartition the caller's placement: `false` (the default;
-    *   the rebuild, `t3`) repartitions the points by the group keys to
-    *   an explicit width; `true` runs the whole operator on one
-    *   partition, for a batch one task holds (the hourly pipeline's
-    *   hour; see "Plan shape" above)
-    */
-  def densify(factRows: DataFrame, onePartition: Boolean = false): DataFrame = {
+    * is_interpolated=false): actual rows unioned with generated rows. */
+  def densify(factRows: DataFrame): DataFrame = {
     val spark = factRows.sparkSession
     import spark.implicits._
 
-    // Unless the caller places the batch on one partition, the points
-    // subtree is repartitioned by the group keys with an
+    // The points subtree is repartitioned by the group keys with an
     // EXPLICIT width. Two reasons, both scale-critical:
     //  - AQE sizes post-shuffle stages by their INPUT bytes, but this
     //    stage's downstream explode amplifies rows 100–1000× (minutes
@@ -100,9 +84,7 @@ object Interpolate {
     //    (partition by keys) — so the whole points pipeline runs on
     //    ONE exchange instead of two.
     val width = spark.sessionState.conf.numShufflePartitions
-    val ticks =
-      if (onePartition) factRows.coalesce(1)
-      else factRows.repartition(width, keys.map(col): _*)
+    val ticks = factRows.repartition(width, keys.map(col): _*)
 
     // One exact point per (group, minute): decimal mean of that minute's
     // non-NULL prices (deterministic — see scaladoc; all-NULL → NULL
@@ -213,12 +195,66 @@ object Interpolate {
         ).as("price"),
         lit(true).as("is_interpolated"))
 
-    val actualsOut = (if (onePartition) ticks else factRows).select(
+    val actualsOut = factRows.select(
       $"source_id", $"side_id", $"date_id", $"time_id", $"rounded_time_id",
       $"price", $"is_interpolated")
 
-    val out = actualsOut.unionByName(interpolated)
-    if (onePartition) out.coalesce(1) else out
+    actualsOut.unionByName(interpolated)
+  }
+
+  /** [[densify]]'s contract over rows already on the driver, with no
+    * Spark plan: the hourly pipeline's hour (FactPipeline.runHour),
+    * fetched by one read-back, densified and audited here and handed to
+    * the window write as local rows. `rows` are T1-shaped, in
+    * [[densify]]'s column order (source_id, side_id, date_id, time_id,
+    * rounded_time_id, price, is_interpolated); the result is `rows`
+    * unaltered followed by the generated rows, group by group (keys
+    * ascending, NULL first), each group's minutes ascending, under the
+    * first row's schema.
+    *
+    * It groups by (source_id, side_id, date_id), NULL keys as groups of
+    * their own; takes each minute's exact decimal mean as [[densify]]
+    * does; keeps groups of ≥ 2 rows; and grids each date from its
+    * minimum to its maximum observed minute. The nearest-two selection
+    * and the linear formula are the SQL generator's own
+    * ([[graft.functions.LinearInterpolateRows.interpolate]]), so the
+    * three formulations stay bit-identical (InterpolatePropertySpec).
+    *
+    * Bound: the driver holds the densified rows, groups × the grid's
+    * minutes — at most 60 per group for an hour, the rows a single task
+    * would hold. It is for an hour-sized batch; a day or a rebuild goes
+    * through [[densify]]. */
+  def densifyHour(rows: Seq[Row]): Seq[Row] = {
+    def minute(r: Row): Int = r.getInt(4)
+    def mod(t: Int) = t / 10000 * 60 + t % 10000 / 100
+    // T2 bounds: a NULL date matches no grid, as it joins no bounds row
+    val grids = rows.groupBy(_.get(2)).collect {
+      case (date, rs) if date != null =>
+        val ms = rs.map(minute)
+        date -> (mod(ms.min) to mod(ms.max)).map(m => m / 60 * 10000 + m % 60 * 100).toArray
+    }
+    val schema = rows.headOption.map(_.schema).orNull
+    def key(v: Any): Option[Int] = Option(v).map(_.asInstanceOf[Int])
+    val groups = rows.groupBy(r => (r.get(0), r.get(1), r.get(2))).toSeq
+      .sortBy { case ((src, side, date), _) => (key(src), key(side), key(date)) }
+    val generated = groups.flatMap { case ((src, side, date), rs) =>
+      grids.get(date).filter(_ => rs.size >= 2).toSeq.flatMap { grid =>
+        // one exact point per minute: the decimal(18,2) HALF_UP mean of
+        // its non-NULL prices (NULL when it has none)
+        val points = rs.groupBy(minute).iterator.map { case (t, ts) =>
+          val defined = ts.filterNot(_.isNullAt(5)).map(_.getDouble(5))
+          val mean: java.lang.Double =
+            if (defined.isEmpty) null
+            else defined.map(p => BigDecimal(p).setScale(2, BigDecimal.RoundingMode.HALF_UP))
+              .sum.toDouble / defined.size
+          (t, mean)
+        }.toArray
+        LinearInterpolateRows.interpolate(points, grid).map { case (m, price) =>
+          new GenericRowWithSchema(Array[Any](src, side, date, m, m, price, true), schema)
+        }
+      }
+    }
+    rows ++ generated
   }
 
   /** Same contract as [[densify]], expressed as plain SQL text over the

@@ -1,16 +1,19 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import scala.collection.mutable
 
 /** Runtime data-quality gates (SURVEY.md §2.12): the reference's only
   * correctness assurance is in-pipeline validation —
   * `validate_interpolated_data`
   * (/root/reference/dags/etl/fact_gold_price.py:382-469) and
-  * `verify_dim_date_data` (dags/etl/dim_date_etl_dag.py:103-137). Each
-  * gate is one aggregate computed distributed and asserted on the
-  * driver; a violation throws, which is the Spark-native equivalent of
-  * the reference failing the task and routing to its ONE_FAILED alert.
+  * `verify_dim_date_data` (dags/etl/dim_date_etl_dag.py:103-137). The
+  * window gate audits an hour's rows already on the driver; the
+  * dim_date gate is one aggregate computed distributed and asserted on
+  * the driver. A violation throws, which is the Spark-native equivalent
+  * of the reference failing the task and routing to its ONE_FAILED
+  * alert.
   */
 object Validation {
 
@@ -20,12 +23,12 @@ object Validation {
   final case class WindowProfile(
       nSources: Long, nSides: Long, nMinutes: Long, nRows: Long)
 
-  /** The densified-window gates (fact_gold_price.py:433-460) in ONE
-    * action: a per-(source_id, side_id) pass collects each group's grid
-    * minutes, row count and NULL/NaN-price count, then a global pass
-    * over those groups yields the window's grid minutes and row count,
-    * the number of groups short of `expectedMinutes` and the bad-price
-    * total. The verdicts are then asserted on the driver, in order:
+  /** The densified-window gates (fact_gold_price.py:433-460) over the
+    * window's rows, on the driver in one pass and with no Spark job:
+    * each (source_id, side_id) group's grid minutes, then the window's
+    * grid minutes and row count, the number of groups short of
+    * `expectedMinutes` and the NULL/NaN-price total. The verdicts are
+    * asserted in order:
     *
     *  - completeness (:433-440), as per-group coverage: the window must
     *    hold `expectedMinutes` grid minutes, and EVERY (source_id,
@@ -41,34 +44,31 @@ object Validation {
     * `expectedMinutes` defaults to the window's own grid (the distinct
     * non-NULL `rounded_time_id`s), the hourly pipeline's use. A NULL
     * side counts as its own side, like the reference's pandas
-    * dropna=False grouping. Returns the profile it checked. */
+    * dropna=False grouping; a NULL source is a group but not a source.
+    * Columns are read by name (source_id, side_id, rounded_time_id,
+    * price), so the rows carry a schema, as collected rows and
+    * `Interpolate.densifyHour`'s do. Returns the profile it checked. */
   def windowGate(
-      densified: DataFrame, expectedMinutes: Option[Long] = None): WindowProfile = {
-    val groups = densified
-      .groupBy(col("source_id"), col("side_id"))
-      .agg(
-        collect_set(col("rounded_time_id")).as("minutes"),
-        count(lit(1)).as("rows"),
-        count(when(col("price").isNull || isnan(col("price")), 1)).as("bad"))
-    val totals = groups.agg(
-      size(collect_set(col("source_id"))).as("n_sources"),
-      // wrapped in a struct so a NULL side is collected as a side
-      size(collect_set(struct(col("side_id")))).as("n_sides"),
-      size(array_distinct(flatten(collect_list(col("minutes"))))).as("n_minutes"),
-      collect_list(size(col("minutes"))).as("group_minutes"),
-      coalesce(sum(col("rows")), lit(0L)).as("n_rows"),
-      coalesce(sum(col("bad")), lit(0L)).as("n_bad"))
-    val expected = expectedMinutes.fold(col("n_minutes"))(lit(_))
-    val r = totals.select(
-      col("n_sources").cast("long"),
-      col("n_sides").cast("long"),
-      col("n_minutes").cast("long"),
-      col("n_rows"),
-      size(filter(col("group_minutes"), _ < expected)).cast("long"),
-      col("n_bad")).collect()(0)
-    val profile = WindowProfile(r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
-    val (short, bad) = (r.getLong(4), r.getLong(5))
+      rows: Seq[Row], expectedMinutes: Option[Long] = None): WindowProfile = {
+    val minutesOf = mutable.HashMap.empty[(Any, Any), mutable.HashSet[Int]]
+    val gridMinutes = mutable.HashSet.empty[Int]
+    var bad = 0L
+    rows.headOption.foreach { first =>
+      val Seq(src, side, minute, price) =
+        Seq("source_id", "side_id", "rounded_time_id", "price").map(first.fieldIndex)
+      rows.foreach { r =>
+        val seen = minutesOf.getOrElseUpdate((r.get(src), r.get(side)), mutable.HashSet.empty)
+        if (!r.isNullAt(minute)) { seen += r.getInt(minute); gridMinutes += r.getInt(minute) }
+        if (r.isNullAt(price) || r.getDouble(price).isNaN) bad += 1
+      }
+    }
+    val groups = minutesOf.keys
+    val profile = WindowProfile(
+      groups.flatMap(g => Option(g._1)).toSet.size.toLong,
+      groups.map(_._2).toSet.size.toLong,
+      gridMinutes.size.toLong, rows.size.toLong)
     val want = expectedMinutes.getOrElse(profile.nMinutes)
+    val short = minutesOf.values.count(_.size < want)
     if (profile.nMinutes < want)
       throw GateViolation(
         s"completeness: ${profile.nMinutes} of $want grid minutes present")

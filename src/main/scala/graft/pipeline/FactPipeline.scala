@@ -5,6 +5,7 @@ import graft.io.{Layout, TxTable}
 import graft.ops.{GoldModel, Interpolate, Validation}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Success, Try}
 
 /** The reference's primary hourly pipeline (SURVEY.md §3.1,
@@ -13,7 +14,8 @@ import scala.util.{Failure, Success, Try}
   * gates → window replacement, sequenced on a single SparkSession with plain
   * DataFrame hand-offs — where the reference crosses a process or
   * serialization boundary between every task (scheduler → worker →
-  * Postgres → XCom), this crosses only shuffle exchanges. Both tables
+  * Postgres → XCom), this crosses only shuffle exchanges and, for the
+  * hour's densified rows, the driver. Both tables
   * are TxTables (io/TxTable): every write is a CAS-committed manifest
   * version, so a concurrent backfill or a second hourly run cannot
   * clobber this one, readers never see a torn hour, and the run
@@ -35,11 +37,12 @@ import scala.util.{Failure, Success, Try}
   *    `runVersion` — replays with a higher version win, equal versions
   *    tie-break deterministically (Merge.upsertLatestWins);
   *  - the gates run BEFORE the interpolated window publishes
-  *    (write-audit-publish): the densified hour is materialized once,
-  *    audited, and only then replaces its window, so a failing hour
-  *    leaves the interpolated table at its prior version with the prior
-  *    window readable, where validating after the write would leave a
-  *    bad hour visible to readers until a replay replaced it.
+  *    (write-audit-publish): the densified hour is computed once, on
+  *    the driver, audited, and only then replaces its window, so a
+  *    failing hour leaves the interpolated table at its prior version
+  *    with the prior window readable, where validating after the write
+  *    would leave a bad hour visible to readers until a replay
+  *    replaced it.
   *
   * The success/failure hooks are the Airflow TriggerRule analog
   * (ALL_SUCCESS → notify success, ONE_FAILED → notify failure,
@@ -56,12 +59,15 @@ object FactPipeline {
 
   /** Run one closed hour end-to-end.
     *
-    * Fixed cost per hour: 6 Spark jobs (two batch passes, two staging
-    * writes, densify's bounds broadcast and the gate), no exchange,
-    * and no new generated code once the loop is warm. `dateId`, `hour`
-    * and `runVersion` reach the generated code as parameters
-    * (graft.functions.Param), so the next hour runs the classes the
-    * last one compiled — provided the session's codegen cache
+    * Fixed cost per hour: 5 Spark jobs (two batch passes, two staging
+    * writes and the read-back), no exchange, and no new generated code
+    * once the loop is warm. The hour is densified and audited on the
+    * driver, over the read-back's rows (Interpolate.densifyHour,
+    * Validation.windowGate): the driver holds groups × at most 60
+    * minutes of rows, what a single task would hold of the hour.
+    * `dateId`, `hour` and `runVersion` reach the generated code as
+    * parameters (graft.functions.Param), so the next hour runs the
+    * classes the last one compiled — provided the session's codegen cache
     * (`spark.sql.codegen.cache.maxEntries`) holds an hour's classes,
     * as `graft.LocalSpark`'s 5,000 entries do. At Spark's default of
     * 100 entries an hourly loop with a feed and a reader thrashes it:
@@ -142,21 +148,19 @@ object FactPipeline {
       // a literal: the manifest lookup folds it on the driver
       val t1 = TxTable.snapshotPartitions(spark, factDir, Seq(lit(dateId))).get
         .filter(col("date_id") === date && floor(col("time_id") / 10000) === hr)
-        .drop("etl_version")
-        .withColumn("rounded_time_id", GoldModel.roundedTimeId(col("time_id")))
-        .withColumn("is_interpolated", lit(false))
-      // an hour-sized batch: densified on one partition, so its
-      // aggregates and window plan no exchange. Materialized once, by
-      // the gate's own pass (a lazy checkpoint): the gate audits and the
-      // window write stages the same rows
-      val densified = Interpolate.densify(t1, onePartition = true)
-        .localCheckpoint(eager = false)
+        .select(col("source_id"), col("side_id"), col("date_id"), col("time_id"),
+          GoldModel.roundedTimeId(col("time_id")).as("rounded_time_id"),
+          col("price"), lit(false).as("is_interpolated"))
+      // an hour-sized batch, fetched by one job and densified on the
+      // driver (Interpolate.densifyHour, which states the bound)
+      val hourRows = Interpolate.densifyHour(t1.collect().toSeq)
 
-      // §2.12 gates BEFORE publishing (class doc): one action, the
-      // hour's own grid is the completeness target. Under AQE a lazy
-      // checkpoint reports no partitioning, so the gate reads it through
-      // coalesce(1), which its two aggregates take without an exchange
-      val profile = Validation.windowGate(densified.coalesce(1))
+      // §2.12 gates BEFORE publishing (class doc), over the same rows on
+      // the driver: the hour's own grid is the completeness target
+      val profile = Validation.windowGate(hourRows)
+      // local rows: they live in the plan, so the window write holds
+      // them stable across CAS retries without a checkpoint
+      val densified = spark.createDataFrame(hourRows.asJava, t1.schema)
 
       // S6/S7 as hour-window replacement instead of blind appends (see
       // class doc): the recomputed hour replaces its previous slice

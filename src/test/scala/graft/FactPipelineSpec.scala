@@ -10,10 +10,11 @@ import org.apache.spark.sql.functions._
 import scala.util.{Failure, Success}
 
 /** §3.1 end-to-end: one closed hour through extract → upsert →
-  * densify/interpolate → gates, then the properties the orchestration
-  * must provide — replay idempotence across BOTH tables and the
-  * failure-hook path on a gate violation. Both tables are TxTables, so
-  * every read goes through the manifest (`TxTable.snapshot`). */
+  * read-back → densify/interpolate → gates → window replacement, then
+  * the properties the orchestration must provide — replay idempotence
+  * across BOTH tables and the failure-hook path on a gate violation.
+  * Both tables are TxTables, so every read goes through the manifest
+  * (`TxTable.snapshot`). */
 class FactPipelineSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -144,15 +145,14 @@ class FactPipelineSpec extends SparkTestBase {
     assert(TxTable.snapshot(spark, interp).get.count() === 12L + r11.densifiedRows)
   }
 
-  test("transactional mode: an hour and its replay each run at most 6 Spark jobs; none reads the window back") {
+  test("transactional mode: an hour and its replay each run at most 5 Spark jobs; none reads the window back") {
     // The hour's fixed costs, pinned (20 jobs each at the time of the
     // one-pass batch): one pass per batch (materialize + touched keys +
-    // row count, which is also `extracted`), one-partition merges and
-    // densify with no exchange (only densify's bounds broadcast runs a
-    // job of its own), and the gate on the materialized densified hour
-    // instead of a parquet read-back of the published window. The
-    // window replacement reuses the audited hour's checkpoint, so an
-    // hour persists two batches: the fact batch and the densified hour.
+    // row count, which is also `extracted`), one-partition merges with
+    // no exchange, and one read-back of the hour, densified and audited
+    // on the driver instead of a parquet read-back of the published
+    // window. The window replacement writes the audited hour as local
+    // rows, so an hour persists one batch: the fact batch.
     val wh = Files.createTempDirectory("graft_pipeline_jobs").toString
     val interp = s"$wh/fact_gold_price_interpolated"
     // jobs counted inside: the executions' own marker is a job, the
@@ -178,8 +178,8 @@ class FactPipelineSpec extends SparkTestBase {
     }
     for (v <- Seq(1L, 2L)) {
       val (jobs, scanned, persisted) = hourRun(v)
-      assert(jobs <= 6, s"run $v launched $jobs Spark jobs")
-      assert(persisted <= 2, s"run $v persisted $persisted batches")
+      assert(jobs <= 5, s"run $v launched $jobs Spark jobs")
+      assert(persisted <= 1, s"run $v persisted $persisted batches")
       val leaf = publishedLeaf()
       assert(!scanned.exists(_.contains(leaf)),
         s"run $v read its own published window back: $scanned")

@@ -7,7 +7,8 @@ import org.apache.spark.sql.types._
 import scala.util.Random
 
 /** Randomized differential testing of the interpolation operator: the
-  * declarative plan must match the numpy-faithful typed kernel
+  * declarative plan must match the numpy-faithful typed kernel, the SQL
+  * generator and the driver-side hour function (`densifyHour`)
   * bit-for-bit on adversarial inputs — duplicate minutes, NULL side
   * groups, 1-tick and single-minute groups, head/tail gaps, equidistant
   * ties — across several seeded corpora (deterministic, no flaky
@@ -65,6 +66,11 @@ class InterpolatePropertySpec extends SparkTestBase {
         s"declarative and typed kernels diverge for seed $seed")
       assert(d.exceptAll(q).isEmpty && q.exceptAll(d).isEmpty,
         s"declarative and SQL-generator formulations diverge for seed $seed")
+      // the fourth leg: the driver-side hour function, which shares the
+      // generator's per-group kernel, row for row
+      def exact(rows: Seq[Row]) = rows.map(_.toString).sorted
+      assert(exact(Interpolate.densifyHour(df.collect().toSeq)) === exact(d.collect().toSeq),
+        s"declarative and driver-side hour formulations diverge for seed $seed")
     }
   }
 

@@ -1,8 +1,7 @@
 package graft
 
 import graft.ops.{GoldModel, Interpolate, TypedDensify}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 /** Differential + invariant tests for the interpolation operator
@@ -20,7 +19,6 @@ class InterpolateSpec extends SparkTestBase {
   private lazy val declarative = Interpolate.densify(factRows).cache()
   private lazy val typed =
     TypedDensify.densify(factRows, TypedDensify.gridByDate(factRows)).cache()
-  private object Aqe extends AdaptiveSparkPlanHelper
 
   test("declarative and typed kernels agree exactly") {
     val d = declarative
@@ -30,15 +28,16 @@ class InterpolateSpec extends SparkTestBase {
       "Interpolate.densify() and TypedDensify.densify() diverge")
   }
 
-  test("densify on one partition plans no shuffle and yields the same rows") {
-    // the hourly pipeline's placement: only the bounds broadcast remains
-    val one = Interpolate.densify(factRows, onePartition = true)
-    one.collect() // let AQE settle on the final plan
-    val plan = one.queryExecution.executedPlan
-    assert(Aqe.collect(plan) { case e: ShuffleExchangeExec => e }.isEmpty, plan.toString)
-    assert(one.rdd.getNumPartitions === 1)
-    assert(one.exceptAll(declarative).isEmpty && declarative.exceptAll(one).isEmpty,
-      "the one-partition placement changed the rows")
+  test("the hour function yields densify's rows on the smoke corpus") {
+    // the hourly pipeline's driver-side form, over every date of the
+    // corpus at once: exact equality, row for row, with the plan's
+    // rows, and the actual rows first, unaltered
+    val in = factRows.collect().toSeq
+    val hour = Interpolate.densifyHour(in)
+    def exact(rows: Seq[Row]) = rows.map(_.toString).sorted
+    assert(exact(hour) === exact(declarative.collect().toSeq),
+      "Interpolate.densifyHour() and Interpolate.densify() diverge")
+    assert(hour.take(in.size) === in)
   }
 
   test("actual rows pass through unaltered") {
@@ -86,7 +85,6 @@ class InterpolateSpec extends SparkTestBase {
     // the arithmetic-propagation semantics of the pre-kernel
     // formulation (NULL price → NULL sum/mean → NULL linear result),
     // carried through the native kernel as NaN and restored by nanvl.
-    import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(
       StructField("source_id", IntegerType, nullable = true),

@@ -1045,6 +1045,40 @@ class MergeWriterSpec extends SparkTestBase {
     }
   }
 
+  test("replaceWindow of local rows persists no RDD and re-merges against a racing winner") {
+    // local rows (a LocalRelation) live in the plan, so the batch is
+    // already stable across CAS retries: no lazy checkpoint is taken,
+    // and the lost attempt re-merges the same rows against the winner
+    import graft.io.TxTable
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions.col
+    val s = spark
+    import s.implicits._
+    val dir = Files.createTempDirectory("graft_tx_local_rows").toString + "/fact"
+    TxTable.upsert(spark, dir,
+      Seq((1L, 10.0, 1L, 20240101), (2L, 20.0, 1L, 20240102))
+        .toDF("id", "price", "etl_seq", "date_id"),
+      "id", "etl_seq", "date_id")
+    val schema = Seq((0L, 0.0, 0L, 0)).toDF("id", "price", "etl_seq", "date_id").schema
+    def local(r: Row) = spark.createDataFrame(Seq(r).asJava, schema)
+    val sc = spark.sparkContext
+    val lastRdd = sc.parallelize(Seq(1)).id
+    var raced = false
+    FaultStore.racing(dir) {
+      TxTable.upsert(spark, dir, local(Row(9L, 90.0, 2L, 20240101)),
+        "id", "etl_seq", "date_id")
+      raced = true
+    }(TxTable.replaceWindow(spark, dir, local(Row(4L, 40.0, 2L, 20240101)),
+      "date_id", col("id") === 1L))
+    assert(raced)
+    assert(sc.getPersistentRDDs.keys.count(_ > lastRdd) === 0,
+      s"persisted RDDs: ${sc.getPersistentRDDs.keys.filter(_ > lastRdd)}")
+    // version 1, the winner at 2, the re-merged window at 3
+    assert(TxTable.latestVersion(spark, dir) === 3L)
+    assert(TxTable.snapshot(spark, dir).get.select("id", "price").as[(Long, Double)]
+      .collect().toSeq.sorted === Seq((2L, 20.0), (4L, 40.0), (9L, 90.0)))
+  }
+
   test("snapshotWhere: predicate pruning over manifest-stored partition values") {
     import graft.io.TxTable
     import org.apache.spark.sql.functions.col
